@@ -19,6 +19,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from udacity_capstone_data_engineering_spark import get_spark
 from udacity_capstone_data_engineering_spark import queries as catalog
+from udacity_capstone_data_engineering_spark.session import codegen_compilations
 
 HEADLINE = [
     "flagship_nation_order_stats",
@@ -205,16 +206,21 @@ def main() -> None:
     for name in run_list:
         df = qs[name](spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()  # warm (scan cache, JIT)
+        before = codegen_compilations(spark)
         t0 = time.perf_counter()
         qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
         timings[name] = round(time.perf_counter() - t0, 3)
+        # Janino compilations inside the timed call: 0 when the warm call
+        # left every generated class of the row in the codegen cache.
+        compiled = codegen_compilations(spark) - before
         # VERDICT r6 #4: full-catalog output outgrew the driver's tail
         # capture (BENCH_r06.json kept 60 of 192 timings, zero overlap
         # with r5's window). One FLUSHED line per query means any
         # tail-bounded capture retains the newest measurements, and a
         # killed run still leaves a usable partial record.
         print(
-            json.dumps({"bench_query": name, "sec": timings[name], "sf": sf}),
+            json.dumps({"bench_query": name, "sec": timings[name], "sf": sf,
+                        "codegen_compiles": compiled}),
             flush=True,
         )
 

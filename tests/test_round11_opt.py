@@ -253,6 +253,30 @@ def test_unit_vectors_kernel_degenerate_semantics(spark):
     assert old == new
 
 
+def test_unit_vectors_kernel_sliced_batch():
+    """A sliced Arrow batch keeps its ids paired with its own vectors:
+    the list offsets of a slice start past 0 while ``values`` is still
+    the whole child array."""
+    import pyarrow as pa
+
+    from udacity_capstone_data_engineering_spark.operators.similarity import (
+        _normalize_batches,
+    )
+
+    vecs = [[float(i), float(i + 1), 2.0] for i in range(6)]
+    full = pa.RecordBatch.from_arrays(
+        [pa.array(range(6), pa.int64()), pa.array(vecs, pa.list_(pa.float64()))],
+        ["vec_id", "__v"],
+    )
+    (whole,) = _normalize_batches([full])
+    for offset, length in ((2, 3), (5, 1), (6, 0)):
+        (got,) = _normalize_batches([full.slice(offset, length)])
+        assert got.column(0).to_pylist() == list(range(offset, offset + length))
+        assert got.column(1).to_pylist() == (
+            whole.column(1).slice(offset, length).to_pylist()
+        )
+
+
 def test_minhash_rows_outer_explode_identical(spark, sf_dir):
     """minhash_rows' posexplode_outer + generated-column filter emits
     exactly the rows the plain posexplode did — and its physical plan

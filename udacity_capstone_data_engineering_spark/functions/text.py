@@ -37,20 +37,6 @@ def token_count(text: Column | str) -> Column:
     )
 
 
-def char_shingles(text: Column | str, k: int = 5) -> Column:
-    """Distinct character k-grams (shingles) of the text — the MinHash
-    input representation. Uses sequence+transform, no UDF."""
-    c = F.col(text) if isinstance(text, str) else text
-    t = F.trim(c)
-    n = F.length(t) - F.lit(k - 1)
-    # sequence(1, 0) counts DOWN in Spark — guard the short-text case.
-    return F.when(n < 1, F.array().cast("array<string>")).otherwise(
-        F.array_distinct(
-            F.transform(F.sequence(F.lit(1), n), lambda i: t.substr(i, F.lit(k)))
-        )
-    )
-
-
 def shingles_from_tokens(toks: Column, k: int = 5) -> Column:
     """Distinct word k-grams from an already-computed token array.
 

@@ -20,17 +20,6 @@ def group_agg(df: DataFrame, keys: list[str], aggs: dict[str, str]) -> DataFrame
     )
 
 
-def decimal_sum(col: str, alias: str, precision: int = 18, scale: int = 2):
-    """Exact, order-independent sum of a double measure column."""
-    return F.sum(F.col(col).cast(f"decimal({precision},{scale})")).alias(alias)
-
-
-def decimal_avg(col: str, alias: str, precision: int = 18, scale: int = 2, round_to: int = 6):
-    """Deterministic average: exact decimal sum / count, rounded once."""
-    s = F.sum(F.col(col).cast(f"decimal({precision},{scale})"))
-    return F.round((s / F.count(F.lit(1))).cast("double"), round_to).alias(alias)
-
-
 def null_profile(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     """Per-column null counts + ratios in ONE aggregate pass (A4 —
     the reference's nicest pattern, notebook cell 12, kept as a

@@ -5,11 +5,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def union_all(a: DataFrame, b: DataFrame) -> DataFrame:
-    """UNION ALL by column name (safer than positional union)."""
-    return a.unionByName(b)
-
-
 def union_evolved(a: DataFrame, b: DataFrame) -> DataFrame:
     """UNION ALL across an evolved schema: columns present on only one
     side come back NULL on the other (``allowMissingColumns``) — the

@@ -815,6 +815,88 @@ def lsh_bucket_keys(
 BROADCAST_SCORE_MAX_BYTES = 256 * 1024 * 1024
 
 
+def _normalize_batches(batches):
+    """The :func:`_unit_vectors` kernel: ``(id, vector)`` record batches
+    in, ``(__id, uv)`` record batches out, one per input batch."""
+    import numpy as np
+    import pyarrow as pa
+
+    for rb in batches:
+        ids = rb.column(0)
+        vecs = rb.column(1)
+        if isinstance(vecs, pa.ChunkedArray):
+            vecs = vecs.combine_chunks()
+        n_rows = len(vecs)
+        out_vals: list = [None] * n_rows
+        live: list = []
+        offs = vecs.offsets.to_numpy(zero_copy_only=False)
+        lens = np.diff(offs)
+        # ``values`` is the whole child array even when the batch is a
+        # slice; the rows own only ``offs[0]:offs[-1]`` of it.
+        values = vecs.values.slice(offs[0], offs[-1] - offs[0])
+        if (
+            vecs.null_count == 0
+            and values.null_count == 0
+            and n_rows > 0
+            and lens.min() == lens.max() != 0
+        ):
+            # Fixed-dim, no-null batch (the real corpus shape):
+            # one zero-copy reshape, no per-cell accessor churn.
+            flat_in = values.to_numpy(zero_copy_only=False)
+            live = [
+                (p, row)
+                for p, row in enumerate(
+                    np.asarray(flat_in, dtype=np.float64).reshape(
+                        n_rows, int(lens[0])
+                    )
+                )
+            ]
+        else:
+            for p in range(n_rows):
+                cell = vecs[p]
+                if not cell.is_valid:
+                    continue
+                a = cell.values.to_numpy(zero_copy_only=False)
+                if cell.values.null_count or a.shape[0] == 0:
+                    # NULL element → NULL fold → NULL uv; empty →
+                    # norm 0 → NULL uv, as the expression path
+                    continue
+                live.append((p, np.asarray(a, dtype=np.float64)))
+        by_len: dict[int, list] = {}
+        for p, a in live:
+            by_len.setdefault(a.shape[0], []).append((p, a))
+        for d, rows in by_len.items():
+            x = np.vstack([a for _, a in rows])
+            acc = np.zeros(len(rows))
+            for i in range(d):  # left-to-right, matching the JVM fold
+                acc = acc + x[:, i] * x[:, i]
+            n = np.sqrt(acc)
+            # when(__n > 0): Spark compares NaN greater than any
+            # number, so NaN norms PASS and propagate NaN elements.
+            ok = (n > 0) | np.isnan(n)
+            u = x / np.where(ok, n, 1.0)[:, None]
+            for r in np.nonzero(ok)[0]:
+                out_vals[rows[int(r)][0]] = u[int(r)]
+        # Explicit ListArray build: values buffer keeps true NaNs
+        # (pandas' from_pandas path would null them out).
+        offsets = np.zeros(n_rows + 1, dtype=np.int32)
+        for p in range(n_rows):
+            offsets[p + 1] = offsets[p] + (
+                len(out_vals[p]) if out_vals[p] is not None else 0
+            )
+        flat = (
+            np.concatenate([v for v in out_vals if v is not None])
+            if offsets[-1]
+            else np.zeros(0, dtype=np.float64)
+        )
+        mask = pa.array([v is None for v in out_vals], type=pa.bool_())
+        uv = pa.ListArray.from_arrays(
+            pa.array(offsets), pa.array(flat, type=pa.float64()),
+            mask=mask,
+        )
+        yield pa.RecordBatch.from_arrays([ids, uv], ["__id", "uv"])
+
+
 def _unit_vectors(emb, id_col: str, vec_col: str):
     """(id, uv) with uv the L2-normalized double vector; zero-norm →
     NULL uv (ANSI /0 raises), which yields NULL cosine ranked last —
@@ -842,88 +924,12 @@ def _unit_vectors(emb, id_col: str, vec_col: str):
     every number) so NaN/±inf elements propagate NaN into uv — the
     output is built with explicit pyarrow buffers because the pandas
     return path would silently rewrite those NaN elements to nulls."""
-    import numpy as np
-    import pyarrow as pa
-
-    def normalize(batches):
-        for rb in batches:
-            ids = rb.column(0)
-            vecs = rb.column(1)
-            if isinstance(vecs, pa.ChunkedArray):
-                vecs = vecs.combine_chunks()
-            n_rows = len(vecs)
-            out_vals: list = [None] * n_rows
-            live: list = []
-            offs = vecs.offsets.to_numpy(zero_copy_only=False)
-            lens = np.diff(offs)
-            if (
-                vecs.null_count == 0
-                and vecs.values.null_count == 0
-                and n_rows > 0
-                and lens.min(initial=1) == lens.max(initial=1) != 0
-            ):
-                # Fixed-dim, no-null batch (the real corpus shape):
-                # one zero-copy reshape, no per-cell accessor churn.
-                flat_in = vecs.values.to_numpy(zero_copy_only=False)
-                live = [
-                    (p, row)
-                    for p, row in enumerate(
-                        np.asarray(flat_in, dtype=np.float64).reshape(
-                            n_rows, int(lens[0])
-                        )
-                    )
-                ]
-            else:
-                for p in range(n_rows):
-                    cell = vecs[p]
-                    if not cell.is_valid:
-                        continue
-                    a = cell.values.to_numpy(zero_copy_only=False)
-                    if cell.values.null_count or a.shape[0] == 0:
-                        # NULL element → NULL fold → NULL uv; empty →
-                        # norm 0 → NULL uv, as the expression path
-                        continue
-                    live.append((p, np.asarray(a, dtype=np.float64)))
-            by_len: dict[int, list] = {}
-            for p, a in live:
-                by_len.setdefault(a.shape[0], []).append((p, a))
-            for d, rows in by_len.items():
-                x = np.vstack([a for _, a in rows])
-                acc = np.zeros(len(rows))
-                for i in range(d):  # left-to-right, matching the JVM fold
-                    acc = acc + x[:, i] * x[:, i]
-                n = np.sqrt(acc)
-                # when(__n > 0): Spark compares NaN greater than any
-                # number, so NaN norms PASS and propagate NaN elements.
-                ok = (n > 0) | np.isnan(n)
-                u = x / np.where(ok, n, 1.0)[:, None]
-                for r in np.nonzero(ok)[0]:
-                    out_vals[rows[int(r)][0]] = u[int(r)]
-            # Explicit ListArray build: values buffer keeps true NaNs
-            # (pandas' from_pandas path would null them out).
-            offsets = np.zeros(n_rows + 1, dtype=np.int32)
-            for p in range(n_rows):
-                offsets[p + 1] = offsets[p] + (
-                    len(out_vals[p]) if out_vals[p] is not None else 0
-                )
-            flat = (
-                np.concatenate([v for v in out_vals if v is not None])
-                if offsets[-1]
-                else np.zeros(0, dtype=np.float64)
-            )
-            mask = pa.array([v is None for v in out_vals], type=pa.bool_())
-            uv = pa.ListArray.from_arrays(
-                pa.array(offsets), pa.array(flat, type=pa.float64()),
-                mask=mask,
-            )
-            yield pa.RecordBatch.from_arrays([ids, uv], ["__id", "uv"])
-
     id_type = emb.schema[id_col].dataType.simpleString()
     return (
         emb.select(
             F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v")
         )
-        .mapInArrow(normalize, f"__id {id_type}, uv array<double>")
+        .mapInArrow(_normalize_batches, f"__id {id_type}, uv array<double>")
         .select(F.col("__id").alias(id_col), "uv")
     )
 

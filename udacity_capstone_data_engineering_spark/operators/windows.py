@@ -41,25 +41,6 @@ def lag_delta(
     return df.withColumn(alias, F.col(value_col) - F.lag(value_col).over(w))
 
 
-def rolling_agg(
-    df: DataFrame,
-    keys: list[str],
-    order_by: list,
-    value_col: str,
-    preceding: int,
-    agg: str = "avg",
-    alias: str = "rolling",
-) -> DataFrame:
-    """Rolling frame aggregate over the previous ``preceding`` rows + current."""
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy(*order_by)
-        .rowsBetween(-preceding, Window.currentRow)
-    )
-    fn = getattr(F, agg)
-    return df.withColumn(alias, fn(value_col).over(w))
-
-
 def global_top_k(df: DataFrame, order_by: list, k: int) -> DataFrame:
     """Global ORDER BY ... LIMIT k (O2). Spark executes this as a
     TakeOrderedAndProject — per-partition top-k then a k-sized merge on
