@@ -80,7 +80,6 @@ def classify_regimes(n: int, dim: int = 64) -> dict[str, str]:
     """Which regime each kernel's auto-switch picks at this corpus
     size, from the operators' own byte thresholds."""
     from udacity_capstone_data_engineering_spark.operators.similarity import (
-        BROADCAST_BUILD_MAX_BYTES,
         BROADCAST_SCORE_MAX_BYTES,
     )
 
@@ -89,7 +88,7 @@ def classify_regimes(n: int, dim: int = 64) -> dict[str, str]:
         "lsh": (
             "broadcast-index-kernel"
             if raw <= BROADCAST_SCORE_MAX_BYTES
-            else "bucket-join"
+            else "sharded-grid"
         ),
         "ivf": (
             "broadcast-in-udf-scan"
@@ -106,9 +105,7 @@ def classify_regimes(n: int, dim: int = 64) -> dict[str, str]:
             if n * 16 <= BROADCAST_SCORE_MAX_BYTES
             else "cell-sharded-adc"
         ),
-        "lsh_build_bytes": str(n * 12 * 24),
         "_note": f"raw={raw >> 20}MiB codes={(n * 16) >> 20}MiB "
-        f"build_cap={BROADCAST_BUILD_MAX_BYTES >> 20}MiB "
         f"score_cap={BROADCAST_SCORE_MAX_BYTES >> 20}MiB",
     }
 

@@ -111,9 +111,10 @@ def _lsh_rows(sim, emb, **kw):
 
 def test_lsh_sharded_regime_matches_kernel(spark, sf_dir):
     """VERDICT r10 #1: past the broadcast byte cap lsh_topk must route
-    to the sharded grid kernel and return EXACTLY the broadcast scan
-    kernel's rows (cosines included) — the disk-exhausting join regime
-    is no longer reachable there."""
+    to the sharded grid and return EXACTLY the broadcast scan kernel's
+    rows (cosines included), at three forced caps whose shard counts
+    differ: the parallelism floor, a few shards past it, and about
+    twice it."""
     from udacity_capstone_data_engineering_spark.operators import (
         similarity as sim,
     )
@@ -122,24 +123,28 @@ def test_lsh_sharded_regime_matches_kernel(spark, sf_dir):
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    saved_join, saved_cap = (
-        sim.LSH_JOIN_MAX_CANDIDATES,
-        sim.BROADCAST_SCORE_MAX_BYTES,
-    )
+    n = emb.count()
+    par = spark.sparkContext.defaultParallelism
+    total = n * 64 * 8
+    floor = sim._grid_shards(n, par)[1]
+    caps = [-(-total // t) for t in (2, floor + 5, 2 * floor + 9)]
+    shards = [
+        sim._grid_shards(n, par, total, cap, at_least=2)[1] for cap in caps
+    ]
+    assert len(set(shards)) == 3, shards
+    kern = _lsh_rows(sim, emb)
+    saved_cap = sim.BROADCAST_SCORE_MAX_BYTES
     try:
-        sim.LSH_JOIN_MAX_CANDIDATES = 0  # force the broadcast kernel
-        kern = _lsh_rows(sim, emb)
-        sim.BROADCAST_SCORE_MAX_BYTES = 16 * 1024  # force sharded grid
-        shard = _lsh_rows(sim, emb)
+        for cap in caps:
+            sim.BROADCAST_SCORE_MAX_BYTES = cap  # force the sharded grid
+            assert _lsh_rows(sim, emb) == kern, (cap, shards)
     finally:
-        sim.LSH_JOIN_MAX_CANDIDATES = saved_join
         sim.BROADCAST_SCORE_MAX_BYTES = saved_cap
-    assert shard == kern
 
 
-def test_lsh_sharded_regime_matches_join_with_workload(spark, sf_dir):
+def test_lsh_sharded_regime_matches_kernel_with_workload(spark, sf_dir):
     """Sharded grid with a serving workload (queries ⊂ corpus) must
-    match the join regime's rows for the same workload."""
+    match the broadcast kernel's rows for the same workload."""
     from udacity_capstone_data_engineering_spark.operators import (
         similarity as sim,
     )
@@ -150,19 +155,14 @@ def test_lsh_sharded_regime_matches_join_with_workload(spark, sf_dir):
 
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") % 7 == 0)
-    saved_join, saved_cap = (
-        sim.LSH_JOIN_MAX_CANDIDATES,
-        sim.BROADCAST_SCORE_MAX_BYTES,
-    )
+    kern_rows = _lsh_rows(sim, emb, queries=q)
+    saved_cap = sim.BROADCAST_SCORE_MAX_BYTES
     try:
-        sim.LSH_JOIN_MAX_CANDIDATES = 10**18  # force the join path
-        join_rows = _lsh_rows(sim, emb, queries=q)
         sim.BROADCAST_SCORE_MAX_BYTES = 16 * 1024  # force sharded grid
         shard_rows = _lsh_rows(sim, emb, queries=q)
     finally:
-        sim.LSH_JOIN_MAX_CANDIDATES = saved_join
         sim.BROADCAST_SCORE_MAX_BYTES = saved_cap
-    assert shard_rows == join_rows
+    assert shard_rows == kern_rows
 
 
 class TestDispatchCrossover:

@@ -96,39 +96,6 @@ def test_ivf_workload_queries_subset(spark, sf_dir):
     assert got == want
 
 
-def test_lsh_regimes_identical(spark, sf_dir):
-    """r5: the broadcast-index scan kernel must return exactly what
-    the candidate-join regime returns (same key machinery on raw
-    vectors, exact scoring, same tie rules)."""
-    from udacity_capstone_data_engineering_spark.operators import (
-        similarity as sim,
-    )
-    from udacity_capstone_data_engineering_spark.sources.catalog import (
-        load_table,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    saved = sim.LSH_JOIN_MAX_CANDIDATES
-    try:
-        sim.LSH_JOIN_MAX_CANDIDATES = 10**18
-        join_rows = sorted(
-            tuple(r)
-            for r in sim.lsh_topk(emb, "vec_id", "embedding", dim=64, k=5)
-            .select("query_id", "neighbor_id", "rnk")
-            .collect()
-        )
-        sim.LSH_JOIN_MAX_CANDIDATES = 0
-        kern_rows = sorted(
-            tuple(r)
-            for r in sim.lsh_topk(emb, "vec_id", "embedding", dim=64, k=5)
-            .select("query_id", "neighbor_id", "rnk")
-            .collect()
-        )
-    finally:
-        sim.LSH_JOIN_MAX_CANDIDATES = saved
-    assert join_rows == kern_rows
-
-
 def test_driver_contract_from_foreign_cwd():
     """r5: an external driver builds its OWN SparkSession from an
     arbitrary CWD (no repo on PYTHONPATH, session created BEFORE the

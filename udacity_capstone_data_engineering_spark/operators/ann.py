@@ -21,13 +21,11 @@ decade grids, not a guess):
                               (0.9699 at 200k r9; 0.9935 at 2M r11)
                               with the cheapest candidate generation
                               of the tiers. Within the raw-matrix
-                              byte cap (~500k @ d64) the broadcast
-                              scan kernel runs; past it the r11
-                              SHARDED grid kernel — measured at 2M:
-                              103 ms/query, ~10× faster than pq/ivfpq
-                              at the same cell (the r10 byte-cap
-                              handoff existed only because the old
-                              join regime disk-exhausted there).
+                              byte cap (~500k @ d64) its scan runs
+                              against a broadcast index; past it the
+                              same scan runs in a SHARDED grid —
+                              measured at 2M: 103 ms/query, ~10×
+                              faster than pq/ivfpq at the same cell.
     n within the raw-vector   ``ivf`` — exact scan of probed cells;
     byte cap, target > 0.97   the 7/8 probe fraction measured 0.97+
                               (``probe_fraction_for_recall``), which
@@ -75,11 +73,10 @@ from pyspark.sql import DataFrame
 
 # auto_lsh_tables caps at 32 tables, the rung its measured n^0.22
 # ladder reaches at ~2M vectors — past this LSH recall can no longer
-# be bought with tables. The r10 byte-cap handoff
-# (min(this, _lsh_kernel_max_n)) is GONE in r11: it existed because
-# the past-cap join regime disk-exhausted, and the sharded grid
-# kernel that replaced it MEASURED 206 s / 103 ms/query / recall
-# 0.9935 at the full 2M×2k cell — ~10× faster than pq/ivfpq there.
+# be bought with tables. The raw-matrix byte cap does not bound the
+# LSH tier: past it LSH runs its sharded grid, which MEASURED 206 s /
+# 103 ms/query / recall 0.9935 at the full 2M×2k cell — ~10× faster
+# than pq/ivfpq there.
 LSH_DISPATCH_MAX_N = 2_000_000
 
 # the highest recall the capped LSH ladder is measured to deliver at
@@ -91,15 +88,13 @@ _MODES = ("auto", "lsh", "ivf", "pq", "ivfpq", "standing", "exact")
 
 
 def _lsh_kernel_max_n(dim: int) -> int:
-    """The corpus size where LSH falls out of its broadcast-kernel
-    regime: raw matrix bytes (n·dim·8) at the score-broadcast cap —
-    ~500k vectors at dim 64. MEASURED to matter at the third decade
-    (r10, ``scripts/sf100_probe.py``): past the cap LSH drops to the
-    bucket-JOIN path, whose pair-scoring join ships unit vectors
-    instead of ids and spilled >60 GB of shuffle at 2M vectors ×
-    2k queries before exhausting local disk — while IVF-PQ's codes
-    (n·16 bytes, 64× smaller) stay broadcast to 16M vectors. The LSH
-    handoff is therefore the BYTE cap, not the 32-table recall cap."""
+    """The largest corpus whose raw matrix (n·dim·8 bytes) fits the
+    score-broadcast cap — ~500k vectors at dim 64. Under it LSH and
+    IVF broadcast raw vectors; past it LSH switches from its broadcast
+    index to its sharded grid (same rows), and IVF, which needs the
+    raw vectors broadcast, hands high-recall targets to the coded
+    tiers, whose codes (n·16 bytes, 64× smaller) stay broadcast to 16M
+    vectors."""
     from udacity_capstone_data_engineering_spark.operators.similarity import (
         BROADCAST_SCORE_MAX_BYTES,
     )

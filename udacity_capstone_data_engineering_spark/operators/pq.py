@@ -55,6 +55,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from udacity_capstone_data_engineering_spark.operators.similarity import (
+    _grid_shards,
+)
+
 # Per-query-batch ADC score buffer budget, in float64 ELEMENTS
 # (32M ≈ 256 MB).  The corpus-axis chunk size is derived from it so
 # batch_rows × chunk stays bounded regardless of corpus size.
@@ -65,10 +69,6 @@ ADC_CHUNK_ELEMS = 32_000_000
 # workers, measured best at 2048 for nq 625 AND 10000 (smaller hits a
 # short-gather slow path, larger spills shared L3).
 _ADC_ACC_COLS = 2048
-
-# Target rows per query block in the sharded grid join — bounds the
-# per-task pandas group (block × dim doubles) and the score buffer.
-ADC_QUERY_BLOCK_ROWS = 4096
 
 
 def fit_pq_codebooks(
@@ -519,7 +519,7 @@ def _ivfpq_candidates_udf(
 
 
 def _sharded_adc_candidates(
-    queries, probes, coded, books, rerank: int, n_queries: int
+    queries, probes, coded, books, rerank: int, n_blocks: int
 ):
     """The past-the-cap ADC scan (VERDICT r3 #2): a cogrouped grid
     join instead of a broadcast index.
@@ -531,8 +531,8 @@ def _sharded_adc_candidates(
     ``coded``    — (id, codes, __shard): the distributed code index,
                    every shard under the broadcast cap.
 
-    Queries are hash-blocked (``ADC_QUERY_BLOCK_ROWS`` per block) so a
-    task's pandas group holds one bounded query block × one bounded
+    Queries are hash-blocked into ``n_blocks`` (``_grid_shards``) so
+    a task's pandas group holds one bounded query block × one bounded
     shard; the kernel is the same chunked ADC tournament as the
     broadcast path, so per-(query, row) scores are bit-identical and
     the query-keyed window merge (ADC desc, id asc, row_number ≤
@@ -543,7 +543,6 @@ def _sharded_adc_candidates(
     import pandas as pd
 
     spark = queries.sparkSession
-    n_blocks = max(1, -(-n_queries // ADC_QUERY_BLOCK_ROWS))
     left = (
         probes.join(queries, "query_id")
         .withColumn(
@@ -683,14 +682,12 @@ def _sharded_ivfpq_candidates(
     # (per-(query,row) scores are shard-independent; cells partition,
     # not replicate), so shrink the effective packing cap until the
     # shard count reaches ~2 tasks/core.
-    n_blocks = max(1, -(-n_queries // ADC_QUERY_BLOCK_ROWS))
-    par = max(1, spark.sparkContext.defaultParallelism)
-    min_shards = min(-(-2 * par // n_blocks), 4 * par)
+    n_blocks, min_shards = _grid_shards(
+        n_queries, spark.sparkContext.defaultParallelism
+    )
     total_bytes = sum(counts.values()) * row_bytes
     eff_cap = (
-        max(1, min(cap, -(-total_bytes // max(min_shards, 1))))
-        if counts
-        else cap
+        max(1, min(cap, -(-total_bytes // min_shards))) if counts else cap
     )
     mapping_rows, n_shards, nsub = _pack_cells_to_shards(
         counts, row_bytes, eff_cap
@@ -1161,16 +1158,13 @@ def pq_topk(
     index_bytes = n * (8 + m)
     if index_bytes > cap:
         # ---- sharded regime: hash shards, each under the cap; at
-        # least ~2 tasks/core (r11 — the grid's task count is
-        # n_shards × n_blocks, and a one-block serving batch against
-        # the minimum byte-driven shard count would idle most of the
-        # cluster) ----
-        par = max(1, emb.sparkSession.sparkContext.defaultParallelism)
-        blocks_est = max(1, -(-n_q // ADC_QUERY_BLOCK_ROWS))
-        n_shards = max(
-            2,
-            -(-index_bytes // max(cap, 1)),
-            min(-(-2 * par // blocks_est), 4 * par),
+        # least ~2 tasks/core (``_grid_shards``) ----
+        n_blocks, n_shards = _grid_shards(
+            n_q,
+            emb.sparkSession.sparkContext.defaultParallelism,
+            index_bytes,
+            cap,
+            at_least=2,
         )
         coded = v.select(
             F.col(id_col).alias("id"),
@@ -1189,7 +1183,7 @@ def pq_topk(
             )
         )
         pairs = _sharded_adc_candidates(
-            qsrc, probes, coded, books, rerank, n_queries=n_q
+            qsrc, probes, coded, books, rerank, n_blocks=n_blocks
         ).filter(F.col("query_id") != F.col("neighbor_id"))
     else:
         # fan out before the CPU-heavy encode UDF — same single-task

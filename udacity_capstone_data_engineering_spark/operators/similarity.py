@@ -6,11 +6,11 @@ Two paths:
     recall oracle for the approximate path.
   - ``lsh_topk``: multi-table random-hyperplane LSH — deterministic
     hyperplanes derived from md5 (no RNG state to ship); candidates are
-    generated only WITHIN sign-pattern buckets, so the join cost scales
-    with bucket sizes, not corpus². Bucketing and candidate scoring are
-    Arrow-batched numpy matmuls (declared Python boundaries — measured
-    4-5× faster than interpreted higher-order functions here); the
-    shuffled data is ids only.
+    gathered only from the query's probed sign-pattern buckets, so the
+    cost scales with bucket sizes, not corpus². Keying, gathering and
+    scoring run in one Arrow-batched numpy scan per query partition (a
+    declared Python boundary — measured 4-5× faster than interpreted
+    higher-order functions here).
 
 ``brute_force_topk`` (the oracle-paired op) keeps builtin zip_with/
 aggregate vector math in DOUBLE with left-to-right accumulation —
@@ -668,16 +668,30 @@ def _hyperplane(dim: int, table: int, plane: int) -> list[float]:
 
 
 def _lsh_key_fn(dim: int, planes: int, tables: int, probes: int):
-    """The pure numpy probe-key machinery shared by the DataFrame
-    bucketing UDF and the in-UDF scan kernel, so both paths produce
-    BYTE-IDENTICAL key sequences for the same raw vectors.  Returns
+    """The numpy LSH key machinery of ``_lsh_scanner``.  Returns
     ``(fn, n_probes)`` where ``fn(x)`` maps a (batch × dim) RAW float
     matrix to (batch × tables·(n_probes+1)) int64 keys laid out
     [t0r0, t0r1, …, t1r0, …] (just (batch × tables) when n_probes is
-    0).  Keys must be computed from RAW vectors (as the bucketing UDF
-    always has): signs and margin ORDER are scale-invariant, but
-    dividing by the norm can collapse near-tied margins differently
-    in the last ulp."""
+    0).  Bucket bit p of table t is sign(v · hyperplane_{t,p}); all
+    tables×planes projections are ONE matmul against the (dim ×
+    tables·planes) hyperplane matrix.
+
+    ``probes > 0`` adds QUERY-DIRECTED multiprobe keys (Lv et al.):
+    per table, also the ``probes`` buckets reached by the
+    margin-ordered PERTURBATION SEQUENCE — the non-empty subsets of
+    the U lowest-|margin| sign bits, ranked per row by the summed
+    margin of the flipped bits. Rank 0 is the exact key. Multi-bit
+    subsets matter once planes auto-grow with the corpus: with 6+
+    planes a boundary miss increasingly flips TWO bits, and
+    single-bit probing plateaus (measured recall 0.93 at 16 tables ×
+    2 single-bit probes on 2000 vectors, vs 0.97+ from the ranked
+    subset sequence). U = max(3, ceil(planes/2)) must GROW with key
+    width or the probe sequence saturates (measured recall 0.96 →
+    0.61 from 2k to 20k vectors, r3).
+
+    Keys must be computed from RAW vectors: signs and margin ORDER are
+    scale-invariant, but dividing by the norm can collapse near-tied
+    margins differently in the last ulp."""
     import itertools
 
     import numpy as np
@@ -735,75 +749,6 @@ def _lsh_key_fn(dim: int, planes: int, tables: int, probes: int):
         return out.reshape(len(x), -1)
 
     return fn, n_probes
-
-
-def lsh_bucket_keys(
-    emb: DataFrame,
-    vec_col: str,
-    dim: int,
-    planes: int = 4,
-    tables: int = 16,
-    probes: int = 0,
-) -> DataFrame:
-    """Append (table, probe_rank, bucket) LSH keys: bucket bit p =
-    sign(v · hyperplane_{table,p}). Multi-table is the standard recall
-    lever for random-hyperplane LSH: each extra table is an
-    independent chance for true neighbors to collide.
-
-    ``probes > 0`` adds QUERY-DIRECTED multiprobe keys (Lv et al.):
-    per table, also the ``probes`` buckets reached by the
-    margin-ordered PERTURBATION SEQUENCE — the non-empty subsets of
-    the table's three lowest-|margin| sign bits, ranked per row by the
-    summed margin of the flipped bits (the likelihood a true neighbor
-    lands exactly there). probe_rank 0 is the exact key; ranks
-    1..probes walk the sequence. Multi-bit subsets matter once planes
-    auto-grow with the corpus: with 6+ planes a boundary miss
-    increasingly flips TWO bits, and single-bit probing plateaus
-    (measured recall 0.93 at 16 tables × 2 single-bit probes on 2000
-    vectors, vs 0.97+ from the same probe count drawn from the ranked
-    subset sequence). Directed probing stays the cost sweet spot vs
-    more tables: each probe adds probe-side rows only, while a table
-    adds build-side rows AND an independent hash family.
-
-    All tables×planes projections are ONE Arrow-batched matmul against
-    the (dim × tables·planes) hyperplane matrix — the measured
-    pandas-UDF sweet spot (compute ≫ transfer; interpreted per-plane
-    ``aggregate`` costs tables×planes×dim lambda evaluations per row).
-    Sign bits, margins, subset scores, and flips all stay numpy-side;
-    the explode multiplies rows by tables×(probes+1) (cheap: ids +
-    small ints)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    # Perturbation universe note (lives in _lsh_key_fn): non-empty
-    # subsets of the U lowest-margin bits, U = max(3, ceil(planes/2))
-    # — U must GROW with key width or the probe sequence saturates
-    # (measured recall 0.96 → 0.61 from 2k to 20k vectors, r3).
-    keyfn, n_probes = _lsh_key_fn(dim, planes, tables, probes)
-
-    def buckets(v):
-        x = np.vstack(v.to_numpy())  # (batch, dim)
-        return pd.Series(list(keyfn(x)))
-
-    # optimizer fence (r9): the downstream posexplode makes
-    # InferFiltersFromGenerate infer `size(__keys) > 0` and push it —
-    # with the whole bucketing UDF inside — below any upstream
-    # exchange, re-running the full keying a second time on the raw
-    # scan layout (see _lsh_scan_candidates_udf for the measured
-    # diagnosis). asNondeterministic pins one evaluation, in place.
-    udf = pandas_udf(buckets, "array<long>").asNondeterministic()
-    keyed = emb.select("*", udf(F.col(vec_col).cast("array<double>")).alias("__keys"))
-    stride = n_probes + 1
-    exploded = keyed.select(
-        *emb.columns, F.posexplode("__keys").alias("__idx", "bucket")
-    )
-    return exploded.select(
-        *emb.columns,
-        (F.col("__idx") / stride).cast("int").alias("table"),
-        (F.col("__idx") % stride).alias("probe_rank"),
-        "bucket",
-    )
 
 
 # Above this many MATRIX BYTES (n_vectors × dim × 8), fall back to
@@ -972,29 +917,12 @@ def _collect_unit_matrix(emb, id_col: str, vec_col: str, dim: int):
     return ids[keep], mat
 
 
-# Above this many BUILD-SIDE BYTES (n_vectors × tables × ~24 b/row of
-# id+table+bucket ints), stop broadcasting the exact-key side of the
-# LSH candidate join and let it shuffle. Same philosophy as
-# BROADCAST_SCORE_MAX_BYTES: measured bytes, not row counts.
-BROADCAST_BUILD_MAX_BYTES = 64 * 1024 * 1024
-
-# Estimated candidate MULTISET rows (n_queries × tables × (probes+1) ×
-# mean bucket size) above which lsh_topk's in-UDF scan kernel beats the
-# candidate join: the join materializes the multiset through a
-# distinct shuffle, the kernel never leaves the Python worker.
-# Measured crossover: join 3.7 s at ~12M rows (2k vectors) vs kernel
-# 352 s → ~35 s at ~380M rows (20k). Same discipline as
-# ivf._PAIR_JOIN_MAX_PAIRS.
-LSH_JOIN_MAX_CANDIDATES = 32_000_000
-
-
 def _collect_raw_matrix(emb, id_col, vec_col, dim):
-    """Like :func:`_collect_unit_matrix` but returns
-    ``(ids, raw, unit)`` sorted by id, KEEPING zero-norm rows (their
-    unit row is zeroed): the scan kernel must compute bucket keys from
-    the RAW vectors — exactly the bytes the bucketing UDF sees — and
-    zero-norm rows are bucket members in the join path too.  ``None``
-    past the byte cap."""
+    """``(ids, raw)`` of the non-NULL vectors, sorted by id, iff they
+    fit ``BROADCAST_SCORE_MAX_BYTES``; None past the cap.  One limited
+    Arrow collect, like :func:`_collect_unit_matrix`, but RAW and
+    keeping the rows with no direction: LSH keys come from raw vectors,
+    and zero- or NaN-norm rows are still bucket members."""
     import numpy as np
 
     max_rows = BROADCAST_SCORE_MAX_BYTES // (8 * max(dim, 1))
@@ -1013,19 +941,12 @@ def _collect_raw_matrix(emb, id_col, vec_col, dim):
         else np.zeros((0, dim), dtype=np.float64)
     )
     order = np.argsort(ids, kind="stable")
-    ids, raw = ids[order], raw[order]
-    norms = np.linalg.norm(raw, axis=1, keepdims=True)
-    safe = np.where(norms == 0, 1.0, norms)
-    unit = raw / safe
-    unit[norms[:, 0] == 0] = 0.0
-    return ids, raw, unit
+    return ids[order], raw[order]
 
 
 def _bucket_index(corpus_keys):
     """(table, exact key) → id-sorted positions dict from a corpus key
-    matrix (n × tables int64) — shared by the broadcast scan kernel and
-    the per-shard builds of the sharded grid kernel, so both regimes
-    gather identical bucket membership for identical key matrices."""
+    matrix (n × tables int64)."""
     import numpy as np
 
     n_tables = corpus_keys.shape[1] if corpus_keys.ndim == 2 else 1
@@ -1041,132 +962,66 @@ def _bucket_index(corpus_keys):
     return index
 
 
-# Query rows per block in the sharded LSH grid join — bounds the
-# per-task pandas group (block × dim raw doubles); same figure as
-# pq.ADC_QUERY_BLOCK_ROWS (kept separate to avoid a similarity→pq
-# import cycle).
-LSH_QUERY_BLOCK_ROWS = 4096
+_LSH_CANDIDATES_SCHEMA = "query_id long, neighbor_id long, cosine double"
 
 
-def _sharded_lsh_topk(
-    emb: DataFrame,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-    k: int,
-    planes: int,
-    tables: int,
-    multiprobe: int,
-    queries: DataFrame | None,
-    n: int,
-    n_q: int,
-    cap: int,
-) -> DataFrame:
-    """LSH top-k PAST the broadcast byte cap (VERDICT r10 #1): the
-    cell-sharded grid pattern of ``pq._sharded_adc_candidates`` applied
-    to bucket indexes, replacing the bucket-JOIN regime whose
-    pair-scoring join shipped unit vectors through a
-    tables·probes·bucket² candidate multiset and was MEASURED spilling
-    >60 GB of shuffle to local-disk exhaustion at 2M vectors × 2k
-    queries (SCALING.md third-decade probe, r10).
+def _no_lsh_candidates():
+    import pandas as pd
 
-    Shape: the corpus is hash-sharded on id so each shard's raw matrix
-    fits ``cap`` bytes; queries are hash-blocked
-    (``LSH_QUERY_BLOCK_ROWS``); a cogrouped ``applyInPandas`` grid join
-    scans each (query-block × shard) cell — build the SHARD's bucket
-    index with the same ``_lsh_key_fn`` machinery as the broadcast
-    kernel (raw vectors in, byte-identical keys out), probe, gather,
-    score the gathered unit rows, emit the per-(query, shard)
-    top-``k+8`` with exact row-wise-einsum cosines — and a query-keyed
-    window merges shards to the final top-k. Because shards partition
-    every bucket, the union of per-shard top-(k+8) sets contains the
-    broadcast kernel's global top-(k+8), and the merge key
-    (cosine desc, id asc) is the kernel path's — the forced-tiny-cap
-    regime test pins row equality against it. Nothing corpus-sized is
-    ever broadcast or carried through a join: the shuffled volume is
-    corpus×n_blocks + queries×n_shards rows (the standard grid trade),
-    and candidates leave each task already cut to k+8 per query.
+    return pd.DataFrame(
+        {
+            "query_id": pd.array([], dtype="int64"),
+            "neighbor_id": pd.array([], dtype="int64"),
+            "cosine": pd.array([], dtype="Float64"),
+        }
+    )
 
-    Zero-norm rows follow the kernel-path contract: as candidates they
-    score −inf in selection and NULL cosine in the output; a zero-norm
-    query gets NULL cosines throughout (ranked by id, NULLs last)."""
+
+def _lsh_scanner(dim, planes, tables, multiprobe, take):
+    """The LSH scan, as two numpy functions that both distribution
+    shapes of :func:`lsh_topk` run unchanged:
+
+    - ``build(ids, raw)`` → the scan state of a corpus, or of one shard
+      of it (ids sorted): the bucket index over exact keys of the RAW
+      vectors, the L2-normalized rows (``x / ||x||`` elementwise) and
+      the mask of rows with no direction (norm zero or NaN), whose unit
+      rows are zeroed.
+    - ``scan(state, qids, qvecs)`` → a ``(query_id, neighbor_id,
+      cosine)`` frame. Per query it gathers the buckets of its
+      ``multiprobe``-deep probe sequence, dedups positions with one
+      sort, selects the top-``take`` by (score desc, id asc) and emits
+      their row-wise-einsum cosines.
+
+    Degenerate rows rank last and score NULL, never NaN: a directionless
+    candidate scores −inf in selection and NULL in the output; a
+    directionless query keeps its gathered candidates in id order, all
+    NULL. The per-(query, row) scores do not depend on which other rows
+    share the state, so shards that partition the corpus yield, per
+    query, a union of top-``take`` sets that contains the one-state
+    top-``take`` with bit-identical cosines."""
     import numpy as np
     import pandas as pd
 
-    spark = emb.sparkSession
-    take = k + 8
     corpus_keyfn, _ = _lsh_key_fn(dim, planes, tables, 0)
     probe_keyfn, n_probes = _lsh_key_fn(dim, planes, tables, multiprobe)
-    n_blocks = max(1, -(-n_q // LSH_QUERY_BLOCK_ROWS))
-    # the grid's task count is n_shards × n_blocks: a serving batch
-    # (one query block) against a 4-shard corpus would otherwise run
-    # on 4 of the cluster's cores. Shards may be FINER than the byte
-    # cap requires — per-(query,row) work is shard-independent, total
-    # bucket work is partitioned not replicated — so size the shard
-    # count up to ~2 tasks/core; only per-task corpus keying and the
-    # per-shard probe overhead grow, both sublinear in n_shards.
-    par = max(1, spark.sparkContext.defaultParallelism)
-    n_shards = max(
-        2,
-        -(-(n * dim * 8) // max(cap, 1)),
-        min(-(-2 * par // n_blocks), 4 * par),
-    )
 
-    qsrc = (queries if queries is not None else emb).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-    ).filter(F.col("qv").isNotNull())
-    left = qsrc.crossJoin(
-        F.broadcast(
-            spark.range(n_shards).select(F.col("id").cast("int").alias("__shard"))
-        )
-    ).withColumn(
-        "__qb", F.pmod(F.xxhash64("query_id"), F.lit(n_blocks)).cast("int")
-    )
-    right = (
-        emb.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).cast("array<double>").alias("v"),
-        )
-        .filter(F.col("v").isNotNull())
-        .withColumn(
-            "__shard", F.pmod(F.xxhash64("id"), F.lit(n_shards)).cast("int")
-        )
-        .crossJoin(
-            F.broadcast(
-                spark.range(n_blocks).select(
-                    F.col("id").cast("int").alias("__qb")
-                )
-            )
-        )
-    )
+    def unit_rows(x):
+        norms = np.linalg.norm(x, axis=1, keepdims=True)
+        bad = ~(norms[:, 0] > 0)
+        unit = x / np.where(bad[:, None], 1.0, norms)
+        unit[bad] = 0.0
+        return unit, bad
 
-    def scan(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(lpdf) or not len(rpdf):
-            return pd.DataFrame(
-                {
-                    "query_id": pd.array([], dtype="int64"),
-                    "neighbor_id": pd.array([], dtype="int64"),
-                    "cosine": pd.array([], dtype="Float64"),
-                }
-            )
-        rpdf = rpdf.sort_values("id")
-        ids = rpdf["id"].to_numpy(dtype=np.int64)
-        raw = np.vstack(rpdf["v"].to_numpy()).astype(np.float64)
-        # the same normalization arithmetic as _collect_unit_matrix /
-        # _collect_raw_matrix: elementwise x / ||x||, zero-norm rows
-        # zeroed — identical operand values give bit-identical units
-        norms = np.linalg.norm(raw, axis=1, keepdims=True)
-        safe = np.where(norms == 0, 1.0, norms)
-        unit = raw / safe
-        zero_mask = norms[:, 0] == 0
-        unit[zero_mask] = 0.0
-        index = _bucket_index(corpus_keyfn(raw))
-        x = np.vstack(lpdf["qv"].to_numpy()).astype(np.float64)
-        qids = lpdf["query_id"].to_numpy(dtype=np.int64)
-        qnorms = np.linalg.norm(x, axis=1, keepdims=True)
-        xq = x / np.where(qnorms == 0, 1.0, qnorms)
-        qzero = qnorms[:, 0] == 0
+    def build(ids, raw):
+        unit, bad = unit_rows(raw)
+        return _bucket_index(corpus_keyfn(raw)), ids, unit, bad
+
+    def scan(state, qids, qvecs):
+        if not len(qids):
+            return _no_lsh_candidates()
+        index, ids, unit, bad = state
+        x = np.vstack(qvecs).astype(np.float64)
+        xq, qbad = unit_rows(x)
         pk = probe_keyfn(x).reshape(len(x), tables, n_probes + 1)
         out_q, out_i, out_c, out_na = [], [], [], []
         for qi in range(len(x)):
@@ -1180,150 +1035,147 @@ def _sharded_lsh_topk(
                 continue
             pos = np.unique(np.concatenate(parts))
             s = unit[pos] @ xq[qi]
-            s[zero_mask[pos]] = -np.inf
-            top = np.argsort(-s, kind="stable")[: min(take, len(pos))]
-            sel = pos[top]
-            # exact emitted score: ROW-WISE einsum over the unit rows —
-            # the same op/order as _score_pairs' broadcast kernel, so
-            # the forced-cap regime test compares bit-identical doubles
-            cos = np.einsum(
-                "ij,ij->i",
-                unit[sel],
-                np.broadcast_to(xq[qi], (len(sel), unit.shape[1])),
-            )
+            s[bad[pos] | qbad[qi]] = -np.inf
+            sel = pos[np.argsort(-s, kind="stable")[:take]]
             out_q.append(np.full(len(sel), qids[qi], dtype=np.int64))
             out_i.append(ids[sel])
-            out_c.append(cos)
-            out_na.append(zero_mask[sel] | qzero[qi])
-        if not out_q:
-            return pd.DataFrame(
-                {
-                    "query_id": pd.array([], dtype="int64"),
-                    "neighbor_id": pd.array([], dtype="int64"),
-                    "cosine": pd.array([], dtype="Float64"),
-                }
+            out_c.append(
+                np.einsum(
+                    "ij,ij->i",
+                    unit[sel],
+                    np.broadcast_to(xq[qi], (len(sel), unit.shape[1])),
+                )
             )
-        cvals = pd.array(np.concatenate(out_c), dtype="Float64")
-        na = np.concatenate(out_na)
-        if na.any():
-            cvals[na] = pd.NA
+            out_na.append(bad[sel] | qbad[qi])
+        if not out_q:
+            return _no_lsh_candidates()
+        cosine = pd.array(np.concatenate(out_c), dtype="Float64")
+        cosine[np.concatenate(out_na)] = pd.NA
         return pd.DataFrame(
             {
                 "query_id": np.concatenate(out_q),
                 "neighbor_id": np.concatenate(out_i),
-                "cosine": cvals,
+                "cosine": cosine,
             }
         )
 
-    cand = (
-        left.groupBy("__shard", "__qb")
-        .cogroup(right.groupBy("__shard", "__qb"))
-        .applyInPandas(scan, "query_id long, neighbor_id long, cosine double")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-    )
-    scored = cand.select(
-        "query_id", "neighbor_id", F.round("cosine", 6).alias("cosine")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rnk")
-    )
+    return build, scan
 
 
-def _lsh_scan_candidates_udf(
-    spark, corpus_keyfn, probe_keyfn, n_probes, ids, raw, unit, take
-):
-    """pandas_udf: RAW query vector → its top-``take`` candidate ids
-    from the broadcast bucket index, scored exactly — the LSH analogue
-    of ``ivf._ivf_scan_candidates_udf`` (r5: the candidate JOIN
-    materialized a ~tables·probes·bucket² multiset through a distinct
-    shuffle, measured 352 s at 20k vectors; this kernel gathers and
-    scores inside the worker).
+def _lsh_broadcast_candidates(qsrc, ids, raw, build, scan, key, fan):
+    """Under the byte cap: the whole corpus's scan state ships as ONE
+    broadcast (fetched once per worker, not re-deserialized per task —
+    see ``_cached_broadcast``) and each query partition runs ``scan``
+    against it.
 
-    The index maps (table, exact key) → positions into the id-sorted
-    unit matrix; per query the probe keys come from the SAME
-    ``_lsh_key_fn`` machinery as the bucketing UDF (raw vectors in,
-    byte-identical key sequences out), gathered positions are
-    deduplicated with one sort, and the exact cosine top-``take`` is
-    emitted with (score desc, id asc) ties — zero-norm corpus rows
-    score −inf, matching the join path's NULL-cosine-ranked-last."""
-    import hashlib
+    FINER-than-cores query partitions (``fan`` × cores, VERDICT r8 #6):
+    per-query scan cost varies with local cluster density, so
+    cores-wide partitions leave one task grinding ~2× the mean — the
+    measured +0.18 exponent (~20 straggler minutes on one core) of the
+    sf10 lsh_self cell. The caller widens only when the estimated
+    candidate volume says the scan stage is tens of core-minutes: each
+    task pays fixed scheduler/Arrow overhead (~0.3 s), measured +26 s
+    on the 60 s sf1 cell at unconditional 4×."""
+    from udacity_capstone_data_engineering_spark.sources.catalog import (
+        fan_out_small_scan,
+    )
 
+    spark = qsrc.sparkSession
+    bc = _cached_broadcast(spark, key, lambda: build(ids, raw))
+
+    def scan_batches(pdfs):
+        state = bc.value
+        for pdf in pdfs:
+            yield scan(state, pdf["query_id"].to_numpy(), pdf["qv"].to_numpy())
+
+    return fan_out_small_scan(
+        qsrc, min_partitions=fan * spark.sparkContext.defaultParallelism
+    ).mapInPandas(scan_batches, _LSH_CANDIDATES_SCHEMA)
+
+
+# Query rows per block in the sharded grid joins (LSH here, PQ/IVF-PQ
+# in ``pq``) — bounds the per-task pandas group (block × dim doubles)
+# and the score buffer.
+LSH_QUERY_BLOCK_ROWS = 4096
+
+
+def _grid_shards(
+    n_queries: int, par: int, total_bytes: int = 0, cap: int = 1,
+    at_least: int = 1,
+) -> tuple[int, int]:
+    """``(n_blocks, n_shards)`` of a (query-block × shard) grid join.
+
+    The grid's task count is n_shards × n_blocks: a serving batch (one
+    query block) against a few byte-capped shards would run on a few of
+    the cluster's cores. Shards may be FINER than the byte cap requires
+    — per-(query, row) work is shard-independent, and shards partition
+    the corpus rather than replicate it — so the count is the larger of
+    the byte-driven ``ceil(total_bytes / cap)``, ``at_least``, and
+    ~2 tasks per core (at most 4 × cores shards)."""
+    par = max(1, par)
+    n_blocks = max(1, -(-n_queries // LSH_QUERY_BLOCK_ROWS))
+    n_shards = max(
+        at_least,
+        -(-total_bytes // max(cap, 1)),
+        min(-(-2 * par // n_blocks), 4 * par),
+    )
+    return n_blocks, n_shards
+
+
+def _lsh_grid_candidates(qsrc, corpus, build, scan, n_bytes, n_q, cap):
+    """PAST the byte cap (VERDICT r10 #1): the cell-sharded grid of
+    ``pq._sharded_adc_candidates`` applied to bucket indexes. Not a
+    join: a bucket join carries a tables·probes·bucket² candidate
+    multiset through its shuffle, and one was MEASURED spilling
+    >60 GB of shuffle to local-disk exhaustion at 2M vectors × 2k
+    queries (SCALING.md third-decade probe, r10).
+
+    ``corpus`` is ``(id, v)`` raw vectors. It is hash-sharded on id so
+    each shard's raw matrix fits ``cap`` bytes; queries are
+    hash-blocked (``LSH_QUERY_BLOCK_ROWS``); a cogrouped
+    ``applyInPandas`` runs ``build`` on each (query-block × shard)
+    cell's shard and ``scan`` on its queries. Nothing corpus-sized is
+    broadcast or carried through a join: the shuffled volume is
+    corpus×n_blocks + queries×n_shards rows, and candidates leave each
+    task already cut to ``take`` per query; the caller's query-keyed
+    window merges the shards."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql.functions import pandas_udf
 
-    # build the (table, key) → positions index from the corpus keys
-    corpus_keys = corpus_keyfn(raw)  # (n, tables) — probes=0 machinery
-    n_tables = corpus_keys.shape[1] if corpus_keys.ndim == 2 else 1
-
-    def build():
-        index = _bucket_index(corpus_keys)
-        zero_mask = (unit == 0).all(axis=1)
-        return index, ids, unit, zero_mask
-
-    # index + matrices go to workers as ONE broadcast (fetched once
-    # per worker, not re-deserialized per task — see _cached_broadcast)
-    bc = _cached_broadcast(
-        spark,
-        (
-            "lsh_scan",
-            id(spark.sparkContext),
-            unit.shape,
-            n_tables,
-            n_probes,
-            hashlib.sha1(raw.tobytes()).hexdigest(),
-            # the bucket index is a function of the hash FAMILY, not just
-            # the corpus: same corpus + same table/probe counts with a
-            # different plane count (or seed) must not reuse a stale
-            # index keyed under the old family (ADVICE r9) — the corpus
-            # key matrix captures the family's effect on the payload
-            # exactly
-            hashlib.sha1(corpus_keys.tobytes()).hexdigest(),
-        ),
-        build,
+    spark = qsrc.sparkSession
+    n_blocks, n_shards = _grid_shards(
+        n_q, spark.sparkContext.defaultParallelism, n_bytes, cap, at_least=2
+    )
+    left = qsrc.crossJoin(
+        F.broadcast(
+            spark.range(n_shards).select(F.col("id").cast("int").alias("__shard"))
+        )
+    ).withColumn(
+        "__qb", F.pmod(F.xxhash64("query_id"), F.lit(n_blocks)).cast("int")
+    )
+    right = corpus.withColumn(
+        "__shard", F.pmod(F.xxhash64("id"), F.lit(n_shards)).cast("int")
+    ).crossJoin(
+        F.broadcast(
+            spark.range(n_blocks).select(F.col("id").cast("int").alias("__qb"))
+        )
     )
 
-    def scan(v):
-        index, b_ids, b_unit, zero_mask = bc.value
-        x = np.vstack(v.to_numpy())
-        norms = np.linalg.norm(x, axis=1, keepdims=True)
-        xq = x / np.where(norms == 0, 1.0, norms)
-        pk = probe_keyfn(x).reshape(len(x), n_tables, n_probes + 1)
-        out = []
-        for qi in range(len(x)):
-            parts = [
-                arr
-                for t in range(n_tables)
-                for r in range(n_probes + 1)
-                if (arr := index.get((t, int(pk[qi, t, r])))) is not None
-            ]
-            if not parts:
-                out.append(np.zeros(0, dtype=np.int64))
-                continue
-            pos = np.unique(np.concatenate(parts))
-            s = b_unit[pos] @ xq[qi]
-            s[zero_mask[pos]] = -np.inf
-            top = np.argsort(-s, kind="stable")[: min(take, len(pos))]
-            out.append(b_ids[pos[top]].astype(np.int64))
-        return pd.Series(out)
+    def cell(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
+        if not len(lpdf) or not len(rpdf):
+            return _no_lsh_candidates()
+        rpdf = rpdf.sort_values("id")
+        state = build(
+            rpdf["id"].to_numpy(dtype=np.int64),
+            np.vstack(rpdf["v"].to_numpy()).astype(np.float64),
+        )
+        return scan(state, lpdf["query_id"].to_numpy(), lpdf["qv"].to_numpy())
 
-    # .asNondeterministic() is an OPTIMIZER FENCE, not a semantics
-    # change (the kernel is seeded/deterministic): without it,
-    # InferFiltersFromGenerate infers `size(result) > 0` from the
-    # downstream explode and pushes that filter — WITH the whole Arrow
-    # UDF inside it — below the fan-out exchange, re-evaluating the
-    # ENTIRE scan a second time on the raw one-full-split layout:
-    # one serial full-corpus scan on one core (r9 diagnosis; this
-    # duplicate evaluation, not density variance, was r8's measured
-    # sf10 "straggler tail"). Nondeterministic expressions cannot be
-    # duplicated or moved, so the kernel runs once, above the
-    # exchange, at the fan-out's parallelism.
-    return pandas_udf(scan, "array<long>").asNondeterministic()
+    return (
+        left.groupBy("__shard", "__qb")
+        .cogroup(right.groupBy("__shard", "__qb"))
+        .applyInPandas(cell, _LSH_CANDIDATES_SCHEMA)
+    )
 
 
 def _score_pairs(
@@ -1444,6 +1296,13 @@ def auto_lsh_tables(n: int) -> int:
     return min(32, math.ceil(12 * (n / 20_000) ** 0.22))
 
 
+# Estimated candidate rows (n_queries × tables × (probes+1) × mean
+# bucket size) past which the broadcast shape splits queries 4× finer
+# than cores (see _lsh_broadcast_candidates); r8's sf10 straggler
+# evidence.
+LSH_FAN_OUT_MIN_CANDIDATES = 512_000_000
+
+
 def lsh_topk(
     emb: DataFrame,
     id_col: str,
@@ -1457,8 +1316,8 @@ def lsh_topk(
     project_dims: int | None = None,
     stage1_mult: int = 4,
 ) -> DataFrame:
-    """Approximate top-k: candidates = pairs sharing any table's bucket
-    (deduplicated), then exact cosine ranking of candidates only.
+    """Approximate top-k: candidates = corpus rows sharing any table's
+    bucket with the query, then exact cosine ranking of candidates only.
 
     ``project_dims`` (VERDICT r6 #7): run candidate generation on a
     JL random projection to that many dimensions (``jl_project`` —
@@ -1468,25 +1327,28 @@ def lsh_topk(
     and hyperplane-matrix width drop by dim/project_dims; recall is
     restored by the rerank — the classic sketch-then-verify shape.
 
-    Scale shape: one shuffle on (table, bucket); candidate count is
-    sum of per-bucket sizes², tunable via planes (bucket granularity)
-    × tables (recall). ``planes=None`` auto-sizes granularity to the
-    corpus — planes ≈ log2(n / 32) keeps expected bucket size ~32, so
-    candidate generation stays near-linear as n grows instead of
-    quadratic (fixed planes degenerate at scale).
+    Scale shape: per query, candidate count is the sum of its probed
+    bucket sizes, tunable via planes (bucket granularity) × tables
+    (recall). ``planes=None`` auto-sizes granularity to the corpus —
+    planes ≈ log2(n / 32) keeps expected bucket size ~32, so candidate
+    generation stays near-linear as n grows instead of quadratic
+    (fixed planes degenerate at scale).
 
-    THREE regimes, all row-identical (regime tests pin it): the
-    candidate JOIN below the candidate-volume crossover, the broadcast
-    scan kernel above it while the raw matrix fits
-    ``BROADCAST_SCORE_MAX_BYTES``, and PAST that byte cap the
-    cell-sharded grid kernel (``_sharded_lsh_topk`` — VERDICT r10 #1:
-    the join regime past the cap was measured spilling >60 GB to disk
-    exhaustion at 2M vectors, so it is no longer reachable there).
+    ONE scan (``_lsh_scanner``) in TWO distribution shapes, chosen only
+    by the raw-matrix byte cap and row-identical (cosines included;
+    pinned by the regime tests): under ``BROADCAST_SCORE_MAX_BYTES`` the
+    corpus's bucket index ships as one broadcast and query partitions
+    scan it; past the cap each (query-block × shard) cell of a grid
+    join builds its shard's index (``_lsh_grid_candidates``). Either
+    way each query emits its top-``k+8`` with exact cosines, and one
+    query-keyed window ranks them (cosine desc, id asc). Rows whose
+    vector is NULL are not in the corpus and send no query; zero- or
+    NaN-norm rows score NULL cosine and rank last.
 
     ``multiprobe`` enables QUERY-DIRECTED multiprobe (Lv et al.): the
     probe side also checks, per table, the ``multiprobe`` next-likeliest
     buckets from the margin-ranked perturbation sequence (subsets of
-    the 3 lowest-|margin| sign bits ordered by summed margin) — the
+    the lowest-|margin| sign bits ordered by summed margin) — the
     recall lever that does NOT add tables. ``multiprobe=None``
     auto-sizes it to ``max(2, planes-2)``: probe depth must GROW with
     key width, because auto-sizing adds planes as n grows, which
@@ -1497,13 +1359,27 @@ def lsh_topk(
     flip-everything: all-bit probing costs ×(planes+1) probe rows
     (measured 6× slower end-to-end) where the ranked low-margin
     subsets capture most boundary misses at ×(multiprobe+1). The
-    build side keeps exact keys only, so no pair is double-generated
+    index keeps exact keys only, so no pair is double-generated
     across probe ranks. ``multiprobe=0`` restores exact-bucket
     probing. Recall is validated against ``brute_force_topk`` in
     tests AND in-gate via ``ann_recall_report`` (approx operators get
     recall thresholds, not hash equality — SURVEY.md §7 risk
     register).
+
+    ``queries``: optional serving WORKLOAD (same id/vec columns, ids
+    a subset of the corpus). Only workload vectors probe — the bucket
+    index is still built over the full corpus, and all knob
+    auto-sizing stays a function of CORPUS size (recall depends on the
+    index, not on how many queries hit it). This is the stage-1 hook
+    ``rerank_two_stage`` uses.
     """
+    import hashlib
+    import math
+
+    import numpy as np
+
+    from udacity_capstone_data_engineering_spark.functions.vectors import dot
+
     if project_dims is not None:
         proj = jl_project(emb, id_col, vec_col, project_dims, dim=dim)
         proj_q = (
@@ -1523,19 +1399,16 @@ def lsh_topk(
             queries=proj_q,
         )
         return _exact_rerank_pairs(emb, id_col, vec_col, cand, k)
-    # ONE sizing job on the happy path: try to collect the normalized
-    # matrix under the byte cap (needed for broadcast scoring anyway);
-    # its length is the vector count that drives auto-sizing. Only an
-    # over-cap corpus pays a separate count.
-    #
-    # ``queries``: optional serving WORKLOAD (same id/vec columns, ids
-    # a subset of the corpus). Only workload vectors probe — the
-    # bucket index is still built over the full corpus, and all knob
-    # auto-sizing stays a function of CORPUS size (recall depends on
-    # the index, not on how many queries hit it). This is the stage-1
-    # hook ``rerank_two_stage`` uses.
-    unit_mat = _collect_unit_matrix(emb, id_col, vec_col, dim)
-    n = len(unit_mat[0]) if unit_mat is not None else emb.count()
+    # ONE sizing job under the cap: the limited raw collect the
+    # broadcast needs anyway. Only an over-cap corpus pays a count.
+    # Either way n counts the vectors WITH a direction (norm > 0), so
+    # the knobs do not shift with degenerate rows or with the shape.
+    rawm = _collect_raw_matrix(emb, id_col, vec_col, dim)
+    if rawm is not None:
+        n = int(np.count_nonzero(np.linalg.norm(rawm[1], axis=1) > 0))
+    else:
+        sq = dot(vec_col, vec_col)
+        n = emb.filter((sq > 0) & ~F.isnan(sq)).count()
     if tables is None:
         # Table count must GROW with the corpus, because recall decays
         # with n at fixed tables (measured recall@5 at 12 tables:
@@ -1558,8 +1431,6 @@ def lsh_topk(
         # hash-family count.
         tables = auto_lsh_tables(n)
     if planes is None:
-        import math
-
         # Bucket target grows as ~1.4·sqrt(n), NOT a constant: planes =
         # ceil(log2(n/32)/2) + 2 ⇒ bucket ≈ sqrt(32n)/4. A constant
         # bucket target (r2's log2(n/32)) forces key width — and with
@@ -1582,152 +1453,41 @@ def lsh_topk(
         # 0.985 @ 2k/5 planes, 0.96 @ 20k/7 planes (sf1 probe).
         multiprobe = max(2, planes - 2) if planes <= 6 else planes - 1
     n_q = n if queries is None else queries.count()
-    if unit_mat is None:
-        # PAST the broadcast byte cap (VERDICT r10 #1): the bucket-JOIN
-        # regime's pair-scoring join was MEASURED spilling >60 GB to
-        # disk exhaustion at 2M vectors × 2k queries (SCALING.md r10
-        # third-decade probe) — route to the cell-sharded grid kernel
-        # instead, which never carries vectors through a join.
-        return _sharded_lsh_topk(
-            emb, id_col, vec_col, dim, k, planes, tables, multiprobe,
-            queries, n=n, n_q=n_q, cap=BROADCAST_SCORE_MAX_BYTES,
-        )
-    # Regime choice (r5): above the candidate-volume crossover, gather
-    # and score candidates INSIDE the worker from a broadcast bucket
-    # index instead of materializing the tables·probes·bucket²
-    # multiset through the join + distinct (measured 352 s at 20k
-    # vectors on the join path). Mean per-table bucket size is
-    # n / 2^planes; both regimes return identical rows
-    # (test_lsh_regimes_identical).
-    est_candidates = n_q * tables * (multiprobe + 1) * (n / (2 ** planes))
-    if est_candidates > LSH_JOIN_MAX_CANDIDATES:
-        rawm = _collect_raw_matrix(emb, id_col, vec_col, dim)
-    else:
-        rawm = None
+    build, scan = _lsh_scanner(dim, planes, tables, multiprobe, take=k + 8)
+    qsrc = (queries if queries is not None else emb).select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).cast("array<double>").alias("qv"),
+    ).filter(F.col("qv").isNotNull())
     if rawm is not None:
-        from udacity_capstone_data_engineering_spark.sources.catalog import (
-            fan_out_small_scan,
+        ids, raw = rawm
+        key = (
+            "lsh_scan",
+            id(emb.sparkSession.sparkContext),
+            raw.shape,
+            planes,
+            tables,
+            hashlib.sha1(ids.tobytes()).hexdigest(),
+            hashlib.sha1(raw.tobytes()).hexdigest(),
         )
-
-        ids_s, raw_m, unit_m = rawm
-        corpus_keyfn, _ = _lsh_key_fn(dim, planes, tables, 0)
-        probe_keyfn, npb = _lsh_key_fn(dim, planes, tables, multiprobe)
-        cand_udf = _lsh_scan_candidates_udf(
-            emb.sparkSession,
-            corpus_keyfn,
-            probe_keyfn,
-            npb,
-            ids_s,
-            raw_m,
-            unit_m,
-            take=k + 8,
-        )
-        # FINER-than-cores query partitions (VERDICT r8 #6): per-query
-        # scan cost varies with local cluster density (a query in the
-        # densest gaussian gathers the biggest buckets), so cores-wide
-        # partitions leave one task grinding ~2x the mean — the
-        # measured +0.18 exponent (~20 straggler minutes on one core)
-        # of the sf10 lsh_self cell. 4x-cores tasks cut the tail to
-        # ~1/4 of a partition's work and let the scheduler smooth the
-        # density variance. ADAPTIVE, not unconditional: each task
-        # pays fixed scheduler/Arrow overhead (~0.3 s here), so 4x
-        # tasks on a minute-scale cell is pure loss (measured +26 s on
-        # the 60 s sf1 cell) — widen only when estimated candidate
-        # volume says the scan stage is tens of core-minutes, where a
-        # straggler tail dominates fixed overhead by orders.
-        sc = emb.sparkSession.sparkContext
-        fan = 4 if est_candidates > 16 * LSH_JOIN_MAX_CANDIDATES else 1
-        qsrc = fan_out_small_scan(
-            emb if queries is None else queries,
-            min_partitions=fan * sc.defaultParallelism,
-        )
-        cand = (
-            qsrc.select(
-                F.col(id_col).alias("query_id"),
-                cand_udf(F.col(vec_col).cast("array<double>")).alias("cs"),
-            )
-            .select("query_id", F.explode("cs").alias("neighbor_id"))
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-        )
-        scored = _score_pairs(
-            emb, id_col, vec_col, cand, n=n, unit_mat=unit_mat
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cosine").desc(), F.col("neighbor_id")
-        )
-        return (
-            scored.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
-            .select("query_id", "neighbor_id", "cosine", "rnk")
-        )
-
-    if queries is None:
-        # Persisted: the self-join reads the bucketed keys from BOTH
-        # sides, and without the persist each side re-runs the scan +
-        # bucket UDF. Rows are (id, table, rank, bucket) ints — tiny
-        # vs the vectors. Widened BEFORE the persist (guide §2.5): a
-        # one-file corpus caches as ONE partition, so the key UDF, the
-        # broadcast build and every stage planned on the cache run as
-        # a single task (measured 2.5 s one-task stage at sf0.1/32c).
-        # At real scale the scan is already wide and this no-ops.
-        from udacity_capstone_data_engineering_spark.sources.catalog import (
-            fan_out_small_scan,
-        )
-
-        b = lsh_bucket_keys(
-            fan_out_small_scan(emb), vec_col, dim, planes, tables,
-            probes=multiprobe,
-        ).select(F.col(id_col), "table", "probe_rank", "bucket").persist()
-        left = b.select(
-            F.col(id_col).alias("query_id"), "table", "bucket"
-        )
-        right = b.filter(F.col("probe_rank") == 0).select(
-            F.col(id_col).alias("neighbor_id"), "table", "bucket"
-        )
+        est_candidates = n_q * tables * (multiprobe + 1) * (n / (2**planes))
+        fan = 4 if est_candidates > LSH_FAN_OUT_MIN_CANDIDATES else 1
+        cand = _lsh_broadcast_candidates(qsrc, ids, raw, build, scan, key, fan)
     else:
-        # Workload serving: probe keys (with multiprobe) only for the
-        # workload; the build side keys the whole corpus at exact rank
-        # (probes=0 — cheaper than keying everything at full depth and
-        # filtering). Each side is read once, so no persist.
-        left = lsh_bucket_keys(
-            queries, vec_col, dim, planes, tables, probes=multiprobe
-        ).select(F.col(id_col).alias("query_id"), "table", "bucket")
-        right = lsh_bucket_keys(
-            emb, vec_col, dim, planes, tables, probes=0
-        ).select(F.col(id_col).alias("neighbor_id"), "table", "bucket")
-    if n * tables * 24 <= BROADCAST_BUILD_MAX_BYTES:
-        # Exact-key side is ids+ints only; under the byte gate a
-        # broadcast-hash join deletes BOTH shuffle exchanges of the
-        # candidate join (the probe side then flows map-side into the
-        # single query_id repartition below). Past the gate — a real
-        # corpus — the join shuffles on (table, bucket) as designed.
-        right = F.broadcast(right)
-    # Candidate multiset: a pair appears once per (table × probe) it
-    # collides in — up to tables·(probes+1)×. Deduplicate BEFORE
-    # scoring with a plain distinct: the partial (map-side) aggregate
-    # collapses most duplicates BEFORE the exchange, so the wire
-    # carries ~distinct pairs, not the multiset. (Deferring dedup into
-    # the ranking window was measured ~30% slower — the window then
-    # sorts the whole multiset; pre-repartitioning by query_id was no
-    # better: the Arrow scoring node doesn't propagate partitioning,
-    # so the window re-exchanges anyway AND the multiset crosses the
-    # wire unreduced.) Net plan under the byte gates: broadcast-hash
-    # candidate join + two slim exchanges (distinct pairs, then scored
-    # pairs for the window) — pinned in tests/test_plans.py.
-    cand = (
-        left.join(right, ["table", "bucket"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-        .distinct()
-    )
-    scored = _score_pairs(
-        emb, id_col, vec_col, cand, n=n, unit_mat=unit_mat
-    )
+        corpus = emb.select(
+            F.col(id_col).alias("id"),
+            F.col(vec_col).cast("array<double>").alias("v"),
+        ).filter(F.col("v").isNotNull())
+        cand = _lsh_grid_candidates(
+            qsrc, corpus, build, scan, n * dim * 8, n_q,
+            cap=BROADCAST_SCORE_MAX_BYTES,
+        )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id")
     )
     return (
-        scored.withColumn("rnk", F.row_number().over(w))
+        cand.filter(F.col("query_id") != F.col("neighbor_id"))
+        .select("query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"))
+        .withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
         .select("query_id", "neighbor_id", "cosine", "rnk")
     )
