@@ -98,7 +98,7 @@ def classify_regimes(n: int, dim: int = 64) -> dict[str, str]:
         "pq": (
             "broadcast-adc"
             if n * 16 <= BROADCAST_SCORE_MAX_BYTES
-            else "sharded-adc"
+            else "cell-sharded-adc"
         ),
         "ivfpq": (
             "broadcast-adc"

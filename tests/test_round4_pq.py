@@ -37,7 +37,8 @@ def _rows(df):
 def test_pq_sharded_path_matches_broadcast(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     want = _rows(pq_topk(emb, "vec_id", "embedding", dim=64, k=5))
-    # 500 vectors x 16 B = 8 kB index; a 1 kB cap forces 8 hash shards
+    # 500 vectors x 16 B = 8 kB index; a 1 kB cap hash-splits the one
+    # cell into byte-capped pieces, one per shard
     got = _rows(
         pq_topk(
             emb, "vec_id", "embedding", dim=64, k=5, max_broadcast_bytes=1024
@@ -90,11 +91,25 @@ def test_adc_chunked_tournament_matches_one_shot(monkeypatch):
         return ids[top], np.take_along_axis(scores, top, axis=1)
 
     want_i, want_s = one_shot()
+    # flat PQ is one-cell IVF-PQ: a single zero centroid probed by
+    # every query (nprobe=1) must yield the one-shot ids too
+    x = rng.normal(size=(nq, m * 2))
+    books = rng.normal(size=(m, ksub, 2))
+    books[:, ksub // 2 :] = books[:, : ksub // 2]
+    cell_luts = pqmod._query_luts(x, books)
+    scores = np.zeros((nq, n))
+    for s in range(m):
+        scores += cell_luts[s][:, codes[:, s]]
+    want_cell = ids[np.argsort(-scores, axis=1, kind="stable")[:, :take]]
     for chunk_elems in (10_000_000, 9_000, 1_000):
         monkeypatch.setattr(pqmod, "ADC_CHUNK_ELEMS", chunk_elems)
         got_i, got_s = pqmod._adc_top_block(luts, ids, codes, take)
         assert np.array_equal(got_i, want_i), chunk_elems
         assert np.array_equal(got_s, want_s), chunk_elems
+        got_cell = pqmod._cell_major_candidates(
+            x, np.zeros((1, m * 2)), books, [ids], [codes], 1, take
+        )
+        assert np.array_equal(np.vstack(got_cell), want_cell), chunk_elems
 
 
 def test_fit_pq_codebooks_empty_corpus(spark):

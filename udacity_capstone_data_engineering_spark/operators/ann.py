@@ -44,14 +44,18 @@ decade grids, not a guess):
                               high fractions the per-cell LUT gathers
                               cost what the flat tournament costs
                               while still paying cell bookkeeping.
+                              (Measured before flat PQ became
+                              one-cell IVF-PQ on the shared ADC
+                              path; not re-measured since.)
     past the LSH table cap,   ``ivfpq`` — the cell filter's regime:
     probe fraction < 3/4      per-query scan cost ~n·nprobe/cells;
     (targets ≤ 0.85)          IVF-PQ codes (64× smaller than raw)
                               stay broadcast to ~16M vectors; the
-                              broadcast-vs-packed-shard regime switch
-                              is byte-cap driven inside
-                              ``ivfpq_topk``, and rerank follows the
-                              measured √n iso-recall contour.
+                              broadcast-vs-packed-shard switch is
+                              byte-cap driven inside the ADC serve
+                              both coded tiers share, and rerank
+                              follows the measured √n iso-recall
+                              contour.
     ========================  =========================================
 
 All tiers return the same ``(query_id, neighbor_id, cosine, rnk)``
@@ -105,7 +109,10 @@ def _lsh_kernel_max_n(dim: int) -> int:
 # Probed-cell fraction at or above which flat PQ replaces IVF-PQ past
 # the LSH caps — the r10 third-decade MEASUREMENT (2M vectors, 2k
 # queries): at 3/4 probed, pq 1723 s / recall 0.9610 vs ivfpq 2002 s /
-# 0.9381. The IVF filter only pays when nprobe/cells is small.
+# 0.9381. The IVF filter only pays when nprobe/cells is small. That
+# crossover was measured on the kernels from before flat PQ became
+# one-cell IVF-PQ on the shared ADC path (``pq._adc_serve``) and has
+# not been re-measured since.
 PQ_FLAT_MIN_PROBE_FRACTION = 0.75
 
 

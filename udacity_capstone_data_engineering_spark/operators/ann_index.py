@@ -42,7 +42,7 @@ surface, built on the Jégou et al. PQ / inverted-file design.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -81,6 +81,7 @@ def build_ann_index(
         _fit_centroids,
     )
     from udacity_capstone_data_engineering_spark.operators.pq import (
+        _encode_to_cells,
         fit_pq_codebooks,
     )
 
@@ -106,7 +107,7 @@ def build_ann_index(
         n=fit_n,
     )
 
-    _encode_to_cells(emb, id_col, vec_col, centers, books).repartition(
+    _encode_to_cells(emb, id_col, vec_col, centers, books, n).repartition(
         "cell"
     ).write.mode("overwrite").parquet(f"{path}/codes")
 
@@ -150,34 +151,6 @@ def build_ann_index(
     return meta
 
 
-def _encode_to_cells(emb, id_col, vec_col, centers, books) -> DataFrame:
-    """``(id, cell, codes)`` for every valid vector of ``emb``, encoded
-    with the GIVEN (already-fit) centroids/codebooks — the shared
-    encode stage of build and append, so appended rows are bit-identical
-    to what a build with the same books would have written."""
-    from udacity_capstone_data_engineering_spark.operators.pq import (
-        _encode_udf,
-        _probe1_cell_udf,
-    )
-    from udacity_capstone_data_engineering_spark.operators.similarity import (
-        _unit_vectors,
-    )
-    from udacity_capstone_data_engineering_spark.sources.catalog import (
-        fan_out_small_scan,
-    )
-
-    v = _unit_vectors(emb, id_col, vec_col).filter(F.col("uv").isNotNull())
-    encode = _encode_udf(books)
-    assign = _probe1_cell_udf(centers)
-    # fan out before the CPU-heavy encode/assign UDFs (the r8
-    # single-row-group skew fix); no-op at real scale.
-    return fan_out_small_scan(v).select(
-        F.col(id_col).alias("id"),
-        assign(F.col("uv")).cast("int").alias("cell"),
-        encode(F.col("uv")).alias("codes"),
-    )
-
-
 def append_ann_index(
     batch: DataFrame,
     id_col: str,
@@ -212,6 +185,10 @@ def append_ann_index(
     The id check is one broadcast-batch semi-join over the (64×
     compressed) code table; pass ``validate_ids=False`` on an ingest
     path that owns id-uniqueness upstream and wants the scan back."""
+    from udacity_capstone_data_engineering_spark.operators.pq import (
+        _encode_to_cells,
+    )
+
     spark = batch.sparkSession
     centers, books, codes_df, meta = load_ann_index(spark, path)
     head = (
@@ -246,7 +223,7 @@ def append_ann_index(
         F.coalesce(F.sum(F.col(id_col)), F.lit(0)).alias("id_sum"),
     ).head()
     n_batch, batch_id_sum = int(bstats["n"]), int(bstats["id_sum"])
-    coded = _encode_to_cells(batch, id_col, vec_col, centers, books)
+    coded = _encode_to_cells(batch, id_col, vec_col, centers, books, n_batch)
     coded.repartition("cell").write.mode("append").parquet(f"{path}/codes")
     # valid-row count (NULL / zero-norm vectors have no direction to
     # index); re-running the map-only encode on the batch is cheaper
@@ -336,7 +313,13 @@ def ann_topk_against_index(
 ) -> DataFrame:
     """Serve IVF-PQ top-k from a PERSISTED index: no centroid fit, no
     codebook fit, no corpus re-encode — the serve path is load (two
-    tiny float relations) + probe + ADC scan + exact rerank.
+    tiny float relations) + probe + ADC scan + exact rerank.  After
+    the staleness check and the knob sizing, the persisted code table
+    goes to ``pq._adc_serve``, the serve body ``ivfpq_topk`` and
+    ``pq_topk`` run on a fresh encode: under the broadcast cap the
+    table is collected (laid out in id order by a driver-side stable
+    argsort, no ``orderBy``) and broadcast; past it the cell-packed
+    grid scans it where it lies.
 
     ``emb`` supplies the RAW vectors for the exact-rerank stage (the
     standard serving split: compressed codes replicate, the exact
@@ -364,29 +347,14 @@ def ann_topk_against_index(
     import math
     import warnings
 
-    import numpy as np
-
     from udacity_capstone_data_engineering_spark.operators.pq import (
-        _ivfpq_candidates_udf,
-        _sharded_ivfpq_candidates,
+        _adc_serve,
         probe_fraction_for_recall,
         rerank_budget,
     )
-    from udacity_capstone_data_engineering_spark.operators.similarity import (
-        BROADCAST_SCORE_MAX_BYTES,
-        _score_pairs,
-        _unit_vectors,
-    )
 
-    spark = emb.sparkSession
-    cap = (
-        BROADCAST_SCORE_MAX_BYTES
-        if max_broadcast_bytes is None
-        else max_broadcast_bytes
-    )
-    centers, books, codes, meta = load_ann_index(spark, path)
-    n, m = meta["n"], meta["m"]
-    n_centroids = meta["n_centroids"]
+    centers, books, codes, meta = load_ann_index(emb.sparkSession, path)
+    n, n_centroids = meta["n"], meta["n_centroids"]
     if staleness != "ignore":
         cstats = emb.agg(
             F.count(F.lit(1)).alias("n"),
@@ -413,68 +381,7 @@ def ann_topk_against_index(
     if rerank is None:
         rerank = rerank_budget(n, k, target_recall)
 
-    unit = _unit_vectors(emb, id_col, vec_col)
-    if queries is None:
-        qv = unit.filter(F.col("uv").isNotNull())
-        n_q = n
-    else:
-        qv = _unit_vectors(queries, id_col, vec_col).filter(
-            F.col("uv").isNotNull()
-        )
-        n_q = queries.count()
-
-    index_bytes = n * (8 + m)
-    if index_bytes > cap:
-        # sharded regime (r11): the CELL-PACKED grid join — cells pack
-        # into byte-capped shards (hot cells hash-split under the
-        # cap), exactly the in-line past-the-cap plan
-        # (``pq._sharded_ivfpq_candidates``) — but the codes come off
-        # parquet (already cell-partitioned at rest) instead of a
-        # fresh encode.
-        qframe = qv.select(F.col(id_col).alias("query_id"), "uv")
-        pairs = _sharded_ivfpq_candidates(
-            qframe, codes.select("id", "cell", "codes"), centers, books,
-            nprobe, rerank, n_queries=n_q, cap=cap,
-        ).filter(F.col("query_id") != F.col("neighbor_id"))
-    else:
-        # broadcast regime: collect the code table (n×(8+m) bytes,
-        # under the cap by the gate above) and scan probed cells
-        # inside the worker — the same kernel as the in-line path.
-        pdf = codes.orderBy("id").toPandas()
-        ids = np.asarray(pdf["id"].to_numpy(), dtype=np.int64)
-        cells = np.asarray(pdf["cell"].to_numpy(), dtype=np.int64)
-        cmat = (
-            np.vstack(pdf["codes"].to_numpy()).astype(np.uint8)
-            if len(pdf)
-            else np.zeros((0, m), dtype=np.uint8)
-        )
-        cell_ids, cell_codes = [], []
-        for c in range(len(centers)):
-            mask = cells == c
-            cell_ids.append(ids[mask])
-            cell_codes.append(cmat[mask])
-
-        cand = _ivfpq_candidates_udf(
-            spark, centers, books, cell_ids, cell_codes, nprobe, rerank
-        )
-        from udacity_capstone_data_engineering_spark.sources.catalog import (
-            fan_out_small_scan,
-        )
-
-        pairs = (
-            fan_out_small_scan(qv)
-            .select(
-                F.col(id_col).alias("query_id"), cand(F.col("uv")).alias("cs")
-            )
-            .select("query_id", F.explode("cs").alias("neighbor_id"))
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-        )
-    scored = _score_pairs(emb, id_col, vec_col, pairs, n=n, unit=unit)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rnk")
+    return _adc_serve(
+        emb, id_col, vec_col, codes, centers, books, n, k, nprobe, rerank,
+        max_broadcast_bytes, queries,
     )

@@ -46,18 +46,31 @@ def _fit_centroids(
     # Arrow batches instead of per-row Python Row objects — same
     # pattern as similarity._score_pairs; several× less driver heap
     # for the bounded fit sample.
-    pdf = train_df.select(F.col(vec_col).cast("array<double>")).toPandas()
+    pdf = (
+        train_df.filter(F.col(vec_col).isNotNull())
+        .select(F.col(vec_col).cast("array<double>"))
+        .toPandas()
+    )
     col = pdf.iloc[:, 0].to_numpy()
     x = (
         np.vstack(col).astype(np.float64)
         if len(col)
         else np.zeros((0, 0), dtype=np.float64)
     )
+    # rows whose norm is not finite (NaN/±inf elements) stay out of the
+    # fit: one NaN centroid wins every later argmax, and every row of
+    # the corpus lands in its cell
     norms = np.linalg.norm(x, axis=1, keepdims=True)
+    finite = np.isfinite(norms[:, 0])
+    x, norms = x[finite], norms[finite]
     norms[norms == 0] = 1.0
     x = x / norms
     rng = np.random.default_rng(seed)
     k = min(k, len(x))
+    if not k:
+        # nothing to fit on: no cell for an empty corpus, one zero
+        # centroid (one cell, as flat PQ) when no sampled row is finite
+        return np.zeros((1 if x.shape[1] else 0, x.shape[1]))
     centers = x[rng.choice(len(x), size=k, replace=False)]
     for _ in range(iters):
         # assign to nearest center (unit rows: argmax dot == argmin L2

@@ -29,25 +29,29 @@ Pipeline:
      then get EXACT cosine scoring and the final top-k — the standard
      two-stage that recovers most recall lost to quantization.
 
-Scale shape — two regimes, switched on MEASURED index bytes:
+One ADC path.  Flat PQ is IVF-PQ with ONE cell (a zero centroid) and
+``nprobe=1``, so ``pq_topk``, ``ivfpq_topk`` and the standing index
+(``ann_index.ann_topk_against_index``) all size their knobs and hand
+a lazy ``(id, cell, codes)`` relation (``_encode_to_cells``, or the
+persisted code table) to :func:`_adc_serve`.  Its candidate kernel is
+:func:`_cell_major_candidates`: probe each query's ``nprobe`` nearest
+cells and run the bounded tournament (:func:`_adc_top_block`) once
+per cell for all the queries probing it.  The kernel runs in two
+shapes, switched on MEASURED index bytes:
 
   * UNDER the broadcast cap (n·(8+m) bytes ≤ 256 MiB ≈ 16M vectors at
-    m=8): the code matrix broadcasts; candidate generation is one
-    Arrow pass over the queries.
-  * PAST the cap: the SHARDED path (VERDICT r3 #2).  Codes stay a
-    DataFrame, hash-sharded so every shard fits the cap; queries are
-    hash-blocked; a cogrouped ``applyInPandas`` grid join scans each
-    (query-block × shard) cell with the SAME chunked ADC kernel
-    (bit-identical floats), emits per-shard top-``rerank``
-    candidates, and a query-keyed window merges shards to the global
-    top-``rerank`` — ties broken (ADC desc, id asc) exactly like the
-    broadcast kernel, so both regimes return identical results (the
-    forced-cap equality test pins this).  Replication cost is the
-    standard grid-join trade: codes ×query-blocks, queries ×shards.
-
-At 100 TB pair PQ with the IVF cell filter (IVF-PQ below) so each
-query scans only probed cells' codes; the sharded regime then shards
-BY CELL and each query visits only its probed cells.
+    m=8): the coded inverted file broadcasts; candidate generation is
+    one Arrow pass over the queries (``_ivfpq_candidates_udf``).
+  * PAST the cap: cells pack into byte-capped shards (a cell too big
+    for one is hash-split first), queries join only the shards that
+    hold a probed cell, and a cogrouped ``applyInPandas`` grid join
+    runs the SAME kernel on each (query-block × shard) cell
+    (``_sharded_ivfpq_candidates``); a query-keyed window merges the
+    shards on (ADC desc, id asc).  Per-(query, row) scores do not
+    depend on the shard (einsum LUTs, fixed accumulation order), so
+    both shapes return identical rows (the forced-cap equality tests
+    pin this).  Replication cost is the standard grid-join trade:
+    codes × query-blocks, queries × probed shards.
 """
 
 from __future__ import annotations
@@ -88,7 +92,10 @@ def fit_pq_codebooks(
     L2-NORMALIZED vectors (PQ approximates the unit vector, so ADC
     lookup sums approximate the cosine directly).  An EMPTY corpus
     short-circuits to the zero-initialized books (k=1) instead of
-    tripping ``rng.choice`` on a zero-length population."""
+    tripping ``rng.choice`` on a zero-length population.  Sample rows
+    whose norm is not finite (NaN/±inf elements) are dropped: one NaN
+    codebook row would win every later ``argmax`` and collapse all
+    codes of its subspace onto it."""
     import numpy as np
 
     if dim % m:
@@ -99,20 +106,26 @@ def fit_pq_codebooks(
         n = emb.count()
     frac = min(1.0, sample / max(n, 1))
     train_df = emb.sample(fraction=frac, seed=seed) if frac < 1.0 else emb
-    pdf = train_df.select(F.col(vec_col).cast("array<double>")).toPandas()
+    pdf = (
+        train_df.filter(F.col(vec_col).isNotNull())
+        .select(F.col(vec_col).cast("array<double>"))
+        .toPandas()
+    )
     col = pdf.iloc[:, 0].to_numpy()
     x = (
         np.vstack(col).astype(np.float64)
         if len(col)
         else np.zeros((0, dim), dtype=np.float64)
     )
+    norms = np.linalg.norm(x, axis=1, keepdims=True)
+    finite = np.isfinite(norms[:, 0])
+    x, norms = x[finite], norms[finite]
     dsub = dim // m
     rng = np.random.default_rng(seed)
     k = min(ksub, max(len(x), 1))
     books = np.zeros((m, k, dsub), dtype=np.float64)
     if not len(x):
         return books
-    norms = np.linalg.norm(x, axis=1, keepdims=True)
     norms[norms == 0] = 1.0
     x = x / norms
     for s in range(m):
@@ -159,6 +172,52 @@ def _encode_udf(books):
     return pandas_udf(encode, "array<smallint>")
 
 
+def _probe1_cell_udf(centers):
+    """pandas_udf: unit vector → its single nearest cell id."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    correction = 0.5 * (centers * centers).sum(axis=1)
+
+    def assign(v):
+        x = np.vstack(v.to_numpy())
+        d = x @ centers.T - correction
+        return pd.Series(d.argmax(axis=1).astype("int64"))
+
+    return pandas_udf(assign, "long")
+
+
+def _encode_to_cells(
+    emb, id_col, vec_col, centers, books, n_rows
+) -> DataFrame:
+    """``(id, cell, codes)`` for every vector of ``emb`` with a unit
+    vector, encoded with the GIVEN (already-fit) centroids/codebooks —
+    the one encode stage of the in-line serves and of the standing
+    index's build and append, so appended rows are bit-identical to
+    what a build with the same books would have written.  ``n_rows``
+    is ``emb``'s row count, which every caller already holds."""
+    from udacity_capstone_data_engineering_spark.operators.similarity import (
+        _unit_vectors,
+    )
+    from udacity_capstone_data_engineering_spark.sources.catalog import (
+        fan_out_small_scan,
+    )
+
+    v = _unit_vectors(emb, id_col, vec_col).filter(F.col("uv").isNotNull())
+    encode = _encode_udf(books)
+    assign = _probe1_cell_udf(centers)
+    # fan out before the CPU-heavy encode/assign UDFs: a one-file
+    # corpus otherwise runs the whole encode as ONE task (r8, observed
+    # 13 serial CPU-minutes at 200k vectors in the sf10 probe); skipped
+    # under FAN_OUT_MIN_ROWS, a no-op at real scale.
+    return fan_out_small_scan(v, n_rows=n_rows).select(
+        F.col(id_col).alias("id"),
+        assign(F.col("uv")).cast("int").alias("cell"),
+        encode(F.col("uv")).alias("codes"),
+    )
+
+
 def _query_luts(x, books):
     """Per-subspace ADC lookup tables for a query block: list of
     (n_queries × ksub) float64 arrays.
@@ -191,7 +250,12 @@ def _adc_top_block(luts, ids, codes, take):
     keeps its best ``take`` (score desc, id asc) — maintained in
     id-ascending storage order so the stable argsort reproduces the
     full-matrix kernel's tie behavior bit-for-bit.  Returns
-    (top_ids, top_scores), both (n_queries × ≤take)."""
+    (top_ids, top_scores), both (n_queries × ≤take).
+
+    A NaN score (a query with no direction has NaN LUTs) is ranked
+    LAST as −inf, so such a query keeps its candidates in id order —
+    the order ``lsh_topk`` gives it — and the exact rerank scores
+    those pairs NULL."""
     import numpy as np
 
     nq = luts[0].shape[0] if luts else 0
@@ -232,6 +296,9 @@ def _adc_top_block(luts, ids, codes, take):
             for s in range(1, len(luts)):
                 np.take(luts[s], codes[lo + b0 : lo + b1, s], axis=1, out=t)
                 view += t
+            # NaN → −inf in place (fmax drops the NaN operand); a NaN
+            # threshold below would select no column at all
+            np.fmax(view, -np.inf, out=view)
         all_i = np.concatenate(
             [best_i, np.broadcast_to(ids[lo:hi], (nq, hi - lo))], axis=1
         )
@@ -266,60 +333,6 @@ def _adc_top_block(luts, ids, codes, take):
     )
 
 
-def _adc_candidates_udf(spark, books, ids, codes, rerank: int):
-    """pandas_udf: unit query vector → array<long> of the ``rerank``
-    best candidate ids by ADC score over the broadcast code matrix
-    (ONE broadcast per corpus — fetched once per worker, not
-    re-deserialized into every task's closure; r9, see
-    ``similarity._cached_broadcast``).
-
-    The scan is the chunked tournament (``_adc_top_block``) — the
-    score buffer is ~256 MB per Arrow batch regardless of corpus
-    size.  Ties break toward the LOWER vec_id, so candidate sets are
-    deterministic."""
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    from udacity_capstone_data_engineering_spark.operators.similarity import (
-        _cached_broadcast,
-    )
-
-    bc = _cached_broadcast(
-        spark,
-        (
-            "adc_scan",
-            id(spark.sparkContext),
-            codes.shape,
-            hashlib.sha1(codes.tobytes()).hexdigest(),
-            hashlib.sha1(ids.tobytes()).hexdigest(),
-        ),
-        lambda: (ids, codes),
-    )
-
-    def cand(v):
-        b_ids, b_codes = bc.value
-        x = np.vstack(v.to_numpy())
-        luts = _query_luts(x, books)
-        top_i, _ = _adc_top_block(luts, b_ids, b_codes, rerank)
-        return pd.Series(list(top_i))
-
-    # .asNondeterministic() is an OPTIMIZER FENCE, not a semantics
-    # change (the kernel is seeded/deterministic): without it,
-    # InferFiltersFromGenerate infers `size(result) > 0` from the
-    # downstream explode and pushes that filter — WITH the whole Arrow
-    # UDF inside it — below the fan-out exchange, re-evaluating the
-    # ENTIRE scan a second time on the raw one-full-split layout:
-    # one serial full-corpus scan on one core (r9 diagnosis; this
-    # duplicate evaluation, not density variance, was r8's measured
-    # sf10 "straggler tail"). Nondeterministic expressions cannot be
-    # duplicated or moved, so the kernel runs once, above the
-    # exchange, at the fan-out's parallelism.
-    return pandas_udf(cand, "array<long>").asNondeterministic()
-
-
 def _compact_candidate_partials(qpos, cids, cscores, nq, rerank):
     """Reduce accumulated (query, id, score) candidate partials to each
     query's top-``rerank`` by the merge key (query, score desc, id asc)
@@ -343,19 +356,20 @@ def _cell_major_candidates(
     x, centers, books, cell_ids, cell_codes, nprobe, rerank,
     compact_elems=None, return_partials=False,
 ):
-    """CELL-MAJOR ADC scan over a query batch (r10): probe each query's
-    ``nprobe`` nearest cells, score each cell once for ALL the queries
-    probing it as one fancy-indexed LUT gather (chunked on the cell
-    axis under ``ADC_CHUNK_ELEMS``), keep per-chunk top-``rerank``
-    partials, and merge with one (query, score desc, id asc) lexsort.
-    Selection- and order-identical to the old per-query loop (see the
-    r10 notes in SCALING.md).
+    """CELL-MAJOR ADC scan over a query batch (r10), the one candidate
+    kernel of every ADC serve: probe each query's ``nprobe`` nearest
+    cells and run the bounded tournament (:func:`_adc_top_block`) once
+    per probed cell for ALL the queries probing it, keep each cell's
+    per-query top-``rerank`` partials, and merge with one (query,
+    score desc, id asc) lexsort.  Flat PQ is the one-cell case (a zero
+    centroid, ``nprobe=1``), where the merge keeps the tournament's
+    own top-``rerank``.
 
     ``compact_elems`` (ADVICE r10, the memory bound): whenever the
     accumulated partial count exceeds this many elements, compact to
     per-query top-``rerank`` via :func:`_compact_candidate_partials`
-    — without it the partials grow O(nq_batch · probe_fraction · n)
-    (a 10k-query Arrow batch at n=8M probing 3/4 of cells would
+    — without it the partials grow O(nq_batch · probed cells · rerank)
+    (a 10k-query Arrow batch probing 3/4 of thousands of cells would
     accumulate tens of GB before the final lexsort), while the
     compacted floor is nq·rerank. Defaults to ``ADC_CHUNK_ELEMS``.
     Compaction is lossless (same merge key), pinned by
@@ -370,7 +384,6 @@ def _cell_major_candidates(
 
     if compact_elems is None:
         compact_elems = ADC_CHUNK_ELEMS
-    m = books.shape[0]
     correction = 0.5 * (centers * centers).sum(axis=1)
     nq = len(x)
     n_cells = len(cell_ids)
@@ -388,49 +401,43 @@ def _cell_major_candidates(
     empty = np.zeros(0, dtype=np.int64)
     empty_f = np.zeros(0, dtype=np.float64)
     for c in range(n_cells):
-        ids_c = cell_ids[c]
-        if not len(ids_c):
-            continue
         qidx = np.nonzero(mask[:, c])[0]
-        if not len(qidx):
+        if not len(cell_ids[c]) or not len(qidx):
             continue
-        codes_c = cell_codes[c]
-        qluts = [luts[s][qidx] for s in range(m)]
-        chunk = max(256, ADC_CHUNK_ELEMS // max(len(qidx), 1))
-        for lo in range(0, len(ids_c), chunk):
-            hi = min(lo + chunk, len(ids_c))
-            scores = qluts[0][:, codes_c[lo:hi, 0]].copy()
-            for s in range(1, m):
-                scores += qluts[s][:, codes_c[lo:hi, s]]
-            w = min(rerank, hi - lo)
-            top = np.argsort(-scores, axis=1, kind="stable")[:, :w]
-            qpos_parts.append(np.repeat(qidx, w))
-            id_parts.append(ids_c[lo:hi][top].ravel())
-            score_parts.append(
-                np.take_along_axis(scores, top, axis=1).ravel()
+        qluts = luts if len(qidx) == nq else [lut[qidx] for lut in luts]
+        top_i, top_s = _adc_top_block(
+            qluts, cell_ids[c], cell_codes[c], rerank
+        )
+        qpos_parts.append(np.repeat(qidx, top_i.shape[1]))
+        id_parts.append(top_i.ravel())
+        score_parts.append(top_s.ravel())
+        acc_elems += top_i.size
+        if acc_elems > compact_elems:
+            qp, ci, cs = _compact_candidate_partials(
+                np.concatenate(qpos_parts),
+                np.concatenate(id_parts),
+                np.concatenate(score_parts),
+                nq,
+                rerank,
             )
-            acc_elems += len(qidx) * w
-            if acc_elems > compact_elems:
-                qp, ci, cs = _compact_candidate_partials(
-                    np.concatenate(qpos_parts),
-                    np.concatenate(id_parts),
-                    np.concatenate(score_parts),
-                    nq,
-                    rerank,
-                )
-                qpos_parts, id_parts, score_parts = [qp], [ci], [cs]
-                acc_elems = len(qp)
+            qpos_parts, id_parts, score_parts = [qp], [ci], [cs]
+            acc_elems = len(qp)
     if not qpos_parts:
         if return_partials:
             return empty, empty, empty_f
         return [empty] * nq
-    qpos, cids, cscores = _compact_candidate_partials(
-        np.concatenate(qpos_parts),
-        np.concatenate(id_parts),
-        np.concatenate(score_parts) if score_parts else empty_f,
-        nq,
-        rerank,
-    )
+    if len(qpos_parts) == 1:
+        # one tournament (or one compaction) is already in merge-key
+        # order, ≤ rerank per query: flat PQ's single cell
+        qpos, cids, cscores = qpos_parts[0], id_parts[0], score_parts[0]
+    else:
+        qpos, cids, cscores = _compact_candidate_partials(
+            np.concatenate(qpos_parts),
+            np.concatenate(id_parts),
+            np.concatenate(score_parts),
+            nq,
+            rerank,
+        )
     if return_partials:
         return qpos, cids, cscores
     starts = np.searchsorted(qpos, np.arange(nq), side="left")
@@ -446,10 +453,11 @@ def _ivfpq_candidates_udf(
 ):
     """pandas_udf: unit query vector → array<long> of the ``rerank``
     best candidate ids by ADC score over ONLY the query's ``nprobe``
-    nearest cells' codes — the inverted-file filter that makes the
-    scan sub-linear. Deterministic: stable argsorts + id-sorted cells.
-    The coded inverted file ships as ONE broadcast (fetched once per
-    worker, not re-deserialized per task; r9)."""
+    nearest cells' codes (all of them for flat PQ's single cell) — the
+    under-the-cap shape of :func:`_cell_major_candidates`.
+    Deterministic: stable argsorts + id-sorted cells.  The coded
+    inverted file ships as ONE broadcast (fetched once per worker, not
+    re-deserialized per task; r9)."""
     import hashlib
 
     import numpy as np
@@ -484,18 +492,10 @@ def _ivfpq_candidates_udf(
     )
 
     def cand(v):
-        # CELL-MAJOR scan (r10): the old per-query loop concatenated
-        # the query's ~nprobe probed cells' arrays per query — at the
-        # third-decade probe (2M vectors, nprobe≈1060) that is ~1M
-        # python-level concatenations per 1k queries, enough gather
-        # overhead that IVF-PQ measured SLOWER than flat PQ despite
-        # scanning 25% less (SCALING.md r10). The cell-major body
-        # (one fancy-indexed LUT gather per cell for all the queries
-        # probing it, chunked, partials merged by lexsort, accumulation
-        # BOUNDED by running compaction — ADVICE r10) lives in
-        # _cell_major_candidates; selection is SET- and ORDER-identical
-        # to the per-query path (same einsum LUTs, same s-major
-        # accumulation order, same (query, score desc, id asc) key).
+        # CELL-MAJOR scan (r10): one tournament per probed cell for all
+        # the queries probing it, instead of a per-query concatenation
+        # of ~nprobe cells (~1M python-level concatenations per 1k
+        # queries at the third-decade probe, SCALING.md r10).
         cell_ids, cell_codes = bc.value
         x = np.vstack(v.to_numpy())
         return pd.Series(
@@ -516,76 +516,6 @@ def _ivfpq_candidates_udf(
     # duplicated or moved, so the kernel runs once, above the
     # exchange, at the fan-out's parallelism.
     return pandas_udf(cand, "array<long>").asNondeterministic()
-
-
-def _sharded_adc_candidates(
-    queries, probes, coded, books, rerank: int, n_blocks: int
-):
-    """The past-the-cap ADC scan (VERDICT r3 #2): a cogrouped grid
-    join instead of a broadcast index.
-
-    ``queries``  — (query_id, uv) unit query vectors.
-    ``probes``   — (query_id, __shard): which shards each query must
-                   scan (every shard for plain PQ; the probed cells
-                   for IVF-PQ).
-    ``coded``    — (id, codes, __shard): the distributed code index,
-                   every shard under the broadcast cap.
-
-    Queries are hash-blocked into ``n_blocks`` (``_grid_shards``) so
-    a task's pandas group holds one bounded query block × one bounded
-    shard; the kernel is the same chunked ADC tournament as the
-    broadcast path, so per-(query, row) scores are bit-identical and
-    the query-keyed window merge (ADC desc, id asc, row_number ≤
-    rerank) selects exactly the set the one-shot kernel would.
-
-    Returns (query_id, neighbor_id) candidate pairs."""
-    import numpy as np
-    import pandas as pd
-
-    spark = queries.sparkSession
-    left = (
-        probes.join(queries, "query_id")
-        .withColumn(
-            "__qb", F.pmod(F.xxhash64("query_id"), F.lit(n_blocks)).cast("int")
-        )
-    )
-    right = coded.crossJoin(
-        F.broadcast(
-            spark.range(n_blocks).select(F.col("id").cast("int").alias("__qb"))
-        )
-    )
-
-    def scan(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(lpdf) or not len(rpdf):
-            return pd.DataFrame(
-                {"query_id": [], "neighbor_id": [], "adc": []}
-            ).astype({"query_id": "int64", "neighbor_id": "int64", "adc": "f8"})
-        rpdf = rpdf.sort_values("id")
-        ids = rpdf["id"].to_numpy(dtype=np.int64)
-        codes = np.vstack(rpdf["codes"].to_numpy()).astype(np.uint8)
-        x = np.vstack(lpdf["uv"].to_numpy())
-        qids = lpdf["query_id"].to_numpy(dtype=np.int64)
-        top_i, top_s = _adc_top_block(_query_luts(x, books), ids, codes, rerank)
-        w = top_i.shape[1]
-        return pd.DataFrame(
-            {
-                "query_id": np.repeat(qids, w),
-                "neighbor_id": top_i.ravel(),
-                "adc": top_s.ravel(),
-            }
-        )
-
-    out = (
-        left.groupBy("__shard", "__qb")
-        .cogroup(right.groupBy("__shard", "__qb"))
-        .applyInPandas(scan, "query_id long, neighbor_id long, adc double")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("adc"), "neighbor_id")
-    return (
-        out.withColumn("__r", F.row_number().over(w))
-        .filter(F.col("__r") <= rerank)
-        .select("query_id", "neighbor_id")
-    )
 
 
 def _pack_cells_to_shards(counts: dict, row_bytes: int, cap: int):
@@ -631,8 +561,9 @@ def _pack_cells_to_shards(counts: dict, row_bytes: int, cap: int):
 def _sharded_ivfpq_candidates(
     qframe, coded_cells, centers, books, nprobe, rerank, n_queries, cap
 ):
-    """The past-the-cap IVF-PQ scan (r11 rewrite): a cogrouped grid
-    join over CELL-PACKED shards.
+    """The past-the-cap shape of every ADC serve (r11 rewrite): a
+    cogrouped grid join over CELL-PACKED shards.  Flat PQ's single
+    cell is hash-split into byte-capped pieces, one per shard.
 
     ``qframe``      — (query_id, uv) unit query vectors.
     ``coded_cells`` — (id, cell, codes): the distributed inverted
@@ -777,6 +708,94 @@ def _sharded_ivfpq_candidates(
     )
 
 
+def _adc_serve(
+    emb, id_col, vec_col, coded, centers, books, n, k, nprobe, rerank,
+    max_broadcast_bytes, queries,
+) -> DataFrame:
+    """The one ADC serve body of ``pq_topk``, ``ivfpq_topk`` and
+    ``ann_index.ann_topk_against_index``: candidate generation over the
+    lazy ``(id, cell, codes)`` relation ``coded``, exact rerank of the
+    candidates (``_score_pairs``, against ``emb``'s raw vectors) and
+    the (cosine desc, id asc) rank window.
+
+    The shape follows the bytes that actually ship, n·(8+m) (one byte
+    per subspace + the int64 id), against the broadcast cap: under it
+    ``coded`` is collected, laid out in id order by a driver-side
+    stable argsort (ids are unique, so no global ``orderBy``) and
+    broadcast as a per-cell inverted file (``_ivfpq_candidates_udf``);
+    past it ``coded`` stays distributed and the cell-packed grid runs
+    the same kernel (``_sharded_ivfpq_candidates``).  ``queries`` is
+    the optional serving workload (ids ⊆ corpus); ``None`` is the
+    self-top-k."""
+    import numpy as np
+
+    from udacity_capstone_data_engineering_spark.operators.similarity import (
+        BROADCAST_SCORE_MAX_BYTES,
+        _score_pairs,
+        _unit_vectors,
+    )
+    from udacity_capstone_data_engineering_spark.sources.catalog import (
+        fan_out_small_scan,
+    )
+
+    cap = (
+        BROADCAST_SCORE_MAX_BYTES
+        if max_broadcast_bytes is None
+        else max_broadcast_bytes
+    )
+    m = books.shape[0]
+    unit = _unit_vectors(emb, id_col, vec_col)
+    qv = unit if queries is None else _unit_vectors(queries, id_col, vec_col)
+    qv = qv.filter(F.col("uv").isNotNull())
+    if n * (8 + m) > cap:
+        # only the grid's query-block count needs the workload size
+        pairs = _sharded_ivfpq_candidates(
+            qv.select(F.col(id_col).alias("query_id"), "uv"),
+            coded.select("id", "cell", "codes"),
+            centers, books, nprobe, rerank,
+            n_queries=n if queries is None else queries.count(),
+            cap=cap,
+        )
+    else:
+        pdf = coded.select("id", "cell", "codes").toPandas()
+        ids = pdf["id"].to_numpy(dtype=np.int64)
+        order = np.argsort(ids, kind="stable")
+        ids, cells = ids[order], pdf["cell"].to_numpy(dtype=np.int64)[order]
+        codes = (
+            np.vstack(pdf["codes"].to_numpy()).astype(np.uint8)[order]
+            if len(pdf)
+            else np.zeros((0, m), dtype=np.uint8)
+        )
+        # the inverted file: per cell, (ids, codes) in id order
+        cell_ids, cell_codes = [], []
+        for c in range(len(centers)):
+            mask = cells == c
+            cell_ids.append(ids[mask])
+            cell_codes.append(codes[mask])
+        cand = _ivfpq_candidates_udf(
+            emb.sparkSession, centers, books, cell_ids, cell_codes,
+            nprobe, rerank,
+        )
+        # the ADC scan is the CPU-heavy stage: widen a narrow parquet
+        # scan so it parallelizes (no-op at real scale)
+        pairs = fan_out_small_scan(qv).select(
+            F.col(id_col).alias("query_id"), cand(F.col("uv")).alias("cs")
+        ).select("query_id", F.explode("cs").alias("neighbor_id"))
+    scored = _score_pairs(
+        emb, id_col, vec_col,
+        pairs.filter(F.col("query_id") != F.col("neighbor_id")),
+        n=n, unit=unit,
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id")
+    )
+    return (
+        scored.withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= k)
+        .select("query_id", "neighbor_id", "cosine", "rnk")
+    )
+
+
 def ivfpq_topk(
     emb: DataFrame,
     id_col: str,
@@ -805,7 +824,7 @@ def ivfpq_topk(
     recovers it more simply here).
 
     Auto-sizing follows the coupled-knob law end to end: sqrt(n)
-    cells, rerank = n/20 (floor 50), and nprobe sized FROM THE
+    cells, rerank from :func:`rerank_budget`, and nprobe sized FROM THE
     MEASURED RECALL CURVE via ``target_recall`` (see
     :func:`probe_fraction_for_recall` — VERDICT r3 #3: the old raw
     cells/4 default measured recall@5 ≈ 0.66; the default 0.9 target
@@ -814,16 +833,12 @@ def ivfpq_topk(
     ``target_recall=None`` to fall back to the speed-first 1/4
     fraction, or pin ``nprobe`` explicitly.
 
-    Past the broadcast cap the inverted file STAYS DISTRIBUTED and
-    the scan becomes the CELL-PACKED grid join
-    (``_sharded_ivfpq_candidates``, r11): cells pack into byte-capped
-    shards (hot cells hash-split first, so the per-task bound is
-    ENFORCED under any skew — ADVICE r4), queries join only shards
-    holding their probed cells, and the per-(query, shard) top-rerank
-    cut binds because a shard holds ~cap/row_bytes rows ≫ rerank
-    (shard-per-cell, the r4 design, let every probed row through to
-    the merge window).  Under the cap, the classic driver-collected
-    broadcast inverted file.  Both regimes return identical results
+    The serve is :func:`_adc_serve`, shared with ``pq_topk`` and the
+    standing index: under the broadcast cap the coded inverted file
+    broadcasts; past it the cells pack into byte-capped shards (hot
+    cells hash-split first, so the per-task bound is ENFORCED under
+    any skew — ADVICE r4) and queries join only the shards holding
+    their probed cells.  Both shapes return identical results
     (forced-cap equality tests, including a cap small enough to force
     sub-shard splits).
 
@@ -836,22 +851,10 @@ def ivfpq_topk(
     self-topk behavior."""
     import math
 
-    import numpy as np
-
     from udacity_capstone_data_engineering_spark.operators.ivf import (
         _fit_centroids,
     )
-    from udacity_capstone_data_engineering_spark.operators.similarity import (
-        BROADCAST_SCORE_MAX_BYTES,
-        _score_pairs,
-        _unit_vectors,
-    )
 
-    cap = (
-        BROADCAST_SCORE_MAX_BYTES
-        if max_broadcast_bytes is None
-        else max_broadcast_bytes
-    )
     n = emb.count()
     if n_centroids is None:
         n_centroids = max(16, int(math.sqrt(max(n, 256))))
@@ -869,103 +872,10 @@ def ivfpq_topk(
     books = fit_pq_codebooks(
         emb, vec_col, dim, m=m, ksub=ksub, seed=seed, sample=fit_sample, n=n
     )
-
-    unit = _unit_vectors(emb, id_col, vec_col)
-    v = unit.filter(F.col("uv").isNotNull())
-    if queries is None:
-        qv, n_q = v, n
-    else:
-        qv = _unit_vectors(queries, id_col, vec_col).filter(
-            F.col("uv").isNotNull()
-        )
-        n_q = queries.count()
-    encode = _encode_udf(books)
-    assign = _probe1_cell_udf(centers)
-
-    # one byte per subspace + the int64 id — the bytes actually shipped
-    index_bytes = n * (8 + m)
-    if index_bytes > cap:
-        # ---- sharded regime (r11 rewrite): cells PACK into
-        # byte-capped shards and the grid kernel re-derives per-query
-        # probes in-task — see _sharded_ivfpq_candidates for why
-        # shard-per-cell (the r4 design) defeated the per-shard
-        # top-rerank cut and would have flooded the merge window with
-        # nq·probe_fraction·n rows at the fourth decade.
-        coded_cells = v.select(
-            F.col(id_col).alias("id"),
-            assign(F.col("uv")).cast("int").alias("cell"),
-            encode(F.col("uv")).alias("codes"),
-        )
-        qframe = qv.select(F.col(id_col).alias("query_id"), "uv")
-        pairs = _sharded_ivfpq_candidates(
-            qframe, coded_cells, centers, books, nprobe, rerank,
-            n_queries=n_q, cap=cap,
-        ).filter(F.col("query_id") != F.col("neighbor_id"))
-    else:
-        # fan out before the CPU-heavy encode/assign UDFs: a one-file
-        # corpus otherwise runs the whole encode as ONE task (r8,
-        # observed 13 serial CPU-minutes at 200k vectors in the sf10
-        # probe); the orderBy keeps the collected layout deterministic
-        # regardless of the fan-out shuffle. No-op at real scale.
-        from udacity_capstone_data_engineering_spark.sources.catalog import (
-            fan_out_small_scan,
-        )
-
-        encoded = (
-            fan_out_small_scan(v, n_rows=n)
-            .select(
-                F.col(id_col),
-                assign(F.col("uv")).alias("cell"),
-                encode(F.col("uv")).alias("codes"),
-            )
-            .toPandas()
-        )
-        ids = np.asarray(encoded[id_col].to_numpy(), dtype=np.int64)
-        cells = np.asarray(encoded["cell"].to_numpy(), dtype=np.int64)
-        codes = (
-            np.vstack(encoded["codes"].to_numpy()).astype(np.uint8)
-            if len(encoded)
-            else np.zeros((0, m), dtype=np.uint8)
-        )
-        # Deterministic layout via a driver-side stable sort instead of
-        # an orderBy: ids are unique, so the order is identical, and the
-        # collect job loses its global sort exchange (guide §2.4 — the
-        # sort only existed to undo the fan-out shuffle's row order).
-        order = np.argsort(ids, kind="stable")
-        ids, cells, codes = ids[order], cells[order], codes[order]
-        # the inverted file: per cell, (ids, codes) in id order
-        cell_ids, cell_codes = [], []
-        for c in range(len(centers)):
-            mask = cells == c
-            cell_ids.append(ids[mask])
-            cell_codes.append(codes[mask])
-
-        cand = _ivfpq_candidates_udf(
-            emb.sparkSession, centers, books, cell_ids, cell_codes,
-            nprobe, rerank,
-        )
-        # the ADC scan is the CPU-heavy stage: widen a narrow parquet
-        # scan so it parallelizes (no-op at real scale)
-        from udacity_capstone_data_engineering_spark.sources.catalog import (
-            fan_out_small_scan,
-        )
-
-        qv = fan_out_small_scan(qv)
-        pairs = (
-            qv.select(
-                F.col(id_col).alias("query_id"), cand(F.col("uv")).alias("cs")
-            )
-            .select("query_id", F.explode("cs").alias("neighbor_id"))
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-        )
-    scored = _score_pairs(emb, id_col, vec_col, pairs, n=n, unit=unit)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rnk")
+    return _adc_serve(
+        emb, id_col, vec_col,
+        _encode_to_cells(emb, id_col, vec_col, centers, books, n),
+        centers, books, n, k, nprobe, rerank, max_broadcast_bytes, queries,
     )
 
 
@@ -1049,22 +959,6 @@ def probe_fraction_for_recall(target_recall: float | None) -> float:
     return 0.875
 
 
-def _probe1_cell_udf(centers):
-    """pandas_udf: unit vector → its single nearest cell id."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    correction = 0.5 * (centers * centers).sum(axis=1)
-
-    def assign(v):
-        x = np.vstack(v.to_numpy())
-        d = x @ centers.T - correction
-        return pd.Series(d.argmax(axis=1).astype("int64"))
-
-    return pandas_udf(assign, "long")
-
-
 def pq_topk(
     emb: DataFrame,
     id_col: str,
@@ -1098,12 +992,13 @@ def pq_topk(
     outside the top-``rerank`` ADC cut. Codes and candidates are
     deterministic (seeded fit, stable argsort, id tiebreaks).
 
+    Flat PQ is IVF-PQ with one cell: the codes all sit in the cell of
+    a single zero centroid, probed by every query (``nprobe=1``), and
+    the serve is :func:`_adc_serve`, shared with ``ivfpq_topk``.
     Under the measured broadcast cap (n·(8+m) bytes — uint8 codes are
-    what actually ships) the index broadcasts; past it the scan
-    switches to the hash-sharded cogroup grid join
-    (``_sharded_adc_candidates``) with identical results — the
-    refuse-don't-degrade ValueError this replaced is gone (VERDICT r3
-    #2).
+    what actually ships) the index broadcasts; past it the one cell
+    is hash-split into byte-capped shards of the cogroup grid join,
+    with identical results.
 
     ``rerank=None`` auto-sizes to a CONSTANT FRACTION of the corpus
     via the measured ``rerank_budget`` curve (VERDICT r8 #5) at the
@@ -1121,17 +1016,6 @@ def pq_topk(
     neighbors inside any affordable cut."""
     import numpy as np
 
-    from udacity_capstone_data_engineering_spark.operators.similarity import (
-        BROADCAST_SCORE_MAX_BYTES,
-        _score_pairs,
-        _unit_vectors,
-    )
-
-    cap = (
-        BROADCAST_SCORE_MAX_BYTES
-        if max_broadcast_bytes is None
-        else max_broadcast_bytes
-    )
     n = emb.count()
     if rerank is None:
         # Budget from the measured √n contour (VERDICT r8 #5; the
@@ -1144,91 +1028,9 @@ def pq_topk(
         emb, vec_col, dim, m=m, ksub=ksub, seed=seed, sample=fit_sample, n=n
     )
 
-    unit = _unit_vectors(emb, id_col, vec_col)
-    v = unit.filter(F.col("uv").isNotNull())
-    if queries is None:
-        qv, n_q = v, n
-    else:
-        qv = _unit_vectors(queries, id_col, vec_col).filter(
-            F.col("uv").isNotNull()
-        )
-        n_q = queries.count()
-    encode = _encode_udf(books)
-
-    index_bytes = n * (8 + m)
-    if index_bytes > cap:
-        # ---- sharded regime: hash shards, each under the cap; at
-        # least ~2 tasks/core (``_grid_shards``) ----
-        n_blocks, n_shards = _grid_shards(
-            n_q,
-            emb.sparkSession.sparkContext.defaultParallelism,
-            index_bytes,
-            cap,
-            at_least=2,
-        )
-        coded = v.select(
-            F.col(id_col).alias("id"),
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_shards))
-            .cast("int")
-            .alias("__shard"),
-            encode(F.col("uv")).alias("codes"),
-        )
-        qsrc = qv.select(F.col(id_col).alias("query_id"), "uv")
-        spark = emb.sparkSession
-        probes = qsrc.select("query_id").crossJoin(
-            F.broadcast(
-                spark.range(n_shards).select(
-                    F.col("id").cast("int").alias("__shard")
-                )
-            )
-        )
-        pairs = _sharded_adc_candidates(
-            qsrc, probes, coded, books, rerank, n_blocks=n_blocks
-        ).filter(F.col("query_id") != F.col("neighbor_id"))
-    else:
-        # fan out before the CPU-heavy encode UDF — same single-task
-        # serialization fix as the IVF-PQ branch above (r8).
-        from udacity_capstone_data_engineering_spark.sources.catalog import (
-            fan_out_small_scan,
-        )
-
-        encoded = (
-            fan_out_small_scan(v, n_rows=n)
-            .select(F.col(id_col), encode(F.col("uv")).alias("codes"))
-            .toPandas()
-        )
-        ids = np.asarray(encoded[id_col].to_numpy(), dtype=np.int64)
-        codes = (
-            np.vstack(encoded["codes"].to_numpy()).astype(np.uint8)
-            if len(encoded)
-            else np.zeros((0, m), dtype=np.uint8)
-        )
-        # Driver-side stable sort replaces the collect's orderBy: ids
-        # are unique, so the layout is identical and the job drops its
-        # global sort exchange (guide §2.4).
-        order = np.argsort(ids, kind="stable")
-        ids, codes = ids[order], codes[order]
-
-        cand = _adc_candidates_udf(emb.sparkSession, books, ids, codes, rerank)
-        # widen a narrow scan ahead of the CPU-heavy ADC stage
-        # (no-op at real scale)
-        from udacity_capstone_data_engineering_spark.sources.catalog import (
-            fan_out_small_scan,
-        )
-
-        pairs = (
-            fan_out_small_scan(qv).select(
-                F.col(id_col).alias("query_id"), cand(F.col("uv")).alias("cs")
-            )
-            .select("query_id", F.explode("cs").alias("neighbor_id"))
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-        )
-    scored = _score_pairs(emb, id_col, vec_col, pairs, n=n, unit=unit)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rnk")
+    centers = np.zeros((1, dim), dtype=np.float64)
+    return _adc_serve(
+        emb, id_col, vec_col,
+        _encode_to_cells(emb, id_col, vec_col, centers, books, n),
+        centers, books, n, k, 1, rerank, max_broadcast_bytes, queries,
     )

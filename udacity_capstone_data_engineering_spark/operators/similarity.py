@@ -1123,12 +1123,12 @@ def _grid_shards(
 
 
 def _lsh_grid_candidates(qsrc, corpus, build, scan, n_bytes, n_q, cap):
-    """PAST the byte cap (VERDICT r10 #1): the cell-sharded grid of
-    ``pq._sharded_adc_candidates`` applied to bucket indexes. Not a
-    join: a bucket join carries a tables·probes·bucket² candidate
-    multiset through its shuffle, and one was MEASURED spilling
-    >60 GB of shuffle to local-disk exhaustion at 2M vectors × 2k
-    queries (SCALING.md third-decade probe, r10).
+    """PAST the byte cap (VERDICT r10 #1): the (query-block × shard)
+    grid of ``pq._sharded_ivfpq_candidates`` applied to bucket indexes.
+    Not a join: a bucket join carries a tables·probes·bucket²
+    candidate multiset through its shuffle, and one was MEASURED
+    spilling >60 GB of shuffle to local-disk exhaustion at 2M vectors
+    × 2k queries (SCALING.md third-decade probe, r10).
 
     ``corpus`` is ``(id, v)`` raw vectors. It is hash-sharded on id so
     each shard's raw matrix fits ``cap`` bytes; queries are
