@@ -4,7 +4,7 @@ The third decade (``sf100_probe.py``, 2M) measured the broadcast-codes
 regime and moved the LSH dispatch boundary; the remaining extrapolated
 claim is the dispatch table's "codes stay broadcast to ~16M vectors at
 m=8" rationale and, past it, the cell-packed sharded grid
-(``pq._sharded_ivfpq_candidates`` — rewritten in r11 precisely because
+(``pq._sharded_cell_candidates`` — rewritten in r11 precisely because
 the r4 shard-per-cell design would have flooded the merge window with
 nq·probe_fraction·n rows at this decade). This probe measures BOTH
 regimes on the SAME 8M cell: the natural broadcast plan (codes 128 MiB

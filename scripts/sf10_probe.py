@@ -78,7 +78,8 @@ def exact_topk_fast(path: str, k: int = 5) -> set[tuple[int, int]]:
 
 def classify_regimes(n: int, dim: int = 64) -> dict[str, str]:
     """Which regime each kernel's auto-switch picks at this corpus
-    size, from the operators' own byte thresholds."""
+    size, from the operators' own byte thresholds (IVF's past its
+    pair-join candidate volume, which every probed decade is)."""
     from udacity_capstone_data_engineering_spark.operators.similarity import (
         BROADCAST_SCORE_MAX_BYTES,
     )
@@ -92,8 +93,8 @@ def classify_regimes(n: int, dim: int = 64) -> dict[str, str]:
         ),
         "ivf": (
             "broadcast-in-udf-scan"
-            if raw <= BROADCAST_SCORE_MAX_BYTES
-            else "pair-join"
+            if n * (8 + 8 * dim) <= BROADCAST_SCORE_MAX_BYTES
+            else "cell-sharded-grid"
         ),
         "pq": (
             "broadcast-adc"

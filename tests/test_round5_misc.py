@@ -3,6 +3,9 @@ claimed (VERDICT r4 #2) and the registered approx-profiler row (#7)."""
 
 from __future__ import annotations
 
+import pytest
+
+from tests.test_ivf import IVF_PATHS, ivf_path, three_paths
 from udacity_capstone_data_engineering_spark import queries as catalog
 
 QUERIES = catalog.queries()
@@ -43,34 +46,25 @@ def test_profile_orders_approx_registered_matches_impl(spark, sf_dir):
     assert got == want
 
 
-def test_ivf_regimes_identical(spark, sf_dir):
-    """VERDICT r4 #3: the new broadcast-regime in-UDF scan must return
-    exactly what the shuffle-distributed pair-join regime returns
-    (same probed cells, exact scoring, same tie rules)."""
-    from udacity_capstone_data_engineering_spark.operators.ivf import ivf_topk
+def test_ivf_regimes_identical(spark, sf_dir, monkeypatch):
+    """VERDICT r4 #3: the pair join, the broadcast scan kernel and the
+    cell-packed grid return the same rows, cosines included (same
+    probed cells, exact scoring, same tie rules) — and each call
+    really took the path it names."""
     from udacity_capstone_data_engineering_spark.sources.catalog import (
         load_table,
     )
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    fast = sorted(
-        tuple(r)
-        for r in ivf_topk(emb, "vec_id", "embedding", k=5)
-        .select("query_id", "neighbor_id", "rnk")
-        .collect()
-    )
-    slow = sorted(
-        tuple(r)
-        for r in ivf_topk(emb, "vec_id", "embedding", k=5, max_broadcast_bytes=1)
-        .select("query_id", "neighbor_id", "rnk")
-        .collect()
-    )
-    assert fast == slow
+    got = three_paths(monkeypatch, load_table(spark, sf_dir, "embeddings"))
+    assert got["pair_join"]
+    assert got["broadcast"] == got["pair_join"]
+    assert got["grid"] == got["pair_join"]
 
 
-def test_ivf_workload_queries_subset(spark, sf_dir):
+@pytest.mark.parametrize("path", IVF_PATHS)
+def test_ivf_workload_queries_subset(spark, sf_dir, monkeypatch, path):
     """The queries= workload hook must return exactly the self-topk
-    rows restricted to the workload's query ids."""
+    rows restricted to the workload's query ids, on each path."""
     from pyspark.sql import functions as F
 
     from udacity_capstone_data_engineering_spark.operators.ivf import ivf_topk
@@ -78,22 +72,25 @@ def test_ivf_workload_queries_subset(spark, sf_dir):
         load_table,
     )
 
+    kw, _calls = ivf_path(monkeypatch, path)
     emb = load_table(spark, sf_dir, "embeddings")
     workload = emb.filter(F.col("vec_id") % 7 == 0)
     got = sorted(
         tuple(r)
-        for r in ivf_topk(emb, "vec_id", "embedding", k=5, queries=workload)
+        for r in ivf_topk(
+            emb, "vec_id", "embedding", k=5, queries=workload, **kw
+        )
         .select("query_id", "neighbor_id", "rnk")
         .collect()
     )
     want = sorted(
         tuple(r)
-        for r in ivf_topk(emb, "vec_id", "embedding", k=5)
+        for r in ivf_topk(emb, "vec_id", "embedding", k=5, **kw)
         .filter(F.col("query_id") % 7 == 0)
         .select("query_id", "neighbor_id", "rnk")
         .collect()
     )
-    assert got == want
+    assert got and got == want
 
 
 def test_driver_contract_from_foreign_cwd():

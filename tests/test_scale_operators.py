@@ -77,26 +77,39 @@ def test_score_pairs_fallback_past_broadcast_cap(spark, sf_dir, monkeypatch):
         assert f[k] is None and s[k] is None or abs(f[k] - s[k]) < 1e-9, (k, f[k], s[k])
 
 
-def test_score_pairs_zero_norm_scores_null_not_nan(spark):
-    """Zero-norm vectors are absent from the broadcast index; their
+def test_score_pairs_zero_norm_scores_null_not_nan(spark, monkeypatch):
+    """Zero-norm and NaN-element vectors have no direction; their
     pairs must score NULL (sorts last under desc), never NaN (sorts
     FIRST under desc — would rank degenerate vectors as everyone's top
-    neighbor). ADVICE r1."""
+    neighbor), on the broadcast path (default cap) and on the join
+    fallback (cap 0). ADVICE r1."""
     from udacity_capstone_data_engineering_spark.operators import similarity
 
     emb = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [0.0, 0.0])],
+        [
+            (1, [1.0, 0.0]),
+            (2, [0.0, 1.0]),
+            (3, [0.0, 0.0]),
+            (4, [float("nan"), 1.0]),
+        ],
         "vec_id long, embedding array<double>",
     )
     cand = spark.createDataFrame(
-        [(1, 2), (1, 3), (3, 2)], "query_id long, neighbor_id long"
+        [(1, 2), (1, 3), (3, 2), (1, 4), (4, 2)],
+        "query_id long, neighbor_id long",
     )
-    rows = {
-        (r.query_id, r.neighbor_id): r.cosine
-        for r in similarity._score_pairs(emb, "vec_id", "embedding", cand).collect()
-    }
-    assert rows[(1, 2)] is not None
-    assert rows[(1, 3)] is None and rows[(3, 2)] is None
+    for cap in (similarity.BROADCAST_SCORE_MAX_BYTES, 0):
+        with monkeypatch.context() as mp:
+            mp.setattr(similarity, "BROADCAST_SCORE_MAX_BYTES", cap)
+            rows = {
+                (r.query_id, r.neighbor_id): r.cosine
+                for r in similarity._score_pairs(
+                    emb, "vec_id", "embedding", cand
+                ).collect()
+            }
+        assert rows[(1, 2)] is not None, cap
+        assert rows[(1, 3)] is None and rows[(3, 2)] is None, cap
+        assert rows[(1, 4)] is None and rows[(4, 2)] is None, cap
 
 
 def test_stateful_streaming_sessionize(spark, tmp_path):

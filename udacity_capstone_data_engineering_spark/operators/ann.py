@@ -30,9 +30,11 @@ decade grids, not a guess):
     byte cap, target > 0.97   the 7/8 probe fraction measured 0.97+
                               (``probe_fraction_for_recall``), which
                               the capped LSH ladder cannot promise.
-                              (IVF broadcasts RAW vectors, so past
-                              the byte cap high targets fall through
-                              to the coded tiers below.)
+                              (Past the byte cap IVF's exact scan now
+                              runs the coded tiers' cell-packed grid,
+                              but dispatch is unchanged and was not
+                              re-measured: high targets there still
+                              fall through to the coded tiers below.)
     past the LSH table cap,   ``pq`` — MEASURED at the third decade
     probe fraction ≥ 3/4      (r10, 2M-vector cell): at the 3/4 probe
     (targets > 0.85; also     fraction flat PQ beat IVF-PQ on wall
@@ -52,7 +54,7 @@ decade grids, not a guess):
     (targets ≤ 0.85)          IVF-PQ codes (64× smaller than raw)
                               stay broadcast to ~16M vectors; the
                               broadcast-vs-packed-shard switch is
-                              byte-cap driven inside the ADC serve
+                              byte-cap driven inside the cell serve
                               both coded tiers share, and rerank
                               follows the measured √n iso-recall
                               contour.
@@ -95,10 +97,11 @@ def _lsh_kernel_max_n(dim: int) -> int:
     """The largest corpus whose raw matrix (n·dim·8 bytes) fits the
     score-broadcast cap — ~500k vectors at dim 64. Under it LSH and
     IVF broadcast raw vectors; past it LSH switches from its broadcast
-    index to its sharded grid (same rows), and IVF, which needs the
-    raw vectors broadcast, hands high-recall targets to the coded
-    tiers, whose codes (n·16 bytes, 64× smaller) stay broadcast to 16M
-    vectors."""
+    index to its sharded grid (same rows), and dispatch hands
+    high-recall targets to the coded tiers, whose codes (n·16 bytes,
+    64× smaller) stay broadcast to 16M vectors.  IVF itself now runs
+    the cell-packed grid past the cap; that did not change this
+    boundary, which was not re-measured."""
     from udacity_capstone_data_engineering_spark.operators.similarity import (
         BROADCAST_SCORE_MAX_BYTES,
     )
@@ -111,8 +114,8 @@ def _lsh_kernel_max_n(dim: int) -> int:
 # queries): at 3/4 probed, pq 1723 s / recall 0.9610 vs ivfpq 2002 s /
 # 0.9381. The IVF filter only pays when nprobe/cells is small. That
 # crossover was measured on the kernels from before flat PQ became
-# one-cell IVF-PQ on the shared ADC path (``pq._adc_serve``) and has
-# not been re-measured since.
+# one-cell IVF-PQ on the shared cell serve (``pq._cell_serve``) and
+# has not been re-measured since.
 PQ_FLAT_MIN_PROBE_FRACTION = 0.75
 
 

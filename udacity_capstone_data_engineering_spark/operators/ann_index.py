@@ -81,6 +81,7 @@ def build_ann_index(
         _fit_centroids,
     )
     from udacity_capstone_data_engineering_spark.operators.pq import (
+        _adc_payload,
         _encode_to_cells,
         fit_pq_codebooks,
     )
@@ -107,9 +108,9 @@ def build_ann_index(
         n=fit_n,
     )
 
-    _encode_to_cells(emb, id_col, vec_col, centers, books, n).repartition(
-        "cell"
-    ).write.mode("overwrite").parquet(f"{path}/codes")
+    _encode_to_cells(
+        emb, id_col, vec_col, centers, _adc_payload(books), n
+    ).repartition("cell").write.mode("overwrite").parquet(f"{path}/codes")
 
     meta = {
         "n": n,
@@ -186,6 +187,7 @@ def append_ann_index(
     compressed) code table; pass ``validate_ids=False`` on an ingest
     path that owns id-uniqueness upstream and wants the scan back."""
     from udacity_capstone_data_engineering_spark.operators.pq import (
+        _adc_payload,
         _encode_to_cells,
     )
 
@@ -223,7 +225,9 @@ def append_ann_index(
         F.coalesce(F.sum(F.col(id_col)), F.lit(0)).alias("id_sum"),
     ).head()
     n_batch, batch_id_sum = int(bstats["n"]), int(bstats["id_sum"])
-    coded = _encode_to_cells(batch, id_col, vec_col, centers, books, n_batch)
+    coded = _encode_to_cells(
+        batch, id_col, vec_col, centers, _adc_payload(books), n_batch
+    )
     coded.repartition("cell").write.mode("append").parquet(f"{path}/codes")
     # valid-row count (NULL / zero-norm vectors have no direction to
     # index); re-running the map-only encode on the batch is cheaper
@@ -315,7 +319,7 @@ def ann_topk_against_index(
     codebook fit, no corpus re-encode — the serve path is load (two
     tiny float relations) + probe + ADC scan + exact rerank.  After
     the staleness check and the knob sizing, the persisted code table
-    goes to ``pq._adc_serve``, the serve body ``ivfpq_topk`` and
+    goes to ``pq._cell_serve``, the serve body ``ivfpq_topk`` and
     ``pq_topk`` run on a fresh encode: under the broadcast cap the
     table is collected (laid out in id order by a driver-side stable
     argsort, no ``orderBy``) and broadcast; past it the cell-packed
@@ -348,7 +352,8 @@ def ann_topk_against_index(
     import warnings
 
     from udacity_capstone_data_engineering_spark.operators.pq import (
-        _adc_serve,
+        _adc_payload,
+        _cell_serve,
         probe_fraction_for_recall,
         rerank_budget,
     )
@@ -381,7 +386,7 @@ def ann_topk_against_index(
     if rerank is None:
         rerank = rerank_budget(n, k, target_recall)
 
-    return _adc_serve(
-        emb, id_col, vec_col, codes, centers, books, n, k, nprobe, rerank,
-        max_broadcast_bytes, queries,
+    return _cell_serve(
+        emb, id_col, vec_col, codes, centers, _adc_payload(books), n, k,
+        nprobe, rerank, max_broadcast_bytes, queries,
     )

@@ -29,32 +29,46 @@ Pipeline:
      then get EXACT cosine scoring and the final top-k — the standard
      two-stage that recovers most recall lost to quantization.
 
-One ADC path.  Flat PQ is IVF-PQ with ONE cell (a zero centroid) and
-``nprobe=1``, so ``pq_topk``, ``ivfpq_topk`` and the standing index
-(``ann_index.ann_topk_against_index``) all size their knobs and hand
-a lazy ``(id, cell, codes)`` relation (``_encode_to_cells``, or the
-persisted code table) to :func:`_adc_serve`.  Its candidate kernel is
-:func:`_cell_major_candidates`: probe each query's ``nprobe`` nearest
-cells and run the bounded tournament (:func:`_adc_top_block`) once
-per cell for all the queries probing it.  The kernel runs in two
-shapes, switched on MEASURED index bytes:
+One cell-major scan, two payloads.  Flat PQ is IVF-PQ with ONE cell
+(a zero centroid) and ``nprobe=1``; IVF's exact scan is IVF-PQ without
+the quantizer, its cells holding the unit vectors themselves.  So
+``pq_topk``, ``ivfpq_topk``, the standing index
+(``ann_index.ann_topk_against_index``) and ``ivf_topk`` past its
+pair-join volume all size their knobs and hand a lazy
+``(id, cell, payload)`` relation (``_encode_to_cells``, or the
+persisted code table) to :func:`_cell_serve`.  What differs by
+payload is one :class:`_Payload` value, passed in: the payload column
+and its decode (uint8 codes or float64 unit vectors), the bytes per
+row that ship (8+m or 8+8·dim), how the inverted file is collected
+under the cap (the coded relation, or the raw vectors the exact
+rerank reads anyway) and the block scorer (the ADC LUT gather, or an
+exact ``xq @ mat.T``).  The candidate kernel is
+:func:`_cell_major_scan`: probe each query's ``nprobe`` nearest
+cells and run the bounded tournament (:func:`_top_block`) once per
+cell for all the queries probing it.  The kernel runs in two shapes,
+switched on MEASURED payload bytes:
 
-  * UNDER the broadcast cap (n·(8+m) bytes ≤ 256 MiB ≈ 16M vectors at
-    m=8): the coded inverted file broadcasts; candidate generation is
-    one Arrow pass over the queries (``_ivfpq_candidates_udf``).
+  * UNDER the broadcast cap (n·row_bytes ≤ 256 MiB: ≈ 16M vectors of
+    m=8 codes, ≈ 500k raw 64-d vectors): the inverted file
+    broadcasts; candidate generation is one Arrow pass over the
+    queries (``_cell_candidates_udf``).
   * PAST the cap: cells pack into byte-capped shards (a cell too big
     for one is hash-split first), queries join only the shards that
     hold a probed cell, and a cogrouped ``applyInPandas`` grid join
     runs the SAME kernel on each (query-block × shard) cell
-    (``_sharded_ivfpq_candidates``); a query-keyed window merges the
-    shards on (ADC desc, id asc).  Per-(query, row) scores do not
-    depend on the shard (einsum LUTs, fixed accumulation order), so
-    both shapes return identical rows (the forced-cap equality tests
-    pin this).  Replication cost is the standard grid-join trade:
-    codes × query-blocks, queries × probed shards.
+    (``_sharded_cell_candidates``); a query-keyed window merges the
+    shards on (score desc, id asc).  Per-(query, row) ADC scores do
+    not depend on the shard (einsum LUTs, fixed accumulation order),
+    so both shapes return identical rows (the forced-cap equality
+    tests pin this); the exact scan's cut keeps 8 candidates past k,
+    which absorbs a last-ulp dgemm difference before the exact
+    rerank.  Replication cost is the standard grid-join trade:
+    payload × query-blocks, queries × probed shards.
 """
 
 from __future__ import annotations
+
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -63,14 +77,15 @@ from udacity_capstone_data_engineering_spark.operators.similarity import (
     _grid_shards,
 )
 
-# Per-query-batch ADC score buffer budget, in float64 ELEMENTS
+# Per-query-batch score buffer budget of the shared tournament
+# (_top_block, ADC and exact scorers alike), in float64 ELEMENTS
 # (32M ≈ 256 MB).  The corpus-axis chunk size is derived from it so
 # batch_rows × chunk stays bounded regardless of corpus size.
 ADC_CHUNK_ELEMS = 32_000_000
 
-# Column width of the reused gather window inside _adc_top_block's
-# accumulation — sized for cache residency under MANY concurrent
-# workers, measured best at 2048 for nq 625 AND 10000 (smaller hits a
+# Column width of the tournament's reused fill window — sized for
+# cache residency of the ADC gather under MANY concurrent workers,
+# measured best at 2048 for nq 625 AND 10000 (smaller hits a
 # short-gather slow path, larger spills shared L3).
 _ADC_ACC_COLS = 2048
 
@@ -90,44 +105,28 @@ def fit_pq_codebooks(
 
     Returns an (m, k, dim//m) float64 ndarray of codebooks, fit on
     L2-NORMALIZED vectors (PQ approximates the unit vector, so ADC
-    lookup sums approximate the cosine directly).  An EMPTY corpus
-    short-circuits to the zero-initialized books (k=1) instead of
-    tripping ``rng.choice`` on a zero-length population.  Sample rows
-    whose norm is not finite (NaN/±inf elements) are dropped: one NaN
-    codebook row would win every later ``argmax`` and collapse all
-    codes of its subspace onto it."""
+    lookup sums approximate the cosine directly), the same bounded
+    sample as the IVF fit (``ivf._fit_sample``: NULL rows and rows
+    whose norm is not finite stay out).  An EMPTY sample short-circuits
+    to the zero-initialized books (k=1) instead of tripping
+    ``rng.choice`` on a zero-length population."""
     import numpy as np
+
+    from udacity_capstone_data_engineering_spark.operators.ivf import (
+        _fit_sample,
+    )
 
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     if ksub > 256:
         raise ValueError("ksub > 256 does not fit one-byte codes")
-    if n is None:
-        n = emb.count()
-    frac = min(1.0, sample / max(n, 1))
-    train_df = emb.sample(fraction=frac, seed=seed) if frac < 1.0 else emb
-    pdf = (
-        train_df.filter(F.col(vec_col).isNotNull())
-        .select(F.col(vec_col).cast("array<double>"))
-        .toPandas()
-    )
-    col = pdf.iloc[:, 0].to_numpy()
-    x = (
-        np.vstack(col).astype(np.float64)
-        if len(col)
-        else np.zeros((0, dim), dtype=np.float64)
-    )
-    norms = np.linalg.norm(x, axis=1, keepdims=True)
-    finite = np.isfinite(norms[:, 0])
-    x, norms = x[finite], norms[finite]
+    x = _fit_sample(emb, vec_col, sample, seed, n)
     dsub = dim // m
     rng = np.random.default_rng(seed)
     k = min(ksub, max(len(x), 1))
     books = np.zeros((m, k, dsub), dtype=np.float64)
     if not len(x):
         return books
-    norms[norms == 0] = 1.0
-    x = x / norms
     for s in range(m):
         xs = x[:, s * dsub : (s + 1) * dsub]
         centers = xs[rng.choice(len(xs), size=k, replace=False)]
@@ -172,31 +171,37 @@ def _encode_udf(books):
     return pandas_udf(encode, "array<smallint>")
 
 
+def _nearest_cell(x, centers):
+    """Nearest cell of each unit row of ``x``: argmax x·c − ½|c|²."""
+    return (x @ centers.T - 0.5 * (centers * centers).sum(axis=1)).argmax(
+        axis=1
+    )
+
+
 def _probe1_cell_udf(centers):
     """pandas_udf: unit vector → its single nearest cell id."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    correction = 0.5 * (centers * centers).sum(axis=1)
-
     def assign(v):
         x = np.vstack(v.to_numpy())
-        d = x @ centers.T - correction
-        return pd.Series(d.argmax(axis=1).astype("int64"))
+        return pd.Series(_nearest_cell(x, centers).astype("int64"))
 
     return pandas_udf(assign, "long")
 
 
 def _encode_to_cells(
-    emb, id_col, vec_col, centers, books, n_rows
+    emb, id_col, vec_col, centers, payload, n_rows
 ) -> DataFrame:
-    """``(id, cell, codes)`` for every vector of ``emb`` with a unit
-    vector, encoded with the GIVEN (already-fit) centroids/codebooks —
-    the one encode stage of the in-line serves and of the standing
-    index's build and append, so appended rows are bit-identical to
-    what a build with the same books would have written.  ``n_rows``
-    is ``emb``'s row count, which every caller already holds."""
+    """``(id, cell, payload)`` for every vector of ``emb`` with a unit
+    vector, encoded with the GIVEN (already-fit) centroids and
+    ``payload`` (:func:`_adc_payload` codes, or :func:`_exact_payload`
+    unit vectors as they are) — the one encode stage of the in-line
+    serves and of the standing index's build and append, so appended
+    rows are bit-identical to what a build with the same books would
+    have written.  ``n_rows`` is ``emb``'s row count, which every
+    caller already holds."""
     from udacity_capstone_data_engineering_spark.operators.similarity import (
         _unit_vectors,
     )
@@ -205,7 +210,6 @@ def _encode_to_cells(
     )
 
     v = _unit_vectors(emb, id_col, vec_col).filter(F.col("uv").isNotNull())
-    encode = _encode_udf(books)
     assign = _probe1_cell_udf(centers)
     # fan out before the CPU-heavy encode/assign UDFs: a one-file
     # corpus otherwise runs the whole encode as ONE task (r8, observed
@@ -214,7 +218,7 @@ def _encode_to_cells(
     return fan_out_small_scan(v, n_rows=n_rows).select(
         F.col(id_col).alias("id"),
         assign(F.col("uv")).cast("int").alias("cell"),
-        encode(F.col("uv")).alias("codes"),
+        payload.encode(F.col("uv")).alias(payload.column),
     )
 
 
@@ -241,24 +245,26 @@ def _query_luts(x, books):
     ]
 
 
-def _adc_top_block(luts, ids, codes, take):
-    """Streaming top-``take`` ADC tournament over the corpus axis.
+def _top_block(nq, ids, take, fill):
+    """Streaming top-``take`` tournament over the corpus axis, shared
+    by both block scorers (:func:`_adc_top_block`,
+    :func:`_exact_top_block`).
 
-    ``ids`` must be ASCENDING; ``codes`` is (n × m) uint8.  Scans in
-    chunks sized so the (n_queries × chunk) float64 buffer stays
-    under ``ADC_CHUNK_ELEMS`` elements; between chunks each query
-    keeps its best ``take`` (score desc, id asc) — maintained in
-    id-ascending storage order so the stable argsort reproduces the
-    full-matrix kernel's tie behavior bit-for-bit.  Returns
-    (top_ids, top_scores), both (n_queries × ≤take).
+    ``ids`` must be ASCENDING; ``fill(lo, hi, out)`` writes the
+    (nq × (hi−lo)) scores of rows ``lo:hi`` into ``out``.  Scans in
+    chunks sized so the (nq × chunk) float64 buffer stays under
+    ``ADC_CHUNK_ELEMS`` elements; between chunks each query keeps its
+    best ``take`` (score desc, id asc) — maintained in id-ascending
+    storage order so the stable argsort reproduces the full-matrix
+    kernel's tie behavior bit-for-bit.  Returns (top_ids, top_scores),
+    both (nq × ≤take).
 
-    A NaN score (a query with no direction has NaN LUTs) is ranked
-    LAST as −inf, so such a query keeps its candidates in id order —
-    the order ``lsh_topk`` gives it — and the exact rerank scores
-    those pairs NULL."""
+    A NaN score (a query or a row with no direction) is ranked LAST
+    as −inf, so such a query keeps its candidates in id order — the
+    order ``lsh_topk`` gives it — and the exact rerank scores those
+    pairs NULL."""
     import numpy as np
 
-    nq = luts[0].shape[0] if luts else 0
     n = len(ids)
     take = min(take, n)
     if not nq or not n or not take:
@@ -273,29 +279,20 @@ def _adc_top_block(luts, ids, codes, take):
         hi = min(lo + chunk, n)
         nb = best_s.shape[1]
         width = nb + (hi - lo)
-        # one buffer holds [carry-over best | this chunk]; gather into
-        # it through a reused ~2048-column sliding window (accumulation
-        # ORDER over subspaces is unchanged, so scores stay
-        # bit-identical). The windowed np.take(out=) form exists for
-        # memory behavior, not semantics: the r4 one-gather-per-subspace
-        # form allocated 7 fresh (nq × chunk) float64 temps per chunk,
-        # and at 32 concurrent workers that allocation+bandwidth storm
-        # collapsed throughput 8× (measured 48.6 s → 1.5 s wall for 32
-        # parallel 625-query scans of 20k codes after this rewrite;
+        # one buffer holds [carry-over best | this chunk]; fill it
+        # through a ~2048-column sliding window. The window exists for
+        # memory behavior, not semantics: the r4 ADC form allocated 7
+        # fresh (nq × chunk) float64 temps per chunk, and at 32
+        # concurrent workers that allocation+bandwidth storm collapsed
+        # throughput 8× (measured 48.6 s → 1.5 s wall for 32 parallel
+        # 625-query scans of 20k codes after the windowed rewrite;
         # 2048 columns beat both 512 and 8192 at every probed nq).
         all_s = np.empty((nq, width), dtype=np.float64)
         all_s[:, :nb] = best_s
-        sc = all_s[:, nb:]
-        w = hi - lo
-        tmp = np.empty((nq, min(_ADC_ACC_COLS, w)), dtype=np.float64)
-        for b0 in range(0, w, _ADC_ACC_COLS):
-            b1 = min(b0 + _ADC_ACC_COLS, w)
-            view = sc[:, b0:b1]
-            np.take(luts[0], codes[lo + b0 : lo + b1, 0], axis=1, out=view)
-            t = tmp[:, : b1 - b0]
-            for s in range(1, len(luts)):
-                np.take(luts[s], codes[lo + b0 : lo + b1, s], axis=1, out=t)
-                view += t
+        for b0 in range(lo, hi, _ADC_ACC_COLS):
+            b1 = min(b0 + _ADC_ACC_COLS, hi)
+            view = all_s[:, nb + b0 - lo : nb + b1 - lo]
+            fill(b0, b1, view)
             # NaN → −inf in place (fmax drops the NaN operand); a NaN
             # threshold below would select no column at all
             np.fmax(view, -np.inf, out=view)
@@ -333,6 +330,40 @@ def _adc_top_block(luts, ids, codes, take):
     )
 
 
+def _adc_top_block(luts, ids, codes, take):
+    """The ADC block scorer: :func:`_top_block` over ``codes`` ((n × m)
+    uint8), each row's score the sum of its ``m`` LUT entries.  The
+    gather writes through one reused window-sized temp (accumulation
+    ORDER over subspaces is fixed, so scores are bit-identical however
+    the rows are chunked)."""
+    import numpy as np
+
+    nq = luts[0].shape[0] if luts else 0
+    tmp = np.empty((nq, min(_ADC_ACC_COLS, len(ids))), dtype=np.float64)
+
+    def fill(lo, hi, out):
+        np.take(luts[0], codes[lo:hi, 0], axis=1, out=out)
+        t = tmp[:, : hi - lo]
+        for s in range(1, len(luts)):
+            np.take(luts[s], codes[lo:hi, s], axis=1, out=t)
+            out += t
+
+    return _top_block(nq, ids, take, fill)
+
+
+def _exact_top_block(tables, ids, mat, take):
+    """The exact block scorer: :func:`_top_block` over ``mat`` ((n ×
+    dim) float64 unit rows), each score the dot product ``xq @ mat.T``
+    of one fill window (one dgemm per window)."""
+    import numpy as np
+
+    xq = tables[0]
+    return _top_block(
+        len(xq), ids, take,
+        lambda lo, hi, out: np.matmul(xq, mat[lo:hi].T, out=out),
+    )
+
+
 def _compact_candidate_partials(qpos, cids, cscores, nq, rerank):
     """Reduce accumulated (query, id, score) candidate partials to each
     query's top-``rerank`` by the merge key (query, score desc, id asc)
@@ -352,18 +383,23 @@ def _compact_candidate_partials(qpos, cids, cscores, nq, rerank):
     return qpos[keep], cids[keep], cscores[keep]
 
 
-def _cell_major_candidates(
-    x, centers, books, cell_ids, cell_codes, nprobe, rerank,
+def _cell_major_scan(
+    x, centers, payload, cell_ids, cell_rows, nprobe, rerank,
     compact_elems=None, return_partials=False,
 ):
-    """CELL-MAJOR ADC scan over a query batch (r10), the one candidate
-    kernel of every ADC serve: probe each query's ``nprobe`` nearest
-    cells and run the bounded tournament (:func:`_adc_top_block`) once
-    per probed cell for ALL the queries probing it, keep each cell's
-    per-query top-``rerank`` partials, and merge with one (query,
-    score desc, id asc) lexsort.  Flat PQ is the one-cell case (a zero
-    centroid, ``nprobe=1``), where the merge keeps the tournament's
-    own top-``rerank``.
+    """CELL-MAJOR scan over a query batch (r10), the one candidate
+    kernel of every cell serve: probe each query's ``nprobe`` nearest
+    cells and run the payload's block scorer once per probed cell for
+    ALL the queries probing it, keep each cell's per-query
+    top-``rerank`` partials, and merge with one (query, score desc, id
+    asc) lexsort.  Flat PQ is the one-cell case (a zero centroid,
+    ``nprobe=1``), where the merge keeps the tournament's own
+    top-``rerank``.
+
+    The scorer is the :class:`_Payload`'s: ``payload.tables`` — x →
+    per-query tables, computed once per batch and sliced to each
+    cell's queries — and ``payload.top_block`` — ``(tables, ids, rows,
+    take)`` → the cell's tournament.
 
     ``compact_elems`` (ADVICE r10, the memory bound): whenever the
     accumulated partial count exceeds this many elements, compact to
@@ -376,10 +412,10 @@ def _cell_major_candidates(
     ``test_cell_major_compaction_lossless``.
 
     Returns a list of ``nq`` int64 id arrays (each ≤ ``rerank``) — or,
-    with ``return_partials=True``, the compacted ``(qpos, ids, adc)``
+    with ``return_partials=True``, the compacted ``(qpos, ids, score)``
     arrays themselves (sorted by the merge key), which the sharded
     grid kernel emits so the cross-shard window can re-merge on the
-    identical (query, adc desc, id asc) rule."""
+    identical (query, score desc, id asc) rule."""
     import numpy as np
 
     if compact_elems is None:
@@ -392,10 +428,10 @@ def _cell_major_candidates(
     probed = np.argsort(-cell_scores, axis=1, kind="stable")[:, :take_cells]
     mask = np.zeros((nq, n_cells), dtype=bool)
     np.put_along_axis(mask, probed, True, axis=1)
-    # batch-level shape-invariant LUTs (same einsum kernel as the
-    # sharded grid — ADVICE r4: per-query dgemv here vs the shard
-    # path's dgemm could differ in the last ulp)
-    luts = _query_luts(x, books)
+    # batch-level query tables (ADC: the same shape-invariant einsum
+    # LUTs as the sharded grid — ADVICE r4: per-query dgemv here vs the
+    # shard path's dgemm could differ in the last ulp)
+    qtables = payload.tables(x)
     qpos_parts, id_parts, score_parts = [], [], []
     acc_elems = 0
     empty = np.zeros(0, dtype=np.int64)
@@ -404,9 +440,9 @@ def _cell_major_candidates(
         qidx = np.nonzero(mask[:, c])[0]
         if not len(cell_ids[c]) or not len(qidx):
             continue
-        qluts = luts if len(qidx) == nq else [lut[qidx] for lut in luts]
-        top_i, top_s = _adc_top_block(
-            qluts, cell_ids[c], cell_codes[c], rerank
+        qt = qtables if len(qidx) == nq else [t[qidx] for t in qtables]
+        top_i, top_s = payload.top_block(
+            qt, cell_ids[c], cell_rows[c], rerank
         )
         qpos_parts.append(np.repeat(qidx, top_i.shape[1]))
         id_parts.append(top_i.ravel())
@@ -448,15 +484,125 @@ def _cell_major_candidates(
     ]
 
 
-def _ivfpq_candidates_udf(
-    spark, centers, books, cell_ids, cell_codes, nprobe, rerank
+def _cell_major_candidates(
+    x, centers, books, cell_ids, cell_codes, nprobe, rerank, **kw
+):
+    """:func:`_cell_major_scan` of PQ codes, scored by ADC under
+    ``books``."""
+    return _cell_major_scan(
+        x, centers, _adc_payload(books), cell_ids, cell_codes, nprobe,
+        rerank, **kw,
+    )
+
+
+class _Payload(NamedTuple):
+    """What a cell-major scan reads and how it scores it — the ONLY
+    things that differ between the ADC scan of PQ codes and the exact
+    scan of unit vectors; passed in, so the kernel, the grid and the
+    serve never branch on their caller."""
+
+    column: str  # payload column of the (id, cell, payload) relation
+    encode: Callable  # uv Column → payload Column
+    dtype: str  # element type of the decoded payload
+    width: int  # row width of the decoded payload
+    row_bytes: int  # bytes per row that ship: the int64 id + payload
+    # under the cap: (emb, id_col, vec_col, cells, centers) → (the
+    # (id, cell, payload) frame, the rerank's raw matrix or None)
+    collect: Callable
+    tables: Callable  # scorer: x → per-query tables
+    top_block: Callable  # scorer: (tables, ids, rows, take) → top
+
+
+def _collect_exact_cells(emb, id_col, vec_col, cells, centers):
+    """``_Payload.collect`` of unit vectors: the rows of ``cells`` and
+    the rerank's raw matrix from ONE limited Arrow collect of the raw
+    vectors — a JVM-only job, where collecting ``cells`` would run the
+    normalize and assign kernels in Python workers and the rerank would
+    then collect the corpus again.  The rows are derived as on the
+    executors: ``_unit_vectors``' own Arrow kernel normalizes (NULL,
+    NULL-element and zero vectors drop out, NaN rows stay) and
+    :func:`_nearest_cell` assigns.  Past the rerank's byte cap (only a
+    ``max_broadcast_bytes`` above it gets here) ``cells`` itself is
+    collected and the rerank collects on its own."""
+    import numpy as np
+    import pandas as pd
+
+    from udacity_capstone_data_engineering_spark.operators.similarity import (
+        _collect_raw_vectors,
+        _normalize_batches,
+        _raw_matrix,
+    )
+
+    dim = centers.shape[1]
+    tbl = _collect_raw_vectors(emb, id_col, vec_col, dim)
+    if tbl is None:
+        return cells.toPandas(), None
+    ids, rows = [np.zeros(0, dtype=np.int64)], [np.zeros((0, dim))]
+    for rb in _normalize_batches(tbl.to_batches()):
+        uv = rb.column(1)
+        live = uv.is_valid().to_numpy(zero_copy_only=False)
+        ids.append(rb.column(0).to_numpy()[live].astype(np.int64))
+        rows.append(uv.flatten().to_numpy().reshape(int(live.sum()), dim))
+    ids, x = np.concatenate(ids), np.concatenate(rows)
+    cell = _nearest_cell(x, centers) if len(x) else np.zeros(0, np.int64)
+    frame = pd.DataFrame({"id": ids, "cell": cell, "uv": list(x)})
+    return frame, _raw_matrix(tbl, dim)
+
+
+def _adc_payload(books):
+    """PQ codes: ``m`` uint8 per row, scored by the ADC LUT gather."""
+    m = books.shape[0]
+    # encode wraps the UDF in a lambda: the payload is pickled into the
+    # scan closures, and a UDF that has been applied holds a JVM handle;
+    # under the cap the coded relation itself is collected, and the
+    # rerank collects its own matrix
+    return _Payload(
+        "codes", lambda uv: _encode_udf(books)(uv), "uint8", m, 8 + m,
+        lambda emb, id_col, vec_col, cells, centers: (cells.toPandas(), None),
+        lambda x: _query_luts(x, books), _adc_top_block,
+    )
+
+
+def _exact_payload(dim):
+    """Unit vectors as they are: ``dim`` float64 per row, scored by an
+    exact dot product; there is no codebook, and a query's table is
+    the unit query itself."""
+    return _Payload(
+        "uv", lambda uv: uv, "float64", dim, 8 + 8 * dim,
+        _collect_exact_cells, lambda x: [x], _exact_top_block,
+    )
+
+
+def _inverted_file(pdf, payload, n_cells):
+    """Per cell, its ids and decoded payload rows in id order, from an
+    ``(id, cell, payload)`` pandas frame — the layout the kernel scans,
+    in both shapes."""
+    import numpy as np
+
+    ids = pdf["id"].to_numpy(dtype=np.int64)
+    cells = pdf["cell"].to_numpy(dtype=np.int64)
+    values = pdf[payload.column].to_numpy()
+    rows = (
+        np.vstack(values).astype(payload.dtype)
+        if len(values)
+        else np.zeros((0, payload.width), dtype=payload.dtype)
+    )
+    order = np.lexsort((ids, cells))
+    ids, rows = ids[order], rows[order]
+    bounds = np.searchsorted(cells[order], np.arange(n_cells + 1))
+    spans = list(zip(bounds[:-1], bounds[1:]))
+    return [ids[a:b] for a, b in spans], [rows[a:b] for a, b in spans]
+
+
+def _cell_candidates_udf(
+    spark, centers, payload, cell_ids, cell_rows, nprobe, rerank
 ):
     """pandas_udf: unit query vector → array<long> of the ``rerank``
-    best candidate ids by ADC score over ONLY the query's ``nprobe``
-    nearest cells' codes (all of them for flat PQ's single cell) — the
-    under-the-cap shape of :func:`_cell_major_candidates`.
-    Deterministic: stable argsorts + id-sorted cells.  The coded
-    inverted file ships as ONE broadcast (fetched once per worker, not
+    best candidate ids by the payload's score over ONLY the query's
+    ``nprobe`` nearest cells (all of them for flat PQ's single cell) —
+    the under-the-cap shape of :func:`_cell_major_scan`.
+    Deterministic: stable argsorts + id-sorted cells.  The inverted
+    file ships as ONE broadcast (fetched once per worker, not
     re-deserialized per task; r9)."""
     import hashlib
 
@@ -471,7 +617,7 @@ def _ivfpq_candidates_udf(
     bc = _cached_broadcast(
         spark,
         (
-            "ivfpq_scan",
+            "cell_scan",
             id(spark.sparkContext),
             len(cell_ids),
             sum(len(c) for c in cell_ids),
@@ -479,16 +625,16 @@ def _ivfpq_candidates_udf(
             hashlib.sha1(
                 b"".join(c.tobytes() for c in cell_ids)
             ).hexdigest(),
-            # the codes are part of the payload and depend on (m, ksub)
-            # even when centers/cells are identical: without this digest
-            # a second ivfpq_topk in the same session with a different
-            # ksub would silently serve the first call's stale codes
-            # against the new LUTs (ADVICE r9)
+            # the rows are part of the payload and, for codes, depend
+            # on (m, ksub) even when centers/cells are identical:
+            # without this digest a second ivfpq_topk in the same
+            # session with a different ksub would silently serve the
+            # first call's stale codes against the new LUTs (ADVICE r9)
             hashlib.sha1(
-                b"".join(c.tobytes() for c in cell_codes)
+                b"".join(c.tobytes() for c in cell_rows)
             ).hexdigest(),
         ),
-        lambda: (cell_ids, cell_codes),
+        lambda: (cell_ids, cell_rows),
     )
 
     def cand(v):
@@ -496,11 +642,11 @@ def _ivfpq_candidates_udf(
         # the queries probing it, instead of a per-query concatenation
         # of ~nprobe cells (~1M python-level concatenations per 1k
         # queries at the third-decade probe, SCALING.md r10).
-        cell_ids, cell_codes = bc.value
+        cell_ids, cell_rows = bc.value
         x = np.vstack(v.to_numpy())
         return pd.Series(
-            _cell_major_candidates(
-                x, centers, books, cell_ids, cell_codes, nprobe, rerank
+            _cell_major_scan(
+                x, centers, payload, cell_ids, cell_rows, nprobe, rerank
             )
         )
 
@@ -558,30 +704,24 @@ def _pack_cells_to_shards(counts: dict, row_bytes: int, cap: int):
     return mapping_rows, max(1, len(remaining)), nsub
 
 
-def _sharded_ivfpq_candidates(
-    qframe, coded_cells, centers, books, nprobe, rerank, n_queries, cap
+def _sharded_cell_candidates(
+    qframe, cells, centers, payload, nprobe, rerank, n_queries, cap
 ):
-    """The past-the-cap shape of every ADC serve (r11 rewrite): a
-    cogrouped grid join over CELL-PACKED shards.  Flat PQ's single
-    cell is hash-split into byte-capped pieces, one per shard.
-
-    ``qframe``      — (query_id, uv) unit query vectors.
-    ``coded_cells`` — (id, cell, codes): the distributed inverted
-                      file, cell assignment already materialized.
-
-    Cells pack into byte-capped shards (``_pack_cells_to_shards``);
-    queries join only the shards holding ≥1 of their probed cells.
-    Inside each (query-block × shard) task the kernel re-derives each
-    query's probed-cell set from the broadcast centroids — the same
-    ``argsort(-(x·cᵀ − ½|c|²))`` selection as ``_probe_cells_udf``, so
-    nothing per-query ships besides the vector — and runs the SAME
-    bounded cell-major ADC scan as the broadcast kernel restricted to
-    this shard's cells, emitting per-(query, shard) top-``rerank``
-    (adc, id) partials. The cross-shard window merges on the identical
-    (query, adc desc, id asc) key; per-(query,row) scores are
-    shard-independent (einsum LUTs, s-major accumulation), so the
-    merged set is exactly the broadcast kernel's (forced-cap equality
-    tests, including the sub-shard split cap).
+    """The past-the-cap shape of every cell serve (r11 rewrite): a
+    cogrouped grid join over CELL-PACKED shards.  ``qframe`` is
+    (query_id, uv); ``cells`` is (id, cell, payload), the distributed
+    inverted file.  Cells pack into byte-capped shards
+    (``_pack_cells_to_shards``, at ``payload.row_bytes`` per row; flat
+    PQ's single cell is hash-split into pieces) and queries join only
+    the shards holding ≥1 of their probed cells.  Each (query-block ×
+    shard) task re-derives its queries' probed cells from the
+    broadcast centroids (the ``_probe_cells_udf`` selection, so nothing
+    per-query ships besides the vector), runs the SAME cell-major scan
+    as the broadcast kernel on this shard's cells and emits
+    per-(query, shard) top-``rerank`` (score, id) partials; the
+    cross-shard window merges them on the identical (query, score
+    desc, id asc) key, so the merged set is the broadcast kernel's
+    (forced-cap equality tests, including the sub-shard split cap).
 
     Returns (query_id, neighbor_id) candidate pairs."""
     import numpy as np
@@ -592,21 +732,15 @@ def _sharded_ivfpq_candidates(
     )
 
     spark = qframe.sparkSession
-    m = books.shape[0]
-    row_bytes = 8 + m
-    n_cells_total = len(centers)
+    row_bytes = payload.row_bytes
+    n_cells = len(centers)
     # bounded Arrow boundary: cells × count = √n rows to the driver
     cnt_pdf = (
-        coded_cells.groupBy("cell")
+        cells.groupBy("cell")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .toPandas()
     )
-    counts = dict(
-        zip(
-            cnt_pdf["cell"].astype(int).tolist(),
-            cnt_pdf["cnt"].astype(int).tolist(),
-        )
-    )
+    counts = dict(zip(cnt_pdf["cell"].tolist(), cnt_pdf["cnt"].tolist()))
     # the grid's task count is n_shards × n_blocks: a one-block query
     # batch against the minimum byte-driven shard count would run on a
     # handful of cores. Shards may be FINER than the cap requires
@@ -631,13 +765,14 @@ def _sharded_ivfpq_candidates(
     nsub_df = local_df(
         spark, sorted(nsub.items()) or [(0, 1)], "cell int, __nsub int"
     )
-    coded = (
-        coded_cells.join(F.broadcast(nsub_df), "cell")
+    col = payload.column
+    sharded = (
+        cells.join(F.broadcast(nsub_df), "cell")
         .withColumn(
             "__sub", F.pmod(F.xxhash64("id"), F.col("__nsub")).cast("int")
         )
         .join(F.broadcast(mapping), ["cell", "__sub"])
-        .select("id", "cell", "codes", "__shard")
+        .select("id", "cell", col, "__shard")
     )
     probe = _probe_cells_udf(centers, nprobe)
     # an INDEPENDENT cell→shard relation for the probe side (sharing
@@ -659,7 +794,7 @@ def _sharded_ivfpq_candidates(
     left = probes.join(qframe, "query_id").withColumn(
         "__qb", F.pmod(F.xxhash64("query_id"), F.lit(n_blocks)).cast("int")
     )
-    right = coded.crossJoin(
+    right = sharded.crossJoin(
         F.broadcast(
             spark.range(n_blocks).select(F.col("id").cast("int").alias("__qb"))
         )
@@ -668,39 +803,31 @@ def _sharded_ivfpq_candidates(
     def scan(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
         if not len(lpdf) or not len(rpdf):
             return pd.DataFrame(
-                {"query_id": [], "neighbor_id": [], "adc": []}
-            ).astype({"query_id": "int64", "neighbor_id": "int64", "adc": "f8"})
-        rpdf = rpdf.sort_values(["cell", "id"])
-        cells_arr = rpdf["cell"].to_numpy(dtype=np.int64)
-        ids = rpdf["id"].to_numpy(dtype=np.int64)
-        codes = np.vstack(rpdf["codes"].to_numpy()).astype(np.uint8)
-        bounds = np.searchsorted(cells_arr, np.arange(n_cells_total + 1))
-        cell_ids = [
-            ids[bounds[c] : bounds[c + 1]] for c in range(n_cells_total)
-        ]
-        cell_codes = [
-            codes[bounds[c] : bounds[c + 1]] for c in range(n_cells_total)
-        ]
+                {"query_id": [], "neighbor_id": [], "score": []}
+            ).astype(
+                {"query_id": "int64", "neighbor_id": "int64", "score": "f8"}
+            )
+        cell_ids, cell_rows = _inverted_file(rpdf, payload, n_cells)
         x = np.vstack(lpdf["uv"].to_numpy())
         qids = lpdf["query_id"].to_numpy(dtype=np.int64)
-        qpos, cids, cscores = _cell_major_candidates(
-            x, centers, books, cell_ids, cell_codes, nprobe, rerank,
+        qpos, cids, cscores = _cell_major_scan(
+            x, centers, payload, cell_ids, cell_rows, nprobe, rerank,
             return_partials=True,
         )
         return pd.DataFrame(
             {
                 "query_id": qids[qpos],
                 "neighbor_id": cids,
-                "adc": cscores,
+                "score": cscores,
             }
         )
 
     out = (
         left.groupBy("__shard", "__qb")
         .cogroup(right.groupBy("__shard", "__qb"))
-        .applyInPandas(scan, "query_id long, neighbor_id long, adc double")
+        .applyInPandas(scan, "query_id long, neighbor_id long, score double")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("adc"), "neighbor_id")
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), "neighbor_id")
     return (
         out.withColumn("__r", F.row_number().over(w))
         .filter(F.col("__r") <= rerank)
@@ -708,27 +835,26 @@ def _sharded_ivfpq_candidates(
     )
 
 
-def _adc_serve(
-    emb, id_col, vec_col, coded, centers, books, n, k, nprobe, rerank,
+def _cell_serve(
+    emb, id_col, vec_col, cells, centers, payload, n, k, nprobe, rerank,
     max_broadcast_bytes, queries,
 ) -> DataFrame:
-    """The one ADC serve body of ``pq_topk``, ``ivfpq_topk`` and
-    ``ann_index.ann_topk_against_index``: candidate generation over the
-    lazy ``(id, cell, codes)`` relation ``coded``, exact rerank of the
-    candidates (``_score_pairs``, against ``emb``'s raw vectors) and
-    the (cosine desc, id asc) rank window.
+    """The one serve body of ``pq_topk``, ``ivfpq_topk``,
+    ``ann_index.ann_topk_against_index`` and ``ivf_topk``'s scan:
+    candidate generation over the lazy ``(id, cell, payload)``
+    relation ``cells``, exact rerank of the candidates
+    (``_score_pairs``, against ``emb``'s raw vectors) and the (cosine
+    desc, id asc) rank window.
 
-    The shape follows the bytes that actually ship, n·(8+m) (one byte
-    per subspace + the int64 id), against the broadcast cap: under it
-    ``coded`` is collected, laid out in id order by a driver-side
-    stable argsort (ids are unique, so no global ``orderBy``) and
-    broadcast as a per-cell inverted file (``_ivfpq_candidates_udf``);
-    past it ``coded`` stays distributed and the cell-packed grid runs
-    the same kernel (``_sharded_ivfpq_candidates``).  ``queries`` is
-    the optional serving workload (ids ⊆ corpus); ``None`` is the
-    self-top-k."""
-    import numpy as np
-
+    The shape follows the bytes that actually ship,
+    n·``payload.row_bytes``, against the broadcast cap: under it the
+    rows of ``cells`` are collected (``payload.collect``, which may
+    hand the rerank the raw matrix it read them from), laid out per
+    cell in id order on the driver (:func:`_inverted_file`; no global
+    ``orderBy``) and broadcast (``_cell_candidates_udf``); past it
+    ``cells`` stays distributed and the cell-packed grid runs the same
+    kernel (``_sharded_cell_candidates``).  ``queries`` is the optional
+    serving workload (ids ⊆ corpus); ``None`` is the self-top-k."""
     from udacity_capstone_data_engineering_spark.operators.similarity import (
         BROADCAST_SCORE_MAX_BYTES,
         _score_pairs,
@@ -743,48 +869,37 @@ def _adc_serve(
         if max_broadcast_bytes is None
         else max_broadcast_bytes
     )
-    m = books.shape[0]
+    col = payload.column
     unit = _unit_vectors(emb, id_col, vec_col)
     qv = unit if queries is None else _unit_vectors(queries, id_col, vec_col)
     qv = qv.filter(F.col("uv").isNotNull())
-    if n * (8 + m) > cap:
+    cells = cells.select("id", "cell", col)
+    raw = None
+    if n * payload.row_bytes > cap:
         # only the grid's query-block count needs the workload size
-        pairs = _sharded_ivfpq_candidates(
+        pairs = _sharded_cell_candidates(
             qv.select(F.col(id_col).alias("query_id"), "uv"),
-            coded.select("id", "cell", "codes"),
-            centers, books, nprobe, rerank,
+            cells,
+            centers, payload, nprobe, rerank,
             n_queries=n if queries is None else queries.count(),
             cap=cap,
         )
     else:
-        pdf = coded.select("id", "cell", "codes").toPandas()
-        ids = pdf["id"].to_numpy(dtype=np.int64)
-        order = np.argsort(ids, kind="stable")
-        ids, cells = ids[order], pdf["cell"].to_numpy(dtype=np.int64)[order]
-        codes = (
-            np.vstack(pdf["codes"].to_numpy()).astype(np.uint8)[order]
-            if len(pdf)
-            else np.zeros((0, m), dtype=np.uint8)
-        )
-        # the inverted file: per cell, (ids, codes) in id order
-        cell_ids, cell_codes = [], []
-        for c in range(len(centers)):
-            mask = cells == c
-            cell_ids.append(ids[mask])
-            cell_codes.append(codes[mask])
-        cand = _ivfpq_candidates_udf(
-            emb.sparkSession, centers, books, cell_ids, cell_codes,
+        frame, raw = payload.collect(emb, id_col, vec_col, cells, centers)
+        cell_ids, cell_rows = _inverted_file(frame, payload, len(centers))
+        cand = _cell_candidates_udf(
+            emb.sparkSession, centers, payload, cell_ids, cell_rows,
             nprobe, rerank,
         )
-        # the ADC scan is the CPU-heavy stage: widen a narrow parquet
-        # scan so it parallelizes (no-op at real scale)
+        # the scan is the CPU-heavy stage: widen a narrow parquet scan
+        # so it parallelizes (no-op at real scale)
         pairs = fan_out_small_scan(qv).select(
             F.col(id_col).alias("query_id"), cand(F.col("uv")).alias("cs")
         ).select("query_id", F.explode("cs").alias("neighbor_id"))
     scored = _score_pairs(
         emb, id_col, vec_col,
         pairs.filter(F.col("query_id") != F.col("neighbor_id")),
-        n=n, unit=unit,
+        n=n, unit=unit, raw=raw,
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id")
@@ -833,12 +948,12 @@ def ivfpq_topk(
     ``target_recall=None`` to fall back to the speed-first 1/4
     fraction, or pin ``nprobe`` explicitly.
 
-    The serve is :func:`_adc_serve`, shared with ``pq_topk`` and the
-    standing index: under the broadcast cap the coded inverted file
-    broadcasts; past it the cells pack into byte-capped shards (hot
-    cells hash-split first, so the per-task bound is ENFORCED under
-    any skew — ADVICE r4) and queries join only the shards holding
-    their probed cells.  Both shapes return identical results
+    The serve is :func:`_cell_serve`, shared with ``pq_topk``, the
+    standing index and ``ivf_topk``'s scan: under the broadcast cap
+    the coded inverted file broadcasts; past it the cells pack into
+    byte-capped shards (hot cells hash-split first, so the per-task
+    bound is ENFORCED under any skew — ADVICE r4) and queries join only
+    the shards holding their probed cells.  Both shapes return identical results
     (forced-cap equality tests, including a cap small enough to force
     sub-shard splits).
 
@@ -872,10 +987,11 @@ def ivfpq_topk(
     books = fit_pq_codebooks(
         emb, vec_col, dim, m=m, ksub=ksub, seed=seed, sample=fit_sample, n=n
     )
-    return _adc_serve(
+    payload = _adc_payload(books)
+    return _cell_serve(
         emb, id_col, vec_col,
-        _encode_to_cells(emb, id_col, vec_col, centers, books, n),
-        centers, books, n, k, nprobe, rerank, max_broadcast_bytes, queries,
+        _encode_to_cells(emb, id_col, vec_col, centers, payload, n),
+        centers, payload, n, k, nprobe, rerank, max_broadcast_bytes, queries,
     )
 
 
@@ -994,7 +1110,7 @@ def pq_topk(
 
     Flat PQ is IVF-PQ with one cell: the codes all sit in the cell of
     a single zero centroid, probed by every query (``nprobe=1``), and
-    the serve is :func:`_adc_serve`, shared with ``ivfpq_topk``.
+    the serve is :func:`_cell_serve`, shared with ``ivfpq_topk``.
     Under the measured broadcast cap (n·(8+m) bytes — uint8 codes are
     what actually ships) the index broadcasts; past it the one cell
     is hash-split into byte-capped shards of the cogroup grid join,
@@ -1029,8 +1145,9 @@ def pq_topk(
     )
 
     centers = np.zeros((1, dim), dtype=np.float64)
-    return _adc_serve(
+    payload = _adc_payload(books)
+    return _cell_serve(
         emb, id_col, vec_col,
-        _encode_to_cells(emb, id_col, vec_col, centers, books, n),
-        centers, books, n, k, 1, rerank, max_broadcast_bytes, queries,
+        _encode_to_cells(emb, id_col, vec_col, centers, payload, n),
+        centers, payload, n, k, 1, rerank, max_broadcast_bytes, queries,
     )

@@ -879,69 +879,50 @@ def _unit_vectors(emb, id_col: str, vec_col: str):
     )
 
 
-def _collect_unit_matrix(emb, id_col: str, vec_col: str, dim: int):
-    """Collect (ids, L2-normalized matrix) to the driver iff the corpus
-    fits ``BROADCAST_SCORE_MAX_BYTES``; returns ``(ids, mat)`` or None.
+def _collect_raw_vectors(emb, id_col, vec_col, dim):
+    """The ``(id, vector)`` Arrow table of the non-NULL vectors as
+    ``array<double>``, iff they fit ``BROADCAST_SCORE_MAX_BYTES``; None
+    past the cap.
 
     One Arrow job replaces three (count + dim-probe + full collect):
     the byte cap is enforced with a LIMIT of cap/(8·dim)+1 rows — if
     the limited collect comes back full, the corpus is over the cap
-    and the caller takes the join path (and pays a real count). At
-    100 TB the limit stops the scan after the first partitions; the
-    driver never sees more than the cap + one row. The RAW vectors are
-    collected and normalized in one numpy pass — measured faster than
-    evaluating the per-element ``transform`` normalization JVM-side
-    just to re-collect the result. Zero-norm rows are dropped (they
-    have no direction; scoring surfaces them as NULL cosine).
-    """
-    import numpy as np
-
+    and the caller takes its past-the-cap path. At 100 TB the limit
+    stops the scan after the first partitions; the driver never sees
+    more than the cap + one row."""
     max_rows = BROADCAST_SCORE_MAX_BYTES // (8 * max(dim, 1))
-    pdf = (
+    tbl = (
         emb.select(F.col(id_col), F.col(vec_col).cast("array<double>"))
         .filter(F.col(vec_col).isNotNull())
         .limit(max_rows + 1)
-        .toPandas()
+        .toArrow()
     )
-    if len(pdf) > max_rows:
-        return None
-    ids = pdf[id_col].to_numpy(dtype=np.int64)
-    mat = (
-        np.vstack(pdf.iloc[:, 1].to_numpy()).astype(np.float64)
-        if len(pdf)
-        else np.zeros((0, dim), dtype=np.float64)
-    )
-    norms = np.linalg.norm(mat, axis=1)
-    keep = norms > 0
-    mat = mat[keep] / norms[keep][:, None]
-    return ids[keep], mat
+    return None if tbl.num_rows > max_rows else tbl
 
 
-def _collect_raw_matrix(emb, id_col, vec_col, dim):
-    """``(ids, raw)`` of the non-NULL vectors, sorted by id, iff they
-    fit ``BROADCAST_SCORE_MAX_BYTES``; None past the cap.  One limited
-    Arrow collect, like :func:`_collect_unit_matrix`, but RAW and
-    keeping the rows with no direction: LSH keys come from raw vectors,
-    and zero- or NaN-norm rows are still bucket members."""
+def _raw_matrix(tbl, dim):
+    """``(ids, raw)`` of a :func:`_collect_raw_vectors` table, sorted by
+    id (a NULL element reads NaN).  Rows with no direction are kept:
+    LSH keys come from raw vectors, and zero- or NaN-norm rows are
+    still bucket members (``_score_pairs`` drops them itself)."""
     import numpy as np
 
-    max_rows = BROADCAST_SCORE_MAX_BYTES // (8 * max(dim, 1))
-    pdf = (
-        emb.select(F.col(id_col), F.col(vec_col).cast("array<double>"))
-        .filter(F.col(vec_col).isNotNull())
-        .limit(max_rows + 1)
-        .toPandas()
-    )
-    if len(pdf) > max_rows:
-        return None
-    ids = pdf[id_col].to_numpy(dtype=np.int64)
+    ids = tbl.column(0).to_numpy().astype(np.int64)
+    col = tbl.column(1).to_pandas().to_numpy()
     raw = (
-        np.vstack(pdf.iloc[:, 1].to_numpy()).astype(np.float64)
-        if len(pdf)
+        np.vstack(col).astype(np.float64)
+        if len(col)
         else np.zeros((0, dim), dtype=np.float64)
     )
     order = np.argsort(ids, kind="stable")
     return ids[order], raw[order]
+
+
+def _collect_raw_matrix(emb, id_col, vec_col, dim):
+    """:func:`_raw_matrix` of the :func:`_collect_raw_vectors` collect;
+    None past the cap."""
+    tbl = _collect_raw_vectors(emb, id_col, vec_col, dim)
+    return None if tbl is None else _raw_matrix(tbl, dim)
 
 
 def _bucket_index(corpus_keys):
@@ -1124,7 +1105,7 @@ def _grid_shards(
 
 def _lsh_grid_candidates(qsrc, corpus, build, scan, n_bytes, n_q, cap):
     """PAST the byte cap (VERDICT r10 #1): the (query-block × shard)
-    grid of ``pq._sharded_ivfpq_candidates`` applied to bucket indexes.
+    grid of ``pq._sharded_cell_candidates`` applied to bucket indexes.
     Not a join: a bucket join carries a tables·probes·bucket²
     candidate multiset through its shuffle, and one was MEASURED
     spilling >60 GB of shuffle to local-disk exhaustion at 2M vectors
@@ -1185,7 +1166,7 @@ def _score_pairs(
     cand,
     n: int | None = None,
     unit=None,
-    unit_mat=None,
+    raw=None,
 ):
     """Cosine for candidate (query_id, neighbor_id) pairs.
 
@@ -1195,18 +1176,23 @@ def _score_pairs(
     is shuffled or Arrow-transferred per pair. This is how an ANN
     serving tier scores candidates (replicated vector store).
 
+    The matrix is the :func:`_collect_raw_matrix` collect normalized in
+    one numpy pass — measured faster than evaluating the per-element
+    normalization JVM-side just to re-collect the result.  Rows with
+    no direction (zero or NaN norm) are dropped from it, so their
+    pairs score NULL.
+
     Fallback (corpus too big to replicate): two equi-joins bringing the
-    unit vectors to the pairs, scored with the builtin dot.
+    unit vectors to the pairs, scored with the builtin dot; a NaN dot
+    (a NaN-element vector) is mapped to NULL there too.
 
     ``unit``: optionally a precomputed ``(id, uv)`` DataFrame from
     :func:`_unit_vectors`, so callers that already normalized (IVF's
     probe stage) don't pay the normalization scan twice.
 
-    ``unit_mat``: optionally the ALREADY-COLLECTED ``(ids, mat)`` pair
-    (from :func:`_collect_unit_matrix`). Callers that collected it for
-    their own sizing (LSH) pass it through, which skips the count +
-    dim-probe + collect jobs entirely — on small inputs those fixed
-    jobs, not the math, dominate wall time.
+    ``raw``: optionally the :func:`_collect_raw_matrix` pair a caller
+    already collected (IVF's cell serve reads its inverted file from
+    it), which skips the dim probe and the collect.
     """
     import numpy as np
     import pandas as pd
@@ -1221,17 +1207,20 @@ def _score_pairs(
     else:
         unit = _unit_vectors(emb, id_col, vec_col)
 
-    if unit_mat is None:
+    if raw is None:
         if n is None:
             n = emb.count()
         # Cap in measured bytes: dim probed from one row (limit-1 scan).
         head = emb.select(F.size(F.col(vec_col)).alias("d")).head()
         dim = int(head["d"]) if head is not None else 0
         if n * dim * 8 <= BROADCAST_SCORE_MAX_BYTES:
-            unit_mat = _collect_unit_matrix(emb, id_col, vec_col, dim)
+            raw = _collect_raw_matrix(emb, id_col, vec_col, dim)
 
-    if unit_mat is not None:
-        ids, mat = unit_mat
+    if raw is not None:
+        ids, mat = raw
+        norms = np.linalg.norm(mat, axis=1)
+        keep = norms > 0
+        ids, mat = ids[keep], mat[keep] / norms[keep][:, None]
         index = {int(i): pos for pos, i in enumerate(ids)}
         bc = spark.sparkContext.broadcast((index, mat))
 
@@ -1249,8 +1238,9 @@ def _score_pairs(
             # NULL, not NaN: Spark orders NaN FIRST under desc(), which
             # would rank degenerate vectors as everyone's top neighbor;
             # NULL sorts last, matching brute_force_topk and the join
-            # fallback (dot(NULL) → NULL). Nullable Float64 + pd.NA is
-            # what Arrow maps to a true SQL NULL (ADVICE r1).
+            # fallback (dot(NULL) → NULL, NaN → NULL). Nullable
+            # Float64 + pd.NA is what Arrow maps to a true SQL NULL
+            # (ADVICE r1).
             res = pd.array(out, dtype="Float64")
             res[~ok] = pd.NA
             return pd.Series(res)
@@ -1274,7 +1264,11 @@ def _score_pairs(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(dot("qv", "cv"), 6).alias("cosine"),
+            # NaN (a NaN-element vector) → NULL, as the broadcast path
+            # scores it: Spark orders NaN FIRST under desc()
+            F.nanvl(
+                F.round(dot("qv", "cv"), 6), F.lit(None).cast("double")
+            ).alias("cosine"),
         )
     )
 
