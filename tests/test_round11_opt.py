@@ -1,14 +1,10 @@
-"""Round-11 optimization tests: the brute-force top-k margin kernel.
+"""Round-11 optimization tests: the brute-force top-k margin cut.
 
-``brute_force_topk``'s r11 fast path cuts the n² pair stream to ~n·k
-margin candidates inside one Arrow scan (guide §2.3 "shuffle fewer
-bytes" / §4.2). These tests pin the contract that makes it safe:
-
-  - row-identical output vs the n² pair plan on a clean corpus
-    (values compared exactly — the rounding-margin lemma in
-    ``_topk_margin_candidates``'s docstring);
-  - fallback (kernel returns None) on every degenerate shape whose
-    NULL-cosine semantics only the n² plan implements.
+``brute_force_topk`` cuts the n² pair stream to ~n·k margin candidates
+inside one Arrow scan (guide §2.3 "shuffle fewer bytes" / §4.2). These
+tests pin the contract that makes it safe: row-identical output vs the
+n² expression plan (values compared exactly — the rounding-margin
+lemma in ``_topk_cut``'s docstring), on clean and on degenerate corpora.
 """
 
 from __future__ import annotations
@@ -18,15 +14,15 @@ from pyspark.sql import functions as F
 
 from udacity_capstone_data_engineering_spark.operators import similarity
 from udacity_capstone_data_engineering_spark.operators.similarity import (
+    _cosine_scan,
     _pairwise_cosine,
-    _topk_margin_candidates,
     brute_force_topk,
 )
 from pyspark.sql import Window
 
 
 def _slow_topk(emb, id_col, vec_col, k):
-    """The pre-r11 n² plan, verbatim."""
+    """The n² expression plan, ranked as ``brute_force_topk`` ranks."""
     scored = _pairwise_cosine(emb, id_col, vec_col, None)
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id")
@@ -68,7 +64,7 @@ def test_topk_kernel_rows_identical_to_pair_plan(spark):
     want = sorted(slow.collect(), key=key)
     assert [tuple(r) for r in got] == [tuple(r) for r in want]
     # the fast path really engaged (kernel eligible on this corpus)
-    assert _topk_margin_candidates(emb, "vec_id", "embedding", 5) is not None
+    assert _cosine_scan(emb, "vec_id", "embedding", k=5) is not None
 
 
 def test_topk_kernel_sf_corpus_identical(spark, sf_dir):
@@ -86,67 +82,51 @@ def test_topk_kernel_sf_corpus_identical(spark, sf_dir):
 
 
 def test_topk_kernel_falls_back_on_degenerate_rows(spark):
-    # NULL vector
-    bad_null = spark.createDataFrame(
-        [(0, [1.0, 2.0]), (1, None), (2, [0.5, 1.0])],
-        "vec_id long, embedding array<double>",
-    )
-    assert _topk_margin_candidates(bad_null, "vec_id", "embedding", 1) is None
-    # ragged dimension
-    bad_ragged = spark.createDataFrame(
-        [(0, [1.0, 2.0]), (1, [1.0]), (2, [0.5, 1.0])],
-        "vec_id long, embedding array<double>",
-    )
-    assert (
-        _topk_margin_candidates(bad_ragged, "vec_id", "embedding", 1) is None
-    )
-    # zero-norm row (NULL cosine semantics)
-    bad_zero = spark.createDataFrame(
-        [(0, [1.0, 2.0]), (1, [0.0, 0.0]), (2, [0.5, 1.0])],
-        "vec_id long, embedding array<double>",
-    )
-    assert _topk_margin_candidates(bad_zero, "vec_id", "embedding", 1) is None
-    # non-long ids would flip the output schema
-    bad_ids = spark.createDataFrame(
-        [("a", [1.0, 2.0]), ("b", [0.5, 1.0])],
-        "vec_id string, embedding array<double>",
-    )
-    assert _topk_margin_candidates(bad_ids, "vec_id", "embedding", 1) is None
-    # corpora with <= k rows have no k-th raw score to cut at
-    tiny = spark.createDataFrame(
-        [(0, [1.0, 2.0]), (1, [0.5, 1.0])],
-        "vec_id long, embedding array<double>",
-    )
-    assert _topk_margin_candidates(tiny, "vec_id", "embedding", 5) is None
-    # and brute_force_topk still answers through the fallback plan
-    out = brute_force_topk(bad_zero, "vec_id", "embedding", k=1)
-    assert out.count() == 3
+    """Every degenerate shape the n² plan alone once handled — NULL,
+    ragged and zero-norm vectors, string ids, corpora of <= k rows —
+    answers through the scan with the n² plan's rows, NULL cosine
+    included."""
+    shapes = [
+        ([(0, [1.0, 2.0]), (1, None), (2, [0.5, 1.0])], "long", 1),
+        ([(0, [1.0, 2.0]), (1, [1.0]), (2, [0.5, 1.0])], "long", 1),
+        ([(0, [1.0, 2.0]), (1, [0.0, 0.0]), (2, [0.5, 1.0])], "long", 1),
+        ([("a", [1.0, 2.0]), ("b", [0.5, 1.0])], "string", 1),
+        ([(0, [1.0, 2.0]), (1, [0.5, 1.0])], "long", 5),
+    ]
+    key = lambda r: (r["query_id"], r["rnk"])
+    for rows, id_type, k in shapes:
+        emb = spark.createDataFrame(
+            rows, f"vec_id {id_type}, embedding array<double>"
+        )
+        assert _cosine_scan(emb, "vec_id", "embedding", k=k) is not None
+        got = sorted(
+            brute_force_topk(emb, "vec_id", "embedding", k=k).collect(),
+            key=key,
+        )
+        want = sorted(_slow_topk(emb, "vec_id", "embedding", k).collect(), key=key)
+        assert [tuple(r) for r in got] == [tuple(r) for r in want], rows
+        assert len(got) == len(rows) * min(k, len(rows) - 1)
+    # the zero-norm row scores NULL against everything, in both directions
+    zero = spark.createDataFrame(shapes[2][0], "vec_id long, embedding array<double>")
+    out = brute_force_topk(zero, "vec_id", "embedding", k=1).collect()
+    assert len(out) == 3
+    assert {r["query_id"]: r["cosine"] for r in out}[1] is None
 
 
 def test_threshold_kernel_rows_identical(spark, sf_dir):
-    """embedding_dup_pairs' threshold kernel emits exactly the pairs
-    the n² kernel plan's raw-double filter keeps."""
-    from udacity_capstone_data_engineering_spark.operators.similarity import (
-        _exact_cosine_kernel_pairs,
-        _threshold_pairs_kernel,
-    )
+    """embedding_dup_pairs' threshold scan emits exactly the pairs the
+    n² expression plan's raw-double filter keeps."""
     from udacity_capstone_data_engineering_spark.sources.catalog import (
         load_table,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    fast = _threshold_pairs_kernel(emb, "vec_id", "embedding", 0.4)
+    fast = _cosine_scan(emb, "vec_id", "embedding", threshold=0.4)
     assert fast is not None
     fast = fast.select(
         "query_id", "neighbor_id", F.round("cosine_raw", 6).alias("cosine")
     )
-    slow = (
-        _exact_cosine_kernel_pairs(emb, "vec_id", "embedding", 64, ordered=True)
-        .filter(F.col("cosine_raw") >= 0.4)
-        .select(
-            "query_id", "neighbor_id", F.round("cosine_raw", 6).alias("cosine")
-        )
-    )
+    slow = _pairwise_cosine(emb, "vec_id", "embedding", threshold=0.4)
     key = lambda r: (r["query_id"], r["neighbor_id"])
     got = sorted(fast.collect(), key=key)
     want = sorted(slow.collect(), key=key)
@@ -155,15 +135,31 @@ def test_threshold_kernel_rows_identical(spark, sf_dir):
 
 
 def test_threshold_kernel_falls_back_on_degenerate(spark):
-    from udacity_capstone_data_engineering_spark.operators.similarity import (
-        _threshold_pairs_kernel,
-    )
-
+    """A NULL vector pairs with nothing past the threshold on the scan,
+    as on the n² plan."""
     bad = spark.createDataFrame(
         [(0, [1.0, 2.0]), (1, None), (2, [0.5, 1.0])],
         "vec_id long, embedding array<double>",
     )
-    assert _threshold_pairs_kernel(bad, "vec_id", "embedding", 0.4) is None
+    fast = _cosine_scan(bad, "vec_id", "embedding", threshold=0.4)
+    assert fast is not None
+    got = sorted(
+        map(
+            tuple,
+            fast.select(
+                "query_id", "neighbor_id", F.round("cosine_raw", 6).alias("cosine")
+            ).collect(),
+        )
+    )
+    want = sorted(
+        map(
+            tuple,
+            _pairwise_cosine(
+                bad, "vec_id", "embedding", threshold=0.4
+            ).collect(),
+        )
+    )
+    assert got == want == [(0, 2, 1.0)]
 
 
 def test_topk_kernel_fast_path_in_plan(spark, sf_dir):

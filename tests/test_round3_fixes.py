@@ -91,11 +91,8 @@ class TestNoDriverCollect:
         IVF centroid fit), both byte-capped, plus the r5e exact-integer
         k-means' TWO declared bounded collects (k-row init + k x d
         update sums per round — the MLlib KMeans layout; an iterative
-        fixpoint cannot stay lazy), plus r7's exact-cosine kernel
-        collect (raw vector matrix, gated by BROADCAST_SCORE_MAX_BYTES
-        at the single call site before the function is entered), plus
-        r8's standing-semantic-index centroid load
-        (``load_semantic_index``: k x d ints — the same
+        fixpoint cannot stay lazy), plus r8's standing-semantic-index
+        centroid load (``load_semantic_index``: k x d ints — the same
         broadcast-sized object the Lloyd loop itself ships; the
         representatives side stays a lazy DataFrame). Any other
         collect is a regression."""
@@ -112,7 +109,6 @@ class TestNoDriverCollect:
         # an unbounded collect elsewhere in the same file).
         allowed = {
             "operators/kmeans.py": {"kmeans_int": 2},
-            "operators/similarity.py": {"_exact_cosine_kernel_pairs": 1},
             "operators/semdedup.py": {"load_semantic_index": 1},
         }
         hits: dict[str, dict[str, int]] = {}

@@ -324,17 +324,18 @@ def test_pairwise_cosine_fast_path_bit_equal(spark):
 
 
 def test_exact_cosine_kernel_bit_equal_and_null_contract(spark):
-    """The broadcast exact-cosine Arrow kernel (r7 — left-to-right
-    accumulation) must be bit-identical to the HOF expression
-    formulation, including zero-norm -> NULL and the ordered-pair
-    variant's id_a < id_b population."""
+    """The exact-cosine block scan (left-to-right accumulation) must be
+    bit-identical to the HOF expression formulation, including
+    zero-norm -> NULL, and its threshold cut must keep exactly the
+    id_a < id_b pairs with a non-NULL cosine at an always-passing
+    threshold."""
     import numpy as np
 
     from udacity_capstone_data_engineering_spark.functions.vectors import (
         cosine_similarity,
     )
     from udacity_capstone_data_engineering_spark.operators.similarity import (
-        _exact_cosine_kernel_pairs,
+        _cosine_scan,
     )
 
     rng = np.random.default_rng(31)
@@ -346,9 +347,7 @@ def test_exact_cosine_kernel_bit_equal_and_null_contract(spark):
 
     got = {
         (r["query_id"], r["neighbor_id"]): r["cosine_raw"]
-        for r in _exact_cosine_kernel_pairs(
-            emb, "vec_id", "embedding", 9
-        ).collect()
+        for r in _cosine_scan(emb, "vec_id", "embedding").collect()
     }
     q = emb.select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"))
     c = emb.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cv"))
@@ -362,10 +361,10 @@ def test_exact_cosine_kernel_bit_equal_and_null_contract(spark):
     for r in ref:
         assert got[(r["qid"], r["cid"])] == r["cos"], (r["qid"], r["cid"])
 
-    ordered = _exact_cosine_kernel_pairs(
-        emb, "vec_id", "embedding", 9, ordered=True
+    ordered = _cosine_scan(
+        emb, "vec_id", "embedding", threshold=float("-inf")
     ).collect()
-    assert len(ordered) == 61 * 60 // 2
+    assert len(ordered) == 60 * 59 // 2  # the zero vector's pairs are NULL
     assert all(r["query_id"] < r["neighbor_id"] for r in ordered)
     for r in ordered:
         assert got[(r["query_id"], r["neighbor_id"])] == r["cosine_raw"]

@@ -31,7 +31,7 @@ def test_kernel_pairs_degenerate_vectors_null_not_crash(spark):
     )
     got = {
         (r.query_id, r.neighbor_id): r.cosine
-        for r in similarity._pairwise_cosine(
+        for r in similarity._exact_cosine(
             emb, "vec_id", "embedding"
         ).collect()
     }
@@ -49,7 +49,7 @@ def test_kernel_pairs_all_degenerate_returns_all_null(spark):
     )
     # dim probe hits the first non-null head row; whatever regime runs,
     # the job must complete with NULL cosines, not crash.
-    rows = similarity._pairwise_cosine(emb, "vec_id", "embedding").collect()
+    rows = similarity._exact_cosine(emb, "vec_id", "embedding").collect()
     assert {r.cosine for r in rows} == {None}
 
 
@@ -71,7 +71,7 @@ def test_pairwise_cosine_external_queries_longer_vector_nulls(spark):
     )
     got = {
         (r.query_id, r.neighbor_id): r.cosine
-        for r in similarity._pairwise_cosine(
+        for r in similarity._exact_cosine(
             emb, "vec_id", "embedding", queries=queries
         ).collect()
     }
@@ -95,10 +95,10 @@ def test_kernel_broadcast_reused_and_bounded(spark):
         "vec_id long, embedding array<double>",
     )
     similarity._KERNEL_BC.clear()
-    similarity._pairwise_cosine(emb, "vec_id", "embedding").collect()
+    similarity._exact_cosine(emb, "vec_id", "embedding").collect()
     assert len(similarity._KERNEL_BC) == 1
     (bc1,) = similarity._KERNEL_BC.values()
-    similarity._pairwise_cosine(emb, "vec_id", "embedding").collect()
+    similarity._exact_cosine(emb, "vec_id", "embedding").collect()
     assert list(similarity._KERNEL_BC.values()) == [bc1]  # reused, not re-broadcast
     # distinct corpora rotate through the bounded registry
     for i in range(similarity._KERNEL_BC_MAX + 2):
@@ -106,7 +106,7 @@ def test_kernel_broadcast_reused_and_bounded(spark):
             [(1, [1.0, float(i)]), (2, [0.5, 0.5])],
             "vec_id long, embedding array<double>",
         )
-        similarity._pairwise_cosine(other, "vec_id", "embedding").collect()
+        similarity._exact_cosine(other, "vec_id", "embedding").collect()
     assert len(similarity._KERNEL_BC) <= similarity._KERNEL_BC_MAX
     similarity._KERNEL_BC.clear()
 

@@ -77,31 +77,3 @@ def cosine_similarity_presq(
     ``l2_norm(a) * l2_norm(b)`` would."""
     denom = F.sqrt(a_sumsq) * F.sqrt(b_sumsq)
     return F.when(denom > 0, dotp / denom)
-
-
-def dot_vectorized(a: Column | str, b: Column | str) -> Column:
-    """Arrow-batched numpy dot product.
-
-    Measured tradeoff (sf0.1, 1.5M candidate pairs of dim-64 vectors):
-    the Arrow round-trip of nested list columns costs MORE than the
-    interpreted builtin dot (29s vs 12s end-to-end) — per-pair scoring
-    stays on ``dot``. This path wins only when the Python-side work is
-    large relative to transfer (e.g. matrix ops against a broadcast
-    matrix, long vectors, reused batches). NOT bit-portable across
-    engines (SIMD/pairwise summation order) — use only where results
-    feed a tolerance/recall check, never an exact oracle."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def _dot(x, y):
-        xa = np.vstack(x.to_numpy())
-        ya = np.vstack(y.to_numpy())
-        return pd.Series(np.einsum("ij,ij->i", xa, ya))
-
-    # Explicit form (not hints): module-level `from __future__ import
-    # annotations` stringifies hints, breaking pyspark's inference.
-    udf = pandas_udf(_dot, "double")
-    ca = F.col(a) if isinstance(a, str) else a
-    cb = F.col(b) if isinstance(b, str) else b
-    return udf(ca, cb)

@@ -11,7 +11,8 @@ one that exploits cluster structure when the corpus has it:
      matrix multiply against the broadcast centroid matrix — this is
      the measured pandas-UDF sweet spot (large compute per byte moved:
      batch×dim @ dim×k), unlike per-pair scoring where Arrow transfer
-     dominates (see ``functions/vectors.dot_vectorized``).
+     dominates (an Arrow-batched per-pair dot over 1.5M sf0.1 pairs
+     measured 29 s against 12 s for the builtin ``dot``).
   3. Search scores each query against the rows of its ``nprobe``
      nearest cells only — candidates ≈ n × nprobe / k_cells instead of
      n².  At small candidate volume a pair join on the cell id does it

@@ -41,10 +41,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from udacity_capstone_data_engineering_spark.functions.hashing import (  # noqa: F401  (house import parity)
-    portable_hash64,
-)
-
 K = 4
 ITERATIONS = 3
 SCALE = 1024

@@ -1,9 +1,13 @@
 """Similarity search over embedding columns (``array<float>``).
 
 Two paths:
-  - ``brute_force_topk``: exact cosine top-k via a blocked self-join —
-    the correctness baseline, quadratic, fine at test scale and as the
-    recall oracle for the approximate path.
+  - ``brute_force_topk``: exact cosine top-k — the correctness
+    baseline, quadratic, and the recall oracle for the approximate
+    paths. Under ``BROADCAST_SCORE_MAX_BYTES`` it is one block scan of
+    the query rows against the broadcast corpus matrix
+    (``_cosine_scan``, shared with the threshold pairs of
+    ``embedding_dup_pairs``); past the cap, the builtin expression
+    plan (``_pairwise_cosine``).
   - ``lsh_topk``: multi-table random-hyperplane LSH — deterministic
     hyperplanes derived from md5 (no RNG state to ship); candidates are
     gathered only from the query's probed sign-pattern buckets, so the
@@ -12,19 +16,17 @@ Two paths:
     declared Python boundary — measured 4-5× faster than interpreted
     higher-order functions here).
 
-``brute_force_topk`` (the oracle-paired op) keeps builtin zip_with/
-aggregate vector math in DOUBLE with left-to-right accumulation —
-bit-stable across engines (see ``functions/vectors.py``). The approx
-paths trade that portability for throughput; they are verified by
-recall, not hash equality.
+Both exact plans accumulate DOUBLE products left to right per dimension
+(see ``functions/vectors.py``), so their cosines are bit-identical to
+each other and to any engine that sums in order. The approx paths trade
+that portability for throughput; they are verified by recall, not hash
+equality.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from udacity_capstone_data_engineering_spark.functions.vectors import cosine_similarity
 
 # Live kernel broadcasts, content-keyed (ADVICE r7: each anchor query
 # used to leave an up-to-256MiB broadcast pinned on the executors for
@@ -63,139 +65,44 @@ def _cached_broadcast(spark, key, build):
     return bc
 
 
-def _kernel_broadcast(spark, index: dict, mat, sumsq):
-    import hashlib
-
-    key = (
-        "cosine",
-        id(spark.sparkContext),
-        mat.shape,
-        hashlib.sha1(mat.tobytes()).hexdigest(),
-        hashlib.sha1(repr(sorted(index)).encode()).hexdigest(),
+def _probe_dim(emb: DataFrame, vec_col: str) -> int:
+    """Length of the first non-NULL vector (0 if there is none): the
+    corpus dim of both exact plans. A vector of any other length is
+    ragged and scores NULL."""
+    head = (
+        emb.filter(F.col(vec_col).isNotNull())
+        .select(F.size(F.col(vec_col)).alias("d"))
+        .head()
     )
-    return _cached_broadcast(spark, key, lambda: (index, mat, sumsq))
-
-
-def _exact_cosine_kernel_pairs(
-    emb: DataFrame, id_col: str, vec_col: str, dim: int, ordered: bool = False
-) -> DataFrame:
-    """All-pairs exact cosine via a BROADCAST raw-vector matrix and an
-    Arrow kernel whose accumulation is LEFT-TO-RIGHT over dims
-    (``acc = acc + q[:, i] * c[:, i]``) — each IEEE double op is
-    correctly rounded in the SAME order as the JVM ``aggregate`` fold
-    and DuckDB's ``list_dot_product``, so the result is BIT-IDENTICAL
-    to the expression path (pinned by
-    test_pairwise_cosine_fast_path_bit_equal and the committed
-    manifest digests), unlike ``einsum``'s SIMD/pairwise order. The n²
-    join carries only id pairs; vectors live once per executor.
-
-    This is the exact-anchor twin of ``_score_pairs``' serving kernel:
-    that one is approximate-friendly (einsum over unit vectors), this
-    one is oracle-grade. ~20x over the interpreted n² expression plan
-    (the three exact anchors were the most expensive catalog rows).
-
-    Degenerate inputs never crash (ADVICE r7): NULL or
-    ragged-dimension vectors are excluded from the broadcast matrix and
-    their pairs score NULL cosine — the same contract the expression
-    path honors via null-propagating folds."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    spark = emb.sparkSession
-    rows = (
-        emb.select(id_col, vec_col)
-        .filter(F.col(vec_col).isNotNull() & (F.size(vec_col) == dim))
-        .collect()
-    )
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    mat = np.array([r[1] for r in rows], dtype=np.float64).reshape(
-        len(rows), dim
-    )
-    sumsq = np.zeros(len(ids))
-    for i in range(dim):  # left-to-right, matching the JVM fold
-        sumsq = sumsq + mat[:, i] * mat[:, i]
-    index = {int(v): p for p, v in enumerate(ids)}
-    bc = _kernel_broadcast(spark, index, mat, sumsq)
-
-    def score(qs, cs):
-        idx, m, sq = bc.value
-        if m.shape[0] == 0:  # nothing valid to score against
-            return pd.Series(pd.array([pd.NA] * len(qs), dtype="Float64"))
-        qi_f, ci_f = qs.map(idx), cs.map(idx)
-        # ids excluded above (NULL / ragged vectors) are absent from the
-        # index: their pairs get NULL cosine, like the expression path.
-        known = qi_f.notna().to_numpy() & ci_f.notna().to_numpy()
-        qi = qi_f.fillna(0).to_numpy(dtype=np.int64)
-        ci = ci_f.fillna(0).to_numpy(dtype=np.int64)
-        acc = np.zeros(len(qs))
-        qm, cm = m[qi], m[ci]
-        for i in range(m.shape[1]):  # left-to-right per pair
-            acc = acc + qm[:, i] * cm[:, i]
-        denom = np.sqrt(sq[qi]) * np.sqrt(sq[ci])
-        ok = known & (denom > 0)
-        out = np.zeros(len(qs))
-        out[ok] = acc[ok] / denom[ok]
-        res = pd.array(out, dtype="Float64")
-        res[~ok] = pd.NA  # zero-norm/excluded -> SQL NULL
-        return pd.Series(res)
-
-    udf = pandas_udf(score, "double")
-    ids_df = emb.select(F.col(id_col))
-    pairs = ids_df.select(F.col(id_col).alias("query_id")).crossJoin(
-        ids_df.select(F.col(id_col).alias("neighbor_id"))
-    )
-    pairs = pairs.filter(
-        F.col("query_id") < F.col("neighbor_id")
-        if ordered
-        else F.col("query_id") != F.col("neighbor_id")
-    )
-    # UNROUNDED — callers that threshold must compare the raw double
-    # (the oracle filters before rounding); display rounding is theirs.
-    return pairs.select(
-        "query_id",
-        "neighbor_id",
-        udf(F.col("query_id"), F.col("neighbor_id")).alias("cosine_raw"),
-    )
+    return int(head["d"]) if head is not None else 0
 
 
 def _pairwise_cosine(
-    emb: DataFrame, id_col: str, vec_col: str, queries: DataFrame | None = None
+    emb: DataFrame,
+    id_col: str,
+    vec_col: str,
+    queries: DataFrame | None = None,
+    threshold: float | None = None,
 ) -> DataFrame:
-    """(query id, candidate id, cosine) for all pairs, excluding self.
+    """The expression plan of exact cosine, run past
+    ``BROADCAST_SCORE_MAX_BYTES``: (query_id, neighbor_id, cosine
+    rounded to 6) for every query/corpus pair with different ids, or,
+    with ``threshold``, for the pairs with query_id < neighbor_id whose
+    UNROUNDED cosine is >= threshold (the oracle filters before it
+    rounds).
 
-    r7 perf, bit-identical floats: under the broadcast byte cap the
-    self-join anchors route through the exact-accumulation Arrow
-    kernel (see ``_exact_cosine_kernel_pairs``); beyond it — or when a
-    separate ``queries`` relation is supplied, whose vectors need not
-    live in ``emb`` — the expression plan runs with per-side squared
-    norms projected ONCE per row (n folds, not n²) and the per-pair
-    dot as the unrolled scalar expression."""
+    Per-side squared norms are projected ONCE per row (n folds, not n²)
+    and the per-pair dot is the unrolled scalar expression. A pair with
+    a NULL, NULL-element, ragged (length other than the probed dim),
+    zero-norm or NaN vector scores NULL: NaN maps to NULL because Spark
+    orders NaN FIRST under desc() and NaN >= t holds."""
     from udacity_capstone_data_engineering_spark.functions.vectors import (
         cosine_similarity_presq,
         dot,
         dot_unrolled,
     )
 
-    head = (
-        emb.filter(F.col(vec_col).isNotNull())
-        .select(F.size(F.col(vec_col)).alias("d"))
-        .head()
-    )
-    dim = int(head["d"]) if head is not None and head["d"] is not None else 0
-    if queries is None and dim > 0:
-        # gate on what will actually be broadcast: valid-vector rows only
-        n = emb.filter(
-            F.col(vec_col).isNotNull() & (F.size(vec_col) == dim)
-        ).count()
-        if n * dim * 8 <= BROADCAST_SCORE_MAX_BYTES:
-            return _exact_cosine_kernel_pairs(
-                emb, id_col, vec_col, dim
-            ).select(
-                "query_id",
-                "neighbor_id",
-                F.round("cosine_raw", 6).alias("cosine"),
-            )
+    dim = _probe_dim(emb, vec_col)
     q = (queries or emb).select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("qv"),
@@ -206,242 +113,221 @@ def _pairwise_cosine(
         F.col(vec_col).alias("cv"),
         dot(vec_col, vec_col).alias("__csq"),
     )
-    joined = q.crossJoin(c).filter(F.col("query_id") != F.col("neighbor_id"))
-    # dot_unrolled is only valid when `dim` covers BOTH arrays; a vector
-    # LONGER than the probed dim would get its tail silently dropped
-    # (ADVICE r7). Guard per pair: conforming rows take the codegen
-    # unrolled sum, anything else (ragged, NULL — size(NULL) is NULL so
-    # the condition routes to otherwise) falls back to the zip_with
-    # fold, whose null padding yields NULL exactly as before.
-    dotp = (
-        F.when(
-            (F.size("qv") == dim) & (F.size("cv") == dim),
-            dot_unrolled("qv", "cv", dim),
-        ).otherwise(dot("qv", "cv"))
-        if dim > 0
-        else dot("qv", "cv")
+    joined = q.crossJoin(c).filter(
+        F.col("query_id") < F.col("neighbor_id")
+        if threshold is not None
+        else F.col("query_id") != F.col("neighbor_id")
     )
-    return joined.select(
-        "query_id",
-        "neighbor_id",
-        F.round(
-            cosine_similarity_presq(dotp, F.col("__qsq"), F.col("__csq")), 6
-        ).alias("cosine"),
+    # dot_unrolled is only valid when `dim` covers BOTH arrays: a longer
+    # vector would get its tail dropped (ADVICE r7), so any other
+    # length scores NULL (size(NULL) is NULL, which also routes there)
+    dotp = F.when(
+        (F.size("qv") == dim) & (F.size("cv") == dim),
+        dot_unrolled("qv", "cv", dim),
+    )
+    raw = F.nanvl(
+        cosine_similarity_presq(dotp, F.col("__qsq"), F.col("__csq")),
+        F.lit(None).cast("double"),
+    )
+    scored = joined.select("query_id", "neighbor_id", raw.alias("__raw"))
+    if threshold is not None:
+        scored = scored.filter(F.col("__raw") >= threshold)
+    return scored.select(
+        "query_id", "neighbor_id", F.round("__raw", 6).alias("cosine")
     )
 
 
-# Safety margin for the top-k kernel's candidate cut (see
-# _topk_margin_candidates): ranking happens on round(cosine, 6), and
-# |round(x) - x| <= 5e-7, so a candidate can out-rank the k-th raw
-# score by at most 1e-6 after rounding. 2e-6 doubles that bound so a
-# float comparison at the boundary can never exclude a true top-k row.
+# Safety margin for the top-k candidate cut (see _cosine_scan): ranking
+# happens on round(cosine, 6), and |round(x) - x| <= 5e-7, so a
+# candidate can out-rank the k-th raw score by at most 1e-6 after
+# rounding. 2e-6 doubles that bound so a float comparison at the
+# boundary can never exclude a true top-k row.
 _TOPK_ROUND_MARGIN = 2e-6
 
 
-def _strict_kernel_matrix(emb: DataFrame, id_col: str, vec_col: str):
-    """Collect ``(ids, mat, sumsq)`` for the self-pair fast kernels —
-    or None when ANY row is degenerate (NULL / ragged / non-finite /
-    zero-norm vectors, duplicate or non-long ids) or the corpus is
-    over ``BROADCAST_SCORE_MAX_BYTES``: those shapes carry NULL-cosine
-    semantics only the n² pair plan implements, so callers fall back.
-    ``sumsq`` accumulates left-to-right per dimension, matching the
-    JVM fold bit-for-bit."""
+def _sumsq(x):
+    """Row sums of squares accumulated left to right per dimension —
+    the JVM ``aggregate`` fold's order, bit for bit."""
     import numpy as np
-    from pyspark.sql.types import LongType
 
-    if not isinstance(emb.schema[id_col].dataType, LongType):
-        return None
-    head = emb.select(F.size(F.col(vec_col)).alias("d")).head()
-    if head is None or head["d"] is None:
-        return None
-    dim = int(head["d"])
-    if dim <= 0:
-        return None
-    max_rows = BROADCAST_SCORE_MAX_BYTES // (8 * dim)
-    pdf = (
-        emb.select(F.col(id_col), F.col(vec_col).cast("array<double>"))
-        .limit(max_rows + 1)
-        .toPandas()
+    acc = np.zeros(len(x))
+    for i in range(x.shape[1]):
+        acc = acc + x[:, i] * x[:, i]
+    return acc
+
+
+def _vector_rows(vecs, dim: int):
+    """``(len(vecs), dim)`` doubles of a numpy object array of vectors.
+    A NULL vector, or one whose length is not ``dim``, is a row of NaN;
+    a NULL element already reads NaN."""
+    import numpy as np
+
+    ok = np.fromiter(
+        (v is not None and len(v) == dim for v in vecs), bool, len(vecs)
     )
-    n = len(pdf)
-    if n == 0 or n > max_rows:
-        return None
-    vecs = pdf.iloc[:, 1]
-    if vecs.isna().any() or pdf[id_col].isna().any():
-        return None
-    lens = vecs.map(len).to_numpy()
-    if (lens != dim).any():
-        return None
-    ids = pdf[id_col].to_numpy(dtype=np.int64)
-    if len(np.unique(ids)) != n:
-        return None
-    mat = np.vstack(vecs.to_numpy()).astype(np.float64)
-    if not np.isfinite(mat).all():
-        return None
-    sumsq = np.zeros(n)
-    for i in range(dim):  # left-to-right, matching the JVM fold
-        sumsq = sumsq + mat[:, i] * mat[:, i]
-    if (sumsq <= 0).any():  # zero-norm rows score NULL in the slow path
-        return None
-    return ids, mat, sumsq
+    out = np.full((len(vecs), dim), np.nan)
+    if ok.any():
+        out[ok] = np.vstack(vecs[ok])
+    return out
 
 
-def _topk_margin_candidates(
-    emb: DataFrame, id_col: str, vec_col: str, k: int
+def _topk_cut(scores, other, k: int):
+    """Per query row, the candidates that can reach the top ``k`` after
+    rounding: every scored neighbour with a raw cosine within
+    ``_TOPK_ROUND_MARGIN`` of the row's k-th largest, and, when fewer
+    than ``k`` are scored, the smallest-id NULL neighbours to make up
+    ``k`` (the window ranks NULL last, then by id; ``other`` is in id
+    order). Ranking is by round(raw, 6) DESC with |round(x)-x| <= 5e-7,
+    so any row that beats the k-th by rounded order has
+    raw >= raw_k - 1e-6 and is kept, ties included."""
+    import numpy as np
+
+    valid = other & ~np.isnan(scores)
+    s = np.where(valid, scores, -np.inf)
+    nn = s.shape[1]
+    kth = (
+        np.partition(s, nn - k, axis=1)[:, nn - k]
+        if k <= nn
+        else np.full(len(s), -np.inf)
+    )
+    null = other & ~valid
+    need = k - valid.sum(axis=1)
+    return (valid & (s >= (kth - _TOPK_ROUND_MARGIN)[:, None])) | (
+        null & (np.cumsum(null, axis=1) <= need[:, None])
+    )
+
+
+def _cosine_scan(
+    emb: DataFrame,
+    id_col: str,
+    vec_col: str,
+    queries: DataFrame | None = None,
+    k: int | None = None,
+    threshold: float | None = None,
 ) -> DataFrame | None:
-    """Self-top-k fast path (r11, guide §2.3/§4.2): emit only the
-    ~n·k candidate pairs that can possibly survive the rounded-cosine
-    ranking, instead of materializing all n² pairs through the Arrow
-    scorer and shuffling them into the window.
+    """Exact cosine of query rows against the corpus ``emb`` as one
+    block scan: (query_id, neighbor_id, cosine_raw), UNROUNDED, or None
+    past ``BROADCAST_SCORE_MAX_BYTES``.
 
-    The per-pair kernel (``_exact_cosine_kernel_pairs``) is already
-    broadcast-based, but the PAIR STREAM it scores is n² rows: at the
-    2 000-vector gate corpus that is 4M rows crossing Arrow both ways
-    plus a 4M-row exchange for the rank window — measured 12.3 s for
-    ``embedding_cosine_topk`` (r10 bench), ~1 s of which is arithmetic.
-    Here each query row scores against the SAME broadcast matrix with
-    the SAME left-to-right dim accumulation (bit-identical doubles, see
-    below) and locally cuts to the candidates with raw cosine within
-    ``_TOPK_ROUND_MARGIN`` of the k-th largest.  Downstream rounding +
-    window ranking is unchanged, so the final rows are provably the
-    rows the n² plan produces:
+    The corpus comes from ONE limited Arrow collect
+    (``_collect_raw_vectors``) and ships as a positional matrix, sorted
+    by id, through ``_cached_broadcast``. The query rows — ``queries``,
+    or the corpus itself — carry their own vectors, and each block of
+    them is scored against the whole matrix with the expression plan's
+    arithmetic: per-dimension products accumulated left to right, then
+    ``acc / (sqrt(sq_q) * sqrt(sq_c))``. The doubles are therefore
+    bit-identical to ``_pairwise_cosine``'s. Pairs with the same id are
+    excluded; which of the rest are emitted depends on the caller:
 
-      ranking is by round(raw, 6) DESC with |round(x)-x| <= 5e-7, so
-      any candidate that beats the k-th by rounded order satisfies
-      raw >= raw_k - 1e-6, where raw_k is the k-th largest raw score —
-      every such row is kept (margin 2e-6), ties included.
+      - ``k``: the margin cut of :func:`_topk_cut`, a superset of every
+        query's top-k that the caller's window ranks;
+      - ``threshold``: the pairs with query_id < neighbor_id and raw
+        cosine >= threshold;
+      - neither: every pair.
 
-    Returns the slim (query_id, neighbor_id, cosine_raw) relation, or
-    None when the corpus is not eligible — over the broadcast byte
-    cap, fewer than k+1 rows, or ANY degenerate row (NULL / ragged /
-    non-finite / zero-norm vectors, duplicate ids), in which case the
-    caller falls back to the n² pair plan whose NULL-cosine semantics
-    the degenerate rows need."""
+    Degenerate rows take the expression plan's semantics: a pair with a
+    NULL, NULL-element, ragged, zero-norm or NaN vector scores NULL,
+    and NULL never passes a threshold. Rows with a NULL id pair with
+    nothing. Duplicate ids stay separate rows of the matrix. The output
+    ids keep the input's types."""
+    import hashlib
+
     import numpy as np
     import pandas as pd
 
-    spark = emb.sparkSession
-    got = _strict_kernel_matrix(emb, id_col, vec_col)
-    if got is None:
-        return None
-    ids, mat, sumsq = got
-    n = len(ids)
-    if n <= k:  # fewer than k neighbors: NULL-padding is the n² plan's
-        return None
-    index = {int(v): p for p, v in enumerate(ids)}
-    bc = _kernel_broadcast(spark, index, mat, sumsq)
+    from udacity_capstone_data_engineering_spark.sources.catalog import (
+        fan_out_small_scan,
+    )
 
-    def gen(batches):
-        idx, m, sq = bc.value
+    spark = emb.sparkSession
+    dim = _probe_dim(emb, vec_col)
+    # NULL vectors enter the collect as empty arrays: ragged, so they
+    # stay neighbours that score NULL
+    corpus = emb.filter(F.col(id_col).isNotNull()).select(
+        F.col(id_col),
+        F.coalesce(
+            F.col(vec_col).cast("array<double>"),
+            F.array().cast("array<double>"),
+        ).alias(vec_col),
+    )
+    tbl = _collect_raw_vectors(corpus, id_col, vec_col, dim)
+    if tbl is None:
+        return None
+    ids, mat = _raw_matrix(tbl, dim)
+    roots = np.sqrt(_sumsq(mat))
+    key = (
+        "cosine",
+        id(spark.sparkContext),
+        mat.shape,
+        hashlib.sha1(mat.tobytes()).hexdigest(),
+        hashlib.sha1(repr(ids.tolist()).encode()).hexdigest(),
+    )
+    bc = _cached_broadcast(spark, key, lambda: (ids, mat, roots))
+
+    def scan(batches):
+        cids, m, croots = bc.value
         nn, d = m.shape
-        inv = np.empty(nn, dtype=np.int64)
-        for vid, pos in idx.items():
-            inv[pos] = vid
-        roots = np.sqrt(sq)
         # <=64 MB of double score scratch per block regardless of n
         block = max(8, (8 << 20) // max(nn, 1))
-        for pdf_in in batches:
-            qids = pdf_in["query_id"].to_numpy(dtype=np.int64)
-            for s in range(0, len(qids), block):
-                qb = qids[s : s + block]
-                qi = np.fromiter(
-                    (idx[int(v)] for v in qb), dtype=np.int64, count=len(qb)
-                )
-                qm = m[qi]
-                acc = np.zeros((len(qb), nn))
-                for i in range(d):  # left-to-right per pair, as the
-                    # pair kernel's fold — bit-identical accumulation
-                    acc = acc + qm[:, i][:, None] * m[:, i][None, :]
-                denom = roots[qi][:, None] * roots[None, :]
-                scores = acc / denom
-                scores[np.arange(len(qb)), qi] = -np.inf  # exclude self
-                kth = np.partition(scores, nn - k, axis=1)[:, nn - k]
-                keep = scores >= (kth - _TOPK_ROUND_MARGIN)[:, None]
+        for pdf in batches:
+            for s in range(0, len(pdf), block):
+                qids = pdf["query_id"].to_numpy()[s : s + block]
+                qm = _vector_rows(pdf["qv"].to_numpy()[s : s + block], d)
+                with np.errstate(all="ignore"):
+                    acc = np.zeros((len(qids), nn))
+                    for i in range(d):  # left-to-right per pair
+                        acc = acc + qm[:, i][:, None] * m[:, i][None, :]
+                    denom = np.sqrt(_sumsq(qm))[:, None] * croots[None, :]
+                    scores = np.where(denom > 0, acc / denom, np.nan)
+                if threshold is not None:
+                    keep = (scores >= threshold) & (
+                        qids[:, None] < cids[None, :]
+                    )
+                else:
+                    keep = qids[:, None] != cids[None, :]
+                    if k is not None:
+                        keep = _topk_cut(scores, keep, k)
                 rows, cols = np.nonzero(keep)
                 yield pd.DataFrame(
                     {
-                        "query_id": qb[rows],
-                        "neighbor_id": inv[cols],
-                        "cosine_raw": scores[rows, cols],
+                        "query_id": qids[rows],
+                        "neighbor_id": cids[cols],
+                        # NaN → <NA>, a SQL NULL
+                        "cosine_raw": pd.array(
+                            scores[rows, cols], dtype="Float64"
+                        ),
                     }
                 )
 
-    from udacity_capstone_data_engineering_spark.sources.catalog import (
-        fan_out_small_scan,
+    src = queries if queries is not None else emb
+    qsrc = src.filter(F.col(id_col).isNotNull()).select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).cast("array<double>").alias("qv"),
     )
-
-    qsrc = fan_out_small_scan(
-        emb.select(F.col(id_col).alias("query_id"))
+    schema = (
+        f"query_id {src.schema[id_col].dataType.simpleString()}, "
+        f"neighbor_id {emb.schema[id_col].dataType.simpleString()}, "
+        "cosine_raw double"
     )
-    return qsrc.mapInPandas(
-        gen, schema="query_id long, neighbor_id long, cosine_raw double"
-    )
+    return fan_out_small_scan(qsrc).mapInPandas(scan, schema)
 
 
-def _threshold_pairs_kernel(
-    emb: DataFrame, id_col: str, vec_col: str, threshold: float
-) -> DataFrame | None:
-    """Ordered self-pairs (id_a < id_b) with RAW cosine >= threshold,
-    computed inside one Arrow scan against the broadcast matrix — the
-    exact-tier near-dup shape (``embedding_dup_pairs``). The n² plan
-    filters on the UNROUNDED kernel double, and this kernel reproduces
-    that double bit-for-bit (same left-to-right accumulation, same
-    sqrt/divide), so emitting only passing pairs is exactly the
-    filter — no margin lemma needed. Pairs with a degenerate side
-    score NULL in the n² plan and NULL fails the >= filter, so those
-    rows were never emitted there either; still, degenerate corpora
-    fall back (None) so both plans stay row-identical everywhere.
-    Returns (query_id, neighbor_id, cosine_raw) or None if ineligible."""
-    import numpy as np
-    import pandas as pd
-
-    spark = emb.sparkSession
-    got = _strict_kernel_matrix(emb, id_col, vec_col)
-    if got is None:
-        return None
-    ids, mat, sumsq = got
-    index = {int(v): p for p, v in enumerate(ids)}
-    bc = _kernel_broadcast(spark, index, mat, sumsq)
-
-    def gen(batches):
-        idx, m, sq = bc.value
-        nn, d = m.shape
-        inv = np.empty(nn, dtype=np.int64)
-        for vid, pos in idx.items():
-            inv[pos] = vid
-        roots = np.sqrt(sq)
-        block = max(8, (8 << 20) // max(nn, 1))
-        for pdf_in in batches:
-            qids = pdf_in["query_id"].to_numpy(dtype=np.int64)
-            for s in range(0, len(qids), block):
-                qb = qids[s : s + block]
-                qi = np.fromiter(
-                    (idx[int(v)] for v in qb), dtype=np.int64, count=len(qb)
-                )
-                qm = m[qi]
-                acc = np.zeros((len(qb), nn))
-                for i in range(d):  # left-to-right per pair
-                    acc = acc + qm[:, i][:, None] * m[:, i][None, :]
-                scores = acc / (roots[qi][:, None] * roots[None, :])
-                keep = (scores >= threshold) & (
-                    qb[:, None] < inv[None, :]  # ordered pairs only
-                )
-                rows, cols = np.nonzero(keep)
-                yield pd.DataFrame(
-                    {
-                        "query_id": qb[rows],
-                        "neighbor_id": inv[cols],
-                        "cosine_raw": scores[rows, cols],
-                    }
-                )
-
-    from udacity_capstone_data_engineering_spark.sources.catalog import (
-        fan_out_small_scan,
-    )
-
-    qsrc = fan_out_small_scan(emb.select(F.col(id_col).alias("query_id")))
-    return qsrc.mapInPandas(
-        gen, schema="query_id long, neighbor_id long, cosine_raw double"
+def _exact_cosine(
+    emb: DataFrame,
+    id_col: str,
+    vec_col: str,
+    queries: DataFrame | None = None,
+    k: int | None = None,
+    threshold: float | None = None,
+) -> DataFrame:
+    """(query_id, neighbor_id, cosine rounded to 6) of exact cosine:
+    ``_cosine_scan`` under the byte cap, the expression plan
+    (``_pairwise_cosine``, which applies no top-k cut) past it."""
+    raw = _cosine_scan(emb, id_col, vec_col, queries, k, threshold)
+    if raw is None:
+        return _pairwise_cosine(emb, id_col, vec_col, queries, threshold)
+    return raw.select(
+        "query_id", "neighbor_id", F.round("cosine_raw", 6).alias("cosine")
     )
 
 
@@ -452,26 +338,15 @@ def brute_force_topk(
     k: int = 5,
     queries: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact top-k nearest neighbors by cosine (ties → lower id first)."""
+    """Exact top-k nearest neighbors by cosine (ties → lower id first,
+    NULL cosine last), for every corpus row or for the ``queries``
+    rows (same id/vec columns) against the corpus."""
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id")
     )
-    if queries is None:
-        fast = _topk_margin_candidates(emb, id_col, vec_col, k)
-        if fast is not None:
-            return (
-                fast.select(
-                    "query_id",
-                    "neighbor_id",
-                    F.round("cosine_raw", 6).alias("cosine"),
-                )
-                .withColumn("rnk", F.row_number().over(w))
-                .filter(F.col("rnk") <= k)
-                .select("query_id", "neighbor_id", "cosine", "rnk")
-            )
-    scored = _pairwise_cosine(emb, id_col, vec_col, queries)
     return (
-        scored.withColumn("rnk", F.row_number().over(w))
+        _exact_cosine(emb, id_col, vec_col, queries, k=k)
+        .withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
         .select("query_id", "neighbor_id", "cosine", "rnk")
     )
@@ -812,10 +687,7 @@ def _normalize_batches(batches):
             by_len.setdefault(a.shape[0], []).append((p, a))
         for d, rows in by_len.items():
             x = np.vstack([a for _, a in rows])
-            acc = np.zeros(len(rows))
-            for i in range(d):  # left-to-right, matching the JVM fold
-                acc = acc + x[:, i] * x[:, i]
-            n = np.sqrt(acc)
+            n = np.sqrt(_sumsq(x))
             # when(__n > 0): Spark compares NaN greater than any
             # number, so NaN norms PASS and propagate NaN elements.
             ok = (n > 0) | np.isnan(n)
@@ -902,18 +774,15 @@ def _collect_raw_vectors(emb, id_col, vec_col, dim):
 
 def _raw_matrix(tbl, dim):
     """``(ids, raw)`` of a :func:`_collect_raw_vectors` table, sorted by
-    id (a NULL element reads NaN).  Rows with no direction are kept:
-    LSH keys come from raw vectors, and zero- or NaN-norm rows are
-    still bucket members (``_score_pairs`` drops them itself)."""
+    id; the ids keep their type, and a row whose length is not ``dim``
+    reads NaN, as does a NULL element (:func:`_vector_rows`).  Rows
+    with no direction are kept: LSH keys come from raw vectors, and
+    zero- or NaN-norm rows are still bucket members (``_score_pairs``
+    drops them itself)."""
     import numpy as np
 
-    ids = tbl.column(0).to_numpy().astype(np.int64)
-    col = tbl.column(1).to_pandas().to_numpy()
-    raw = (
-        np.vstack(col).astype(np.float64)
-        if len(col)
-        else np.zeros((0, dim), dtype=np.float64)
-    )
+    ids = tbl.column(0).to_numpy()
+    raw = _vector_rows(tbl.column(1).to_pandas().to_numpy(), dim)
     order = np.argsort(ids, kind="stable")
     return ids[order], raw[order]
 

@@ -1155,8 +1155,9 @@ _COSINE_SQL = """
 )
 def embedding_cosine_topk(spark, sf_dir):
     """Brute-force exact cosine top-5 neighbors — the ANN correctness
-    baseline. Vector math is builtin zip_with/aggregate in DOUBLE with
-    left-to-right accumulation: bit-identical to the oracle."""
+    baseline: one block scan of the corpus against its broadcast matrix
+    (the expression plan past the byte cap), DOUBLE products accumulated
+    left to right per dimension — bit-identical to the oracle."""
     emb = load_table(spark, sf_dir, "embeddings")
     return brute_force_topk(emb, "vec_id", "embedding", k=5)
 

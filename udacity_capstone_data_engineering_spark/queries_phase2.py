@@ -726,61 +726,22 @@ def monthly_revenue_rollup(spark, sf_dir):
     """,
 )
 def embedding_dup_pairs(spark, sf_dir):
-    """Embedding-cosine near-duplicate pairs, EXACT tier: threshold
-    self-join with bit-stable builtin vector math (left-to-right double
-    accumulation == the oracle's). The LSH/IVF paths are the scale
-    tier; this is their correctness baseline and the semantic dedup
+    """Embedding-cosine near-duplicate pairs, EXACT tier: the ordered
+    pairs whose unrounded cosine is >= 0.4, from the one exact-cosine
+    scan of ``brute_force_topk`` (the expression plan past the byte
+    cap) — left-to-right double accumulation, bit-identical to the
+    oracle's list_dot_product. The LSH/IVF paths are the scale tier;
+    this is their correctness baseline and the semantic dedup
     companion to shingle-Jaccard near-dup."""
-    from udacity_capstone_data_engineering_spark.functions.vectors import (
-        cosine_similarity,
-    )
     from udacity_capstone_data_engineering_spark.operators.similarity import (
-        BROADCAST_SCORE_MAX_BYTES,
-        _exact_cosine_kernel_pairs,
-        _threshold_pairs_kernel,
+        _exact_cosine,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    # r11 perf (guide §2.3): the threshold kernel emits ONLY passing
-    # ordered pairs from one Arrow scan — the n² pair stream and its
-    # per-pair Arrow crossing are gone. The filter compares the same
-    # UNROUNDED left-to-right double the pair kernel computed, so the
-    # emitted set is exactly the filtered set (degenerate corpora fall
-    # back to the r7 pair-kernel / expression plans below, whose NULL
-    # semantics they need).
-    fast = _threshold_pairs_kernel(emb, "vec_id", "embedding", 0.4)
-    if fast is not None:
-        return fast.select(
-            F.col("query_id").alias("id_a"),
-            F.col("neighbor_id").alias("id_b"),
-            F.round("cosine_raw", 6).alias("cosine"),
-        )
-    # r7 perf, bit-identical floats: under the broadcast cap the pairs
-    # score through the exact-accumulation Arrow kernel (left-to-right
-    # dim loop == the JVM fold == the oracle's list_dot_product; the
-    # threshold compares the UNROUNDED double, as the oracle does).
-    head = emb.select(F.size("embedding").alias("d")).head()
-    dim = int(head["d"]) if head is not None else 0
-    n = emb.count()
-    if dim > 0 and n * dim * 8 <= BROADCAST_SCORE_MAX_BYTES:
-        scored = _exact_cosine_kernel_pairs(
-            emb, "vec_id", "embedding", dim, ordered=True
-        )
-        return scored.filter(F.col("cosine_raw") >= 0.4).select(
-            F.col("query_id").alias("id_a"),
-            F.col("neighbor_id").alias("id_b"),
-            F.round("cosine_raw", 6).alias("cosine"),
-        )
-    a, b = emb.alias("a"), emb.alias("b")
-    cos = cosine_similarity(F.col("a.embedding"), F.col("b.embedding"))
-    return (
-        a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
-        .filter(cos >= 0.4)
-        .select(
-            F.col("a.vec_id").alias("id_a"),
-            F.col("b.vec_id").alias("id_b"),
-            F.round(cos, 6).alias("cosine"),
-        )
+    return _exact_cosine(emb, "vec_id", "embedding", threshold=0.4).select(
+        F.col("query_id").alias("id_a"),
+        F.col("neighbor_id").alias("id_b"),
+        "cosine",
     )
 
 

@@ -347,8 +347,9 @@ def rerank_two_stage(spark, sf_dir):
     the corpus side is full. THIS registered entry pins
     ``stage1="exact"`` (the brute-force scorer) so the end-to-end
     result stays deterministic and hash-checkable against the DuckDB
-    oracle — its BNLJ is the documented quadratic baseline, same
-    family as ``embedding_cosine_topk``. The 100 TB serving shape is
+    oracle — the workload streams through the same exact-cosine block
+    scan as ``embedding_cosine_topk`` (the quadratic baseline, one
+    query against every corpus row). The 100 TB serving shape is
     ``rerank_two_stage_ann`` (stage1="lsh"): identical stage-2 blend
     and top-k, candidates from the bucketed ANN tier — per-query cost
     ~tables·probes·sqrt(n) instead of n; ``stage1="ivfpq"`` wires the
