@@ -213,8 +213,9 @@ PICK = {
         "SemDeDup auto-k (r6): k = ceil(n/64) keeps candidate volume "
         "linear; the pair stage is an EQUI-join on the k-means cluster "
         "id over exact-collapse representatives — never corpus-squared; "
-        "assignment is map-only (transform/array_min literal plan here; "
-        "the broadcast Arrow kernel takes over at k>64)."
+        "k-means runs on the driver under its caps (the assignment enters "
+        "the plan as a local relation); past them every assignment is the "
+        "map-only broadcast Arrow kernel."
     ),
     "incremental_ingest_dedup_bucketed": (
         "Bucketed standing index (r6): the index scan shows Bucketed: "

@@ -11,8 +11,9 @@ and WHICH REGIME the auto-switch landed in (broadcast/kernel vs
 join/shard, classified by the operators' own byte thresholds).
 
 SemDeDup runs at its round-6 production shape: auto-k (k = n/64 =
-3125 here), which routes assignment through the large-k Arrow kernel
-(`kmeans._assign_kernel`) — this probe is that path's scale gate.
+3125 here), past the k-means driver caps, so every Lloyd assignment
+runs the broadcast Arrow kernel (`kmeans._assign_kernel`) — this
+probe is that path's scale gate.
 
 Walls are taken INTERLEAVED sf1-then-sf10 per kernel (SCALING.md
 contention protocol) so each decade exponent log10(t10/t1) is

@@ -365,10 +365,7 @@ class TestArtifactBaseDigest:
     not share an artifact."""
 
     def test_same_basename_different_roots_differ(self, spark, tmp_path):
-        # load the registry first: entering via queries_phase12 alone
-        # trips the intentional phase-chain import cycle
-        from udacity_capstone_data_engineering_spark import queries  # noqa: F401
-        from udacity_capstone_data_engineering_spark.queries_phase12 import (
+        from udacity_capstone_data_engineering_spark.sources.catalog import (
             artifact_base,
         )
 

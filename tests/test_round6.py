@@ -196,12 +196,13 @@ def test_bucketed_fp_index_matches_inplan_variant(spark, sf_dir):
 
 
 def test_kmeans_assign_regimes_bit_equal(spark, sf_dir):
-    """The large-k Arrow kernel and the literal expression plan must be
-    BIT-EQUAL on the same centroids (same exact-integer recurrence,
-    same first-minimum tie rule) — the gate for routing SemDeDup-scale
-    k through the kernel while the served oracle rows stay literal."""
+    """The assign kernel — the one nearest-centroid path of both k-means
+    regimes and of the SemDeDup screen — equals a pure-Python strict-<
+    argmin over the same 80 centroids. The centroids are corpus
+    vectors, so exact hits (dist 0) occur, and centroid 79 duplicates
+    centroid 0, so every row nearest to it is a tie that must go to
+    the smaller id."""
     from udacity_capstone_data_engineering_spark.operators.kmeans import (
-        _assign,
         _assign_kernel,
         _quantize,
     )
@@ -209,31 +210,33 @@ def test_kmeans_assign_regimes_bit_equal(spark, sf_dir):
     vecs = load_table(spark, sf_dir, "embeddings")
     q = _quantize(vecs, "vec_id", "embedding", 1024)
     cents = [list(r["qv"]) for r in q.orderBy("vid").limit(80).collect()]
-    # includes EXACT centroid hits (dist 0) and, because centroids 0..79
-    # are corpus vectors, duplicated-distance ties exercise the rule
-    lit = {
+    cents[-1] = list(cents[0])
+    want = {}
+    for r in q.collect():
+        best = None
+        for cid, cv in enumerate(cents):
+            d = sum((a - b) * (a - b) for a, b in zip(r["qv"], cv))
+            if best is None or d < best[0]:
+                best = (d, cid)
+        want[r["vid"]] = (best[1], best[0])
+    got = {
         r["vid"]: (r["cluster"], r["dist_sq"])
-        for r in _assign(q, cents).collect()
+        for r in _assign_kernel(q, cents, len(cents[0])).collect()
     }
-    ker = {
-        r["vid"]: (r["cluster"], r["dist_sq"])
-        for r in _assign_kernel(q, cents).collect()
-    }
-    assert lit == ker
+    assert got == want
+    assert (0, 0) in got.values()  # the tied exact hit went to centroid 0
 
 
-def test_kmeans_int_kernel_regime_end_to_end(spark, sf_dir):
-    """kmeans_int at k just past the regime switch equals a pure-Python
-    replay of the recurrence (the same gate battery the literal path
-    passed in test_kmeans.py, now through the kernel)."""
+def test_kmeans_int_kernel_regime_end_to_end(spark, sf_dir, monkeypatch):
+    """kmeans_int at k=24 through the distributed loop (the assign
+    kernel on every iteration and for the final assignment) equals a
+    pure-Python replay of the recurrence."""
     import math
 
-    from udacity_capstone_data_engineering_spark.operators.kmeans import (
-        ASSIGN_KERNEL_MIN_K,
-        kmeans_int,
-    )
+    from udacity_capstone_data_engineering_spark.operators import kmeans as km
 
-    k = ASSIGN_KERNEL_MIN_K + 8
+    monkeypatch.setattr(km, "KMEANS_DRIVER_MAX_BYTES", 0)
+    k = 24
     vecs = load_table(spark, sf_dir, "embeddings")
     rows = [(r["vec_id"], list(r["embedding"])) for r in vecs.collect()]
     q = {
@@ -266,7 +269,7 @@ def test_kmeans_int_kernel_regime_end_to_end(spark, sf_dir):
     want = {vid: (c, d) for vid, (d, c) in assign().items()}
     got = {
         r["vec_id"]: (r["cluster"], r["dist_sq"])
-        for r in kmeans_int(
+        for r in km.kmeans_int(
             vecs, "vec_id", "embedding", k=k, iterations=2
         ).collect()
     }

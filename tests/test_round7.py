@@ -172,41 +172,44 @@ def test_semantic_dedup_incremental_planted(spark):
     assert got == {1000: True, 1001: False}
 
 
-def test_semantic_dedup_incremental_kernel_regime_bitequal(spark, monkeypatch):
-    """The batch-assignment path must be bit-equal between the literal
-    plan (small k) and the broadcast Arrow kernel (large k) — forced by
-    dropping the regime threshold to 0."""
-    from udacity_capstone_data_engineering_spark.operators import kmeans as km
+def test_semantic_dedup_incremental_kernel_regime_bitequal(spark, tmp_path):
+    """The in-process incremental path (fit + screen in one call) is
+    bit-equal to the persisted one (``build_semantic_index`` then
+    ``semantic_dedup_against_index``): both run the same standing fit
+    and the same batch screen, and the artifact round-trip is exact."""
     from udacity_capstone_data_engineering_spark.operators.semdedup import (
+        build_semantic_index,
+        semantic_dedup_against_index,
         semantic_dedup_incremental,
     )
 
     rng = np.random.default_rng(13)
-    standing = spark.createDataFrame(
-        [(int(i), [float(x) for x in rng.normal(0, 1, 8)]) for i in range(60)],
-        "vec_id long, embedding array<double>",
-    )
-    batch = spark.createDataFrame(
-        [
-            (int(100 + i), [float(x) for x in rng.normal(0, 1, 8)])
-            for i in range(12)
-        ],
-        "vec_id long, embedding array<double>",
-    )
-    literal = sorted(
+    standing_rows = [
+        (int(i), [float(x) for x in rng.normal(0, 1, 8)]) for i in range(60)
+    ]
+    batch_rows = [
+        (int(100 + i), [float(x) for x in rng.normal(0, 1, 8)])
+        for i in range(12)
+    ] + [(200, list(standing_rows[7][1]))]  # a twin: one dup at least
+    schema = "vec_id long, embedding array<double>"
+    standing = spark.createDataFrame(standing_rows, schema)
+    batch = spark.createDataFrame(batch_rows, schema)
+    inproc = sorted(
         tuple(r)
         for r in semantic_dedup_incremental(
             standing, batch, "vec_id", "embedding", k=6
         ).collect()
     )
-    monkeypatch.setattr(km, "ASSIGN_KERNEL_MIN_K", 0)
-    kernel = sorted(
+    path = str(tmp_path / "sem_index")
+    build_semantic_index(standing, "vec_id", "embedding", path, k=6)
+    served = sorted(
         tuple(r)
-        for r in semantic_dedup_incremental(
-            standing, batch, "vec_id", "embedding", k=6
+        for r in semantic_dedup_against_index(
+            spark, batch, "vec_id", "embedding", path
         ).collect()
     )
-    assert literal == kernel
+    assert inproc == served
+    assert len(inproc) == 13 and (200, inproc[-1][1], True) == inproc[-1]
 
 
 def test_runtime_bloom_filter_guards_beyond_broadcast_decontam(spark, tmp_path):

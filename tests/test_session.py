@@ -33,3 +33,38 @@ def test_codegen_cache_keeps_catalog_classes(spark, sf_dir):
     first = sweep()
     second = sweep()
     assert second < 25, f"second sweep compiled {second} classes (first {first})"
+
+
+def test_local_df_arrow_paths_agree(spark):
+    """``local_df`` returns the same values with Arrow on (one record
+    batch) and off (one pickled slice): NaN stays NaN, NULL stays NULL,
+    and a long past 2^53 survives, scalar and array alike."""
+    from udacity_capstone_data_engineering_spark.session import local_df
+
+    nan = float("nan")
+    schema = "a long, b double, c array<double>"
+    row_sets = {
+        "empty": [],
+        "one row": [(1, 0.5, [1.0, 2.0])],
+        "degenerate": [
+            (1, None, [1.0]),  # NULL scalar
+            (2, 2.0, None),  # NULL array
+            (3, nan, [0.0]),  # NaN scalar
+            (4, 1.0, [nan, 1.0]),  # NaN inside an array
+            (2**62 + 1, 1.0, [None, 2.0]),  # NULL element, wide long
+        ],
+    }
+    conf = "spark.sql.execution.arrow.pyspark.enabled"
+    old = spark.conf.get(conf)
+    try:
+        got = {}
+        for arrow in ("true", "false"):
+            spark.conf.set(conf, arrow)
+            got[arrow] = {}
+            for name, rows in row_sets.items():
+                out = local_df(spark, rows, schema).collect()
+                got[arrow][name] = repr(sorted(map(tuple, out)))
+    finally:
+        spark.conf.set(conf, old)
+    assert got["true"] == got["false"]
+    assert got["true"]["degenerate"] == repr(sorted(row_sets["degenerate"]))

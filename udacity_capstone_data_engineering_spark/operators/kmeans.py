@@ -11,25 +11,35 @@ Recurrence (all integers):
 - quantize: qv[i] = floor(x[i] * scale + 1/2)  (floor-round; Spark
   HALF_UP vs DuckDB half-even `round` never enters the picture)
 - init: centroids 0..k-1 are the quantized vectors of the k smallest
-  ids (deterministic, oracle-trivial)
+  ids (deterministic, oracle-trivial); duplicate ids break the tie by
+  the quantized vector (lexicographic), NULL ids sort last
 - assign: nearest centroid by integer squared L2; ties -> smallest
-  centroid id (strict-< argmin chain)
+  centroid id (first minimum)
 - update: per dimension, floor(sum / count) (true floor division —
   sums go negative; spelled pmod-style in the oracle so both engines
   agree without float analysis); empty clusters keep their previous
   centroid
 
-Scale shape — the MLlib KMeans layout, which IS the 100 TB design:
-centroids live on the driver (k x d integers, here 4 x 64) and enter
-the plan as broadcast literals; assignment is a MAP-ONLY zip_with/
-aggregate over the scan (no shuffle, no UDF); the update is one
-aggregate producing k rows x d sum columns with map-side partial
-combine, collected to the driver (k x d values — the canonical
-bounded collect, same class as the PQ fit sample). Per iteration:
-one job, shuffle bytes O(partitions * k * d). Construction is
-necessarily eager (an iterative fixpoint materializes per round, like
-``.fit()``); callers wanting pure plan inspection should use a single
-iteration.
+Degenerate rows: the corpus dim is the length of the first non-NULL
+vector. A row whose quantized vector is NULL, holds a NULL element or
+is not of the corpus dim takes no part in the fit and gets a NULL
+``cluster`` and ``dist_sq``. (A NaN element quantizes to 0 — Java's
+long conversion of floor(NaN) — so its row is an ordinary member.)
+
+One nearest-centroid function, ``_nearest`` (numpy int64), serves
+both regimes. Under ``KMEANS_DRIVER_MAX_BYTES`` /
+``KMEANS_DRIVER_MAX_WORK`` the quantized relation is collected once
+and the whole recurrence runs on the driver. Past either cap runs the
+MLlib KMeans layout, which IS the 100 TB design: centroids live on
+the driver (k x d integers) and are broadcast to a map-only Arrow
+kernel (``_assign_kernel``) that runs ``_nearest`` per batch — no
+shuffle; the update is one aggregate producing k rows x d sum columns
+with map-side partial combine, collected to the driver (k x d values
+— the canonical bounded collect, same class as the PQ fit sample).
+Per iteration: one job, shuffle bytes O(partitions * k * d).
+Construction is necessarily eager (an iterative fixpoint
+materializes per round, like ``.fit()``); callers wanting pure plan
+inspection should use a single iteration.
 
 Overflow bound: |qv| <= scale * max|x|; dist <= d * (2 * scale *
 max|x|)^2 — at scale 1024, d 64, |x| <= 32 that is ~2.7e11, far
@@ -44,32 +54,17 @@ from pyspark.sql import DataFrame, functions as F
 K = 4
 ITERATIONS = 3
 SCALE = 1024
-# Above this k, nearest-centroid assignment switches from the literal
-# expression plan (O(k*d) Catalyst nodes) to an Arrow kernel over
-# broadcast int64 centroids. Both regimes compute the SAME
-# exact-integer recurrence and are bit-equal (test_kmeans_assign_regimes
-# pins it on a straddle pair), so the oracle story is regime-blind.
-# r10: boundary lowered 64 -> 16. The literal plan at k~32, d=64 is a
-# ~2048-node expression tree re-analyzed/codegen'd per Lloyd iteration
-# — measured DRIVER-bound 20-63 s with 2x run-to-run variance on the
-# sf0.1 semantic rows, vs 8-14 s stable through the kernel
-# (semantic_dedup_autok 62.7 -> 8.0 s, semantic_dedup_index_build
-# 28.6 -> 14.0 s, fresh-session bench protocol). k <= 16 keeps the
-# oracle demo rows (k=4) on the pure-JVM literal plan the no-Python-UDF
-# plan guard pins.
-ASSIGN_KERNEL_MIN_K = 16
 
 # Driver-Lloyd regime bounds (r12, guide §1.2: the distributed loop is
 # 2+iterations full job barriers — init collect, one agg collect per
 # iteration, the final checkpoint — each ~0.45 s of fixed overhead at
 # bench scale regardless of data volume). Under BOTH caps the quantized
-# matrix collects once and the whole recurrence runs in numpy int64 on
-# the driver. Every quantity is an exact integer (module docstring), so
-# the driver loop is BIT-EQUAL to the distributed one — same init (k
-# smallest vids), same strict-< argmin, same floor-division update,
-# same empty-cluster rule — pinned by
-# test_kmeans_driver_regime_bit_equal. Past either cap (the 100 TB
-# shape) the distributed loop runs unchanged.
+# relation collects once and the whole recurrence runs in numpy int64
+# on the driver. Every quantity is an exact integer (module docstring),
+# so the driver loop is BIT-EQUAL to the distributed one — same init,
+# same ``_nearest``, same floor-division update, same empty-cluster
+# rule — pinned by test_kmeans_driver_regime_bit_equal. Past either
+# cap (the 100 TB shape) the distributed loop runs.
 KMEANS_DRIVER_MAX_BYTES = 64 * 1024 * 1024  # collected n x d int64 matrix
 KMEANS_DRIVER_MAX_WORK = 256_000_000  # n*k*d int ops per assign pass
 
@@ -84,64 +79,76 @@ def _quantize(vecs: DataFrame, id_col: str, vec_col: str, scale: int) -> DataFra
     )
 
 
-def _assign(q: DataFrame, cents: list[list[int]]) -> DataFrame:
-    """Map-only nearest-centroid assignment against literal centroids.
+def _rows_of_dim(qv, d: int):
+    """``(ok, mat)`` of a pyarrow list array of quantized vectors: ``ok``
+    marks the rows that are non-NULL, ``d`` long and free of NULL
+    elements; ``mat`` is their ``(ok.sum(), d)`` int64 matrix. Sliced
+    arrays are honoured (``flatten`` starts at the slice offset and
+    skips the values under NULL rows)."""
+    import numpy as np
+    import pyarrow as pa
 
-    The distances live in ONE array column built by `transform` over a
-    k x d literal matrix, and the argmin is `array_min` +
-    `array_position` (first occurrence == smallest centroid id — the
-    same strict-< tie rule as a left-to-right argmin chain). Plan size
-    is O(k*d) literal nodes; the r5 formulation chained
-    `when(better, ...).otherwise(best_d)` with best_d re-embedded on
-    BOTH branches, an expression tree EXPONENTIAL in k — invisible at
-    the pinned k=4, a driver OOM at auto-k's k=32 (caught by the
-    round-6 sf0.1 gate on `semantic_dedup_autok`)."""
-    # r11 (guide §1.2 driver-side): the k x d literal matrix is built
-    # as ONE parsed SQL expression, not k*d F.lit() Column calls — each
-    # py4j round-trip costs ~2.5 ms, so the 4x64 matrix cost ~0.7 s of
-    # DRIVER wall per Lloyd iteration (measured; the job itself is
-    # ~0.3 s). Values and types are identical (BIGINT elements).
-    cent_lit = F.expr(
-        "CAST(array("
-        + ",".join(
-            "array(" + ",".join(str(int(v)) for v in cv) + ")" for cv in cents
-        )
-        + ") AS ARRAY<ARRAY<BIGINT>>)"
-    )
-    dists = F.transform(
-        cent_lit,
-        lambda cv: F.aggregate(
-            F.zip_with("qv", cv, lambda a, b: (a - b) * (a - b)),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ),
-    )
-    out = q.select("vid", "qv", dists.alias("_dists"))
-    best_d = F.array_min("_dists")
-    return out.select(
-        "vid",
-        "qv",
-        (F.array_position("_dists", best_d) - 1).cast("int").alias("cluster"),
-        best_d.alias("dist_sq"),
-    )
+    if isinstance(qv, pa.ChunkedArray):
+        qv = qv.combine_chunks()
+    lens = qv.value_lengths().fill_null(0).to_numpy(zero_copy_only=False)
+    ok = qv.is_valid().to_numpy(zero_copy_only=False) & (lens == d)
+    flat = qv.flatten()
+    parent = np.repeat(np.arange(len(qv)), lens)
+    if flat.null_count:
+        ok[parent[flat.is_null().to_numpy(zero_copy_only=False)]] = False
+    vals = flat.fill_null(0).to_numpy(zero_copy_only=False)
+    return ok, vals[ok[parent]].reshape(int(ok.sum()), d)
+
+
+def _nearest(mat, cents):
+    """``(cluster, dist_sq)`` of each row of an int64 matrix against an
+    int64 centroid matrix: the expanded squared L2 in exact int64
+    (per-term bound in the module docstring) and the FIRST minimum as
+    the argmin, so a tie goes to the smallest centroid id. Row blocks
+    keep the distance scratch near 4M int64s whatever k is. The only
+    nearest-centroid code of the package: the driver regime runs it
+    on the collected matrix, ``_assign_kernel`` on every batch."""
+    import numpy as np
+
+    lab = np.zeros(len(mat), dtype=np.int32)
+    dist = np.zeros(len(mat), dtype=np.int64)
+    c2 = (cents * cents).sum(axis=1)
+    step = max(64, (4 << 20) // max(1, len(cents)))
+    for s in range(0, len(mat), step):
+        x = mat[s : s + step]
+        d2 = (x * x).sum(axis=1, keepdims=True) - 2 * (x @ cents.T) + c2
+        lab[s : s + step] = d2.argmin(axis=1)
+        dist[s : s + step] = d2[np.arange(len(x)), lab[s : s + step]]
+    return lab, dist
+
+
+def _masked(ok, lab, dist):
+    """The ``cluster`` and ``dist_sq`` Arrow columns of ``_nearest``'s
+    answer for the ``ok`` rows, NULL on the others."""
+    import numpy as np
+    import pyarrow as pa
+
+    cluster = np.zeros(len(ok), dtype=np.int32)
+    dist_sq = np.zeros(len(ok), dtype=np.int64)
+    cluster[ok], dist_sq[ok] = lab, dist
+    return pa.array(cluster, mask=~ok), pa.array(dist_sq, mask=~ok)
 
 
 def _assign_kernel(
-    q: DataFrame, cents: list[list[int]], _bc_out: list | None = None
+    q: DataFrame, cents: list[list[int]], d: int, _bc_out: list | None = None
 ) -> DataFrame:
-    """Large-k assignment: the same exact-integer argmin as `_assign`,
-    vectorized in numpy int64 inside an Arrow kernel over BROADCAST
-    centroids (k x d int64 — SemDeDup's LAION configuration is 50k x
-    64 = 25 MB, well under any broadcast budget). int64 arithmetic is
-    exact, `np.argmin` returns the FIRST minimum (== smallest centroid
-    id, the strict-< tie rule), so the kernel is bit-equal to the
-    literal plan — only the plan size changes. Distance blocks are
-    row-chunked so a worker never holds more than ~chunk*k int64s."""
+    """Map-only nearest-centroid assignment of a quantized relation
+    ``(vid, qv)``: an Arrow kernel over BROADCAST int64 centroids
+    (k x d — SemDeDup's LAION configuration is 50k x 64 = 25 MB, well
+    under any broadcast budget) that runs ``_nearest`` on the rows of
+    dim ``d`` of each batch. Returns ``(vid, qv, cluster, dist_sq)``;
+    ``cluster`` and ``dist_sq`` are NULL on the other rows, and on
+    every row when there are no centroids."""
     import numpy as np
-    import pandas as pd
 
-    spark = q.sparkSession
-    bc = spark.sparkContext.broadcast(np.asarray(cents, dtype=np.int64))
+    bc = q.sparkSession.sparkContext.broadcast(
+        np.array(cents, dtype=np.int64).reshape(len(cents), d)
+    )
     if _bc_out is not None:
         # ADVICE r6: each kernel call pins a k x d int64 broadcast
         # (~25 MB at the LAION shape) on every executor for the
@@ -149,105 +156,44 @@ def _assign_kernel(
         # (the Lloyd loop's per-iteration collect) pass a list here
         # and unpersist after consumption.
         _bc_out.append(bc)
-    # ~32 MB of i64 distance scratch per chunk regardless of k
-    chunk = max(64, (4 << 20) // max(1, len(cents)))
 
     def run(batches):
-        c = bc.value  # (k, d) int64
-        for pdf in batches:
-            for start in range(0, len(pdf), chunk):
-                part = pdf.iloc[start : start + chunk]
-                x = np.array(list(part["qv"]), dtype=np.int64)  # (b, d)
-                # Expanded squared L2 in pure int64 — exact; per-term
-                # bound d*(scale*max|x|)^2 ~ 2^36, far under 2^63.
-                d2 = (
-                    (x * x).sum(1, keepdims=True)
-                    - 2 * (x @ c.T)
-                    + (c * c).sum(1)[None, :]
-                )
-                best = d2.argmin(1)  # first min == smallest cid
-                yield pd.DataFrame(
-                    {
-                        "vid": part["vid"].values,
-                        "qv": part["qv"].values,
-                        "cluster": best.astype("int32"),
-                        "dist_sq": d2[np.arange(len(part)), best],
-                    }
-                )
+        import pyarrow as pa
 
-    return q.select("vid", "qv").mapInPandas(
-        run, schema="vid long, qv array<long>, cluster int, dist_sq long"
+        c = bc.value
+        for b in batches:
+            ok, mat = _rows_of_dim(b.column(1), d)
+            if not len(c):
+                ok[:], mat = False, mat[:0]
+            yield pa.RecordBatch.from_arrays(
+                [b.column(0), b.column(1), *_masked(ok, *_nearest(mat, c))],
+                ["vid", "qv", "cluster", "dist_sq"],
+            )
+
+    id_type = q.schema["vid"].dataType.simpleString()
+    return q.select("vid", "qv").mapInArrow(
+        run, f"vid {id_type}, qv array<long>, cluster int, dist_sq long"
     )
 
 
-def _assign_any(
-    q: DataFrame, cents: list[list[int]], _bc_out: list | None = None
-) -> DataFrame:
-    if len(cents) > ASSIGN_KERNEL_MIN_K:
-        return _assign_kernel(q, cents, _bc_out)
-    return _assign(q, cents)
-
-
-def _lloyd_driver(ids, mat, k, iterations):
-    """The exact-integer Lloyd recurrence over a collected int64
-    matrix: same init (quantized vectors of the k smallest vids), same
-    strict-< argmin (``np.argmin`` returns the FIRST minimum), same
-    ``//`` floor-division update (numpy int64 floor_divide == Python
-    ``//``), same empty-cluster keep rule. int64 throughout — exact,
-    so bit-equal to the distributed loop by construction. Returns
-    ``(cents, labels, dist_sq)``."""
+def _lloyd_driver(rank, mat, k: int, iterations: int):
+    """The Lloyd recurrence over the collected corpus-dim rows, in numpy
+    int64: init from the first k rows in (id ``rank``, quantized vector)
+    order, ``_nearest`` for every assign, the ``//`` floor-division
+    update (numpy int64 floor_divide == Python ``//``), empty clusters
+    keep their centroid. Exact, so bit-equal to the distributed loop.
+    Returns the final centroid matrix."""
     import numpy as np
 
-    order = np.argsort(ids, kind="stable")
-    cents = mat[order[:k]].copy()  # (k, d) int64
-
-    def assign(c):
-        # expanded squared L2, all int64 (bounds per module docstring)
-        d2 = (
-            (mat * mat).sum(axis=1, keepdims=True)
-            - 2 * (mat @ c.T)
-            + (c * c).sum(axis=1)[None, :]
-        )
-        lab = d2.argmin(axis=1)
-        return lab, d2[np.arange(len(mat)), lab]
-
+    cents = mat[np.lexsort([*mat.T[::-1], rank])[:k]].copy()  # (k, d)
     for _ in range(iterations):
-        lab, _d = assign(cents)
+        lab, _d = _nearest(mat, cents)
         counts = np.bincount(lab, minlength=len(cents))
         sums = np.zeros_like(cents)
         np.add.at(sums, lab, mat)
         nonempty = counts > 0
         cents[nonempty] = sums[nonempty] // counts[nonempty, None]
-    lab, dist = assign(cents)
-    return cents, lab, dist
-
-
-def _collect_quantized(q: DataFrame, max_rows: int):
-    """``(ids, int64 matrix)`` from the quantized relation iff it has
-    at most ``max_rows`` rows and a clean rectangular no-null layout;
-    ``None`` otherwise (the caller takes the distributed loop). The
-    LIMIT enforces the cap without a count job — at 100 TB the scan
-    stops after the first partitions."""
-    import numpy as np
-
-    pdf = q.limit(max_rows + 1).toPandas()
-    if len(pdf) > max_rows:
-        return None
-    if pdf["qv"].isna().any():
-        return None
-    try:
-        mat = np.vstack(pdf["qv"].to_numpy())
-    except ValueError:  # ragged rows
-        return None
-    if mat.dtype != np.int64:  # null elements surface as object/float
-        return None
-    try:
-        ids = pdf["vid"].to_numpy(dtype=np.int64)
-    except (ValueError, TypeError):  # non-integral id column
-        return None
-    if pdf["vid"].isna().any():
-        return None
-    return ids, mat
+    return cents
 
 
 def kmeans_int(
@@ -260,97 +206,111 @@ def kmeans_int(
     _cents_out: list | None = None,
 ) -> DataFrame:
     """Fixed-iteration integer Lloyd; returns the FINAL assignment
-    ``(vec_id, cluster, dist_sq)`` after ``iterations`` update rounds.
-    Pass ``_cents_out=[]`` to also receive the final centroid matrix
-    (k lists of d ints) — the incremental SemDeDup tier assigns NEW
-    batches against these standing centroids without re-clustering."""
+    ``(id_col, cluster, dist_sq)`` of every input row after
+    ``iterations`` update rounds (NULL on the rows outside the fit —
+    module docstring). Ids keep their type. Pass ``_cents_out=[]`` to
+    also receive the final centroid matrix (min(k, fitted rows) lists
+    of d ints) — the incremental SemDeDup tier assigns NEW batches
+    against these standing centroids without re-clustering."""
+    import pyarrow.compute as pc
+
     from udacity_capstone_data_engineering_spark.sources.catalog import (
         fan_out_small_scan,
     )
 
-    # ---- driver regime (r12): under the byte cap, collect the
-    # quantized matrix once and run the whole recurrence in numpy
-    # int64 — bit-equal (exact integers), and 1 job instead of
-    # 2 + iterations job barriers. The work gate keeps a big-k fit
-    # off the driver even when the matrix fits.
-    head = vecs.select(F.size(F.col(vec_col)).alias("d")).head()
-    d_probe = int(head["d"]) if head is not None and head["d"] is not None else 0
-    if d_probe:
-        max_rows = min(
-            KMEANS_DRIVER_MAX_BYTES // (8 * d_probe),
-            KMEANS_DRIVER_MAX_WORK // max(1, k * d_probe),
-        )
-        local = _collect_quantized(
-            _quantize(vecs, id_col, vec_col, scale), max_rows
-        )
-        if local is not None:
-            from udacity_capstone_data_engineering_spark.session import (
-                local_df,
-            )
+    head = (
+        vecs.filter(F.col(vec_col).isNotNull())
+        .select(F.size(F.col(vec_col)).alias("d"))
+        .head()
+    )
+    d = 0 if head is None else int(head["d"])
+    q = _quantize(vecs, id_col, vec_col, scale)
 
-            ids, mat = local
-            cents, lab, dist = _lloyd_driver(ids, mat, k, iterations)
-            if _cents_out is not None:
-                _cents_out.extend([list(map(int, c)) for c in cents])
-            return local_df(
-                vecs.sparkSession,
-                list(
-                    zip(
-                        ids.tolist(),
-                        [int(x) for x in lab],
-                        dist.tolist(),
-                    )
-                ),
-                f"{id_col} long, cluster int, dist_sq long",
-            )
+    # ---- driver regime (r12): under the caps, collect the quantized
+    # relation once and run the whole recurrence in numpy int64 — 1
+    # job instead of 2 + iterations job barriers. The LIMIT enforces
+    # the cap without a count job; the work gate keeps a big-k fit off
+    # the driver even when the matrix fits.
+    max_rows = min(
+        KMEANS_DRIVER_MAX_BYTES // (8 * max(1, d)),
+        KMEANS_DRIVER_MAX_WORK // max(1, k * d),
+    )
+    tbl = q.limit(max_rows + 1).toArrow()
+    if tbl.num_rows <= max_rows:
+        from udacity_capstone_data_engineering_spark.session import local_df
+
+        ok, mat = _rows_of_dim(tbl.column("qv"), d)
+        rank = pc.rank(
+            tbl.column("vid"),
+            sort_keys="ascending",
+            null_placement="at_end",
+            tiebreaker="dense",
+        ).to_numpy()
+        cents = _lloyd_driver(rank[ok], mat, k, iterations)
+        cluster, dist_sq = _masked(ok, *_nearest(mat, cents))
+        if _cents_out is not None:
+            _cents_out.extend(cents.tolist())
+        id_type = q.schema["vid"].dataType.simpleString()
+        return local_df(
+            vecs.sparkSession,
+            zip(
+                tbl.column("vid").to_pylist(),
+                cluster.to_pylist(),
+                dist_sq.to_pylist(),
+            ),
+            f"{id_col} {id_type}, cluster int, dist_sq long",
+        )
 
     # Widen a too-narrow scan BEFORE persisting: a one-file corpus
     # otherwise serializes every assign kernel on a single worker —
     # the sf10 probe measured the k=3125 kernel pegging ONE core for
     # ~30 min on a single-partition 200k-vector parquet. No-op when
     # the scan already has >= default-parallelism partitions.
-    q = fan_out_small_scan(_quantize(vecs, id_col, vec_col, scale)).persist()
-    init = q.orderBy("vid").limit(k).collect()
+    q = fan_out_small_scan(q).persist()
+    fits = (F.size("qv") == d) & ~F.exists("qv", lambda x: x.isNull())
+    init = (
+        q.filter(fits)
+        .orderBy(F.col("vid").asc_nulls_last(), "qv")
+        .limit(k)
+        .collect()
+    )
     cents = [list(r["qv"]) for r in init]
-    d = len(cents[0])
     # One parsed struct expression instead of d F.sum(element_at())
-    # Column builds per iteration (same py4j economy as cent_lit; the
-    # d=64 column list alone cost ~0.3 s of driver wall per iteration).
-    # `qv[i]` is 0-based in SQL — identical to element_at(qv, i+1).
+    # Column builds per iteration (the d=64 column list alone cost
+    # ~0.3 s of driver wall per iteration, one py4j round-trip each).
+    # `qv[i]` is 0-based in SQL — identical to element_at(qv, i+1);
+    # rows outside the fit (NULL cluster) never reach it.
     sums_expr = F.expr(
         "struct(" + ",".join(f"sum(qv[{i}]) AS s{i}" for i in range(d)) + ")"
     ).alias("sums")
     for _ in range(iterations):
         bcs: list = []
-        assign = _assign_any(q, cents, bcs)
-        rows = assign.groupBy("cluster").agg(
-            F.count("*").alias("c"), sums_expr
-        ).collect()
+        rows = (
+            _assign_kernel(q, cents, d, bcs)
+            .filter(F.col("cluster").isNotNull())
+            .groupBy("cluster")
+            .agg(F.count("*").alias("c"), sums_expr)
+            .collect()
+        )
         # The collect fully consumed this iteration's assignment —
         # release its centroid broadcast (ADVICE r6: they otherwise
         # accumulate iterations+2 x ~25 MB per run on every executor).
         for bc in bcs:
             bc.unpersist(blocking=False)
-        by_cid = {r["cluster"]: r for r in rows}
-        for cid in range(k):
-            r = by_cid.get(cid)
-            if r is None or r["c"] == 0:
-                continue  # empty cluster keeps its previous centroid
+        for r in rows:  # an empty cluster keeps its previous centroid
             s = r["sums"]
-            cents[cid] = [s[f"s{i}"] // r["c"] for i in range(d)]
+            cents[r["cluster"]] = [s[f"s{i}"] // r["c"] for i in range(d)]
     # r11 (guide §1.2/§3.3): materialize the FINAL assignment while q
     # is still cached. The returned lineage used to re-run quantize +
     # assign from the raw scan on every downstream evaluation (the
     # unpersist below fires before any consumer evaluates), and
-    # multi-branch consumers (semantic dedup joins it twice; the
-    # optimizer also duplicates the assign expression into pushed
-    # join-key null filters — r11 filter audit, 2.9 KB conditions)
-    # paid it once per branch. The assignment is 3 longs/row — the
+    # multi-branch consumers (semantic dedup joins it twice) paid it
+    # once per branch. The assignment is 3 columns/row — the
     # canonical slim decision relation (guide §8) — so one
     # materialization replaces every recomputation, and at scale it is
     # exactly what MLlib's fit/transform split materializes too.
     out = (
-        _assign_any(q, cents)
+        _assign_kernel(q, cents, d)
         .select(F.col("vid").alias(id_col), "cluster", "dist_sq")
         .localCheckpoint(eager=True)
     )

@@ -101,7 +101,7 @@ def with_zorder_key(
     # probe + compare + add per level, each level bound as a real
     # column so the next references an attribute, never a copy of the
     # subtree: inlining the recurrence builds a 3^bits expression tree
-    # that took Catalyst ~70 s to ANALYZE, the `_assign` r5 trap; and
+    # that took Catalyst ~70 s to ANALYZE, the r5 k-means assign trap; and
     # morton_interleave references each bucket ``bits`` times, which
     # multiplied the old spelling again). The previous spelling —
     # size(filter(arr, f -> f < kd)) — walked all 2^bits-1 fences per

@@ -17,6 +17,8 @@ from udacity_capstone_data_engineering_spark.operators.semdedup import (
 )
 from udacity_capstone_data_engineering_spark.queries import _register
 from udacity_capstone_data_engineering_spark.sources.catalog import (
+    _SEM_INC_MOD,
+    artifact_base,
     fan_out_small_scan,
     load_table,
 )
@@ -24,57 +26,6 @@ from udacity_capstone_data_engineering_spark.sources.catalog import (
 # ---------------------------------------------------------------------------
 # Incremental SemDeDup: batch vs standing centroid index (VERDICT r6 #9)
 # ---------------------------------------------------------------------------
-
-_SEM_INC_MOD = 10  # vec_id % 10 == 0 -> the "incoming" batch
-
-
-def artifact_base(spark, sf_dir: str, kind: str) -> str:
-    """Session- AND sf-scoped artifact directory for standing-index
-    rows (r9): reuse within a session — serving amortizes the build,
-    the regime the build/serve bench split exists to measure — while
-    concurrent sessions and different scale factors never share an
-    artifact (a stale index from another corpus would serve wrong
-    verdicts)."""
-    import hashlib
-    import os
-    import tempfile
-
-    app_tag = spark.sparkContext.applicationId.replace("-", "_")
-    # the basename alone is ambiguous: two corpora under different
-    # roots both named "sf0.1" within one application must not share
-    # an artifact (ADVICE r9) — fold a digest of the FULL path in
-    full = os.path.abspath(sf_dir.rstrip("/"))
-    sf_tag = "%s_%s" % (
-        os.path.basename(full),
-        hashlib.sha1(full.encode()).hexdigest()[:8],
-    )
-    base = os.path.join(
-        tempfile.gettempdir(), f"spark_{kind}_{app_tag}_{sf_tag}"
-    )
-    _reap_at_exit(base)
-    return base
-
-
-_REAP: set[str] = set()
-
-
-def _reap_at_exit(path: str) -> None:
-    """Best-effort cleanup of session-scoped /tmp artifacts (ADVICE
-    r9: they were never cleaned up). appId-scoped dirs are useless to
-    any other process, so removing them at interpreter exit is safe."""
-    import atexit
-    import shutil
-
-    if path in _REAP:
-        return
-    if not _REAP:
-        atexit.register(
-            lambda: [
-                shutil.rmtree(p, ignore_errors=True) for p in sorted(_REAP)
-            ]
-        )
-    _REAP.add(path)
-
 
 @_register(
     "semantic_dedup_incremental",
@@ -88,11 +39,11 @@ def semantic_dedup_incremental_batch(spark, sf_dir):
     closures — the auto-k standing cluster index and the
     incremental-ingest shape. The standing corpus (9 in 10 vectors)
     is Lloyd-clustered ONCE; the incoming batch (1 in 10) is assigned
-    to the nearest STANDING centroid (map-only — literal plan at
-    small k, the broadcast Arrow kernel at LAION k) and eps-checked
-    only against its assigned cluster's exact-collapse
-    representatives. The petabyte standing side never re-clusters and
-    never reshuffles per batch; only the batch moves. The oracle
+    to the nearest STANDING centroid (map-only, by the broadcast Arrow
+    kernel at every k) and eps-checked only against its assigned
+    cluster's exact-collapse representatives. The petabyte standing
+    side never re-clusters and never reshuffles per batch; only the
+    batch moves. The oracle
     replays the standing k-means CTE chain (k from a count(*) scalar
     subquery), assigns the batch against the final centroid relation
     with the same (dist, cid) tie rule, and exists-checks the eps

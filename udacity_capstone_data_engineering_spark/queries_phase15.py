@@ -24,11 +24,9 @@ from pyspark.sql import functions as F
 
 from udacity_capstone_data_engineering_spark.queries import _register
 from udacity_capstone_data_engineering_spark.session import local_df
-from udacity_capstone_data_engineering_spark.queries_phase12 import (
+from udacity_capstone_data_engineering_spark.sources.catalog import (
     _SEM_INC_MOD,
     artifact_base,
-)
-from udacity_capstone_data_engineering_spark.sources.catalog import (
     fan_out_small_scan,
     load_table,
 )

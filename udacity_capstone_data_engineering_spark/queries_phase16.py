@@ -23,7 +23,7 @@ def ann_truth_paths(spark, sf_dir: str) -> tuple[str, str, str]:
     ANN truth artifacts (VERDICT r10 #3)."""
     import os
 
-    from udacity_capstone_data_engineering_spark.queries_phase12 import (
+    from udacity_capstone_data_engineering_spark.sources.catalog import (
         artifact_base,
     )
 

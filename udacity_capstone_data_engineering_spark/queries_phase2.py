@@ -1157,7 +1157,7 @@ def ann_recall_report(spark, sf_dir):
         ann_topk_against_index,
         build_ann_index,
     )
-    from udacity_capstone_data_engineering_spark.queries_phase12 import (
+    from udacity_capstone_data_engineering_spark.sources.catalog import (
         artifact_base,
     )
 

@@ -165,7 +165,8 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
     vanilla consumer session), ``parallelize(rows, 1)`` keeps it to a
     single Python round-trip (~0.3 s). Values and schema are identical
     in all three regimes — only the partitioning of the local relation
-    changes."""
+    changes. The record batch is built from the Python values with
+    pyarrow, not through pandas, whose conversion reads NaN as NULL."""
     rows = list(rows)
     if not rows:
         return spark.createDataFrame(rows, schema=schema)
@@ -174,7 +175,8 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
         == "true"
     ):
         try:
-            import pandas as pd
+            import pyarrow as pa
+            from pyspark.sql.pandas.types import to_arrow_schema
             from pyspark.sql.types import _parse_datatype_string
 
             st = (
@@ -182,8 +184,10 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
                 if isinstance(schema, str)
                 else schema
             )
-            pdf = pd.DataFrame(rows, columns=st.fieldNames())
-            return spark.createDataFrame(pdf, schema=st)
+            tbl = pa.table(
+                [list(col) for col in zip(*rows)], schema=to_arrow_schema(st)
+            )
+            return spark.createDataFrame(tbl, schema=st)
         except Exception:
             pass  # exotic types: fall through to the 1-slice pickle path
     return spark.createDataFrame(
