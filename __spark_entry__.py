@@ -17,20 +17,11 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+# The driver imports the package from this checkout; Python workers
+# never import it, because the package registers itself with PySpark's
+# cloudpickle to ship its code by value with every task.
 _ROOT = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, _ROOT)
-# Export for python WORKERS too: a sys.path edit fixes only the driver;
-# a SparkSession created AFTER this import launches its JVM (and the
-# worker daemon) with this env, so workers can unpickle UDF closures
-# that reference package functions even from a non-repo CWD. Sessions
-# created before the import are covered by the addPyFile fallback in
-# session.ensure_worker_imports (called per query).
-if _ROOT not in os.environ.get("PYTHONPATH", "").split(os.pathsep):
-    os.environ["PYTHONPATH"] = (
-        _ROOT + os.pathsep + os.environ["PYTHONPATH"]
-        if os.environ.get("PYTHONPATH")
-        else _ROOT
-    )
 
 from udacity_capstone_data_engineering_spark import queries as _catalog
 

@@ -100,7 +100,8 @@ def _degenerate_corpora():
     """``{name: (rows, ids whose cluster must be NULL)}`` over 4-d
     vectors. ``base`` has 42 distinct ids; the degenerate rows are a
     NULL vector, a NULL element, a short and a long vector (all outside
-    the fit) and a NaN element (quantized to 0, an ordinary member)."""
+    the fit) and a NaN element (quantized to 0, an ordinary member);
+    ``inf element`` adds a +inf and a -inf element (outside the fit)."""
     import random
 
     rnd = random.Random(11)
@@ -120,6 +121,15 @@ def _degenerate_corpora():
             {100, 101, 102, 103},
         ),
         # ids 1 and 2, among the k smallest, each hold two vectors
+        # a ±inf element would quantize to ±(2^63-1) and wrap the L2
+        "inf element": (
+            base
+            + [
+                (105, [float("inf"), 0.2, 0.3, 0.4]),
+                (106, [0.1, float("-inf"), 0.3, 0.4]),
+            ],
+            {105, 106},
+        ),
         "duplicate id": (base + [(1, [0.9] * 4), (2, [-0.9] * 4)], set()),
         "empty": ([], set()),
         "one row": (base[:1], set()),

@@ -338,40 +338,6 @@ class TestExpectations:
         assert out == {"v_positive": (2, 3), "id_not_null": (0, 3)}
 
 
-class TestConcurrentPipeline:
-    def test_concurrent_matches_sequential(self, spark, tmp_path):
-        from udacity_capstone_data_engineering_spark.plans.pipeline import Pipeline
-
-        def build(workdir):
-            p = Pipeline(spark, workdir=str(workdir))
-
-            @p.stage("a", materialize=True)
-            def a():
-                return spark.range(100).withColumnRenamed("id", "x")
-
-            @p.stage("b", materialize=True)
-            def b():
-                return spark.range(50).withColumnRenamed("id", "y")
-
-            @p.stage("c", materialize=True)
-            def c():
-                return spark.range(10).withColumnRenamed("id", "z")
-
-            @p.stage("joined", inputs=["a", "b"])
-            def joined(a_df, b_df):
-                return a_df.join(b_df, a_df.x == b_df.y)
-
-            return p
-
-        seq = build(tmp_path / "seq").run(concurrent=False)
-        con = build(tmp_path / "con").run(concurrent=True)
-        assert seq.keys() == con.keys()
-        for k in seq:
-            assert sorted(map(tuple, seq[k].collect())) == sorted(
-                map(tuple, con[k].collect())
-            ), k
-
-
 class TestCompaction:
     def test_compact_small_files_reduces_file_count(self, spark, tmp_path):
         from udacity_capstone_data_engineering_spark.sources.sinks import (

@@ -99,8 +99,9 @@ class TestNoDriverCollect:
         import ast
         import pathlib
 
-        pkg = pathlib.Path(
-            "/root/repo/udacity_capstone_data_engineering_spark"
+        pkg = (
+            pathlib.Path(__file__).resolve().parent.parent
+            / "udacity_capstone_data_engineering_spark"
         )
         # file -> {function name -> allowed count}: the allowance is
         # anchored to the FUNCTION holding the declared bounded

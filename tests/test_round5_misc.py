@@ -97,19 +97,24 @@ def test_driver_contract_from_foreign_cwd():
     """r5: an external driver builds its OWN SparkSession from an
     arbitrary CWD (no repo on PYTHONPATH, session created BEFORE the
     contract import — the worst launch shape). UDF-closure queries
-    must still run: ensure_worker_imports ships the package zip via
-    addPyFile when the JVM's env/cwd can't cover worker imports."""
+    must still run: the package ships its code to the Python workers by
+    value with every task, so the workers never import it."""
+    import os
     import subprocess
     import sys
 
-    prog = """
+    entry_path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "__spark_entry__.py",
+    )
+    prog = f"""
 from pyspark.sql import SparkSession
 spark = (SparkSession.builder.master("local[2]")
          .config("spark.ui.enabled", "false")
          .config("spark.sql.shuffle.partitions", "4").getOrCreate())
 import importlib.util
 spec = importlib.util.spec_from_file_location(
-    "__spark_entry__", "/root/repo/__spark_entry__.py")
+    "__spark_entry__", {entry_path!r})
 mod = importlib.util.module_from_spec(spec)
 spec.loader.exec_module(mod)
 n = mod.queries()["embedding_pq_topk"](

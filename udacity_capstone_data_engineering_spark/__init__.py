@@ -16,7 +16,17 @@ Design principles (see SURVEY.md §7):
     pre-aggregate before joins, keep filters/projections at the scan.
 """
 
+import sys
+
+from pyspark import cloudpickle
+
 from udacity_capstone_data_engineering_spark.session import get_spark, session_builder
+
+# Python workers never import this package: every closure that names
+# package code (a kernel, a decoder, a module helper) carries that code
+# with the pickled task, so a worker started from any working directory
+# or by any session factory runs it.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 __all__ = ["get_spark", "session_builder"]
 

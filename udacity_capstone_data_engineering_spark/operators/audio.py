@@ -4,14 +4,16 @@ Completes the multimodal tier (image codec landed in round 6 at
 ``operators/multimodal.py``; video frame-sampling was already real):
 audio payloads are carried as ``binary`` columns and decoded by a pure
 numpy RIFF/WAVE parser — container walk, fmt/data chunk extraction,
-16-bit little-endian PCM — inside Arrow-batched ``mapInPandas`` stages,
-so payload bytes never round-trip through row-at-a-time pickling.
+16-bit little-endian PCM — inside the media tier's one Arrow-batched stage
+(``multimodal.map_payloads``), so payload bytes never round-trip
+through row-at-a-time pickling.
 
 The quarantine contract matches the image tier exactly: a RECOGNIZED
 container with a malformed/truncated body raises ``ValueError`` and the
 stats operator maps it to status='corrupt'; a format that needs a real
 codec library (float PCM, ADPCM, MP3-in-RIFF, non-16-bit) raises
-``NotImplementedError`` -> status='unsupported'. One bad crawl object
+``NotImplementedError`` -> status='unsupported'; a NULL payload is
+corrupt. One bad crawl object
 must never kill a 100 TB decode job, and quarantined ids stay joinable.
 
 All emitted statistics are exact BIGINTs (sums of |int16| and int16^2),
@@ -26,21 +28,25 @@ plain keyed aggs.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
+import numpy as np
 from pyspark.sql import DataFrame
 
-# One canonical decoder source (the ADVICE-r6 single-source pattern from
-# the image codec): exec'd once here for the module-level `decode_wav`,
-# and captured BY VALUE into each mapInPandas closure and exec'd
-# worker-side — workers can't import this package from an arbitrary
-# driver CWD, and cloudpickle ships a str constant for free. One source,
-# N consumers, zero drift.
-_DECODE_WAV_SRC = '''
-def decode_wav(payload):
-    import numpy as np
+from udacity_capstone_data_engineering_spark.operators.multimodal import map_payloads
 
+
+def decode_wav(payload):
+    """Pure-numpy WAV (RIFF/WAVE, 16-bit integer PCM) decoder. Walks the
+    chunk list (word-aligned, unknown chunks like LIST skipped per spec),
+    reads channels/rate/bits from ``fmt `` and the interleaved samples
+    from ``data``. Returns ``(samples, sample_rate)`` where samples is an
+    ``(n_frames, channels)`` int16 array.
+
+    Raises ``ValueError`` for a recognized container with a malformed or
+    truncated body (the quarantine signal -> status='corrupt'), and
+    ``NotImplementedError`` for encodings that need a real codec library
+    (float PCM, ADPCM, non-16-bit, MP3/OGG/... -> status='unsupported');
+    on a cluster with soundfile/ffmpeg those slot in here and the
+    surrounding ``map_payloads`` plumbing is unchanged."""
     if payload[:4] != b"RIFF":
         raise NotImplementedError(
             "unrecognized audio container (MP3/OGG/FLAC/... need a codec "
@@ -96,37 +102,12 @@ def decode_wav(payload):
         raise ValueError("wav: data size is not a whole sample frame")
     samples = np.frombuffer(data, dtype="<i2").reshape(-1, channels)
     return samples, sample_rate
-'''
-
-
-def _exec_decoder():
-    ns: dict = {}
-    exec(compile(_DECODE_WAV_SRC, "<decode_wav>", "exec"), ns)
-    return ns["decode_wav"]
-
-
-decode_wav = _exec_decoder()
-decode_wav.__doc__ = """Pure-numpy WAV (RIFF/WAVE, 16-bit integer PCM)
-decoder. Walks the chunk list (word-aligned, unknown chunks like LIST
-skipped per spec), reads channels/rate/bits from ``fmt `` and the
-interleaved samples from ``data``. Returns ``(samples, sample_rate)``
-where samples is an ``(n_frames, channels)`` int16 array.
-
-Raises ``ValueError`` for a recognized container with a malformed or
-truncated body (the quarantine signal -> status='corrupt'), and
-``NotImplementedError`` for encodings that need a real codec library
-(float PCM, ADPCM, non-16-bit, MP3/OGG/... -> status='unsupported');
-on a cluster with soundfile/ffmpeg those slot in here and the
-surrounding ``mapInPandas`` plumbing is unchanged. Defined via
-``_DECODE_WAV_SRC`` so driver and worker closures share one source."""
 
 
 def encode_wav(samples, sample_rate: int = 8000) -> bytes:
     """Inverse of ``decode_wav`` — fixture helper so tests can
     synthesize payloads without a codec library. ``samples`` is an
     ``(n, channels)`` or ``(n,)`` int16 array."""
-    import numpy as np
-
     arr = np.asarray(samples, dtype="<i2")
     if arr.ndim == 1:
         arr = arr[:, None]
@@ -162,56 +143,21 @@ def decode_audio_stats(
     even trillion-sample payloads stay inside int64), making the whole
     result value-hash-gateable. Quarantine semantics as in
     ``multimodal.decode_image_stats``."""
-    schema = (
-        f"{id_col} long, status string, sample_rate int, n_channels int, "
-        "n_samples long, sum_abs long, sum_sq long"
+
+    def rows_of(payload: bytes):
+        samples, rate = decode_wav(payload)
+        s64 = samples.astype(np.int64)
+        return [(
+            "ok", rate, samples.shape[1], int(s64.size),
+            int(np.abs(s64).sum()), int((s64 * s64).sum()),
+        )]
+
+    return map_payloads(
+        df, binary_col, id_col,
+        "status string, sample_rate int, n_channels int, "
+        "n_samples long, sum_abs long, sum_sq long",
+        rows_of, batch_size, statusful=True,
     )
-    decode_src = _DECODE_WAV_SRC
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        ns: dict = {}
-        exec(compile(decode_src, "<decode_wav>", "exec"), ns)
-        decode = ns["decode_wav"]
-
-        for pdf in batches:
-            for start in range(0, len(pdf), batch_size):
-                chunk = pdf.iloc[start : start + batch_size]
-                out = {
-                    "id": [], "status": [], "rate": [], "ch": [],
-                    "n": [], "sa": [], "sq": [],
-                }
-                for rid, payload in zip(chunk[id_col], chunk[binary_col]):
-                    try:
-                        samples, rate = decode(bytes(payload))
-                        s64 = samples.astype(np.int64)
-                        row = (
-                            "ok", rate, samples.shape[1], int(s64.size),
-                            int(np.abs(s64).sum()), int((s64 * s64).sum()),
-                        )
-                    except ValueError:
-                        row = ("corrupt", None, None, None, None, None)
-                    except NotImplementedError:
-                        row = ("unsupported", None, None, None, None, None)
-                    out["id"].append(rid)
-                    for key, v in zip(
-                        ("status", "rate", "ch", "n", "sa", "sq"), row
-                    ):
-                        out[key].append(v)
-                yield pd.DataFrame(
-                    {
-                        id_col: pd.Series(out["id"], dtype="int64"),
-                        "status": out["status"],
-                        "sample_rate": pd.Series(out["rate"], dtype="Int32"),
-                        "n_channels": pd.Series(out["ch"], dtype="Int32"),
-                        "n_samples": pd.Series(out["n"], dtype="Int64"),
-                        "sum_abs": pd.Series(out["sa"], dtype="Int64"),
-                        "sum_sq": pd.Series(out["sq"], dtype="Int64"),
-                    }
-                )
-
-    return df.select(id_col, binary_col).mapInPandas(run, schema=schema)
 
 
 def audio_frame_energy(
@@ -233,39 +179,14 @@ def audio_frame_energy(
     Scale shape: map-only decode + frame explosion; any downstream
     silence/loudness aggregation is a plain keyed agg on (id,
     frame_idx) — never a shuffle of raw sample bytes."""
-    schema = f"{id_col} long, frame_idx int, n_in_frame int, energy long"
-    decode_src = _DECODE_WAV_SRC
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def rows_of(payload: bytes):
+        samples, _ = decode_wav(payload)
+        sq = (samples.astype(np.int64) ** 2).sum(axis=1)
+        blocks = (sq[fi : fi + frame] for fi in range(0, len(sq), frame))
+        return [(i, len(b), int(b.sum())) for i, b in enumerate(blocks)]
 
-        ns: dict = {}
-        exec(compile(decode_src, "<decode_wav>", "exec"), ns)
-        decode = ns["decode_wav"]
-
-        for pdf in batches:
-            for start in range(0, len(pdf), batch_size):
-                chunk = pdf.iloc[start : start + batch_size]
-                ids, fidx, nin, eng = [], [], [], []
-                for rid, payload in zip(chunk[id_col], chunk[binary_col]):
-                    try:
-                        samples, _ = decode(bytes(payload))
-                    except (ValueError, NotImplementedError):
-                        continue
-                    sq = (samples.astype(np.int64) ** 2).sum(axis=1)
-                    for fi in range(0, len(sq), frame):
-                        block = sq[fi : fi + frame]
-                        ids.append(rid)
-                        fidx.append(fi // frame)
-                        nin.append(len(block))
-                        eng.append(int(block.sum()))
-                yield pd.DataFrame(
-                    {
-                        id_col: pd.Series(ids, dtype="int64"),
-                        "frame_idx": pd.Series(fidx, dtype="int32"),
-                        "n_in_frame": pd.Series(nin, dtype="int32"),
-                        "energy": pd.Series(eng, dtype="int64"),
-                    }
-                )
-
-    return df.select(id_col, binary_col).mapInPandas(run, schema=schema)
+    return map_payloads(
+        df, binary_col, id_col,
+        "frame_idx int, n_in_frame int, energy long", rows_of, batch_size,
+    )

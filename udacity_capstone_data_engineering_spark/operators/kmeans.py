@@ -21,10 +21,11 @@ Recurrence (all integers):
   centroid
 
 Degenerate rows: the corpus dim is the length of the first non-NULL
-vector. A row whose quantized vector is NULL, holds a NULL element or
-is not of the corpus dim takes no part in the fit and gets a NULL
-``cluster`` and ``dist_sq``. (A NaN element quantizes to 0 — Java's
-long conversion of floor(NaN) — so its row is an ordinary member.)
+vector. A row whose quantized vector is NULL, holds a NULL or ±inf
+element or is not of the corpus dim takes no part in the fit and gets
+a NULL ``cluster`` and ``dist_sq``. (A NaN element quantizes to 0 —
+Java's long conversion of floor(NaN) — so its row is an ordinary
+member.)
 
 One nearest-centroid function, ``_nearest`` (numpy int64), serves
 both regimes. Under ``KMEANS_DRIVER_MAX_BYTES`` /
@@ -70,12 +71,19 @@ KMEANS_DRIVER_MAX_WORK = 256_000_000  # n*k*d int ops per assign pass
 
 
 def _quantize(vecs: DataFrame, id_col: str, vec_col: str, scale: int) -> DataFrame:
+    """``(vid, qv)``: a ±inf element quantizes to NULL (its long
+    conversion would clamp to ±(2^63-1) and wrap the int64 distances),
+    so its row stays out of the fit like a NULL element's."""
+
+    def q(x):
+        x = x.cast("double")
+        return F.when(
+            F.abs(x) != F.lit(float("inf")),
+            F.floor(x * scale + F.lit(0.5)).cast("long"),
+        )
+
     return vecs.select(
-        F.col(id_col).alias("vid"),
-        F.transform(
-            F.col(vec_col),
-            lambda x: F.floor(x.cast("double") * scale + F.lit(0.5)).cast("long"),
-        ).alias("qv"),
+        F.col(id_col).alias("vid"), F.transform(F.col(vec_col), q).alias("qv")
     )
 
 

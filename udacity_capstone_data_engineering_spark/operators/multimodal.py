@@ -1,12 +1,14 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 Images/audio/video are carried as ``binary`` columns with a metadata
-struct; decode / feature-extraction run as Arrow-batched
-``mapInPandas`` stages so payload bytes never round-trip through
-row-at-a-time pickling. The actual codecs are NOT available in this
-environment, so the decode step is stubbed (clearly marked), while the
-Spark-side contract — schema, batch iteration, partition sizing — is
-real and tested.
+struct. Every media operator of the package (the image operators here,
+``audio.py`` and ``video.py``) is one ``map_payloads`` stage: an
+Arrow-batched ``mapInPandas`` that runs the operator's per-payload rows
+function, so payload bytes never round-trip through row-at-a-time
+pickling, and that owns the batching, the quarantine of bad payloads
+(NULL ones included) and the output frame. The decoders are plain
+module functions; the package ships them to the Python workers by
+value with the task (``__init__.py``).
 
 Scale notes: binary payloads dominate row size, so ``mapInPandas``
 stages must be preceded by ``repartition`` sized for payload bytes
@@ -17,8 +19,10 @@ never materializes more than batch_size payloads per worker at once).
 
 from __future__ import annotations
 
+import hashlib
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -40,18 +44,25 @@ def attach_media_metadata(df: DataFrame, binary_col: str, media_type: str) -> Da
     )
 
 
-# The canonical decoder lives in ONE source string (ADVICE r6: three
-# hand-copies of the decoder had already drifted — the resize copy
-# dropped the DIB-header-size check, so a BITMAPCOREHEADER BMP read
-# width/height/bpp from wrong offsets). The string is exec'd once here
-# to produce the module-level `decode_image`, and each mapInPandas
-# closure captures the STRING by value and exec's it on the worker —
-# workers can't import this package from an arbitrary driver CWD, and
-# cloudpickle ships a str constant for free. One source, zero drift.
-_DECODE_IMAGE_SRC = '''
 def decode_image(payload):
-    import numpy as np
+    """Real pure-numpy decoder for the two UNCOMPRESSED raster formats
+    (VERDICT r5 #3 — this replaced the r2–r5 NotImplementedError):
 
+    - **PPM P6** (binary NetPBM): ``P6`` magic, whitespace-separated
+      width/height/maxval header (``#`` comments legal per spec), then
+      ``h*w*3`` RGB bytes.
+    - **BMP** (Windows V3, BITMAPINFOHEADER): 24 bpp, BI_RGB
+      (uncompressed), rows bottom-up and padded to 4-byte boundaries,
+      BGR byte order — all undone here.
+
+    Returns an ``(h, w, 3)`` uint8 numpy array. Raises ``ValueError``
+    for a RECOGNIZED format with a malformed/truncated body (the
+    quarantine signal — `decode_image_stats` maps it to
+    status='corrupt' instead of failing the job), and
+    ``NotImplementedError`` for formats that need a real codec library
+    (PNG/JPEG/...); on a cluster with PIL/opencv installed those slot
+    in here and the surrounding ``map_payloads`` plumbing is unchanged.
+    The one decoder of every image operator."""
     if payload[:2] == b"P6":
         # Header: three whitespace-separated ints after the magic,
         # with '#'-to-EOL comments allowed between tokens.
@@ -61,7 +72,7 @@ def decode_image(payload):
             while pos < n and payload[pos : pos + 1].isspace():
                 pos += 1
             if pos < n and payload[pos : pos + 1] == b"#":
-                while pos < n and payload[pos : pos + 1] != b"\\n":
+                while pos < n and payload[pos : pos + 1] != b"\n":
                     pos += 1
                 continue
             start = pos
@@ -115,36 +126,6 @@ def decode_image(payload):
         "unrecognized image format (PNG/JPEG/... need a codec library; "
         "PPM P6 and 24bpp BI_RGB BMP decode natively)"
     )
-'''
-
-
-def _exec_decoder():
-    ns: dict = {}
-    exec(compile(_DECODE_IMAGE_SRC, "<decode_image>", "exec"), ns)
-    return ns["decode_image"]
-
-
-decode_image = _exec_decoder()
-decode_image.__doc__ = """Real pure-numpy decoder for the two UNCOMPRESSED
-raster formats (VERDICT r5 #3 — this replaced the r2–r5
-NotImplementedError):
-
-- **PPM P6** (binary NetPBM): ``P6`` magic, whitespace-separated
-  width/height/maxval header (``#`` comments legal per spec), then
-  ``h*w*3`` RGB bytes.
-- **BMP** (Windows V3, BITMAPINFOHEADER): 24 bpp, BI_RGB
-  (uncompressed), rows bottom-up and padded to 4-byte boundaries,
-  BGR byte order — all undone here.
-
-Returns an ``(h, w, 3)`` uint8 numpy array. Raises ``ValueError``
-for a RECOGNIZED format with a malformed/truncated body (the
-quarantine signal — `decode_image_stats` maps it to
-status='corrupt' instead of failing the job), and
-``NotImplementedError`` for formats that need a real codec library
-(PNG/JPEG/...); on a cluster with PIL/opencv installed those slot
-in here and the surrounding ``mapInPandas`` plumbing is unchanged.
-Defined via ``_DECODE_IMAGE_SRC`` so driver and worker closures share
-one source (ADVICE r6)."""
 
 
 def encode_ppm(img) -> bytes:
@@ -154,72 +135,98 @@ def encode_ppm(img) -> bytes:
     return b"P6\n%d %d\n255\n" % (w, h) + bytes(img.astype("uint8").tobytes())
 
 
+def map_payloads(
+    df: DataFrame,
+    binary_col: str,
+    id_col: str,
+    fields: str,
+    rows_of,
+    batch_size: int,
+    statusful: bool = False,
+) -> DataFrame:
+    """The one body of the media operators: ``rows_of`` over every
+    payload of ``df[binary_col]`` in one Arrow-batched ``mapInPandas``
+    stage. Output ``(id_col long, <fields>)``.
+
+    ``rows_of(payload: bytes)`` returns the payload's output rows as a
+    list of tuples over ``fields`` (``"name type, ..."``). Each worker
+    holds at most ``batch_size`` payloads at a time. The quarantine
+    contract: ``ValueError`` (a recognized format with a malformed body,
+    and a NULL payload) and ``NotImplementedError`` (a format that needs
+    a codec library) never fail the job. A ``statusful`` operator, whose
+    first field is ``status``, reports the payload as one row with
+    status 'corrupt' or 'unsupported' and NULL stats, so quarantined ids
+    stay joinable; any other operator emits no rows for it. The frame is
+    built with object columns, so BIGINT values never pass through
+    float64."""
+    names = [id_col] + [f.split()[0] for f in fields.split(",")]
+    blank = (None,) * (len(names) - 2)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            for start in range(0, len(pdf), batch_size):
+                chunk = pdf.iloc[start : start + batch_size]
+                out = []
+                for rid, payload in zip(chunk[id_col], chunk[binary_col]):
+                    try:
+                        if payload is None:
+                            raise ValueError("NULL payload")
+                        rows = rows_of(bytes(payload))
+                    except ValueError:
+                        rows = [("corrupt",) + blank] if statusful else []
+                    except NotImplementedError:
+                        rows = [("unsupported",) + blank] if statusful else []
+                    out.extend((rid, *r) for r in rows)
+                yield pd.DataFrame(out, columns=names, dtype=object)
+
+    return df.select(id_col, binary_col).mapInPandas(
+        run, schema=f"{id_col} long, {fields}"
+    )
+
+
+def luma(img):
+    """Exact integer luma ``(r+g+b)//3`` of an ``(h, w, 3)`` image, int64."""
+    return img.astype(np.int64).sum(axis=2) // 3
+
+
+def _pixel_rows(img) -> list[tuple[int, int, int]]:
+    """``(row, col, pixel)`` of every pixel of a 2-d image, row-major."""
+    h, w = img.shape
+    return list(
+        zip(
+            np.arange(h).repeat(w).tolist(),
+            np.tile(np.arange(w), h).tolist(),
+            img.ravel().tolist(),
+        )
+    )
+
+
 def decode_image_stats(
     df: DataFrame, binary_col: str, id_col: str, batch_size: int = 256
 ) -> DataFrame:
     """Decode real image payloads and emit exact integer per-channel
     statistics: ``(id, status, width, height, r_sum, g_sum, b_sum)``.
 
-    The quarantine contract: a payload that FAILS to decode produces a
-    row with status='corrupt' (recognized format, malformed body) or
-    status='unsupported' (format needing an external codec) and null
-    stats — one bad crawl object must never kill a 100 TB decode job,
-    and the quarantined ids remain joinable for triage. Channel sums
-    are exact BIGINTs (a sum of uint8s), so the whole result is
-    value-hash-gateable — no float path anywhere."""
-    schema = (
-        f"{id_col} long, status string, width int, height int, "
-        "r_sum long, g_sum long, b_sum long"
+    The quarantine contract (``map_payloads``): a payload that FAILS to
+    decode produces a row with status='corrupt' (recognized format,
+    malformed body, or a NULL payload) or status='unsupported' (format
+    needing an external codec) and null stats — one bad crawl object
+    must never kill a 100 TB decode job, and the quarantined ids remain
+    joinable for triage. Channel sums are exact BIGINTs (a sum of
+    uint8s), so the whole result is value-hash-gateable — no float path
+    anywhere."""
+
+    def rows_of(payload: bytes):
+        img = decode_image(payload)
+        r, g, b = img.astype(np.int64).sum(axis=(0, 1)).tolist()
+        return [("ok", img.shape[1], img.shape[0], r, g, b)]
+
+    return map_payloads(
+        df, binary_col, id_col,
+        "status string, width int, height int, "
+        "r_sum long, g_sum long, b_sum long",
+        rows_of, batch_size, statusful=True,
     )
-
-    # Workers can't import this package from an arbitrary driver CWD —
-    # instead of a hand-copied decoder (which drifted; ADVICE r6), the
-    # closure captures the canonical SOURCE STRING by value and exec's
-    # it worker-side. One decoder, three consumers, zero drift.
-    decode_src = _DECODE_IMAGE_SRC
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        ns: dict = {}
-        exec(compile(decode_src, "<decode_image>", "exec"), ns)
-        decode = ns["decode_image"]
-
-        for pdf in batches:
-            for start in range(0, len(pdf), batch_size):
-                chunk = pdf.iloc[start : start + batch_size]
-                out = {
-                    "id": [], "status": [], "w": [], "h": [],
-                    "r": [], "g": [], "b": [],
-                }
-                for rid, payload in zip(chunk[id_col], chunk[binary_col]):
-                    try:
-                        img = decode(bytes(payload))
-                        sums = img.astype(np.int64).sum(axis=(0, 1))
-                        row = (
-                            "ok", img.shape[1], img.shape[0],
-                            int(sums[0]), int(sums[1]), int(sums[2]),
-                        )
-                    except ValueError:
-                        row = ("corrupt", None, None, None, None, None)
-                    except NotImplementedError:
-                        row = ("unsupported", None, None, None, None, None)
-                    out["id"].append(rid)
-                    for key, v in zip(("status", "w", "h", "r", "g", "b"), row):
-                        out[key].append(v)
-                yield pd.DataFrame(
-                    {
-                        id_col: pd.Series(out["id"], dtype="int64"),
-                        "status": out["status"],
-                        "width": pd.Series(out["w"], dtype="Int32"),
-                        "height": pd.Series(out["h"], dtype="Int32"),
-                        "r_sum": pd.Series(out["r"], dtype="Int64"),
-                        "g_sum": pd.Series(out["g"], dtype="Int64"),
-                        "b_sum": pd.Series(out["b"], dtype="Int64"),
-                    }
-                )
-
-    return df.select(id_col, binary_col).mapInPandas(run, schema=schema)
 
 
 def image_dhash(
@@ -238,56 +245,25 @@ def image_dhash(
     contribute no rows (quarantine via ``decode_image_stats`` first).
     Pure integer comparisons end to end, so the result is
     value-hash-gateable like ``simhash_docs``."""
-    schema = f"{id_col} long, width int, height int, nbits int, dhash long"
-    decode_src = _DECODE_IMAGE_SRC
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def rows_of(payload: bytes):
+        lum = luma(decode_image(payload))
+        h, w = lum.shape
+        if (w - 1) * h > 63 or w < 2:
+            return []  # contract: hash must fit a BIGINT
+        bits = (lum[:, :-1] < lum[:, 1:]).ravel()
+        val = int((bits.astype(np.int64) << np.arange(bits.size)).sum())
+        return [(w, h, bits.size, val)]
 
-        ns: dict = {}
-        exec(compile(decode_src, "<decode_image>", "exec"), ns)
-        decode = ns["decode_image"]
-
-        for pdf in batches:
-            for start in range(0, len(pdf), batch_size):
-                chunk = pdf.iloc[start : start + batch_size]
-                ids, ws, hs, nb, hv = [], [], [], [], []
-                for rid, payload in zip(chunk[id_col], chunk[binary_col]):
-                    try:
-                        img = decode(bytes(payload))
-                    except (ValueError, NotImplementedError):
-                        continue
-                    luma = img.astype(np.int64).sum(axis=2) // 3
-                    h, w = luma.shape
-                    if (w - 1) * h > 63 or w < 2:
-                        continue  # contract: hash must fit a BIGINT
-                    bits = (luma[:, :-1] < luma[:, 1:]).ravel()
-                    val = int(
-                        (bits.astype(np.int64) << np.arange(bits.size)).sum()
-                    )
-                    ids.append(rid)
-                    ws.append(w)
-                    hs.append(h)
-                    nb.append(bits.size)
-                    hv.append(val)
-                yield pd.DataFrame(
-                    {
-                        id_col: pd.Series(ids, dtype="int64"),
-                        "width": pd.Series(ws, dtype="int32"),
-                        "height": pd.Series(hs, dtype="int32"),
-                        "nbits": pd.Series(nb, dtype="int32"),
-                        "dhash": pd.Series(hv, dtype="int64"),
-                    }
-                )
-
-    return df.select(id_col, binary_col).mapInPandas(run, schema=schema)
+    return map_payloads(
+        df, binary_col, id_col,
+        "width int, height int, nbits int, dhash long", rows_of, batch_size,
+    )
 
 
 def fake_features(payload: bytes, n: int = 4) -> list[float]:
     """Deterministic stand-in feature extractor so the distributed
     plumbing is testable end-to-end: n floats derived from md5 bytes."""
-    import hashlib
-
     h = hashlib.md5(payload).digest()
     return [h[i] / 255.0 for i in range(n)]
 
@@ -297,28 +273,12 @@ def extract_features(
 ) -> DataFrame:
     """Arrow-batched feature extraction over binary payloads.
 
-    Output: (id, features array<double>). Uses ``mapInPandas`` so each
-    worker sees bounded pandas batches of payload bytes.
+    Output: (id, features array<double>), one row per non-NULL payload.
     """
-    schema = f"{id_col} long, features array<double>"
-
-    # The closure must be SELF-CONTAINED: referencing module-level
-    # helpers pickles them by module path, and Python workers spawned
-    # by an arbitrary driver CWD cannot import this package.
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        def feats_of(payload: bytes) -> list[float]:
-            h = hashlib.md5(payload).digest()
-            return [h[i] / 255.0 for i in range(n_features)]
-
-        for pdf in batches:
-            for start in range(0, len(pdf), batch_size):
-                chunk = pdf.iloc[start : start + batch_size]
-                feats = [feats_of(bytes(p)) for p in chunk[binary_col]]
-                yield pd.DataFrame({id_col: chunk[id_col].values, "features": feats})
-
-    return df.select(id_col, binary_col).mapInPandas(run, schema=schema)
+    return map_payloads(
+        df, binary_col, id_col, "features array<double>",
+        lambda payload: [(fake_features(payload, n_features),)], batch_size,
+    )
 
 
 def sample_frames(
@@ -334,35 +294,22 @@ def sample_frames(
     ``every``-th complete frame, and emit its content hash.
 
     Output: (id, frame_idx int, frame_md5 string) — one row per kept
-    frame. Arrow-batched ``mapInPandas``; each worker materializes at
-    most ``batch_size`` payloads at a time. On a real cluster the
-    md5-of-slice becomes a codec call (decode + keyframe extraction);
-    the slicing/batching contract is identical.
+    frame. Each worker materializes at most ``batch_size`` payloads at
+    a time. On a real cluster the md5-of-slice becomes a codec call
+    (decode + keyframe extraction); the slicing/batching contract is
+    identical.
     """
-    schema = f"{id_col} long, frame_idx int, frame_md5 string"
 
-    # Self-contained closure: module-level helpers pickle by module
-    # path, which Python workers can't import from an arbitrary CWD.
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    def rows_of(b: bytes):
+        return [
+            (fi, hashlib.md5(b[fi * frame_bytes : (fi + 1) * frame_bytes]).hexdigest())
+            for fi in range(0, len(b) // frame_bytes, every)
+        ]
 
-        for pdf in batches:
-            for start in range(0, len(pdf), batch_size):
-                chunk = pdf.iloc[start : start + batch_size]
-                ids, idxs, hashes = [], [], []
-                for rid, payload in zip(chunk[id_col], chunk[binary_col]):
-                    b = bytes(payload)
-                    n_frames = len(b) // frame_bytes
-                    for fi in range(0, n_frames, every):
-                        frame = b[fi * frame_bytes : (fi + 1) * frame_bytes]
-                        ids.append(rid)
-                        idxs.append(fi)
-                        hashes.append(hashlib.md5(frame).hexdigest())
-                yield pd.DataFrame(
-                    {id_col: ids, "frame_idx": idxs, "frame_md5": hashes}
-                )
-
-    return df.select(id_col, binary_col).mapInPandas(run, schema=schema)
+    return map_payloads(
+        df, binary_col, id_col, "frame_idx int, frame_md5 string",
+        rows_of, batch_size,
+    )
 
 
 def resize_image_nearest(
@@ -381,46 +328,11 @@ def resize_image_nearest(
     rows (quarantine them via ``decode_image_stats`` first — same
     decode, statusful output). Exact integers end to end, so the
     result is value-hash-gateable."""
-    schema = f"{id_col} long, out_row int, out_col int, pixel int"
-
-    # Same shared-source pattern as decode_image_stats (ADVICE r6: the
-    # old inline copy here had dropped the dib_size>=40 check, so a
-    # BITMAPCOREHEADER BMP decoded garbage instead of quarantining).
-    decode_src = _DECODE_IMAGE_SRC
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        ns: dict = {}
-        exec(compile(decode_src, "<decode_image>", "exec"), ns)
-        decode = ns["decode_image"]
-
-        for pdf in batches:
-            for start in range(0, len(pdf), batch_size):
-                chunk = pdf.iloc[start : start + batch_size]
-                ids, rows_, cols, vals = [], [], [], []
-                for rid, payload in zip(chunk[id_col], chunk[binary_col]):
-                    try:
-                        img = decode(bytes(payload))
-                    except (ValueError, NotImplementedError):
-                        continue
-                    gray = img.astype(np.int64).sum(axis=2) // 3
-                    small = gray[::factor, ::factor]
-                    oh, ow = small.shape
-                    ids.extend([rid] * (oh * ow))
-                    rows_.extend(np.arange(oh).repeat(ow))
-                    cols.extend(np.tile(np.arange(ow), oh))
-                    vals.extend(small.ravel())
-                yield pd.DataFrame(
-                    {
-                        id_col: pd.Series(ids, dtype="int64"),
-                        "out_row": pd.Series(rows_, dtype="int32"),
-                        "out_col": pd.Series(cols, dtype="int32"),
-                        "pixel": pd.Series(vals, dtype="int32"),
-                    }
-                )
-
-    return df.select(id_col, binary_col).mapInPandas(run, schema=schema)
+    return map_payloads(
+        df, binary_col, id_col, "out_row int, out_col int, pixel int",
+        lambda payload: _pixel_rows(luma(decode_image(payload))[::factor, ::factor]),
+        batch_size,
+    )
 
 
 def resize_nearest(
@@ -444,35 +356,14 @@ def resize_nearest(
     """
     if width % factor or height % factor:
         raise ValueError("width/height must be divisible by factor")
-    schema = f"{id_col} long, out_row int, out_col int, pixel int"
-    ow, oh = width // factor, height // factor
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def rows_of(b: bytes):
+        if len(b) < width * height:
+            return []
+        img = np.frombuffer(b[: width * height], dtype=np.uint8)
+        return _pixel_rows(img.reshape(height, width)[::factor, ::factor])
 
-        for pdf in batches:
-            for start in range(0, len(pdf), batch_size):
-                chunk = pdf.iloc[start : start + batch_size]
-                ids, rows, cols, vals = [], [], [], []
-                rr = np.arange(oh).repeat(ow)
-                cc = np.tile(np.arange(ow), oh)
-                for rid, payload in zip(chunk[id_col], chunk[binary_col]):
-                    b = bytes(payload)
-                    if len(b) < width * height:
-                        continue
-                    img = np.frombuffer(b[: width * height], dtype=np.uint8)
-                    small = img.reshape(height, width)[::factor, ::factor]
-                    ids.extend([rid] * (oh * ow))
-                    rows.extend(rr)
-                    cols.extend(cc)
-                    vals.extend(small.ravel())
-                yield pd.DataFrame(
-                    {
-                        id_col: pd.Series(ids, dtype="int64"),
-                        "out_row": pd.Series(rows, dtype="int32"),
-                        "out_col": pd.Series(cols, dtype="int32"),
-                        "pixel": pd.Series(vals, dtype="int32"),
-                    }
-                )
-
-    return df.select(id_col, binary_col).mapInPandas(run, schema=schema)
+    return map_payloads(
+        df, binary_col, id_col, "out_row int, out_col int, pixel int",
+        rows_of, batch_size,
+    )

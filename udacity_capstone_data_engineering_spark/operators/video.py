@@ -17,29 +17,34 @@ Frame analytics are exact-integer (luma = (r+g+b)//3 per pixel, deltas
 as sums of absolute differences), so every emitted statistic is
 value-hash-gateable.
 
-Scale notes: identical to the image/audio tiers — Arrow-batched
-``mapInPandas``, ``batch_size`` bounds worker-resident payloads, decode
+Scale notes: identical to the image/audio tiers — one Arrow-batched
+``multimodal.map_payloads`` stage (a NULL payload is corrupt),
+``batch_size`` bounds worker-resident payloads, decode
 is map-only (zero shuffle), and rows crossing Arrow are per-frame
 statistics, never pixels.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
+import numpy as np
 from pyspark.sql import DataFrame
 
-# Single-source container walker (the ADVICE-r6 zero-drift pattern):
-# exec'd once here and captured by value into every mapInPandas closure.
-# The P6 header parse is intentionally the same grammar as
-# multimodal.decode_image's PPM branch, but this walker must also
-# return BYTE OFFSETS (to find the next frame), which the single-image
-# decoder never needs — hence a separate canonical source, not a copy.
-_DECODE_VIDEO_SRC = '''
-def decode_video(payload):
-    import numpy as np
+from udacity_capstone_data_engineering_spark.operators.multimodal import (
+    encode_ppm,
+    luma,
+    map_payloads,
+)
 
+
+def decode_video(payload):
+    """Walk a concatenated-PPM (P6) video payload and return the list of
+    ``(h, w, 3)`` uint8 frames. All frames must share dimensions.
+    ``ValueError`` for truncated/inconsistent streams (the quarantine
+    signal), ``NotImplementedError`` for containers that need a real
+    codec library. The P6 header grammar is the one of
+    ``multimodal.decode_image``'s PPM branch, but this walker must also
+    find each next frame's byte offset, which the single-image decoder
+    never needs."""
     if payload[:2] != b"P6":
         raise NotImplementedError(
             "unrecognized video container (MP4/MKV/... need a codec "
@@ -56,7 +61,7 @@ def decode_video(payload):
             while p < n and payload[p : p + 1].isspace():
                 p += 1
             if p < n and payload[p : p + 1] == b"#":
-                while p < n and payload[p : p + 1] != b"\\n":
+                while p < n and payload[p : p + 1] != b"\n":
                     p += 1
                 continue
             start = p
@@ -86,28 +91,10 @@ def decode_video(payload):
     if not frames:
         raise ValueError("ppmv: empty stream")
     return frames
-'''
-
-
-def _exec_decoder():
-    ns: dict = {}
-    exec(compile(_DECODE_VIDEO_SRC, "<decode_video>", "exec"), ns)
-    return ns["decode_video"]
-
-
-decode_video = _exec_decoder()
-decode_video.__doc__ = """Walk a concatenated-PPM (P6) video payload and
-return the list of ``(h, w, 3)`` uint8 frames. All frames must share
-dimensions. ``ValueError`` for truncated/inconsistent streams (the
-quarantine signal), ``NotImplementedError`` for containers that need a
-real codec library. Defined via ``_DECODE_VIDEO_SRC`` so driver and
-worker closures share one source."""
 
 
 def encode_ppmv(frames) -> bytes:
     """Inverse fixture helper: concatenate frames as binary PPMs."""
-    from udacity_capstone_data_engineering_spark.operators.multimodal import encode_ppm
-
     return b"".join(encode_ppm(f) for f in frames)
 
 
@@ -119,56 +106,17 @@ def video_decode_stats(
     ``(r+g+b)//3`` over ALL frames (integer floor division, matching
     the image tier's luma rule). Quarantine contract as everywhere in
     the multimodal tier."""
-    schema = (
-        f"{id_col} long, status string, n_frames int, width int, "
-        "height int, luma_sum long"
+
+    def rows_of(payload: bytes):
+        frames = decode_video(payload)
+        h, w = frames[0].shape[:2]
+        return [("ok", len(frames), w, h, sum(int(luma(f).sum()) for f in frames))]
+
+    return map_payloads(
+        df, binary_col, id_col,
+        "status string, n_frames int, width int, height int, luma_sum long",
+        rows_of, batch_size, statusful=True,
     )
-    decode_src = _DECODE_VIDEO_SRC
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        ns: dict = {}
-        exec(compile(decode_src, "<decode_video>", "exec"), ns)
-        decode = ns["decode_video"]
-
-        for pdf in batches:
-            for start in range(0, len(pdf), batch_size):
-                chunk = pdf.iloc[start : start + batch_size]
-                out = {
-                    "id": [], "status": [], "nf": [], "w": [], "h": [],
-                    "ls": [],
-                }
-                for rid, payload in zip(chunk[id_col], chunk[binary_col]):
-                    try:
-                        frames = decode(bytes(payload))
-                        luma = sum(
-                            int((f.astype(np.int64).sum(axis=2) // 3).sum())
-                            for f in frames
-                        )
-                        row = (
-                            "ok", len(frames), frames[0].shape[1],
-                            frames[0].shape[0], luma,
-                        )
-                    except ValueError:
-                        row = ("corrupt", None, None, None, None)
-                    except NotImplementedError:
-                        row = ("unsupported", None, None, None, None)
-                    out["id"].append(rid)
-                    for key, v in zip(("status", "nf", "w", "h", "ls"), row):
-                        out[key].append(v)
-                yield pd.DataFrame(
-                    {
-                        id_col: pd.Series(out["id"], dtype="int64"),
-                        "status": out["status"],
-                        "n_frames": pd.Series(out["nf"], dtype="Int32"),
-                        "width": pd.Series(out["w"], dtype="Int32"),
-                        "height": pd.Series(out["h"], dtype="Int32"),
-                        "luma_sum": pd.Series(out["ls"], dtype="Int64"),
-                    }
-                )
-
-    return df.select(id_col, binary_col).mapInPandas(run, schema=schema)
 
 
 def video_row_luma(
@@ -182,44 +130,18 @@ def video_row_luma(
     payload, never pixels, matching the tier's design rule.
     Corrupt/unsupported payloads contribute no rows (verdicts live in
     ``video_decode_stats``)."""
-    schema = f"{id_col} long, frame_idx int, row_idx int, row_luma long"
-    decode_src = _DECODE_VIDEO_SRC
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def rows_of(payload: bytes):
+        return [
+            (fi, ri, v)
+            for fi, f in enumerate(decode_video(payload))
+            for ri, v in enumerate(luma(f).sum(axis=1).tolist())
+        ]
 
-        ns: dict = {}
-        exec(compile(decode_src, "<decode_video>", "exec"), ns)
-        decode = ns["decode_video"]
-
-        for pdf in batches:
-            for start in range(0, len(pdf), batch_size):
-                chunk = pdf.iloc[start : start + batch_size]
-                ids, fidx, ridx, rl = [], [], [], []
-                for rid, payload in zip(chunk[id_col], chunk[binary_col]):
-                    try:
-                        frames = decode(bytes(payload))
-                    except (ValueError, NotImplementedError):
-                        continue
-                    for fi, f in enumerate(frames):
-                        rows = (f.astype(np.int64).sum(axis=2) // 3).sum(
-                            axis=1
-                        )
-                        for ri, v in enumerate(rows):
-                            ids.append(rid)
-                            fidx.append(fi)
-                            ridx.append(ri)
-                            rl.append(int(v))
-                yield pd.DataFrame(
-                    {
-                        id_col: pd.Series(ids, dtype="int64"),
-                        "frame_idx": pd.Series(fidx, dtype="int32"),
-                        "row_idx": pd.Series(ridx, dtype="int32"),
-                        "row_luma": pd.Series(rl, dtype="int64"),
-                    }
-                )
-
-    return df.select(id_col, binary_col).mapInPandas(run, schema=schema)
+    return map_payloads(
+        df, binary_col, id_col,
+        "frame_idx int, row_idx int, row_luma long", rows_of, batch_size,
+    )
 
 
 def video_frame_deltas(
@@ -231,40 +153,14 @@ def video_frame_deltas(
     per-pixel luma differences — the scene-cut / keyframe primitive.
     Corrupt/unsupported payloads contribute no rows (their verdicts
     live in ``video_decode_stats``)."""
-    schema = f"{id_col} long, frame_idx int, delta long"
-    decode_src = _DECODE_VIDEO_SRC
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def rows_of(payload: bytes):
+        lumas = [luma(f) for f in decode_video(payload)]
+        return [
+            (i, int(np.abs(lumas[i] - lumas[i - 1]).sum()))
+            for i in range(1, len(lumas))
+        ]
 
-        ns: dict = {}
-        exec(compile(decode_src, "<decode_video>", "exec"), ns)
-        decode = ns["decode_video"]
-
-        for pdf in batches:
-            for start in range(0, len(pdf), batch_size):
-                chunk = pdf.iloc[start : start + batch_size]
-                ids, fidx, deltas = [], [], []
-                for rid, payload in zip(chunk[id_col], chunk[binary_col]):
-                    try:
-                        frames = decode(bytes(payload))
-                    except (ValueError, NotImplementedError):
-                        continue
-                    lumas = [
-                        f.astype(np.int64).sum(axis=2) // 3 for f in frames
-                    ]
-                    for i in range(1, len(lumas)):
-                        ids.append(rid)
-                        fidx.append(i)
-                        deltas.append(
-                            int(np.abs(lumas[i] - lumas[i - 1]).sum())
-                        )
-                yield pd.DataFrame(
-                    {
-                        id_col: pd.Series(ids, dtype="int64"),
-                        "frame_idx": pd.Series(fidx, dtype="int32"),
-                        "delta": pd.Series(deltas, dtype="int64"),
-                    }
-                )
-
-    return df.select(id_col, binary_col).mapInPandas(run, schema=schema)
+    return map_payloads(
+        df, binary_col, id_col, "frame_idx int, delta long", rows_of, batch_size,
+    )

@@ -74,46 +74,14 @@ class Pipeline:
         path = write_parquet(df, self.workdir, st.name, partition_by=st.partition_by)
         return self.spark.read.parquet(path)
 
-    def run(self, concurrent: bool = False) -> dict[str, DataFrame]:
-        """Resolve the DAG topologically and build every stage's DataFrame.
-
-        ``concurrent=True`` submits independent materializing stages'
-        write jobs from parallel driver threads (Spark schedules jobs
-        from different threads concurrently) — the reference ran its
-        five mutually-independent stages strictly sequentially
-        (``etl.py:307-312``); on a real cluster concurrent submission
-        overlaps their scans and keeps executors busy across small
-        stages. Plan building stays on the caller thread (it is lazy
-        and cheap); only actions (writes) fan out.
-        """
+    def run(self) -> dict[str, DataFrame]:
+        """Resolve the DAG topologically and build every stage's DataFrame."""
         graph = {s.name: set(s.inputs) for s in self._stages.values()}
         results: dict[str, DataFrame] = {}
-        if not concurrent:
-            for name in TopologicalSorter(graph).static_order():
-                st = self._stages[name]
-                df = st.fn(*(results[i] for i in st.inputs))
-                if st.materialize:
-                    df = self._materialize(st, df)
-                results[name] = df
-            return results
-
-        from concurrent.futures import ThreadPoolExecutor
-
-        ts = TopologicalSorter(graph)
-        ts.prepare()
-        with ThreadPoolExecutor(max_workers=8) as pool:
-            while ts.is_active():
-                ready = list(ts.get_ready())
-                built = {}
-                for name in ready:  # lazy plan construction: stay serial
-                    st = self._stages[name]
-                    built[name] = (st, st.fn(*(results[i] for i in st.inputs)))
-                futures = {
-                    name: pool.submit(self._materialize, st, df)
-                    for name, (st, df) in built.items()
-                    if st.materialize
-                }
-                for name, (st, df) in built.items():
-                    results[name] = futures[name].result() if name in futures else df
-                    ts.done(name)
+        for name in TopologicalSorter(graph).static_order():
+            st = self._stages[name]
+            df = st.fn(*(results[i] for i in st.inputs))
+            if st.materialize:
+                df = self._materialize(st, df)
+            results[name] = df
         return results

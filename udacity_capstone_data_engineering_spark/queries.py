@@ -73,7 +73,6 @@ from udacity_capstone_data_engineering_spark.operators.setops import (
     intersect_distinct,
     union_distinct,
 )
-from udacity_capstone_data_engineering_spark.session import ensure_worker_imports
 from udacity_capstone_data_engineering_spark.operators.similarity import (
     brute_force_topk,
     lsh_topk,
@@ -104,10 +103,6 @@ def _register(name: str, oracle: str | None):
             # the (naive-timestamp) DuckDB oracle regardless of the
             # driver session's config.
             spark.conf.set("spark.sql.session.timeZone", "UTC")
-            # Ship the package to python workers if the driver's launch
-            # shape didn't already make it importable (external drivers
-            # run from arbitrary CWDs — see session.ensure_worker_imports).
-            ensure_worker_imports(spark)
             return fn(spark, sf_dir)
 
         # A duplicate name would silently REPLACE an existing catalog

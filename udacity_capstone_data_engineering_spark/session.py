@@ -27,6 +27,9 @@ clusters and merely *bounded* for local runs:
     without; a second full-catalog pass 205, against 55). Cost: JVM peak
     RSS over two full-catalog passes 3,110 MB against 2,838 MB at the
     default.
+  - No worker set-up: the package ships its code to Python workers by
+    value (``__init__.py``), so no session needs a ``PYTHONPATH`` or an
+    ``addPyFile`` for the package, whatever its working directory.
 """
 
 from __future__ import annotations
@@ -194,60 +197,3 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
         spark.sparkContext.parallelize(rows, 1), schema=schema
     )
 
-
-_SHIPPED_CONTEXTS: set[str] = set()
-
-
-def ensure_worker_imports(spark: SparkSession) -> None:
-    """Make this package importable by PYTHON WORKERS regardless of the
-    driver's working directory or session factory.
-
-    An external driver (the contract consumer) builds its OWN
-    SparkSession and may run from any CWD. The driver process fixes its
-    import path with ``sys.path.insert`` — but a ``sys.path`` edit
-    never reaches the daemon-forked python workers, so any query whose
-    pandas-UDF closure references package functions (the ANN kernels)
-    dies in worker unpickling with ModuleNotFoundError unless the repo
-    happens to be the CWD. Shipping a zip of the package via
-    ``addPyFile`` (once per SparkContext; ~100 KB) closes the gap for
-    every launch shape; when the workers can already import the package
-    (repo CWD at JVM start, or repo on PYTHONPATH) this is skipped.
-    """
-    sc = spark.sparkContext
-    app = sc.applicationId
-    if app in _SHIPPED_CONTEXTS:
-        return
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    root = os.path.dirname(pkg_dir)
-    # Probe the JVM's env/cwd, NOT this process's: workers fork from
-    # the JVM daemon, and a PYTHONPATH exported into the DRIVER'S env
-    # after the JVM launched (the __spark_entry__ import does this for
-    # future sessions) never reaches an already-running JVM's workers.
-    try:
-        jvm = sc._jvm
-        jvm_pp = jvm.java.lang.System.getenv("PYTHONPATH") or ""
-        jvm_cwd = jvm.java.lang.System.getProperty("user.dir") or ""
-    except Exception:  # Spark Connect etc. — can't introspect: ship
-        jvm_pp, jvm_cwd = "", ""
-    on_pythonpath = root in jvm_pp.split(os.pathsep)
-    cwd_is_root = jvm_cwd and os.path.realpath(jvm_cwd) == os.path.realpath(
-        root
-    )
-    if not (on_pythonpath or cwd_is_root):
-        import tempfile
-        import zipfile
-
-        zip_path = os.path.join(
-            tempfile.gettempdir(), f"udacity_capstone_data_engineering_spark-{os.getpid()}.zip"
-        )
-        if not os.path.exists(zip_path):
-            with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as zf:
-                for dirpath, dirnames, filenames in os.walk(pkg_dir):
-                    dirnames[:] = [d for d in dirnames if d != "__pycache__"]
-                    for fn in filenames:
-                        if fn.endswith(".py"):
-                            full = os.path.join(dirpath, fn)
-                            arc = os.path.relpath(full, root)
-                            zf.write(full, arc)
-        sc.addPyFile(zip_path)
-    _SHIPPED_CONTEXTS.add(app)
