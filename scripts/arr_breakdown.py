@@ -13,10 +13,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from udacity_capstone_data_engineering_spark import get_spark
-from udacity_capstone_data_engineering_spark.queries import load_table
-from udacity_capstone_data_engineering_spark.queries_phase16 import (
+from udacity_capstone_data_engineering_spark.queries.retrieval import (
     load_ann_exact_truth,
 )
+from udacity_capstone_data_engineering_spark.sources.catalog import load_table
 
 
 def main() -> None:

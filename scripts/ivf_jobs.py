@@ -9,8 +9,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from udacity_capstone_data_engineering_spark import get_spark
-from udacity_capstone_data_engineering_spark.queries import load_table
 from udacity_capstone_data_engineering_spark.operators.ivf import ivf_topk
+from udacity_capstone_data_engineering_spark.sources.catalog import load_table
 
 
 def main() -> None:

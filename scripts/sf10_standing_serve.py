@@ -28,7 +28,7 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from scripts import sf1_probe  # noqa: E402
 from scripts.sf10_probe import SF10, exact_topk_fast  # noqa: E402

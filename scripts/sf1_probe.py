@@ -44,7 +44,7 @@ import time
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF1 = "/tmp/sf1_synth"
 SRC = "/root/testdata/sf0.1"
@@ -282,7 +282,7 @@ def probe(sf_dir: str, spark, out: dict) -> None:
 
     # VERDICT r4 #1: end-to-end two-stage rerank — final top-5 of the
     # ANN-stage-1 pipelines vs the exact pipeline, at probe scale.
-    from udacity_capstone_data_engineering_spark.queries_phase7 import (
+    from udacity_capstone_data_engineering_spark.queries.retrieval import (
         _rerank_pipeline,
     )
 

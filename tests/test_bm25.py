@@ -7,7 +7,7 @@ from __future__ import annotations
 import math
 from collections import Counter, defaultdict
 
-from udacity_capstone_data_engineering_spark.queries_phase9 import (
+from udacity_capstone_data_engineering_spark.queries.retrieval import (
     _BM25_B,
     _BM25_K1,
     _BM25_TERMS,
@@ -84,7 +84,7 @@ def test_bm25_more_hits_scores_higher(spark):
     orig = cat.load_table
     try:
         cat.load_table = lambda spark_, sf_dir_, name_: df  # documents only
-        from udacity_capstone_data_engineering_spark import queries_phase9 as p9
+        from udacity_capstone_data_engineering_spark.queries import retrieval as p9
 
         orig_lt = p9.load_table
         p9.load_table = cat.load_table

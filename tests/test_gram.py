@@ -6,7 +6,7 @@ import math
 
 import numpy as np
 
-from udacity_capstone_data_engineering_spark.queries_phase9 import (
+from udacity_capstone_data_engineering_spark.queries.retrieval import (
     _GRAM_SCALE,
     embedding_gram_matrix,
 )

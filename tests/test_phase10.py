@@ -259,7 +259,7 @@ def test_kcore_extra_round_is_idempotent(spark, sf_dir):
     from udacity_capstone_data_engineering_spark.operators.kcore import (
         kcore_fixed,
     )
-    from udacity_capstone_data_engineering_spark.queries_phase10 import (
+    from udacity_capstone_data_engineering_spark.queries.behavioral import (
         _KCORE_K,
         _KCORE_ROUNDS,
     )
@@ -327,7 +327,7 @@ def test_entropy_bounds(spark, sf_dir):
 
 
 def test_entropy_uniform_vs_repetitive(spark):
-    from udacity_capstone_data_engineering_spark.queries_phase10 import (
+    from udacity_capstone_data_engineering_spark.queries.corpus import (
         doc_token_entropy,  # noqa: F401  (import parity)
     )
     # build two docs inline through the same operator path

@@ -140,7 +140,7 @@ class TestRerankTwoStage:
         """VERDICT r4 #1: the ANN-stage-1 variants must reproduce the
         exact pipeline's FINAL top-k (after the stage-2 blend) with
         recall >= 0.9 — the end-to-end gate, not just stage-1 overlap."""
-        from udacity_capstone_data_engineering_spark.queries_phase7 import (
+        from udacity_capstone_data_engineering_spark.queries.retrieval import (
             _rerank_pipeline,
         )
 
@@ -163,7 +163,7 @@ class TestRerankTwoStage:
     def test_unknown_stage1_raises(self, spark, sf_dir):
         import pytest
 
-        from udacity_capstone_data_engineering_spark.queries_phase7 import (
+        from udacity_capstone_data_engineering_spark.queries.retrieval import (
             _rerank_pipeline,
         )
 

@@ -13,9 +13,6 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
-from udacity_capstone_data_engineering_spark import (
-    queries_phase8,  # noqa: F401  (registers the tier)
-)
 from udacity_capstone_data_engineering_spark.queries import _REGISTRY
 
 

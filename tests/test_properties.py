@@ -17,9 +17,6 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from udacity_capstone_data_engineering_spark import (
-    queries_phase8,  # noqa: F401  (registers the tier)
-)
 from udacity_capstone_data_engineering_spark.queries import _REGISTRY
 
 _PROP = settings(

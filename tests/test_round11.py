@@ -378,7 +378,7 @@ def test_ann_truth_artifact_reused(spark, sf_dir):
     gates must serve from it — no brute-force recomputation. Pinned by
     poisoning brute_force_topk after the build."""
     from udacity_capstone_data_engineering_spark.operators import similarity
-    from udacity_capstone_data_engineering_spark.queries_phase16 import (
+    from udacity_capstone_data_engineering_spark.queries.retrieval import (
         build_ann_exact_truth,
         load_ann_exact_truth,
     )

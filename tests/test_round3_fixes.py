@@ -49,7 +49,7 @@ class TestEmptyDocChunking:
         """ADVICE r2: sequence(0, -1) on an empty doc used to emit two
         phantom chunk rows while the DuckDB oracle emitted none. Both
         sides now agree: empty docs produce zero chunks."""
-        from udacity_capstone_data_engineering_spark import queries_phase6 as p6
+        from udacity_capstone_data_engineering_spark.queries import corpus as p6
 
         docs = spark.createDataFrame(
             [

@@ -6,10 +6,10 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from udacity_capstone_data_engineering_spark.queries_phase8 import (
+from udacity_capstone_data_engineering_spark.queries.behavioral import (
     _count_triangles_degree_oriented,
-    profile_orders_impl,
 )
+from udacity_capstone_data_engineering_spark.queries.relational import profile_orders_impl
 
 
 def _star_fixture(spark):

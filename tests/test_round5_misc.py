@@ -32,7 +32,7 @@ def test_profile_orders_approx_registered_matches_impl(spark, sf_dir):
     """The catalog row must BE the approx impl (same rows), so the
     tolerance + no-Expand evidence in test_round4_misc.py covers the
     public query surface too."""
-    from udacity_capstone_data_engineering_spark.queries_phase8 import (
+    from udacity_capstone_data_engineering_spark.queries.relational import (
         profile_orders_impl,
     )
 

@@ -544,7 +544,7 @@ def test_mad_outliers_fixture(spark):
     """Hand fixture: one wild outlier among tame values — the fence
     must flag exactly it, and the mean-dragging pathology must not
     move the median/MAD."""
-    from udacity_capstone_data_engineering_spark.queries_phase11 import (
+    from udacity_capstone_data_engineering_spark.queries.behavioral import (
         event_value_outliers_mad,
     )
 

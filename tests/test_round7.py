@@ -72,7 +72,7 @@ def test_image_near_dup_banding_lossless_below_band_count(spark):
     at least one untouched band, so banded candidate generation is
     LOSSLESS for those pairs — the planted pair must survive the full
     query pipeline, not just the hash compare."""
-    from udacity_capstone_data_engineering_spark.queries_phase12 import (
+    from udacity_capstone_data_engineering_spark.queries.multimodal import (
         _DH_BAND_BITS,
         _DH_BANDS,
     )

@@ -315,8 +315,9 @@ def build_semantic_index(
                             writes this relation with
                             ``sinks.write_bucketed`` instead so the
                             standing side of the join never exchanges
-                            (the lexical index at queries_phase11
-                            demonstrates that plan).
+                            (``incremental_ingest_dedup_bucketed``
+                            in ``queries/corpus.py`` demonstrates
+                            that plan).
 
     Returns the meta dict. Serving is ``semantic_dedup_against_index``;
     equivalence with the in-process path is pinned by

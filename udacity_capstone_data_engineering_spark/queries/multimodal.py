@@ -1,13 +1,15 @@
-"""Phase-13 query tier (round 7): the audio and video legs of the
-multimodal tier — REAL WAV/PCM16 decode and concatenated-PPM video
-frame math under the value-hash gate, mirroring the round-6 image
-codec (`queries_phase11`): synthesized payloads from document text
-bytes, pure-numpy decoders behind Arrow-batched ``mapInPandas``,
-quarantine branches (corrupt AND unsupported) that are themselves
-hash-gated, and exact-integer statistics throughout.
+"""Multimodal catalog rows: binary payloads with metadata, frame sampling
+and resize plumbing, and real codec paths under the value-hash gate.
+PPM images (decode stats, resize, dHash near-dup pairs), WAV/PCM16
+audio and concatenated-PPM video (decode stats, frame energy and
+deltas, silence flags, scene cuts, fingerprints and near-dup pairs).
+Payloads are synthesized from document text bytes; decoders are
+pure numpy behind Arrow-batched ``mapInPandas``; the corrupt and
+unsupported quarantine branches are hash-gated too, with exact-integer
+statistics throughout.
 
-Same contract as ``queries.py`` (imported at the end of that module so
-everything lands in one registry); house determinism rules apply.
+Registered into the one catalog registry (``queries/__init__.py``);
+the house determinism rules in its docstring apply.
 """
 
 from __future__ import annotations
@@ -16,6 +18,367 @@ from pyspark.sql import functions as F
 
 from udacity_capstone_data_engineering_spark.queries import _register
 from udacity_capstone_data_engineering_spark.sources.catalog import load_table
+
+
+@_register(
+    "multimodal_features",
+    # The fake extractor is md5-derived, so the oracle can recompute it
+    # exactly: byte i of md5(text) over 255.0. DuckDB parses hex pairs
+    # via CAST('0x..' AS INTEGER); both sides do the same IEEE-double
+    # division of integers ≤ 255, so values are bit-identical.
+    """
+    SELECT doc_id,
+           CAST(i AS INTEGER) AS feat_idx,
+           CAST(('0x' || substring(md5(text), 2 * i + 1, 2)) AS INTEGER) / 255.0
+               AS feat_value
+    FROM documents, range(4) t(i)
+    """,
+)
+def multimodal_features(spark, sf_dir):
+    """Multimodal plumbing: documents' text bytes stand in for opaque
+    media payloads (binary column + metadata struct); deterministic
+    fake feature extraction runs as Arrow-batched mapInPandas. Decode
+    for real codecs is stubbed (operators/multimodal.py) — the
+    distributed contract (schema, batching) is what's exercised.
+
+    The array<double> output is posexploded to scalar rows
+    (doc_id, feat_idx, feat_value) so the driver's canonicalizer —
+    which sorts/hashes a pandas frame and cannot factorize Python
+    lists — gets hashable cells (VERDICT r1 'What's wrong' #1)."""
+    from udacity_capstone_data_engineering_spark.operators.multimodal import (
+        attach_media_metadata,
+        extract_features,
+    )
+
+    docs = load_table(spark, sf_dir, "documents")
+    payloads = docs.select(
+        "doc_id", F.encode("text", "utf-8").alias("payload")
+    )
+    payloads = attach_media_metadata(payloads, "payload", "text/plain")
+    feats = extract_features(payloads, "payload", "doc_id", n_features=4)
+    return feats.select(
+        "doc_id", F.posexplode("features").alias("feat_idx", "feat_value")
+    ).select("doc_id", F.col("feat_idx").cast("int").alias("feat_idx"), "feat_value")
+
+
+# ---------------------------------------------------------------------------
+# Multimodal: frame sampling + nearest-neighbor resize (mapInPandas)
+# ---------------------------------------------------------------------------
+
+
+@_register(
+    "multimodal_frame_sample",
+    # Payloads are UTF-8 bytes of ASCII text, so the oracle reproduces
+    # the byte slicing with string substring + md5 exactly.
+    """
+    WITH f AS (SELECT doc_id, strlen(text) // 16 AS nf, text FROM documents),
+    idx AS (SELECT doc_id, text, unnest(range(0, nf, 4)) AS i FROM f)
+    SELECT doc_id,
+           CAST(i AS INTEGER) AS frame_idx,
+           md5(substring(text, CAST(i * 16 + 1 AS INT), 16)) AS frame_md5
+    FROM idx
+    """,
+)
+def multimodal_frame_sample(spark, sf_dir):
+    """Video-style frame sampling over opaque binary payloads
+    (``operators/multimodal.py:sample_frames``): slice each payload
+    into 16-byte frames, keep every 4th, emit content hashes — via
+    Arrow-batched ``mapInPandas`` with bounded per-worker batches. The
+    oracle recomputes every kept frame's hash, so the gate checks the
+    full decode-free plumbing (offsets, batch boundaries, partial-frame
+    truncation) bit-exactly."""
+    from udacity_capstone_data_engineering_spark.operators.multimodal import (
+        sample_frames,
+    )
+
+    # No fan_out_small_scan: the per-row work here is light, and at
+    # small sf the per-partition Python-worker spinup + shuffle cost
+    # more than the parallelism gains (measured 0.32s -> 0.54s). A real
+    # payload corpus arrives in many files and parallelizes at the scan.
+    docs = load_table(spark, sf_dir, "documents")
+    payloads = docs.select(
+        "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
+    )
+    return sample_frames(payloads, "payload", "doc_id", frame_bytes=16, every=4)
+
+
+@_register(
+    "multimodal_resize_nearest",
+    """
+    SELECT doc_id,
+           CAST(r AS INTEGER) AS out_row,
+           CAST(c AS INTEGER) AS out_col,
+           ascii(substring(text, CAST(r * 32 + c * 2 + 1 AS INT), 1)) AS pixel
+    FROM (SELECT doc_id, text FROM documents WHERE strlen(text) >= 256) d,
+         range(8) t1(r), range(8) t2(c)
+    """,
+)
+def multimodal_resize_nearest(spark, sf_dir):
+    """Image resize plumbing (``operators/multimodal.py:resize_nearest``):
+    treat the first 256 payload bytes as a 16x16 row-major grayscale
+    image and downsample 2x by nearest neighbor — vectorized numpy
+    strided slicing inside Arrow batches; payloads too short for a full
+    image produce no rows. Output pixel (r,c) = input byte at
+    (2r, 2c), which the oracle reproduces with substring+ascii on the
+    ASCII source text."""
+    from udacity_capstone_data_engineering_spark.operators.multimodal import (
+        resize_nearest,
+    )
+
+    # See multimodal_frame_sample for why this scan is not fanned out.
+    docs = load_table(spark, sf_dir, "documents")
+    payloads = docs.select(
+        "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
+    )
+    return resize_nearest(
+        payloads, "payload", "doc_id", width=16, height=16, factor=2
+    )
+
+
+# ---------------------------------------------------------------------------
+# Multimodal: REAL image decode (r5 #3 — the codec gap closed)
+# ---------------------------------------------------------------------------
+
+# Synthesized 8x4 PPM (P6) per document: 11-byte header + the first 96
+# ASCII text bytes as row-major RGB pixels. doc_id % 7 == 0 payloads are
+# truncated mid-body — the corrupt-decode branch, oracle-gated too.
+_PPM_W, _PPM_H = 8, 4
+_PPM_HDR = f"P6\n{_PPM_W} {_PPM_H}\n255\n"
+_CORRUPT_MOD = 7
+_CORRUPT_LEN = 50  # header (11) + 39 pixel bytes < 96 -> truncated body
+
+
+def _ppm_payloads(spark, sf_dir):
+    # ASCII invariant made EXPLICIT (ADVICE r6): Spark slices by
+    # characters then UTF-8-encodes while the decoder sums bytes, and
+    # the DuckDB oracle slices by bytes and sums code points — the two
+    # only agree on pure-ASCII text. Both sides now filter to
+    # char-length == byte-length (ASCII iff equal), so a future
+    # non-ASCII fixture is consistently EXCLUDED on both sides instead
+    # of silently diverging.
+    docs = load_table(spark, sf_dir, "documents").filter(
+        (F.length("text") >= _PPM_W * _PPM_H * 3)
+        & (F.length("text") == F.octet_length("text"))
+    )
+    base = F.concat(
+        F.lit(_PPM_HDR), F.substring("text", 1, _PPM_W * _PPM_H * 3)
+    )
+    return docs.select(
+        "doc_id",
+        F.encode(
+            F.when(
+                F.col("doc_id") % _CORRUPT_MOD == 0,
+                F.substring(base, 1, _CORRUPT_LEN),
+            ).otherwise(base),
+            "UTF-8",
+        ).alias("payload"),
+    )
+
+
+@_register(
+    "image_decode_stats",
+    f"""
+    WITH d AS (SELECT doc_id, text FROM documents
+               WHERE strlen(text) >= {_PPM_W * _PPM_H * 3}
+                 AND length(text) = strlen(text)),
+    sums AS (
+      SELECT doc_id,
+             CAST(sum(ascii(substring(text, CAST(3*p+1 AS INT), 1))) AS BIGINT) AS r_sum,
+             CAST(sum(ascii(substring(text, CAST(3*p+2 AS INT), 1))) AS BIGINT) AS g_sum,
+             CAST(sum(ascii(substring(text, CAST(3*p+3 AS INT), 1))) AS BIGINT) AS b_sum
+      FROM d, range({_PPM_W * _PPM_H}) t(p) GROUP BY doc_id)
+    SELECT d.doc_id,
+           CASE WHEN d.doc_id % {_CORRUPT_MOD} = 0 THEN 'corrupt' ELSE 'ok' END AS status,
+           CASE WHEN d.doc_id % {_CORRUPT_MOD} = 0 THEN NULL ELSE {_PPM_W} END AS width,
+           CASE WHEN d.doc_id % {_CORRUPT_MOD} = 0 THEN NULL ELSE {_PPM_H} END AS height,
+           CASE WHEN d.doc_id % {_CORRUPT_MOD} = 0 THEN NULL ELSE s.r_sum END AS r_sum,
+           CASE WHEN d.doc_id % {_CORRUPT_MOD} = 0 THEN NULL ELSE s.g_sum END AS g_sum,
+           CASE WHEN d.doc_id % {_CORRUPT_MOD} = 0 THEN NULL ELSE s.b_sum END AS b_sum
+    FROM d JOIN sums s USING (doc_id)
+    """,
+)
+def image_decode_stats(spark, sf_dir):
+    """REAL image decode under the value-hash gate (VERDICT r5 #3):
+    each document's leading text bytes become an 8x4 binary PPM (P6)
+    payload — header parse, dimension read, and pixel-plane statistics
+    all run through the native pure-numpy decoder that replaced the
+    r2–r5 NotImplementedError (``operators/multimodal.decode_image``).
+    Channel sums are exact BIGINTs, so the oracle recomputes every
+    pixel byte with substring+ascii. One payload in 7 is TRUNCATED
+    mid-body: the decoder raises, the operator quarantines it as
+    status='corrupt' with null stats — the oracle reproduces the
+    quarantine verdicts, so the failure path is hash-gated, not just
+    unit-tested. Scale shape: Arrow-batched mapInPandas with bounded
+    per-worker payload batches, identical to the fake-feature tier."""
+    from udacity_capstone_data_engineering_spark.operators.multimodal import (
+        decode_image_stats,
+    )
+
+    return decode_image_stats(_ppm_payloads(spark, sf_dir), "payload", "doc_id")
+
+
+@_register(
+    "image_resize_decoded",
+    f"""
+    SELECT doc_id,
+           CAST(r AS INTEGER) AS out_row,
+           CAST(c AS INTEGER) AS out_col,
+           CAST((ascii(substring(text, CAST(3*({_PPM_W}*2*r + 2*c)+1 AS INT), 1))
+               + ascii(substring(text, CAST(3*({_PPM_W}*2*r + 2*c)+2 AS INT), 1))
+               + ascii(substring(text, CAST(3*({_PPM_W}*2*r + 2*c)+3 AS INT), 1)))
+               // 3 AS INTEGER) AS pixel
+    FROM (SELECT doc_id, text FROM documents
+          WHERE strlen(text) >= {_PPM_W * _PPM_H * 3}
+            AND length(text) = strlen(text)
+            AND doc_id % {_CORRUPT_MOD} <> 0) d,
+         range({_PPM_H // 2}) t1(r), range({_PPM_W // 2}) t2(c)
+    """,
+)
+def image_resize_decoded(spark, sf_dir):
+    """Decoded-image nearest-neighbor downsample: the same PPM corpus,
+    decoded natively, collapsed to exact integer luma (r+g+b)//3, and
+    2x-downsampled by strided selection — output dimensions come from
+    the DECODED header, not caller metadata. Corrupt payloads (the
+    1-in-7 truncations) contribute no rows, matching the quarantine
+    contract; the oracle reproduces every kept pixel byte-exactly."""
+    from udacity_capstone_data_engineering_spark.operators.multimodal import (
+        resize_image_nearest,
+    )
+
+    return resize_image_nearest(_ppm_payloads(spark, sf_dir), "payload", "doc_id", factor=2)
+
+
+# ---------------------------------------------------------------------------
+# Image perceptual dedup: dHash + Hamming-banded near-dup pairs (r6 #8)
+# ---------------------------------------------------------------------------
+
+
+_DH_BANDS = 4
+_DH_BAND_BITS = 7  # ceil(28 / 4) for the (w-1)*h = 28-bit gate corpus
+_DH_MAX_HAMMING = 6
+
+# Shared SQL: per-doc dHash recomputed from the raw text bytes (the
+# same substring+ascii byte oracle as image_decode_stats). Positions:
+# pixel (r, c) lives at text offset 3*(W*r+c)+1..3; luma = sum // 3;
+# bit p = r*(W-1)+c set iff luma(r,c) < luma(r,c+1).
+_DH_LUMA = (
+    "((ascii(substring(text, CAST(3*({w}*r+{c})+1 AS INT), 1))"
+    " + ascii(substring(text, CAST(3*({w}*r+{c})+2 AS INT), 1))"
+    " + ascii(substring(text, CAST(3*({w}*r+{c})+3 AS INT), 1))) // 3)"
+)
+_DH_SQL_BASE = f"""
+    d AS (SELECT doc_id, text FROM documents
+          WHERE strlen(text) >= {_PPM_W * _PPM_H * 3}
+            AND length(text) = strlen(text)
+            AND doc_id % {_CORRUPT_MOD} <> 0),
+    bits AS (
+      SELECT doc_id, CAST(r * {_PPM_W - 1} + c AS INT) AS p,
+             CASE WHEN {_DH_LUMA.format(w=_PPM_W, c="c")}
+                     < {_DH_LUMA.format(w=_PPM_W, c="(c+1)")}
+                  THEN 1 ELSE 0 END AS b
+      FROM d, range({_PPM_H}) t1(r), range({_PPM_W - 1}) t2(c)),
+    dh AS (
+      SELECT doc_id,
+             CAST(sum(b * (CAST(1 AS BIGINT) << p)) AS BIGINT) AS dhash
+      FROM bits GROUP BY doc_id)"""
+
+
+@_register(
+    "image_dhash_docs",
+    f"""
+    WITH {_DH_SQL_BASE}
+    SELECT doc_id, {_PPM_W} AS width, {_PPM_H} AS height,
+           {(_PPM_W - 1) * _PPM_H} AS nbits, dhash
+    FROM dh
+    """,
+)
+def image_dhash_docs(spark, sf_dir):
+    """Perceptual dHash over the decoded PPM corpus (VERDICT r6 #8):
+    gradient-sign bits on exact integer luma, packed into a BIGINT —
+    brightness-shift-invariant, byte-exact, and recomputed bit-for-bit
+    by the oracle from the raw text bytes. Corrupt payloads (the
+    1-in-7 truncations) contribute no rows, matching the decoder's
+    quarantine contract. Map-only over Arrow batches — the 100 TB
+    shape is one scan, no shuffle."""
+    from udacity_capstone_data_engineering_spark.operators.multimodal import (
+        image_dhash,
+    )
+
+    return image_dhash(_ppm_payloads(spark, sf_dir), "payload", "doc_id")
+
+
+@_register(
+    "image_near_dup_pairs",
+    f"""
+    WITH {_DH_SQL_BASE},
+    bands AS (
+      SELECT doc_id, dhash, CAST(j AS INT) AS band_idx,
+             (dhash // (CAST(1 AS BIGINT) << CAST({_DH_BAND_BITS} * j AS INT)))
+               % {1 << _DH_BAND_BITS} AS band_val
+      FROM dh, range({_DH_BANDS}) t(j)),
+    cand AS (
+      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
+                      a.dhash AS ha, b.dhash AS hb
+      FROM bands a JOIN bands b
+        ON a.band_idx = b.band_idx AND a.band_val = b.band_val
+       AND a.doc_id < b.doc_id)
+    SELECT doc_a, doc_b,
+           CAST(bit_count(xor(ha, hb)) AS INT) AS hamming
+    FROM cand WHERE bit_count(xor(ha, hb)) <= {_DH_MAX_HAMMING}
+    """,
+)
+def image_near_dup_pairs(spark, sf_dir):
+    """Image near-dup detection via Hamming-banded dHash (VERDICT r6
+    #8): the SimHash banding machinery applied to the image tier.
+    Candidates come from an equi-join on (band_idx, band_val) — never
+    an all-pairs product — and survive iff full Hamming distance <=
+    6. Semantics are BANDED on both engines (a pair must share at
+    least one clean band), so the oracle reproduces the operator
+    exactly; for thresholds < band count the pigeonhole makes banding
+    lossless. Production knob: band width grows with log(n) exactly as
+    in the MinHash tier, so bucket sizes — and with them candidate
+    volume — stay bounded as the corpus grows."""
+    from udacity_capstone_data_engineering_spark.operators.multimodal import (
+        image_dhash,
+    )
+
+    dh = image_dhash(_ppm_payloads(spark, sf_dir), "payload", "doc_id")
+    mask = (1 << _DH_BAND_BITS) - 1
+    band_arr = F.array(
+        *[
+            F.expr(f"shiftright(dhash, {_DH_BAND_BITS * j}) & {mask}")
+            for j in range(_DH_BANDS)
+        ]
+    )
+    bands = dh.select(
+        "doc_id",
+        "dhash",
+        "nbits",
+        F.posexplode(band_arr).alias("band_idx", "band_val"),
+    )
+    cand = (
+        bands.alias("a")
+        .join(
+            bands.alias("b"),
+            (F.col("a.band_idx") == F.col("b.band_idx"))
+            & (F.col("a.band_val") == F.col("b.band_val"))
+            & (F.col("a.nbits") == F.col("b.nbits"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            F.col("a.dhash").alias("ha"),
+            F.col("b.dhash").alias("hb"),
+        )
+        .distinct()
+    )
+    return (
+        cand.withColumn("hamming", F.expr("bit_count(ha ^ hb)").cast("int"))
+        .filter(F.col("hamming") <= _DH_MAX_HAMMING)
+        .select("doc_a", "doc_b", "hamming")
+    )
+
 
 # ---------------------------------------------------------------------------
 # Multimodal: REAL audio decode (WAV / RIFF, 16-bit PCM)

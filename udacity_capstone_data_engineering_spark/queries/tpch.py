@@ -1,24 +1,20 @@
-"""Phase-5 query tier (round 2): the TPC-H decision-support suite.
+"""The TPC-H decision-support suite, Q1-Q22, adapted to the driver's
+star schema (no ``partsupp`` table and no shipmode/commitdate columns,
+so the four partsupp queries re-express their shape over ``lineitem``
+and the lateness queries derive latency from
+``l_shipdate - o_orderdate``).
 
-Q1/Q3/Q5 shapes landed in earlier tiers; this module completes the
-classic set — Q4, Q7-Q22 — adapted to the driver's star schema (no
-``partsupp`` table and no shipmode/commitdate columns, so the four
-partsupp queries re-express their shape over ``lineitem`` and the
-lateness queries derive latency from ``l_shipdate - o_orderdate``).
-
-Why this matters for the engine: these seventeen queries are the
-canonical catalog of distributed-plan shapes — semi/anti joins with
-cross-table predicates (Q4, Q22), two-sided dimension chains (Q7, Q8),
-scalar-subquery thresholds (Q11, Q15, Q17), left-join count
+These are the canonical catalog of distributed-plan shapes: semi/anti
+joins with cross-table predicates (Q4, Q22), two-sided dimension chains
+(Q7, Q8), scalar-subquery thresholds (Q11, Q15, Q17), left-join count
 distributions (Q13), disjunctive pushdown (Q19), and multi-level
 aggregation towers (Q21). Each docstring states the join/shuffle
 strategy that must hold at 100 TB.
 
-House determinism rules apply throughout: money math in exact
-DECIMAL(18,2) lattices summed order-independently then cast to double,
-unique tiebreakers under every LIMIT, integer day/micro arithmetic for
-time. Oracles follow the same column names (driver hashes columns
-sorted by name).
+Money math runs in exact DECIMAL(18,2) lattices summed
+order-independently then cast to double; every LIMIT carries a unique
+tiebreaker; time is integer day/micro arithmetic. Oracles use the same
+column names (the driver hashes columns sorted by name).
 """
 
 from __future__ import annotations
@@ -27,14 +23,193 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from udacity_capstone_data_engineering_spark.queries import (
+    _dec_avg,
+    _dec_avg_sql,
+    _dec_sum,
     _dec_sum_sql,
     _register,
 )
-from udacity_capstone_data_engineering_spark.queries_phase4 import (
-    _Q3_REVENUE_SQL,
-    _disc_revenue,
-)
 from udacity_capstone_data_engineering_spark.sources.catalog import load_table
+
+
+@_register(
+    "pricing_summary",
+    f"""
+    SELECT l_returnflag, l_linestatus,
+           {_dec_sum_sql('l_quantity', 'sum_qty')},
+           {_dec_sum_sql('l_extendedprice', 'sum_base_price')},
+           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
+                    * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(3,2))))
+                AS DOUBLE) AS sum_disc_price,
+           {_dec_avg_sql('l_quantity', 'avg_qty')},
+           {_dec_avg_sql('l_extendedprice', 'avg_price')},
+           COUNT(*) AS count_order
+    FROM lineitem
+    WHERE l_shipdate <= TIMESTAMP '2000-12-01 00:00:00'
+    GROUP BY l_returnflag, l_linestatus
+    """,
+)
+def pricing_summary(spark, sf_dir):
+    """TPC-H-Q1-shaped pricing summary: filter + wide group-agg
+    (SURVEY.md §2.4; adds the filter the reference never had — its
+    pipeline contains zero ``filter`` calls, §4). Filter is pushed to
+    the parquet scan; aggregation is map-side partial then one shuffle
+    on the 6-value group key."""
+    li = load_table(spark, sf_dir, "lineitem")
+    disc = F.col("l_extendedprice").cast("decimal(18,2)") * (
+        F.lit(1).cast("decimal(3,2)") - F.col("l_discount").cast("decimal(3,2)")
+    )
+    return (
+        li.filter(F.col("l_shipdate") <= F.lit("2000-12-01 00:00:00").cast("timestamp"))
+        .groupBy("l_returnflag", "l_linestatus")
+        .agg(
+            _dec_sum("l_quantity", "sum_qty"),
+            _dec_sum("l_extendedprice", "sum_base_price"),
+            F.sum(disc).cast("double").alias("sum_disc_price"),
+            _dec_avg("l_quantity", "avg_qty"),
+            _dec_avg("l_extendedprice", "avg_price"),
+            F.count(F.lit(1)).alias("count_order"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# Relational: TPC-H Q3 / Q5 shapes (multi-join showcase)
+# ---------------------------------------------------------------------------
+
+_Q3_REVENUE_SQL = (
+    "CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))"
+    " * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(3,2))))"
+    " AS DOUBLE)"
+)
+
+
+def _disc_revenue():
+    """Exact decimal discounted revenue (order-independent sum)."""
+    return F.sum(
+        F.col("l_extendedprice").cast("decimal(18,2)")
+        * (F.lit(1).cast("decimal(3,2)") - F.col("l_discount").cast("decimal(3,2)"))
+    ).cast("double")
+
+
+@_register(
+    "tpch_q3_shipping_priority",
+    f"""
+    SELECT l_orderkey,
+           {_Q3_REVENUE_SQL} AS revenue,
+           o_orderdate, o_orderpriority
+    FROM customer
+    JOIN orders ON c_custkey = o_custkey
+    JOIN lineitem ON l_orderkey = o_orderkey
+    WHERE c_mktsegment = 'BUILDING'
+      AND o_orderdate < TIMESTAMP '1998-06-01 00:00:00'
+      AND l_shipdate > TIMESTAMP '1998-06-01 00:00:00'
+    GROUP BY l_orderkey, o_orderdate, o_orderpriority
+    ORDER BY revenue DESC, l_orderkey
+    LIMIT 10
+    """,
+)
+def tpch_q3_shipping_priority(spark, sf_dir):
+    """TPC-H Q3 shape (shipping priority): segment-filtered customer ⋈
+    orders ⋈ lineitem, discounted-revenue group-agg, top 10. The date
+    and segment filters push into all three parquet scans. Join
+    strategy at 100 TB: customer and orders both SCALE with the data,
+    so neither is hint-broadcast — orders⋈customer shuffles on custkey,
+    then meets lineitem in a shuffle on the orderkey; the group-agg
+    keys lead with l_orderkey, the same key the join just partitioned
+    by, so no third exchange. At test SF, AQE converts both joins to
+    broadcast on its own — that decision belongs to the runtime, not a
+    hint that would OOM at scale. Final top-10 is
+    TakeOrderedAndProject, never a global sort; tiebreak l_orderkey
+    keeps the LIMIT deterministic."""
+    cutoff = F.lit("1998-06-01 00:00:00").cast("timestamp")
+    cust = (
+        load_table(spark, sf_dir, "customer")
+        .filter(F.col("c_mktsegment") == "BUILDING")
+        .select("c_custkey")
+    )
+    orders = (
+        load_table(spark, sf_dir, "orders")
+        .filter(F.col("o_orderdate") < cutoff)
+        .select("o_orderkey", "o_custkey", "o_orderdate", "o_orderpriority")
+    )
+    li = (
+        load_table(spark, sf_dir, "lineitem")
+        .filter(F.col("l_shipdate") > cutoff)
+        .select("l_orderkey", "l_extendedprice", "l_discount")
+    )
+    joined = li.join(
+        orders.join(cust, orders.o_custkey == cust.c_custkey),
+        li.l_orderkey == orders.o_orderkey,
+    )
+    return (
+        joined.groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
+        .agg(_disc_revenue().alias("revenue"))
+        .orderBy(F.col("revenue").desc(), "l_orderkey")
+        .limit(10)
+        .select("l_orderkey", "revenue", "o_orderdate", "o_orderpriority")
+    )
+
+
+@_register(
+    "tpch_q5_local_supplier_volume",
+    f"""
+    SELECT n_name, {_Q3_REVENUE_SQL} AS revenue
+    FROM customer
+    JOIN orders ON c_custkey = o_custkey
+    JOIN lineitem ON l_orderkey = o_orderkey
+    JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
+    JOIN nation ON s_nationkey = n_nationkey
+    JOIN region ON n_regionkey = r_regionkey
+    WHERE r_name = 'ASIA'
+      AND o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
+      AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
+    GROUP BY n_name
+    """,
+)
+def tpch_q5_local_supplier_volume(spark, sf_dir):
+    """TPC-H Q5 shape (local supplier volume): six-table join where the
+    customer and the supplier must share a nation inside one region,
+    revenue per nation for one order year. Join strategy for 100 TB:
+    region (5 rows) and nation (25 rows) are FIXED-size — broadcast
+    them explicitly into supplier, which stays distributed (supplier
+    and customer both scale with the data, so no hint there). The two
+    fact tables (orders filtered to one year, lineitem) meet in a
+    shuffle on the orderkey; customer and the region-filtered supplier
+    attach via key joins that AQE turns into broadcasts at small SF and
+    leaves as shuffles at scale. The c_nationkey = s_nationkey equality
+    rides on the supplier join condition, so mismatched-nation rows die
+    in the join, not in a post-filter."""
+    year_lo = F.lit("1997-01-01 00:00:00").cast("timestamp")
+    year_hi = F.lit("1998-01-01 00:00:00").cast("timestamp")
+    region = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    nation = load_table(spark, sf_dir, "nation")
+    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    orders = (
+        load_table(spark, sf_dir, "orders")
+        .filter((F.col("o_orderdate") >= year_lo) & (F.col("o_orderdate") < year_hi))
+        .select("o_orderkey", "o_custkey")
+    )
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
+    )
+    # Dimension chain: region -> nation -> supplier (all broadcast).
+    local_supp = supp.join(
+        F.broadcast(
+            nation.join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
+        ),
+        supp.s_nationkey == F.col("n_nationkey"),
+    ).select("s_suppkey", "s_nationkey", "n_name")
+    fact = orders.join(li, orders.o_orderkey == li.l_orderkey).join(
+        cust, orders.o_custkey == cust.c_custkey
+    )
+    joined = fact.join(
+        local_supp,
+        (fact.l_suppkey == local_supp.s_suppkey)
+        & (fact.c_nationkey == local_supp.s_nationkey),
+    )
+    return joined.groupBy("n_name").agg(_disc_revenue().alias("revenue"))
 
 
 def _ts(lit: str):
