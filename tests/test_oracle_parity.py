@@ -8,13 +8,13 @@ import math
 import duckdb
 import pytest
 
-from udacity_capstone_data_engineering_spark import queries as catalog
+from udacity_capstone_data_engineering_spark.queries import oracle_sql, queries
 from udacity_capstone_data_engineering_spark.sources.catalog import TABLES
 
 from tests.conftest import TEST_SF_DIR
 
-ORACLES = catalog.oracle_sql()
-QUERIES = catalog.queries()
+ORACLES = oracle_sql()
+QUERIES = queries()
 
 
 @pytest.fixture(scope="module")
@@ -44,8 +44,8 @@ def _rows(rows):
 
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
-def test_query_matches_oracle(spark, sf_dir, duck, name):
-    spark_df = QUERIES[name](spark, sf_dir)
+def test_query_matches_oracle(catalog, duck, name):
+    spark_df = catalog[name]
     got = _rows([tuple(r) for r in spark_df.collect()])
     want = _rows(duck.execute(ORACLES[name]).fetchall())
     assert len(got) == len(want), (
@@ -59,7 +59,7 @@ def test_query_matches_oracle(spark, sf_dir, duck, name):
 
 
 @pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLES)))
-def test_oracle_free_query_runs(spark, sf_dir, name):
-    df = QUERIES[name](spark, sf_dir)
+def test_oracle_free_query_runs(catalog, name):
+    df = catalog[name]
     assert df.count() >= 0
     assert len(df.schema.fields) > 0

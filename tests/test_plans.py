@@ -7,66 +7,60 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from udacity_capstone_data_engineering_spark import queries as catalog
-
-QUERIES = catalog.queries()
-
-
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+from tests.conftest import physical_plan as _plan
 
 
 def _optimized(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 
 
-def test_filter_pushdown_to_parquet(spark, sf_dir):
-    df = QUERIES["pricing_summary"](spark, sf_dir)
+def test_filter_pushdown_to_parquet(catalog):
+    df = catalog["pricing_summary"]
     plan = _plan(df)
     assert "PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate" in plan
 
 
-def test_column_pruning_at_scan(spark, sf_dir):
+def test_column_pruning_at_scan(catalog):
     # drop_columns must become scan-level pruning: text never read.
-    df = QUERIES["drop_columns_docs"](spark, sf_dir)
+    df = catalog["drop_columns_docs"]
     plan = _plan(df)
     assert "ReadSchema" in plan and "text" not in plan.split("ReadSchema")[1][:200]
 
 
-def test_small_dim_broadcast(spark, sf_dir):
-    df = QUERIES["flagship_nation_order_stats"](spark, sf_dir)
+def test_small_dim_broadcast(catalog):
+    df = catalog["flagship_nation_order_stats"]
     plan = _plan(df)
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
 
 
-def test_partial_aggregation_before_shuffle(spark, sf_dir):
-    df = QUERIES["pricing_summary"](spark, sf_dir)
+def test_partial_aggregation_before_shuffle(catalog):
+    df = catalog["pricing_summary"]
     plan = _plan(df)
     # HashAggregate appears twice: partial (map-side) + final.
     assert plan.count("HashAggregate") >= 2
 
 
-def test_global_topk_no_full_sort(spark, sf_dir):
-    df = QUERIES["global_top100_lineitems"](spark, sf_dir)
+def test_global_topk_no_full_sort(catalog):
+    df = catalog["global_top100_lineitems"]
     plan = _plan(df)
     assert "TakeOrderedAndProject" in plan
 
 
-def test_window_topk_group_limit_pushdown(spark, sf_dir):
+def test_window_topk_group_limit_pushdown(catalog):
     # Spark 3.5+/4.x pushes rank<=k into the shuffle as WindowGroupLimit.
-    df = QUERIES["window_topk_orders"](spark, sf_dir)
+    df = catalog["window_topk_orders"]
     assert "WindowGroupLimit" in _plan(df)
 
 
-def test_anti_join_stays_hash_join(spark, sf_dir):
-    df = QUERIES["fk_orphan_lineitems"](spark, sf_dir)
+def test_anti_join_stays_hash_join(catalog):
+    df = catalog["fk_orphan_lineitems"]
     plan = _plan(df)
     assert "LeftAnti" in plan
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
 
 
-def test_no_python_udfs_in_relational_tier(spark, sf_dir):
+def test_no_python_udfs_in_relational_tier(catalog):
     # Everything except the declared mapInPandas op must stay JVM-side:
     # BatchEvalPython / ArrowEvalPython in a plan means a Python worker
     # round-trip snuck into a hot path.
@@ -103,18 +97,19 @@ def test_no_python_udfs_in_relational_tier(spark, sf_dir):
         # gates recall against the brute-force Arrow anchor
         "ann_auto_dispatch",
     }
-    for name, fn in QUERIES.items():
+    for name, df in catalog.items():
         if name in declared_arrow:
             continue
-        plan = _plan(fn(spark, sf_dir))
+        plan = _plan(df)
         assert "EvalPython" not in plan, f"{name} crosses into Python"
 
 
-def test_whole_stage_codegen_on_flagship(spark, sf_dir):
-    df = QUERIES["flagship_nation_order_stats"](spark, sf_dir)
+def test_whole_stage_codegen_on_flagship(catalog):
+    df = catalog["flagship_nation_order_stats"]
     df.collect()  # AQE reveals codegen stages only in the FINAL plan
     # '*(n)' prefixes mark whole-stage-codegen stages in plan strings.
-    assert "isFinalPlan=true" in _plan(df) and "*(" in _plan(df)
+    final = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in final and "*(" in final
 
 
 def test_lsh_join_partition_count_bounded(spark, sf_dir):
@@ -159,12 +154,12 @@ def test_bucketed_join_no_shuffle(spark, sf_dir):
         spark.sql("DROP TABLE IF EXISTS lineitem_bkt")
 
 
-def test_sink_readback_partition_pruning(spark, sf_dir):
+def test_sink_readback_partition_pruning(catalog):
     """The sink round-trip's read-back scan must show a non-empty
     PartitionFilters — directory-level pruning, not a data filter."""
     import re
 
-    df = QUERIES["sink_roundtrip_partitioned"](spark, sf_dir)
+    df = catalog["sink_roundtrip_partitioned"]
     plan = _plan(df)
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert m and m.group(1).strip(), f"no partition pruning in:\n{plan[:2000]}"
@@ -227,21 +222,21 @@ def test_aqe_skew_join_splits_skewed_partitions(spark, sf_dir, tmp_path):
                 spark.conf.set(k, v)
 
 
-def test_bucketed_coloc_query_no_join_shuffle(spark, sf_dir):
+def test_bucketed_coloc_query_no_join_shuffle(catalog):
     """The registered bucketed_join_coloc query must sort-merge-join
     with zero Exchange under the join (the groupBy above it is the
     only legitimate shuffle)."""
-    df = QUERIES["bucketed_join_coloc"](spark, sf_dir)
+    df = catalog["bucketed_join_coloc"]
     plan = _plan(df)
     assert "SortMergeJoin" in plan
     below_join = plan.split("SortMergeJoin")[-1]
     assert "Exchange" not in below_join, "bucketed gate query still shuffles"
 
 
-def test_jaccard_join_no_cartesian(spark, sf_dir):
+def test_jaccard_join_no_cartesian(catalog):
     """Prefix-filtered Jaccard must candidate-generate via an equi-join
     on shingle hashes — never a cross/nested-loop join."""
-    df = QUERIES["ngram_jaccard_pairs"](spark, sf_dir)
+    df = catalog["ngram_jaccard_pairs"]
     plan = _plan(df)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -302,10 +297,10 @@ def test_partitioned_catalog_layout_prunes_and_dpp(spark, sf_dir, tmp_path):
     assert "dynamicpruning" in _plan(j).lower()
 
 
-def test_correlated_subqueries_decorrelated(spark, sf_dir):
+def test_correlated_subqueries_decorrelated(catalog):
     """Catalyst must rewrite the scalar/EXISTS subqueries into joins —
     a nested-loop (per-row subquery) plan would be O(n*m) at scale."""
-    df = QUERIES["correlated_subqueries"](spark, sf_dir)
+    df = catalog["correlated_subqueries"]
     plan = _plan(df)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -356,11 +351,11 @@ def test_runtime_bloom_filter_join(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def test_q19_disjunction_splits_to_both_scans(spark, sf_dir):
+def test_q19_disjunction_splits_to_both_scans(catalog):
     """Catalyst must derive per-side implications from the three OR'd
     cross-table arms and push them into BOTH parquet scans — without
     the split, the join would read unfiltered tables."""
-    df = QUERIES["tpch_q19_disjunctive_revenue"](spark, sf_dir)
+    df = catalog["tpch_q19_disjunctive_revenue"]
     plan = _plan(df)
     part_scan = plan.split("part.parquet")[0]
     # part side: the brand/size disjunction reached the scan's filters
@@ -371,25 +366,25 @@ def test_q19_disjunction_splits_to_both_scans(spark, sf_dir):
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
 
 
-def test_q4_exists_is_semi_join_with_residual(spark, sf_dir):
+def test_q4_exists_is_semi_join_with_residual(catalog):
     """The EXISTS with a cross-table date comparison must plan as a
     LeftSemi hash join (equi on orderkey, date residual) — never a
     correlated probe or nested loop."""
-    df = QUERIES["tpch_q4_order_priority"](spark, sf_dir)
+    df = catalog["tpch_q4_order_priority"]
     plan = _plan(df)
     assert "LeftSemi" in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "INTERVAL '30'" in plan  # residual evaluated inside the join
 
 
-def test_q11_shared_aggregate_persisted_once(spark, sf_dir):
+def test_q11_shared_aggregate_persisted_once(catalog):
     """The per-part aggregate feeds both the threshold and filter
     branches; static ReuseExchange does not fire across them, so the
     query persists it — BOTH branches must read the cached relation
     (the plan string prints the cached relation's fill plan inline
     under each InMemoryTableScan, so the lineitem scan node appears
     twice in text but fills the cache once at materialization)."""
-    df = QUERIES["tpch_q11_important_parts"](spark, sf_dir)
+    df = catalog["tpch_q11_important_parts"]
     plan = _plan(df)
     assert plan.count("InMemoryTableScan") == 2
     # every lineitem scan in the text sits under an InMemoryRelation
@@ -398,12 +393,12 @@ def test_q11_shared_aggregate_persisted_once(spark, sf_dir):
         assert "lineitem.parquet" not in segment
 
 
-def test_q21_single_lineitem_scan(spark, sf_dir):
+def test_q21_single_lineitem_scan(catalog):
     """The aggregation-tower decorrelation must not re-scan lineitem
     per EXISTS branch: one scan feeds the per-(order,supplier) and
     per-order aggregates (vs two correlated self-joins in the literal
     formulation)."""
-    df = QUERIES["tpch_q21_waiting_suppliers"](spark, sf_dir)
+    df = catalog["tpch_q21_waiting_suppliers"]
     plan = _plan(df)
     # ss feeds po via ReusedExchange or a second aggregation over the
     # same shuffle — either way lineitem appears at most twice (once
@@ -412,7 +407,7 @@ def test_q21_single_lineitem_scan(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
-def test_no_cartesian_anywhere_and_bnlj_only_where_documented(spark, sf_dir):
+def test_no_cartesian_anywhere_and_bnlj_only_where_documented(catalog):
     """Global plan sweep over EVERY registered query: no CartesianProduct
     at all; BroadcastNestedLoopJoin only in (a) the brute-force ANN
     oracle baselines, which are quadratic BY DESIGN as correctness
@@ -420,8 +415,6 @@ def test_no_cartesian_anywhere_and_bnlj_only_where_documented(spark, sf_dir):
     broadcast aggregates, where a nested loop over one row is the
     cheapest possible plan. Any new query joining without keys shows
     up here before it ships."""
-    from udacity_capstone_data_engineering_spark.queries import _REGISTRY
-
     bnlj_allowed = {
         # quadratic-by-design correctness baselines (documented)
         "ann_recall_report",
@@ -481,8 +474,8 @@ def test_no_cartesian_anywhere_and_bnlj_only_where_documented(spark, sf_dir):
         "ann_exact_truth_build",
     }
     offenders_cart, offenders_bnlj = [], []
-    for name, (fn, _) in sorted(_REGISTRY.items()):
-        plan = _plan(fn(spark, sf_dir))
+    for name in sorted(catalog):
+        plan = _plan(catalog[name])
         if "CartesianProduct" in plan:
             offenders_cart.append(name)
         if "BroadcastNestedLoopJoin" in plan and name not in bnlj_allowed:
@@ -517,3 +510,109 @@ def test_lsh_kernel_regime_plan_shape(spark, sf_dir):
         f"expected <=1 shuffle in kernel-regime final plan, saw "
         f"{n_shuffles}:\n{final}"
     )
+
+
+def test_inverted_index_group_limit_pushdown_both_levels(catalog):
+    """The min-K tournament must get WindowGroupLimit at BOTH window
+    levels (partial+final at the outer one), and no window may run
+    unpartitioned."""
+    plan = _plan(catalog["inverted_index_postings"])
+    assert plan.count("WindowGroupLimit") >= 3  # inner + outer partial/final
+    assert "SinglePartition" not in plan
+
+
+def test_countmin_fanout_after_distinct_reduction(catalog):
+    """The depth-fold Generate (posexplode) must sit ABOVE the per-key
+    aggregate — occurrences are reduced to distinct keys before the
+    x4 fan-out — and the grid reduction is a paired partial/final
+    HashAggregate."""
+    plan = _plan(catalog["token_countmin_sketch"])
+    # the depth-fold fan-out is the posexplode Generate (the plain
+    # "Generate explode" lower down is the tokenizer, not the fan-out)
+    gen = plan.index("Generate posexplode")
+    assert "partial_sum" in plan
+    # the per-key exact count shuffles on (salt-grouping expr, key) and
+    # must sit BELOW the fan-out: later in the top-down plan string
+    key_agg = plan.index("Exchange hashpartitioning(_groupingexpression")
+    assert gen < key_agg, "fan-out must consume the reduced per-key relation"
+
+
+def test_gram_matrix_single_wide_exchange(catalog):
+    """Map-only outer products: exactly ONE hashpartitioning exchange
+    (the d^2-cell aggregation); no join anywhere."""
+    plan = _plan(catalog["embedding_gram_matrix"])
+    assert plan.count("Exchange hashpartitioning") == 1
+    assert "Join" not in plan
+
+
+def test_repetition_no_raw_strings_in_shuffle_keys(catalog):
+    """Branch shuffles key on (doc_id, 60-bit hash): every
+    hashpartitioning that carries a branch key uses the bigint hash
+    columns (lh/gh), never the raw line/gram strings."""
+    plan = _plan(catalog["doc_repetition_flags"])
+    for frag in plan.split("Exchange hashpartitioning(")[1:]:
+        keys = frag.split(")")[0]
+        assert "__line" not in keys and "__g#" not in keys, keys
+
+
+def test_bm25_topk_is_take_ordered(catalog):
+    plan = _plan(catalog["bm25_topk_docs"])
+    assert "TakeOrderedAndProject(limit=50" in plan
+    assert "CartesianProduct" not in plan
+
+
+def test_runtime_bloom_filter_guards_beyond_broadcast_decontam(spark, tmp_path):
+    """The 100 TB decontam regime (r7): at test scale the bench-gram
+    side of `decontam_ngram_overlap` broadcasts, so the corpus stream
+    is filtered map-side for free. Once the benchmark gram set outgrows
+    the broadcast threshold the join becomes a shuffle join — and the
+    engine's answer there is Catalyst's RUNTIME BLOOM FILTER injection
+    (`spark.sql.optimizer.runtime.bloomFilter.enabled`, on by default),
+    which builds a bloom filter from the creation side and injects a
+    `might_contain` prefilter into the corpus scan, exactly the
+    hand-rolled bloom-prefilter pattern but optimizer-owned. This test
+    pins that the knob fires on the decontam join shape (big gram
+    stream ⋈ selectively-filtered small side) and that the prefiltered
+    plan returns identical results. The size thresholds are lowered to
+    reproduce the >10 GB-scan regime at fixture scale."""
+    big_p = str(tmp_path / "grams_big")
+    small_p = str(tmp_path / "grams_small")
+    spark.range(0, 200_000).selectExpr(
+        "id AS doc_id", "xxhash64(cast(id % 5000 AS string)) AS h"
+    ).write.parquet(big_p)
+    spark.range(0, 50_000).selectExpr(
+        "xxhash64(cast(id AS string)) AS h", "id % 100 AS bench_part"
+    ).write.parquet(small_p)
+
+    def run_join():
+        corpus = spark.read.parquet(big_p)
+        bench = (
+            spark.read.parquet(small_p)
+            .filter("bench_part = 3")
+            .select("h")
+        )
+        return corpus.join(bench, "h")
+
+    baseline = run_join().count()
+    overrides = {
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.optimizer.runtime.bloomFilter"
+        ".applicationSideScanSizeThreshold": "0",
+        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": (
+            "100MB"
+        ),
+    }
+    saved = {k: spark.conf.get(k) for k in overrides}
+    try:
+        for k, v in overrides.items():
+            spark.conf.set(k, v)
+        j = run_join()
+        plan = j._jdf.queryExecution().executedPlan().toString()
+        assert "might_contain" in plan, (
+            "runtime bloom filter was not injected on the shuffle-join "
+            "decontam shape"
+        )
+        assert j.count() == baseline
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)

@@ -20,13 +20,12 @@ import re
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from udacity_capstone_data_engineering_spark import queries as catalog
 from udacity_capstone_data_engineering_spark.operators.ranking import (
     global_ntile,
     ranked_prefix,
 )
 
-QUERIES = catalog.queries()
+from tests.conftest import physical_plan as _plan
 
 
 def _demo_df(spark, n=403, n_parts=7):
@@ -205,7 +204,7 @@ def _is_partitioned(spec: str) -> bool:
     )
 
 
-def test_no_data_sized_unpartitioned_window_in_analytics_family(spark, sf_dir):
+def test_no_data_sized_unpartitioned_window_in_analytics_family(catalog):
     for name in (
         "rfm_customer_segments",
         "customer_spend_gini",
@@ -213,7 +212,7 @@ def test_no_data_sized_unpartitioned_window_in_analytics_family(spark, sf_dir):
         "concurrent_sessions_peak",
         "event_weekday_chisq",
     ):
-        plan = QUERIES[name](spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+        plan = _plan(catalog[name])
         bad = [
             s
             for s in _window_specs(plan)

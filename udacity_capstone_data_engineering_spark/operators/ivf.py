@@ -35,11 +35,16 @@ from pyspark.sql import functions as F
 def _fit_sample(emb: DataFrame, vec_col: str, sample: int, seed: int, n):
     """The bounded, seeded fit sample of the IVF and PQ fits: ~``sample``
     non-NULL vectors as an L2-normalized (rows × dim) float64 ndarray
-    ((0, 0) when empty; zero rows stay zero).  Rows whose norm is not
-    finite (NaN/±inf elements) are dropped: one NaN centroid or
-    codebook row wins every later argmax, and every row of the corpus
-    lands on it."""
+    ((0, 0) when empty; zero rows stay zero), ``dim`` the length of the
+    first one.  Rows whose norm is not finite (NaN/±inf or NULL
+    elements, or ragged: any other length) are dropped: one NaN
+    centroid or codebook row wins every later argmax, and every row of
+    the corpus lands on it."""
     import numpy as np
+
+    from udacity_capstone_data_engineering_spark.operators.similarity import (
+        _vector_rows,
+    )
 
     if n is None:
         n = emb.count()
@@ -57,7 +62,7 @@ def _fit_sample(emb: DataFrame, vec_col: str, sample: int, seed: int, n):
     )
     if not len(col):
         return np.zeros((0, 0), dtype=np.float64)
-    x = np.vstack(col).astype(np.float64)
+    x = _vector_rows(col, len(col[0]))
     norms = np.linalg.norm(x, axis=1, keepdims=True)
     finite = np.isfinite(norms[:, 0])
     x, norms = x[finite], norms[finite]
@@ -256,10 +261,11 @@ def ivf_topk(
             queries,
         )
 
-    unit = _unit_vectors(emb, id_col, vec_col)
+    dim = centers.shape[1]
+    unit = _unit_vectors(emb, id_col, vec_col, dim)
     v = unit.filter(F.col("uv").isNotNull())
     qv = v if queries is None else _unit_vectors(
-        queries, id_col, vec_col
+        queries, id_col, vec_col, dim
     ).filter(F.col("uv").isNotNull())
     probe = _probe_cells_udf(centers, nprobe)
     # Persisted when self-serving: both branches below (assignment +

@@ -32,8 +32,6 @@ assumption already underpins ``exact_duplicates``' fingerprint key).
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -125,11 +123,6 @@ def jaccard_similarity_join(
     return verified.select("id_a", "id_b", jac.alias("jaccard")).filter(
         F.col("jaccard") >= threshold
     )
-
-
-def prefix_length(set_size: int, threshold: float) -> int:
-    """Python twin of the prefix-length formula, for tests."""
-    return set_size - math.ceil(set_size * threshold) + 1
 
 
 def containment_join(

@@ -209,7 +209,9 @@ def _encode_to_cells(
         fan_out_small_scan,
     )
 
-    v = _unit_vectors(emb, id_col, vec_col).filter(F.col("uv").isNotNull())
+    v = _unit_vectors(emb, id_col, vec_col, centers.shape[1]).filter(
+        F.col("uv").isNotNull()
+    )
     assign = _probe1_cell_udf(centers)
     # fan out before the CPU-heavy encode/assign UDFs: a one-file
     # corpus otherwise runs the whole encode as ONE task (r8, observed
@@ -484,17 +486,6 @@ def _cell_major_scan(
     ]
 
 
-def _cell_major_candidates(
-    x, centers, books, cell_ids, cell_codes, nprobe, rerank, **kw
-):
-    """:func:`_cell_major_scan` of PQ codes, scored by ADC under
-    ``books``."""
-    return _cell_major_scan(
-        x, centers, _adc_payload(books), cell_ids, cell_codes, nprobe,
-        rerank, **kw,
-    )
-
-
 class _Payload(NamedTuple):
     """What a cell-major scan reads and how it scores it — the ONLY
     things that differ between the ADC scan of PQ codes and the exact
@@ -538,7 +529,7 @@ def _collect_exact_cells(emb, id_col, vec_col, cells, centers):
     if tbl is None:
         return cells.toPandas(), None
     ids, rows = [np.zeros(0, dtype=np.int64)], [np.zeros((0, dim))]
-    for rb in _normalize_batches(tbl.to_batches()):
+    for rb in _normalize_batches(tbl.to_batches(), dim):
         uv = rb.column(1)
         live = uv.is_valid().to_numpy(zero_copy_only=False)
         ids.append(rb.column(0).to_numpy()[live].astype(np.int64))
@@ -870,8 +861,11 @@ def _cell_serve(
         else max_broadcast_bytes
     )
     col = payload.column
-    unit = _unit_vectors(emb, id_col, vec_col)
-    qv = unit if queries is None else _unit_vectors(queries, id_col, vec_col)
+    dim = centers.shape[1]
+    unit = _unit_vectors(emb, id_col, vec_col, dim)
+    qv = unit if queries is None else _unit_vectors(
+        queries, id_col, vec_col, dim
+    )
     qv = qv.filter(F.col("uv").isNotNull())
     cells = cells.select("id", "cell", col)
     raw = None

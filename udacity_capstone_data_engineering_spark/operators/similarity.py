@@ -25,6 +25,8 @@ equality.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -391,8 +393,7 @@ def jl_project(
     preprocessing: per-row flops drop every downstream index build by
     dim/out_dims (64→16 = 4x)."""
     if dim is None:
-        head = emb.select(F.size(F.col(vec_col)).alias("d")).head()
-        dim = int(head["d"]) if head is not None else 0
+        dim = _probe_dim(emb, vec_col)
     # One parsed SQL literal, not out_dims*dim F.lit() calls: the
     # 16x64 sign matrix cost ~2.5 s of driver wall in py4j round-trips
     # (r11, guide §1.2 driver-side; values and INT element type are
@@ -635,9 +636,11 @@ def _lsh_key_fn(dim: int, planes: int, tables: int, probes: int):
 BROADCAST_SCORE_MAX_BYTES = 256 * 1024 * 1024
 
 
-def _normalize_batches(batches):
+def _normalize_batches(batches, dim=None):
     """The :func:`_unit_vectors` kernel: ``(id, vector)`` record batches
-    in, ``(__id, uv)`` record batches out, one per input batch."""
+    in, ``(__id, uv)`` record batches out, one per input batch.  Given
+    ``dim``, a vector of any other length is ragged and its uv is NULL,
+    as a NULL-element vector's is."""
     import numpy as np
     import pyarrow as pa
 
@@ -659,6 +662,7 @@ def _normalize_batches(batches):
             and values.null_count == 0
             and n_rows > 0
             and lens.min() == lens.max() != 0
+            and dim in (None, lens[0])
         ):
             # Fixed-dim, no-null batch (the real corpus shape):
             # one zero-copy reshape, no per-cell accessor churn.
@@ -677,9 +681,14 @@ def _normalize_batches(batches):
                 if not cell.is_valid:
                     continue
                 a = cell.values.to_numpy(zero_copy_only=False)
-                if cell.values.null_count or a.shape[0] == 0:
+                if (
+                    cell.values.null_count
+                    or a.shape[0] == 0
+                    or dim not in (None, a.shape[0])
+                ):
                     # NULL element → NULL fold → NULL uv; empty →
-                    # norm 0 → NULL uv, as the expression path
+                    # norm 0 → NULL uv, as the expression path; ragged
+                    # → NULL uv
                     continue
                 live.append((p, np.asarray(a, dtype=np.float64)))
         by_len: dict[int, list] = {}
@@ -714,7 +723,7 @@ def _normalize_batches(batches):
         yield pa.RecordBatch.from_arrays([ids, uv], ["__id", "uv"])
 
 
-def _unit_vectors(emb, id_col: str, vec_col: str):
+def _unit_vectors(emb, id_col: str, vec_col: str, dim: int | None = None):
     """(id, uv) with uv the L2-normalized double vector; zero-norm →
     NULL uv (ANSI /0 raises), which yields NULL cosine ranked last —
     degenerate vectors never crash the job.
@@ -740,13 +749,18 @@ def _unit_vectors(emb, id_col: str, vec_col: str):
     passes the ``when(__n > 0)`` gate (Spark orders NaN greater than
     every number) so NaN/±inf elements propagate NaN into uv — the
     output is built with explicit pyarrow buffers because the pandas
-    return path would silently rewrite those NaN elements to nulls."""
+    return path would silently rewrite those NaN elements to nulls.
+    Given the corpus ``dim``, a ragged vector (any other length) is a
+    NULL uv too."""
     id_type = emb.schema[id_col].dataType.simpleString()
     return (
         emb.select(
             F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v")
         )
-        .mapInArrow(_normalize_batches, f"__id {id_type}, uv array<double>")
+        .mapInArrow(
+            functools.partial(_normalize_batches, dim=dim),
+            f"__id {id_type}, uv array<double>",
+        )
         .select(F.col("__id").alias(id_col), "uv")
     )
 
@@ -870,7 +884,7 @@ def _lsh_scanner(dim, planes, tables, multiprobe, take):
         if not len(qids):
             return _no_lsh_candidates()
         index, ids, unit, bad = state
-        x = np.vstack(qvecs).astype(np.float64)
+        x = _vector_rows(qvecs, dim)
         xq, qbad = unit_rows(x)
         pk = probe_keyfn(x).reshape(len(x), tables, n_probes + 1)
         out_q, out_i, out_c, out_na = [], [], [], []
@@ -972,7 +986,9 @@ def _grid_shards(
     return n_blocks, n_shards
 
 
-def _lsh_grid_candidates(qsrc, corpus, build, scan, n_bytes, n_q, cap):
+def _lsh_grid_candidates(
+    qsrc, corpus, build, scan, dim, n_bytes, n_q, cap
+):
     """PAST the byte cap (VERDICT r10 #1): the (query-block × shard)
     grid of ``pq._sharded_cell_candidates`` applied to bucket indexes.
     Not a join: a bucket join carries a tables·probes·bucket²
@@ -1017,7 +1033,7 @@ def _lsh_grid_candidates(qsrc, corpus, build, scan, n_bytes, n_q, cap):
         rpdf = rpdf.sort_values("id")
         state = build(
             rpdf["id"].to_numpy(dtype=np.int64),
-            np.vstack(rpdf["v"].to_numpy()).astype(np.float64),
+            _vector_rows(rpdf["v"].to_numpy(), dim),
         )
         return scan(state, lpdf["query_id"].to_numpy(), lpdf["qv"].to_numpy())
 
@@ -1080,8 +1096,7 @@ def _score_pairs(
         if n is None:
             n = emb.count()
         # Cap in measured bytes: dim probed from one row (limit-1 scan).
-        head = emb.select(F.size(F.col(vec_col)).alias("d")).head()
-        dim = int(head["d"]) if head is not None else 0
+        dim = _probe_dim(emb, vec_col)
         if n * dim * 8 <= BROADCAST_SCORE_MAX_BYTES:
             raw = _collect_raw_matrix(emb, id_col, vec_col, dim)
 
@@ -1341,7 +1356,7 @@ def lsh_topk(
             F.col(vec_col).cast("array<double>").alias("v"),
         ).filter(F.col("v").isNotNull())
         cand = _lsh_grid_candidates(
-            qsrc, corpus, build, scan, n * dim * 8, n_q,
+            qsrc, corpus, build, scan, dim, n * dim * 8, n_q,
             cap=BROADCAST_SCORE_MAX_BYTES,
         )
     w = Window.partitionBy("query_id").orderBy(
