@@ -207,7 +207,7 @@ PICK = {
         "k-core (r5f): the final plan shows only the closing degree "
         "count — each of the 10 peel rounds (degree agg + two LEFT-SEMI "
         "joins on the edge list) runs behind a per-round localCheckpoint "
-        "lineage cut; the round plan is asserted in tests/test_behavioral."
+        "lineage cut; the round plan is asserted in tests/test_phase10."
     ),
     "semantic_dedup_autok": (
         "SemDeDup auto-k (r6): k = ceil(n/64) keeps candidate volume "

@@ -1,6 +1,6 @@
 """Audio tier (round 7): pure-numpy WAV/PCM16 decoder + the Arrow
 mapInPandas stats/frame operators — the audio leg of the multimodal
-tier, mirroring the image codec's test battery (test_multimodal).
+tier, mirroring the image codec's test battery (test_round6/test_round7).
 """
 
 from __future__ import annotations
@@ -144,78 +144,29 @@ def test_audio_frame_energy_partial_frame_and_quarantine_drop(spark):
     assert rows[(0, 1)]["energy"] == 0 + 1 + 49
 
 
-def test_audio_queries_nonempty(catalog):
-    """The audio rows are not vacuous at test scale: each returns rows.
-    Their values are checked against the DuckDB oracle in
-    test_oracle_parity."""
-    for name in (
-        "audio_decode_stats",
-        "audio_frame_energy",
-        "audio_silence_flags",
-    ):
-        assert catalog[name].head(1), name
+def test_audio_queries_match_duckdb_at_sf0001(catalog, sf_dir):
+    """The full oracle pair for the three audio queries at sf0.001 —
+    the same hash-gate shape the driver runs at sf0.01."""
+    import duckdb
 
+    from udacity_capstone_data_engineering_spark.queries import oracle_sql
 
-# ---------------------------------------------------------------------------
-# ADVICE r7 (low): a truncated RIFF header is CORRUPT (ValueError), not
-# 'unsupported' — byte-truncated WAV crawl objects land in the right
-# quarantine bucket.
-# ---------------------------------------------------------------------------
-
-
-def test_decode_wav_truncated_riff_header_is_corrupt():
-    from udacity_capstone_data_engineering_spark.operators.audio import (
-        decode_wav,
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'"
     )
-
-    with pytest.raises(ValueError, match="truncated header"):
-        decode_wav(b"RIFF\x00\x00")
-    with pytest.raises(ValueError, match="truncated header"):
-        decode_wav(b"RIFF")
-    # non-RIFF stays unsupported
-    with pytest.raises(NotImplementedError, match="unrecognized audio"):
-        decode_wav(b"ID3\x03" + bytes(40))
-    # RIFF but a different form type (AVI ) is unsupported, not corrupt
-    with pytest.raises(NotImplementedError, match="unrecognized RIFF form"):
-        decode_wav(b"RIFF" + (4).to_bytes(4, "little") + b"AVI " + bytes(8))
-
-
-def test_audio_near_dup_planted_pair(spark):
-    """Two WAVs whose sample streams differ by a uniform gain shift
-    have IDENTICAL envelope fingerprints (gradient signs are
-    gain-invariant); a third with a reshaped envelope is no near-dup."""
-    import numpy as np
-
-    from udacity_capstone_data_engineering_spark.operators.audio import (
-        audio_frame_energy,
-        encode_wav,
-    )
-    from udacity_capstone_data_engineering_spark.operators.dedup import (
-        gradient_sign_fingerprint,
-        simhash_near_dup_pairs,
-    )
-
-    base = np.arange(1, 65, dtype=np.int16) * 7  # strictly rising envelope
-    clone = (base * 2).astype(np.int16)  # uniform gain x2
-    # falling envelope: reversed -> every gradient sign flips
-    far = base[::-1].copy()
-    df = spark.createDataFrame(
-        [
-            (1, bytearray(encode_wav(base))),
-            (2, bytearray(encode_wav(clone))),
-            (3, bytearray(encode_wav(far))),
-        ],
-        "doc_id long, payload binary",
-    )
-    fe = audio_frame_energy(df, "payload", "doc_id", frame=4)
-    fp = gradient_sign_fingerprint(fe, "doc_id", "frame_idx", "energy", 15)
-    vals = {r.doc_id: r.fingerprint for r in fp.collect()}
-    assert vals[1] == vals[2] == (1 << 15) - 1  # all-rising, gain-invariant
-    assert vals[3] == 0  # all-falling
-    pairs = {
-        (r.id_a, r.id_b): r.hamming
-        for r in simhash_near_dup_pairs(
-            fp, "doc_id", sig_col="fingerprint", bits=15, bands=3
-        ).collect()
-    }
-    assert pairs == {(1, 2): 0}  # the clone pair, and ONLY it
+    osql = oracle_sql()
+    for name in ("audio_decode_stats", "audio_frame_energy", "audio_silence_flags"):
+        got = catalog[name]
+        cols = sorted(got.columns)
+        spark_rows = sorted(
+            tuple(r[c] for c in cols) for r in got.collect()
+        )
+        oracle_rows = sorted(
+            tuple(r[i] for i in range(len(cols)))
+            for r in con.execute(
+                f"SELECT {', '.join(cols)} FROM ({osql[name]})"
+            ).fetchall()
+        )
+        assert len(spark_rows) > 0, name
+        assert spark_rows == oracle_rows, name

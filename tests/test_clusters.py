@@ -8,7 +8,6 @@ from udacity_capstone_data_engineering_spark.operators.clusters import (
     connected_components,
     dedup_groups,
 )
-from udacity_capstone_data_engineering_spark.queries import _REGISTRY
 
 
 def test_components_basic(spark):
@@ -49,17 +48,3 @@ def test_dedup_groups_singletons(spark):
         4: (2, False),
         5: (5, True),
     }
-
-
-def _q(name):
-    return _REGISTRY[name][0]
-
-
-class TestDedupHistogram:
-    def test_histogram_accounts_for_every_doc(self, catalog, spark, sf_dir):
-        rows = catalog["dedup_cluster_histogram"].collect()
-        n_docs = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
-        assert sum(r["n_docs"] for r in rows) == n_docs
-        for r in rows:
-            assert r["n_docs"] == r["cluster_size"] * r["n_clusters"]
-            assert r["removable_docs"] == r["n_docs"] - r["n_clusters"]

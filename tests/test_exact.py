@@ -7,15 +7,6 @@ from __future__ import annotations
 import math
 
 import numpy as np
-from pyspark.sql import Window
-from pyspark.sql import functions as F
-
-from udacity_capstone_data_engineering_spark.operators import similarity
-from udacity_capstone_data_engineering_spark.operators.similarity import (
-    _cosine_scan,
-    _pairwise_cosine,
-    brute_force_topk,
-)
 
 SCHEMA = "vec_id long, embedding array<float>"
 DIM = 16
@@ -245,495 +236,3 @@ def test_exact_duplicate_ids_score_their_own_vectors(spark, monkeypatch):
     for q in (0, 1, 2):
         nbs = [nb for qq, nb, _, _ in got if qq == q]
         assert len(nbs) == len(set(nbs)) == 2, (q, got)
-
-
-def _slow_topk(emb, id_col, vec_col, k):
-    """The n² expression plan, ranked as ``brute_force_topk`` ranks."""
-    scored = _pairwise_cosine(emb, id_col, vec_col, None)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rnk")
-    )
-
-
-def _clean_corpus(spark, n=60, dim=8):
-    """Deterministic corpus with many near-ties (md5-derived values in
-    a coarse grid, so rounded-cosine ties with id tie-breaks occur)."""
-    import hashlib
-
-    rows = []
-    for i in range(n):
-        vec = []
-        for d in range(dim):
-            h = int(
-                hashlib.md5(f"tkm:{i}:{d}".encode()).hexdigest()[:8], 16
-            )
-            vec.append((h % 17) - 8.0)
-        if all(v == 0 for v in vec):
-            vec[0] = 1.0
-        rows.append((i, vec))
-    return spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>"
-    )
-
-
-def test_topk_kernel_rows_identical_to_pair_plan(spark):
-    emb = _clean_corpus(spark)
-    fast = brute_force_topk(emb, "vec_id", "embedding", k=5)
-    slow = _slow_topk(emb, "vec_id", "embedding", 5)
-    key = lambda r: (r["query_id"], r["rnk"])
-    got = sorted(fast.collect(), key=key)
-    want = sorted(slow.collect(), key=key)
-    assert [tuple(r) for r in got] == [tuple(r) for r in want]
-    # the fast path really engaged (kernel eligible on this corpus)
-    assert _cosine_scan(emb, "vec_id", "embedding", k=5) is not None
-
-
-def test_topk_kernel_sf_corpus_identical(spark, sf_dir):
-    from udacity_capstone_data_engineering_spark.sources.catalog import (
-        load_table,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    fast = brute_force_topk(emb, "vec_id", "embedding", k=5)
-    slow = _slow_topk(emb, "vec_id", "embedding", 5)
-    key = lambda r: (r["query_id"], r["rnk"])
-    got = sorted(fast.collect(), key=key)
-    want = sorted(slow.collect(), key=key)
-    assert [tuple(r) for r in got] == [tuple(r) for r in want]
-
-
-def test_topk_kernel_falls_back_on_degenerate_rows(spark):
-    """Every degenerate shape the n² plan alone once handled — NULL,
-    ragged and zero-norm vectors, string ids, corpora of <= k rows —
-    answers through the scan with the n² plan's rows, NULL cosine
-    included."""
-    shapes = [
-        ([(0, [1.0, 2.0]), (1, None), (2, [0.5, 1.0])], "long", 1),
-        ([(0, [1.0, 2.0]), (1, [1.0]), (2, [0.5, 1.0])], "long", 1),
-        ([(0, [1.0, 2.0]), (1, [0.0, 0.0]), (2, [0.5, 1.0])], "long", 1),
-        ([("a", [1.0, 2.0]), ("b", [0.5, 1.0])], "string", 1),
-        ([(0, [1.0, 2.0]), (1, [0.5, 1.0])], "long", 5),
-    ]
-    key = lambda r: (r["query_id"], r["rnk"])
-    for rows, id_type, k in shapes:
-        emb = spark.createDataFrame(
-            rows, f"vec_id {id_type}, embedding array<double>"
-        )
-        assert _cosine_scan(emb, "vec_id", "embedding", k=k) is not None
-        got = sorted(
-            brute_force_topk(emb, "vec_id", "embedding", k=k).collect(),
-            key=key,
-        )
-        want = sorted(_slow_topk(emb, "vec_id", "embedding", k).collect(), key=key)
-        assert [tuple(r) for r in got] == [tuple(r) for r in want], rows
-        assert len(got) == len(rows) * min(k, len(rows) - 1)
-    # the zero-norm row scores NULL against everything, in both directions
-    zero = spark.createDataFrame(shapes[2][0], "vec_id long, embedding array<double>")
-    out = brute_force_topk(zero, "vec_id", "embedding", k=1).collect()
-    assert len(out) == 3
-    assert {r["query_id"]: r["cosine"] for r in out}[1] is None
-
-
-def test_threshold_kernel_rows_identical(spark, sf_dir):
-    """embedding_dup_pairs' threshold scan emits exactly the pairs the
-    n² expression plan's raw-double filter keeps."""
-    from udacity_capstone_data_engineering_spark.sources.catalog import (
-        load_table,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    fast = _cosine_scan(emb, "vec_id", "embedding", threshold=0.4)
-    assert fast is not None
-    fast = fast.select(
-        "query_id", "neighbor_id", F.round("cosine_raw", 6).alias("cosine")
-    )
-    slow = _pairwise_cosine(emb, "vec_id", "embedding", threshold=0.4)
-    key = lambda r: (r["query_id"], r["neighbor_id"])
-    got = sorted(fast.collect(), key=key)
-    want = sorted(slow.collect(), key=key)
-    assert [tuple(r) for r in got] == [tuple(r) for r in want]
-    assert len(got) > 0
-
-
-def test_threshold_kernel_falls_back_on_degenerate(spark):
-    """A NULL vector pairs with nothing past the threshold on the scan,
-    as on the n² plan."""
-    bad = spark.createDataFrame(
-        [(0, [1.0, 2.0]), (1, None), (2, [0.5, 1.0])],
-        "vec_id long, embedding array<double>",
-    )
-    fast = _cosine_scan(bad, "vec_id", "embedding", threshold=0.4)
-    assert fast is not None
-    got = sorted(
-        map(
-            tuple,
-            fast.select(
-                "query_id", "neighbor_id", F.round("cosine_raw", 6).alias("cosine")
-            ).collect(),
-        )
-    )
-    want = sorted(
-        map(
-            tuple,
-            _pairwise_cosine(
-                bad, "vec_id", "embedding", threshold=0.4
-            ).collect(),
-        )
-    )
-    assert got == want == [(0, 2, 1.0)]
-
-
-def test_topk_kernel_fast_path_in_plan(spark, sf_dir):
-    """The sf corpus takes the kernel: plan shows MapInPandas and no
-    per-pair ArrowEvalPython / nested-loop pair join."""
-    from udacity_capstone_data_engineering_spark.sources.catalog import (
-        load_table,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    plan = brute_force_topk(
-        emb, "vec_id", "embedding", k=5
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
-# ---------------------------------------------------------------------------
-# r11: _unit_vectors Arrow kernel — bit-equal to the old JVM expression
-# ---------------------------------------------------------------------------
-
-
-def _jvm_unit_vectors(emb, id_col, vec_col):
-    """The pre-r11 interpreted-HOF normalize, verbatim."""
-    from udacity_capstone_data_engineering_spark.functions.vectors import (
-        l2_norm,
-    )
-
-    return emb.select(
-        F.col(id_col),
-        F.col(vec_col).cast("array<double>").alias("__v"),
-    ).select(
-        F.col(id_col),
-        F.col("__v"),
-        l2_norm(F.col("__v")).alias("__n"),
-    ).select(
-        F.col(id_col),
-        F.when(
-            F.col("__n") > 0,
-            F.transform(F.col("__v"), lambda x: x / F.col("__n")),
-        ).alias("uv"),
-    )
-
-
-def _uv_repr(rows):
-    # repr distinguishes NULL vs NaN and preserves the double bits via
-    # the shortest round-trip decimal form.
-    return {r[0]: repr(r[1]) for r in rows}
-
-
-def test_unit_vectors_kernel_bit_equal(spark, sf_dir):
-    from udacity_capstone_data_engineering_spark.operators.similarity import (
-        _unit_vectors,
-    )
-    from udacity_capstone_data_engineering_spark.sources.catalog import (
-        load_table,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    old = _uv_repr(_jvm_unit_vectors(emb, "vec_id", "embedding").collect())
-    new = _uv_repr(_unit_vectors(emb, "vec_id", "embedding").collect())
-    assert old == new and len(old) > 0
-
-
-def test_unit_vectors_kernel_degenerate_semantics(spark):
-    """NULL vector / NULL element / zero norm → NULL uv; NaN and ±inf
-    elements propagate exactly as the JVM expression (Spark compares
-    NaN greater than any number, so a NaN norm PASSES the > 0 gate)."""
-    from udacity_capstone_data_engineering_spark.operators.similarity import (
-        _unit_vectors,
-    )
-
-    rows = [
-        (1, [3.0, 4.0]),
-        (2, None),
-        (3, [0.0, 0.0]),
-        (4, [1.0]),
-        (5, []),
-        (6, [float("nan"), 1.0]),
-        (7, [float("inf"), 1.0]),
-        (8, [None, 2.0]),
-        (9, [1.0, 2.0, 3.0]),  # ragged vs row 1/4 — per-length groups
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    old = _uv_repr(_jvm_unit_vectors(df, "vec_id", "embedding").collect())
-    new = _uv_repr(_unit_vectors(df, "vec_id", "embedding").collect())
-    assert old == new
-
-
-def test_unit_vectors_kernel_sliced_batch():
-    """A sliced Arrow batch keeps its ids paired with its own vectors:
-    the list offsets of a slice start past 0 while ``values`` is still
-    the whole child array."""
-    import pyarrow as pa
-
-    from udacity_capstone_data_engineering_spark.operators.similarity import (
-        _normalize_batches,
-    )
-
-    vecs = [[float(i), float(i + 1), 2.0] for i in range(6)]
-    full = pa.RecordBatch.from_arrays(
-        [pa.array(range(6), pa.int64()), pa.array(vecs, pa.list_(pa.float64()))],
-        ["vec_id", "__v"],
-    )
-    (whole,) = _normalize_batches([full])
-    for offset, length in ((2, 3), (5, 1), (6, 0)):
-        (got,) = _normalize_batches([full.slice(offset, length)])
-        assert got.column(0).to_pylist() == list(range(offset, offset + length))
-        assert got.column(1).to_pylist() == (
-            whole.column(1).slice(offset, length).to_pylist()
-        )
-
-
-def test_pairwise_cosine_fast_path_bit_equal(spark):
-    """r7 perf rewrite of the exact-cosine anchors: the unrolled
-    codegen dot + once-per-row squared norms must be BIT-identical to
-    the reference HOF formulation (same left-to-right double
-    association), including the zero-norm -> NULL guard — these
-    queries' sha256 digests are pinned in the committed manifests."""
-    import numpy as np
-
-    from udacity_capstone_data_engineering_spark.functions.vectors import (
-        cosine_similarity,
-        cosine_similarity_presq,
-        dot,
-        dot_unrolled,
-    )
-
-    rng = np.random.default_rng(23)
-    rows = [
-        (int(i), [float(x) for x in rng.normal(0, 1, 7)]) for i in range(80)
-    ]
-    rows.append((80, [0.0] * 7))  # zero-norm -> NULL cosine
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-
-    q = emb.select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qv"),
-        dot("embedding", "embedding").alias("qsq"),
-    )
-    c = emb.select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("cv"),
-        dot("embedding", "embedding").alias("csq"),
-    )
-    joined = q.crossJoin(c).filter(F.col("qid") != F.col("cid"))
-    got = joined.select(
-        "qid",
-        "cid",
-        cosine_similarity_presq(
-            dot_unrolled("qv", "cv", 7), F.col("qsq"), F.col("csq")
-        ).alias("cos"),
-    ).collect()
-    ref = joined.select(
-        "qid", "cid", cosine_similarity("qv", "cv").alias("cos")
-    ).collect()
-    ref_map = {(r["qid"], r["cid"]): r["cos"] for r in ref}
-    assert len(got) == len(ref) == 81 * 80
-    n_null = 0
-    for r in got:
-        expect = ref_map[(r["qid"], r["cid"])]
-        if expect is None:
-            assert r["cos"] is None
-            n_null += 1
-        else:
-            # bit equality, not approx
-            assert r["cos"] == expect, (r["qid"], r["cid"])
-    assert n_null == 2 * 80  # zero vector as query and as neighbor
-
-
-def test_exact_cosine_kernel_bit_equal_and_null_contract(spark):
-    """The exact-cosine block scan (left-to-right accumulation) must be
-    bit-identical to the HOF expression formulation, including
-    zero-norm -> NULL, and its threshold cut must keep exactly the
-    id_a < id_b pairs with a non-NULL cosine at an always-passing
-    threshold."""
-    import numpy as np
-
-    from udacity_capstone_data_engineering_spark.functions.vectors import (
-        cosine_similarity,
-    )
-    from udacity_capstone_data_engineering_spark.operators.similarity import (
-        _cosine_scan,
-    )
-
-    rng = np.random.default_rng(31)
-    rows = [
-        (int(i), [float(x) for x in rng.normal(0, 1, 9)]) for i in range(60)
-    ]
-    rows.append((60, [0.0] * 9))
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-
-    got = {
-        (r["query_id"], r["neighbor_id"]): r["cosine_raw"]
-        for r in _cosine_scan(emb, "vec_id", "embedding").collect()
-    }
-    q = emb.select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"))
-    c = emb.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cv"))
-    ref = (
-        q.crossJoin(c)
-        .filter("qid != cid")
-        .select("qid", "cid", cosine_similarity("qv", "cv").alias("cos"))
-        .collect()
-    )
-    assert len(got) == len(ref) == 61 * 60
-    for r in ref:
-        assert got[(r["qid"], r["cid"])] == r["cos"], (r["qid"], r["cid"])
-
-    ordered = _cosine_scan(
-        emb, "vec_id", "embedding", threshold=float("-inf")
-    ).collect()
-    assert len(ordered) == 60 * 59 // 2  # the zero vector's pairs are NULL
-    assert all(r["query_id"] < r["neighbor_id"] for r in ordered)
-    for r in ordered:
-        assert got[(r["query_id"], r["neighbor_id"])] == r["cosine_raw"]
-
-
-# ---------------------------------------------------------------------------
-# ADVICE r7 (medium): the exact-cosine kernel must never crash on NULL
-# or ragged-dimension vectors — excluded ids score NULL, like the
-# expression path.
-# ---------------------------------------------------------------------------
-
-
-def test_kernel_pairs_degenerate_vectors_null_not_crash(spark):
-    emb = spark.createDataFrame(
-        [
-            (1, [1.0, 0.0]),
-            (2, [0.0, 1.0]),
-            (3, None),  # NULL vector: np.array would raise pre-fix
-            (4, [1.0]),  # ragged short
-            (5, [1.0, 0.0, 3.0]),  # ragged long
-            (6, [0.0, 0.0]),  # zero norm
-        ],
-        "vec_id long, embedding array<double>",
-    )
-    got = {
-        (r.query_id, r.neighbor_id): r.cosine
-        for r in similarity._exact_cosine(
-            emb, "vec_id", "embedding"
-        ).collect()
-    }
-    assert len(got) == 30  # all ordered pairs survive, none dropped
-    assert got[(1, 2)] == 0.0
-    for q, n in got:
-        if q in (3, 4, 5, 6) or n in (3, 4, 5, 6):
-            assert got[(q, n)] is None, (q, n, got[(q, n)])
-
-
-def test_kernel_pairs_all_degenerate_returns_all_null(spark):
-    emb = spark.createDataFrame(
-        [(1, None), (2, [1.0])],
-        "vec_id long, embedding array<double>",
-    )
-    # dim probe hits the first non-null head row; whatever regime runs,
-    # the job must complete with NULL cosines, not crash.
-    rows = similarity._exact_cosine(emb, "vec_id", "embedding").collect()
-    assert {r.cosine for r in rows} == {None}
-
-
-# ---------------------------------------------------------------------------
-# ADVICE r7 (low): dot_unrolled tail-drop — a query vector LONGER than
-# the probed corpus dim must score NULL (zip_with null-padding
-# semantics), never a silently-truncated non-NULL cosine.
-# ---------------------------------------------------------------------------
-
-
-def test_pairwise_cosine_external_queries_longer_vector_nulls(spark):
-    emb = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, [0.0, 1.0])],
-        "vec_id long, embedding array<double>",
-    )
-    queries = spark.createDataFrame(
-        [(10, [1.0, 0.0, 9.0]), (11, [1.0, 0.0])],
-        "vec_id long, embedding array<double>",
-    )
-    got = {
-        (r.query_id, r.neighbor_id): r.cosine
-        for r in similarity._exact_cosine(
-            emb, "vec_id", "embedding", queries=queries
-        ).collect()
-    }
-    # longer-than-dim query: every pair NULL (pre-fix: non-NULL wrong
-    # cosine from the dropped tail)
-    assert got[(10, 1)] is None and got[(10, 2)] is None
-    # conforming query still scores through the unrolled fast path
-    assert got[(11, 1)] == 1.0 and got[(11, 2)] == 0.0
-
-
-# ---------------------------------------------------------------------------
-# ADVICE r7 (low): kernel broadcasts are content-cached and evicted
-# with unpersist — a catalog run no longer accretes one 256 MiB
-# broadcast per anchor invocation.
-# ---------------------------------------------------------------------------
-
-
-def test_kernel_broadcast_reused_and_bounded(spark):
-    emb = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, [0.5, 0.5])],
-        "vec_id long, embedding array<double>",
-    )
-    similarity._KERNEL_BC.clear()
-    similarity._exact_cosine(emb, "vec_id", "embedding").collect()
-    assert len(similarity._KERNEL_BC) == 1
-    (bc1,) = similarity._KERNEL_BC.values()
-    similarity._exact_cosine(emb, "vec_id", "embedding").collect()
-    assert list(similarity._KERNEL_BC.values()) == [bc1]  # reused, not re-broadcast
-    # distinct corpora rotate through the bounded registry
-    for i in range(similarity._KERNEL_BC_MAX + 2):
-        other = spark.createDataFrame(
-            [(1, [1.0, float(i)]), (2, [0.5, 0.5])],
-            "vec_id long, embedding array<double>",
-        )
-        similarity._exact_cosine(other, "vec_id", "embedding").collect()
-    assert len(similarity._KERNEL_BC) <= similarity._KERNEL_BC_MAX
-    similarity._KERNEL_BC.clear()
-
-
-def _sig(df):
-    rows = df.collect()
-    cols = df.columns
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    body = sorted(
-        tuple(
-            (round(r[i], 6) if isinstance(r[i], float) else r[i])
-            for i in order
-        )
-        for r in rows
-    )
-    return [cols[i] for i in order], body
-
-
-def test_cosine_topk_byte_cap_fallback_hash_equal(spark, monkeypatch):
-    """Force BROADCAST_SCORE_MAX_BYTES=0 through embedding_cosine_topk
-    at sf0.01 and assert exact equality with the kernel path (the two
-    regimes are contractually bit-identical; the committed manifest
-    digest pins the kernel side)."""
-    from udacity_capstone_data_engineering_spark.queries import queries
-
-    q = queries()["embedding_cosine_topk"]
-    sf_dir = "/root/testdata/sf0.01"
-    kernel = _sig(q(spark, sf_dir))
-    monkeypatch.setattr(similarity, "BROADCAST_SCORE_MAX_BYTES", 0)
-    fallback_df = q(spark, sf_dir)
-    plan = fallback_df._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, (
-        "past the cap the anchor must run the pure-JVM expression plan"
-    )
-    fallback = _sig(fallback_df)
-    assert kernel[0] == fallback[0]
-    assert kernel[1] == fallback[1]

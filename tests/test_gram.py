@@ -34,24 +34,3 @@ def test_gram_matches_numpy(spark, sf_dir):
         assert g == want[i - 1, j - 1], (i, j)
     # diagonal entries are sums of squares
     assert all(got[(i, i)] >= 0 for i in range(1, d + 1))
-
-
-# ---------------------------------------------------------------------------
-# correlation matrix
-# ---------------------------------------------------------------------------
-
-
-def test_corr_matrix_equals_numpy(catalog, spark, sf_dir):
-    import numpy as np
-
-    rows = load_table(spark, sf_dir, "embeddings").select("embedding").collect()
-    qv = np.floor(
-        np.array([r["embedding"] for r in rows], dtype=np.float64) * 1024 + 0.5
-    )
-    want = np.corrcoef(qv, rowvar=False)
-    got = catalog["embedding_corr_matrix"].collect()
-    d = qv.shape[1]
-    assert len(got) == d * (d - 1) // 2
-    for r in got:
-        assert abs(r["corr"] - want[r["i"] - 1, r["j"] - 1]) < 1e-5, (r["i"], r["j"])
-        assert -1.0 - 1e-9 <= r["corr"] <= 1.0 + 1e-9

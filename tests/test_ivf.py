@@ -6,7 +6,6 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pytest
 
 IVF_PATHS = ("pair_join", "broadcast", "grid")
 
@@ -167,50 +166,3 @@ def test_ivf_scan_past_rerank_cap(spark, monkeypatch):
         assert calls == {"broadcast": int(path == "broadcast"), "grid": 0}
     assert len(got["pair_join"]) == 300 * 5
     assert got["broadcast"] == got["pair_join"]
-
-
-def test_ivf_regimes_identical(spark, sf_dir, monkeypatch):
-    """VERDICT r4 #3: the pair join, the broadcast scan kernel and the
-    cell-packed grid return the same rows, cosines included (same
-    probed cells, exact scoring, same tie rules) — and each call
-    really took the path it names."""
-    from udacity_capstone_data_engineering_spark.sources.catalog import (
-        load_table,
-    )
-
-    got = three_paths(monkeypatch, load_table(spark, sf_dir, "embeddings"))
-    assert got["pair_join"]
-    assert got["broadcast"] == got["pair_join"]
-    assert got["grid"] == got["pair_join"]
-
-
-@pytest.mark.parametrize("path", IVF_PATHS)
-def test_ivf_workload_queries_subset(spark, sf_dir, monkeypatch, path):
-    """The queries= workload hook must return exactly the self-topk
-    rows restricted to the workload's query ids, on each path."""
-    from pyspark.sql import functions as F
-
-    from udacity_capstone_data_engineering_spark.operators.ivf import ivf_topk
-    from udacity_capstone_data_engineering_spark.sources.catalog import (
-        load_table,
-    )
-
-    kw, _calls = ivf_path(monkeypatch, path)
-    emb = load_table(spark, sf_dir, "embeddings")
-    workload = emb.filter(F.col("vec_id") % 7 == 0)
-    got = sorted(
-        tuple(r)
-        for r in ivf_topk(
-            emb, "vec_id", "embedding", k=5, queries=workload, **kw
-        )
-        .select("query_id", "neighbor_id", "rnk")
-        .collect()
-    )
-    want = sorted(
-        tuple(r)
-        for r in ivf_topk(emb, "vec_id", "embedding", k=5, **kw)
-        .filter(F.col("query_id") % 7 == 0)
-        .select("query_id", "neighbor_id", "rnk")
-        .collect()
-    )
-    assert got and got == want

@@ -7,7 +7,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from udacity_capstone_data_engineering_spark.operators.kmeans import (
-    _quantize,
     kmeans_int,
 )
 from udacity_capstone_data_engineering_spark.sources.catalog import load_table
@@ -197,84 +196,3 @@ def test_kmeans_degenerate_inputs(spark, monkeypatch, tmp_path):
         }
         assert flags[200][1] and flags[41][1]  # twins of standing rows
         assert not any(dup for c, dup in flags.values() if c is None)
-
-
-def test_kmeans_assign_regimes_bit_equal(spark, sf_dir):
-    """The assign kernel — the one nearest-centroid path of both k-means
-    regimes and of the SemDeDup screen — equals a pure-Python strict-<
-    argmin over the same 80 centroids. The centroids are corpus
-    vectors, so exact hits (dist 0) occur, and centroid 79 duplicates
-    centroid 0, so every row nearest to it is a tie that must go to
-    the smaller id."""
-    from udacity_capstone_data_engineering_spark.operators.kmeans import (
-        _assign_kernel,
-        _quantize,
-    )
-
-    vecs = load_table(spark, sf_dir, "embeddings")
-    q = _quantize(vecs, "vec_id", "embedding", 1024)
-    cents = [list(r["qv"]) for r in q.orderBy("vid").limit(80).collect()]
-    cents[-1] = list(cents[0])
-    want = {}
-    for r in q.collect():
-        best = None
-        for cid, cv in enumerate(cents):
-            d = sum((a - b) * (a - b) for a, b in zip(r["qv"], cv))
-            if best is None or d < best[0]:
-                best = (d, cid)
-        want[r["vid"]] = (best[1], best[0])
-    got = {
-        r["vid"]: (r["cluster"], r["dist_sq"])
-        for r in _assign_kernel(q, cents, len(cents[0])).collect()
-    }
-    assert got == want
-    assert (0, 0) in got.values()  # the tied exact hit went to centroid 0
-
-
-def test_kmeans_int_kernel_regime_end_to_end(spark, sf_dir, monkeypatch):
-    """kmeans_int at k=24 through the distributed loop (the assign
-    kernel on every iteration and for the final assignment) equals a
-    pure-Python replay of the recurrence."""
-    import math
-
-    from udacity_capstone_data_engineering_spark.operators import kmeans as km
-
-    monkeypatch.setattr(km, "KMEANS_DRIVER_MAX_BYTES", 0)
-    k = 24
-    vecs = load_table(spark, sf_dir, "embeddings")
-    rows = [(r["vec_id"], list(r["embedding"])) for r in vecs.collect()]
-    q = {
-        vid: [math.floor(float(x) * 1024 + 0.5) for x in vec]
-        for vid, vec in rows
-    }
-    cents = [list(q[vid]) for vid in sorted(q)[:k]]
-
-    def assign():
-        out = {}
-        for vid, qv in q.items():
-            best = None
-            for cid, cv in enumerate(cents):
-                d = sum((a - b) * (a - b) for a, b in zip(qv, cv))
-                if best is None or d < best[0]:
-                    best = (d, cid)
-            out[vid] = best
-        return out
-
-    for _ in range(2):
-        a = assign()
-        for cid in range(k):
-            member = [q[vid] for vid, (_, c) in a.items() if c == cid]
-            if member:
-                n = len(member)
-                cents[cid] = [
-                    sum(m[i] for m in member) // n
-                    for i in range(len(cents[cid]))
-                ]
-    want = {vid: (c, d) for vid, (d, c) in assign().items()}
-    got = {
-        r["vec_id"]: (r["cluster"], r["dist_sq"])
-        for r in km.kmeans_int(
-            vecs, "vec_id", "embedding", k=k, iterations=2
-        ).collect()
-    }
-    assert got == want

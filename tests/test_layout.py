@@ -136,79 +136,3 @@ def test_zorder_narrows_per_file_ranges_and_skips(spark, sf_dir):
         or r["v_lo"] > 200.0
     ]
     assert skipped, "no file's stats exclude the predicate box"
-
-
-class TestZOrder:
-    def test_morton_code_matches_python(self, spark):
-        from udacity_capstone_data_engineering_spark.functions.zorder import (
-            morton_code,
-        )
-
-        df = spark.createDataFrame(
-            [(x, y) for x in (0, 1, 5, 255) for y in (0, 3, 128, 255)],
-            "x long, y long",
-        )
-        rows = df.select("x", "y", morton_code("x", "y", bits=8).alias("z")).collect()
-
-        def py_morton(x, y, bits=8):
-            z = 0
-            for i in range(bits):
-                z |= ((x >> i) & 1) << (2 * i)
-                z |= ((y >> i) & 1) << (2 * i + 1)
-            return z
-
-        for r in rows:
-            assert r.z == py_morton(r.x, r.y), (r.x, r.y)
-
-    def test_zorder_layout_prunes_2d_boxes(self, spark, tmp_path):
-        """The point of Z-ordering: after a z-sorted write, a 2-D box
-        predicate overlaps far fewer files (by footer min/max) than
-        under a 1-D sorted layout — file skipping with no engine
-        support beyond sort-before-write."""
-        import pyarrow.parquet as pq
-        from pyspark.sql import functions as F
-
-        from udacity_capstone_data_engineering_spark.functions.zorder import (
-            zorder_by,
-        )
-
-        n, side = 65536, 256
-        base = spark.range(n).select(
-            (F.col("id") % side).alias("x"), (F.col("id") / side).cast("long").alias("y")
-        )
-        linear = str(tmp_path / "linear")
-        zord = str(tmp_path / "zorder")
-        # 1-D layout: globally sorted by x only.
-        base.orderBy("x").coalesce(1).write.option(
-            "maxRecordsPerFile", 4096
-        ).parquet(linear)
-        zorder_by(base, "x", "y", bits=8).coalesce(1).write.option(
-            "maxRecordsPerFile", 4096
-        ).parquet(zord)
-
-        def overlapping_files(path, lo, hi):
-            import glob
-
-            total, hit = 0, 0
-            for f in glob.glob(f"{path}/*.parquet"):
-                md = pq.ParquetFile(f).metadata
-                xmin = min(md.row_group(i).column(0).statistics.min
-                           for i in range(md.num_row_groups))
-                xmax = max(md.row_group(i).column(0).statistics.max
-                           for i in range(md.num_row_groups))
-                ymin = min(md.row_group(i).column(1).statistics.min
-                           for i in range(md.num_row_groups))
-                ymax = max(md.row_group(i).column(1).statistics.max
-                           for i in range(md.num_row_groups))
-                total += 1
-                if not (xmax < lo or xmin > hi or ymax < lo or ymin > hi):
-                    hit += 1
-            return hit, total
-
-        box = (0, 31)  # 1/8 of each axis -> 1/64 of the plane
-        hit_lin, tot_lin = overlapping_files(linear, *box)
-        hit_z, tot_z = overlapping_files(zord, *box)
-        assert tot_lin >= 8 and tot_z >= 8
-        # x-sorted layout: every file spans all y -> only x prunes.
-        # z-order: files are rectangles -> both dims prune.
-        assert hit_z < hit_lin, (hit_z, tot_z, hit_lin, tot_lin)

@@ -137,99 +137,3 @@ def test_grid_shards_law_unchanged():
                     blocks,
                     max(2, -(-n_bytes // cap), floor),
                 )
-
-
-def _lsh_rows(sim, emb, **kw):
-    return sorted(
-        tuple(r)
-        for r in sim.lsh_topk(emb, "vec_id", "embedding", dim=64, k=5, **kw)
-        .collect()
-    )
-
-
-def test_lsh_sharded_regime_matches_kernel(spark, sf_dir):
-    """VERDICT r10 #1: past the broadcast byte cap lsh_topk must route
-    to the sharded grid and return EXACTLY the broadcast scan kernel's
-    rows (cosines included), at three forced caps whose shard counts
-    differ: the parallelism floor, a few shards past it, and about
-    twice it."""
-    from udacity_capstone_data_engineering_spark.operators import (
-        similarity as sim,
-    )
-    from udacity_capstone_data_engineering_spark.sources.catalog import (
-        load_table,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    n = emb.count()
-    par = spark.sparkContext.defaultParallelism
-    total = n * 64 * 8
-    floor = sim._grid_shards(n, par)[1]
-    caps = [-(-total // t) for t in (2, floor + 5, 2 * floor + 9)]
-    shards = [
-        sim._grid_shards(n, par, total, cap, at_least=2)[1] for cap in caps
-    ]
-    assert len(set(shards)) == 3, shards
-    kern = _lsh_rows(sim, emb)
-    saved_cap = sim.BROADCAST_SCORE_MAX_BYTES
-    try:
-        for cap in caps:
-            sim.BROADCAST_SCORE_MAX_BYTES = cap  # force the sharded grid
-            assert _lsh_rows(sim, emb) == kern, (cap, shards)
-    finally:
-        sim.BROADCAST_SCORE_MAX_BYTES = saved_cap
-
-
-def test_lsh_sharded_regime_matches_kernel_with_workload(spark, sf_dir):
-    """Sharded grid with a serving workload (queries ⊂ corpus) must
-    match the broadcast kernel's rows for the same workload."""
-    from udacity_capstone_data_engineering_spark.operators import (
-        similarity as sim,
-    )
-    from udacity_capstone_data_engineering_spark.sources.catalog import (
-        load_table,
-    )
-    from pyspark.sql import functions as F
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") % 7 == 0)
-    kern_rows = _lsh_rows(sim, emb, queries=q)
-    saved_cap = sim.BROADCAST_SCORE_MAX_BYTES
-    try:
-        sim.BROADCAST_SCORE_MAX_BYTES = 16 * 1024  # force sharded grid
-        shard_rows = _lsh_rows(sim, emb, queries=q)
-    finally:
-        sim.BROADCAST_SCORE_MAX_BYTES = saved_cap
-    assert shard_rows == kern_rows
-
-
-class TestAutoLshTables:
-    """The tables auto-knob must follow the MEASURED L ~ n^rho ladder
-    (SCALING.md r8 second decade: 12 tables decayed to 0.8787 recall@5
-    at 200k vectors; 16 -> 0.9400, 20 -> 0.9699), not stay capped at
-    the sf1 operating point."""
-
-    def test_measured_frontier_points(self):
-        from udacity_capstone_data_engineering_spark.operators.similarity import (
-            auto_lsh_tables,
-        )
-
-        assert auto_lsh_tables(500) == 10
-        assert auto_lsh_tables(2_000) == 10
-        assert auto_lsh_tables(4_096) == 12
-        assert auto_lsh_tables(20_000) == 12
-        # the r8 ladder's measured >=0.95 rung at the second decade
-        assert auto_lsh_tables(200_000) == 20
-        # capped where IVF/IVF-PQ take over as the recall-targeted tier
-        assert auto_lsh_tables(2_000_000) == 32
-        assert auto_lsh_tables(100_000_000) == 32
-
-    def test_monotone_nondecreasing(self):
-        from udacity_capstone_data_engineering_spark.operators.similarity import (
-            auto_lsh_tables,
-        )
-
-        sizes = [1, 100, 4_095, 4_096, 19_999, 20_000, 20_001, 50_000,
-                 100_000, 200_000, 500_000, 1_000_000, 5_000_000]
-        vals = [auto_lsh_tables(n) for n in sizes]
-        assert vals == sorted(vals), vals

@@ -219,88 +219,3 @@ def test_hash_split_deterministic_and_proportional(spark, sf_dir):
     s1 = {r.doc_id for r in hash_sample(docs, "doc_id", 0.2, seed=3).collect()}
     s2 = {r.doc_id for r in hash_sample(docs.repartition(5), "doc_id", 0.2, seed=3).collect()}
     assert s1 == s2 and 0 < len(s1) < n
-
-
-class TestStratifiedSample:
-    def test_fractions_and_determinism(self, spark, sf_dir):
-        from udacity_capstone_data_engineering_spark.operators.sampling import (
-            stratified_sample,
-        )
-        from udacity_capstone_data_engineering_spark.sources.catalog import load_table
-
-        docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
-        frs = {"en": 0.5, "es": 0.25}
-        s1 = stratified_sample(docs, "doc_id", "lang", frs, seed=11,
-                               default_fraction=0.05)
-        s2 = stratified_sample(docs.repartition(7), "doc_id", "lang", frs,
-                               seed=11, default_fraction=0.05)
-        ids1 = {r.doc_id for r in s1.collect()}
-        ids2 = {r.doc_id for r in s2.collect()}
-        assert ids1 == ids2, "sample must be partitioning-independent"
-        # Kept fraction per stratum should be in the right ballpark.
-        n_en = docs.filter(F.col("lang") == "en").count()
-        k_en = s1.filter(F.col("lang") == "en").count()
-        if n_en >= 50:
-            assert abs(k_en / n_en - 0.5) < 0.2
-
-    def test_fraction_validation(self, spark, sf_dir):
-        from udacity_capstone_data_engineering_spark.operators.sampling import (
-            stratified_sample,
-        )
-        from udacity_capstone_data_engineering_spark.sources.catalog import load_table
-
-        docs = load_table(spark, sf_dir, "documents")
-        with pytest.raises(ValueError):
-            stratified_sample(docs, "doc_id", "lang", {"en": 1.5})
-
-
-class TestExpectations:
-    def test_null_counts_as_violation(self, spark):
-        from udacity_capstone_data_engineering_spark.qc import check_expectations
-
-        df = spark.createDataFrame(
-            [(1, 10.0), (2, None), (3, -5.0)], "id long, v double"
-        )
-        out = {
-            r.rule: (r.violations, r.n_rows)
-            for r in check_expectations(
-                df,
-                [
-                    ("v_positive", F.col("v") > 0),  # NULL row must count
-                    ("id_not_null", F.col("id").isNotNull()),
-                ],
-            ).collect()
-        }
-        assert out == {"v_positive": (2, 3), "id_not_null": (0, 3)}
-
-
-class TestSaltedJoin:
-    def test_salted_join_equals_plain_join(self, spark, sf_dir):
-        from udacity_capstone_data_engineering_spark.operators.skew import salted_join
-        from udacity_capstone_data_engineering_spark.sources.catalog import load_table
-
-        orders = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_totalprice"
-        )
-        cust = load_table(spark, sf_dir, "customer").select(
-            "c_custkey", "c_mktsegment"
-        ).withColumnRenamed("c_custkey", "o_custkey")
-        plain = orders.join(cust, "o_custkey").groupBy("c_mktsegment").count()
-        salted = (
-            salted_join(orders, cust, "o_custkey", salt=8)
-            .groupBy("c_mktsegment")
-            .count()
-        )
-        assert sorted(map(tuple, plain.collect())) == sorted(
-            map(tuple, salted.collect())
-        )
-
-    def test_salted_left_join_preserves_unmatched(self, spark):
-        from udacity_capstone_data_engineering_spark.operators.skew import salted_join
-
-        left = spark.createDataFrame([(1, "a"), (2, "b")], "k long, lv string")
-        right = spark.createDataFrame([(1, "x")], "k long, rv string")
-        out = salted_join(left, right, "k", salt=4, how="left").collect()
-        assert len(out) == 2
-        unmatched = [r for r in out if r.k == 2][0]
-        assert unmatched.rv is None

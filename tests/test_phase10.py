@@ -8,18 +8,15 @@ import math
 
 from pyspark.sql import functions as F
 
-from udacity_capstone_data_engineering_spark import queries as catalog
+from tests.conftest import physical_plan as _plan
 from udacity_capstone_data_engineering_spark.operators.semdedup import (
     EPS,
     semantic_dedup,
 )
+from udacity_capstone_data_engineering_spark.queries import queries
 from udacity_capstone_data_engineering_spark.sources.catalog import load_table
 
-QUERIES = catalog.queries()
-
-
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+QUERIES = queries()
 
 
 # ---------------------------------------------------------------------------
@@ -27,12 +24,12 @@ def _plan(df) -> str:
 # ---------------------------------------------------------------------------
 
 
-def test_bigram_lm_replay_one_doc(spark, sf_dir):
+def test_bigram_lm_replay_one_doc(catalog, spark, sf_dir):
     """Replay the model in plain Python for one document: same bigram
     count and score (to the final rounding)."""
     out = {
         r["doc_id"]: r
-        for r in QUERIES["bigram_lm_quality"](spark, sf_dir).collect()
+        for r in catalog["bigram_lm_quality"].collect()
     }
     docs = load_table(spark, sf_dir, "documents").collect()
     toks = {r["doc_id"]: r["text"].lower().split() for r in docs}
@@ -63,19 +60,19 @@ def test_bigram_lm_replay_one_doc(spark, sf_dir):
     assert got["avg_logp"] == q / 1e6
 
 
-def test_bigram_lm_covers_every_doc(spark, sf_dir):
-    out = QUERIES["bigram_lm_quality"](spark, sf_dir)
+def test_bigram_lm_covers_every_doc(catalog, spark, sf_dir):
+    out = catalog["bigram_lm_quality"]
     n_docs = load_table(spark, sf_dir, "documents").count()
     assert out.count() == n_docs
     # scores are log-probabilities: strictly negative where defined
     assert out.filter(F.col("avg_logp") >= 0).count() == 0
 
 
-def test_bigram_lm_plan_no_cartesian_single_token_pass(spark, sf_dir):
+def test_bigram_lm_plan_no_cartesian_single_token_pass(catalog):
     """The token-stream-sized relation is reduced to per-doc bigram
     counts before any join: no cartesian, and the only BNLJ is the
     1-row vocabulary broadcast."""
-    plan = _plan(QUERIES["bigram_lm_quality"](spark, sf_dir))
+    plan = _plan(catalog["bigram_lm_quality"])
     assert "CartesianProduct" not in plan
     assert plan.count("BroadcastNestedLoopJoin") == 1
 
@@ -85,10 +82,10 @@ def test_bigram_lm_plan_no_cartesian_single_token_pass(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def test_psi_nonnegative_and_split_counts(spark, sf_dir):
+def test_psi_nonnegative_and_split_counts(catalog, spark, sf_dir):
     """PSI is a symmetrized KL: >= 0 always; per-key period counts sum
     to the table count."""
-    rows = QUERIES["psi_event_drift"](spark, sf_dir).collect()
+    rows = catalog["psi_event_drift"].collect()
     assert rows, "no event types"
     assert all(r["psi"] >= 0 for r in rows)
     total = sum(r["n_a"] + r["n_b"] for r in rows)
@@ -117,12 +114,12 @@ def test_psi_identical_periods_zero(spark):
     assert all(r["psi"] == 0.0 for r in out.collect())
 
 
-def test_psi_single_wide_shuffle(spark, sf_dir):
+def test_psi_single_wide_shuffle(catalog):
     """The event stream is touched by exactly ONE counting aggregation;
     every later exchange operates on the keys x periods x buckets grid.
     Proxy assertion: no exchange in the plan partitions on anything
     containing the raw value column."""
-    plan = _plan(QUERIES["psi_event_drift"](spark, sf_dir))
+    plan = _plan(catalog["psi_event_drift"])
     for frag in plan.split("Exchange hashpartitioning(")[1:]:
         keys = frag.split(")")[0]
         assert "value#" not in keys, keys
@@ -183,10 +180,10 @@ def test_semantic_dedup_injected_twin_is_flagged(spark):
     assert out[3] is False
 
 
-def test_semantic_dedup_pair_join_is_cluster_keyed(spark, sf_dir):
+def test_semantic_dedup_pair_join_is_cluster_keyed(catalog):
     """The pair stage must be an equi-join keyed on the cluster id —
     never a cartesian (the SemDeDup scale property)."""
-    plan = _plan(QUERIES["semantic_dedup_eps"](spark, sf_dir))
+    plan = _plan(catalog["semantic_dedup_eps"])
     assert "CartesianProduct" not in plan
     assert "cluster" in plan.split("SortMergeJoin")[-1][:200] or (
         "cluster" in plan
@@ -198,9 +195,9 @@ def test_semantic_dedup_pair_join_is_cluster_keyed(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def test_jsonl_roundtrip_identity(spark, sf_dir):
+def test_jsonl_roundtrip_identity(catalog, spark, sf_dir):
     got = sorted(
-        tuple(r) for r in QUERIES["jsonl_roundtrip_docs"](spark, sf_dir).collect()
+        tuple(r) for r in catalog["jsonl_roundtrip_docs"].collect()
     )
     want = sorted(
         tuple(r)
@@ -216,12 +213,12 @@ def test_jsonl_roundtrip_identity(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def test_kcore_matches_python_peeling(spark, sf_dir):
+def test_kcore_matches_python_peeling(catalog, spark, sf_dir):
     """Replay simultaneous-removal peeling in plain Python over the
     same support->=2 edge list."""
     from collections import defaultdict
 
-    rows = QUERIES["copurchase_kcore"](spark, sf_dir).collect()
+    rows = catalog["copurchase_kcore"].collect()
     got = {r["part"]: r["core_deg"] for r in rows}
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -293,10 +290,10 @@ def test_kcore_extra_round_is_idempotent(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def test_entropy_replay_one_doc(spark, sf_dir):
+def test_entropy_replay_one_doc(catalog, spark, sf_dir):
     out = {
         r["doc_id"]: r
-        for r in QUERIES["doc_token_entropy"](spark, sf_dir).collect()
+        for r in catalog["doc_token_entropy"].collect()
     }
     docs = load_table(spark, sf_dir, "documents").collect()
     target = min(r["doc_id"] for r in docs)
@@ -317,9 +314,9 @@ def test_entropy_replay_one_doc(spark, sf_dir):
     assert got["entropy"] == -q / 1e6
 
 
-def test_entropy_bounds(spark, sf_dir):
+def test_entropy_bounds(catalog):
     """0 <= H <= ln(n_tokens) for every doc (uniform maximizes)."""
-    rows = QUERIES["doc_token_entropy"](spark, sf_dir).collect()
+    rows = catalog["doc_token_entropy"].collect()
     assert rows
     # tolerance: the 1e-6 output grid plus n x 0.5e-9 quantization slack
     for r in rows:
@@ -370,10 +367,10 @@ def test_weighted_sample_deterministic_and_sized(spark, sf_dir):
     )
 
 
-def test_weighted_sample_biases_toward_long_docs(spark, sf_dir):
+def test_weighted_sample_biases_toward_long_docs(catalog, spark, sf_dir):
     """Length-proportional sampling: mean n_chars of the sample should
     exceed the corpus mean (weights are n_chars)."""
-    sample = QUERIES["weighted_sample_docs"](spark, sf_dir).agg(
+    sample = catalog["weighted_sample_docs"].agg(
         F.avg("n_chars")
     ).collect()[0][0]
     corpus = (
@@ -387,9 +384,9 @@ def test_weighted_sample_biases_toward_long_docs(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def test_orc_roundtrip_identity(spark, sf_dir):
+def test_orc_roundtrip_identity(catalog, spark, sf_dir):
     got = sorted(
-        tuple(r) for r in QUERIES["orc_roundtrip_orders"](spark, sf_dir).collect()
+        tuple(r) for r in catalog["orc_roundtrip_orders"].collect()
     )
     want = sorted(
         tuple(r) for r in load_table(spark, sf_dir, "orders").collect()
@@ -397,10 +394,10 @@ def test_orc_roundtrip_identity(spark, sf_dir):
     assert got == want
 
 
-def test_weighted_sample_is_take_ordered(spark, sf_dir):
+def test_weighted_sample_is_take_ordered(catalog):
     """Top-N must be TakeOrderedAndProject; the only window runs on
     the N survivors (bounded by construction), never the corpus."""
-    plan = _plan(QUERIES["weighted_sample_docs"](spark, sf_dir))
+    plan = _plan(catalog["weighted_sample_docs"])
     assert "TakeOrderedAndProject" in plan
 
 
@@ -476,8 +473,8 @@ def test_incremental_ingest_flags_injected_dups(spark):
     assert out[30] == (False, False, True)
 
 
-def test_incremental_ingest_covers_batch(spark, sf_dir):
-    out = QUERIES["incremental_ingest_dedup"](spark, sf_dir)
+def test_incremental_ingest_covers_batch(catalog, spark, sf_dir):
+    out = catalog["incremental_ingest_dedup"]
     docs = load_table(spark, sf_dir, "documents")
     n_incoming = docs.filter(F.col("doc_id") % 10 == 0).count()
     assert out.count() == n_incoming
@@ -573,7 +570,7 @@ def test_drift_stream_matches_batch_psi(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
-def test_corr_matrix_equals_numpy(spark, sf_dir):
+def test_corr_matrix_equals_numpy(catalog, spark, sf_dir):
     import numpy as np
 
     rows = load_table(spark, sf_dir, "embeddings").select("embedding").collect()
@@ -581,7 +578,7 @@ def test_corr_matrix_equals_numpy(spark, sf_dir):
         np.array([r["embedding"] for r in rows], dtype=np.float64) * 1024 + 0.5
     )
     want = np.corrcoef(qv, rowvar=False)
-    got = QUERIES["embedding_corr_matrix"](spark, sf_dir).collect()
+    got = catalog["embedding_corr_matrix"].collect()
     d = qv.shape[1]
     assert len(got) == d * (d - 1) // 2
     for r in got:
@@ -631,8 +628,8 @@ def test_full_quality_gate_flags_injected_docs(spark, tmp_path):
     assert out[3]["keep"] is False
 
 
-def test_full_quality_gate_consistent_with_branches(spark, sf_dir):
-    out = QUERIES["full_quality_gate"](spark, sf_dir)
+def test_full_quality_gate_consistent_with_branches(catalog, spark, sf_dir):
+    out = catalog["full_quality_gate"]
     bad = out.filter(
         F.col("keep")
         != (
@@ -651,12 +648,12 @@ def test_full_quality_gate_consistent_with_branches(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def test_item_similarity_matches_python(spark, sf_dir):
+def test_item_similarity_matches_python(catalog, spark, sf_dir):
     """Replay Jaccard-top-5 in plain Python over the same baskets."""
     from collections import defaultdict
 
     got = defaultdict(list)
-    for r in QUERIES["item_similarity_jaccard"](spark, sf_dir).collect():
+    for r in catalog["item_similarity_jaccard"].collect():
         got[r["part"]].append((r["other"], r["jaccard"]))
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -689,14 +686,14 @@ def test_item_similarity_matches_python(spark, sf_dir):
         assert sorted(pairs, key=lambda x: (-x[1], x[0])) == want, part
 
 
-def test_item_similarity_plan_group_limit(spark, sf_dir):
-    plan = _plan(QUERIES["item_similarity_jaccard"](spark, sf_dir))
+def test_item_similarity_plan_group_limit(catalog):
+    plan = _plan(catalog["item_similarity_jaccard"])
     assert "WindowGroupLimit" in plan
     assert "CartesianProduct" not in plan
 
 
-def test_ctfidf_shape_and_ranking(spark, sf_dir):
-    rows = QUERIES["cluster_top_terms_ctfidf"](spark, sf_dir).collect()
+def test_ctfidf_shape_and_ranking(catalog):
+    rows = catalog["cluster_top_terms_ctfidf"].collect()
     by_cluster: dict = {}
     for r in rows:
         by_cluster.setdefault(r["cluster"], []).append(r)

@@ -6,17 +6,11 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from udacity_capstone_data_engineering_spark import queries as catalog
+from tests.conftest import physical_plan as _plan
 from udacity_capstone_data_engineering_spark.operators.dedup import (
     simhash,
     simhash_near_dup_pairs,
 )
-
-QUERIES = catalog.queries()
-
-
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
 
 
 # ---------------------------------------------------------------------------
@@ -58,10 +52,10 @@ def test_simhash_pairs_rejects_unsafe_params(spark):
         simhash_near_dup_pairs(df, "id", bits=32, bands=4, max_hamming=4)
 
 
-def test_simhash_pairs_single_shuffle(spark, sf_dir):
+def test_simhash_pairs_single_shuffle(catalog):
     """One exchange for the bucket groupBy, one behind the final
     distinct — no join-driven exchanges of the corpus itself."""
-    plan = _plan(QUERIES["simhash_near_dup_pairs"](spark, sf_dir))
+    plan = _plan(catalog["simhash_near_dup_pairs"])
     assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan
     assert plan.count("Exchange hashpartitioning") <= 3  # tokens agg + bucket + distinct
 
@@ -71,31 +65,31 @@ def test_simhash_pairs_single_shuffle(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def test_q3_filters_pushed_and_topk_no_sort(spark, sf_dir):
-    plan = _plan(QUERIES["tpch_q3_shipping_priority"](spark, sf_dir))
+def test_q3_filters_pushed_and_topk_no_sort(catalog):
+    plan = _plan(catalog["tpch_q3_shipping_priority"])
     assert "TakeOrderedAndProject" in plan  # top-10, not a global sort
     assert "PushedFilters: [IsNotNull(c_mktsegment), EqualTo(c_mktsegment,BUILDING)" in plan
     assert "GreaterThan(l_shipdate" in plan
     assert "BatchEvalPython" not in plan
 
 
-def test_q3_rows_match_duckdb_shape(spark, sf_dir):
-    rows = QUERIES["tpch_q3_shipping_priority"](spark, sf_dir).collect()
+def test_q3_rows_match_duckdb_shape(catalog):
+    rows = catalog["tpch_q3_shipping_priority"].collect()
     assert len(rows) <= 10
     revs = [r.revenue for r in rows]
     assert revs == sorted(revs, reverse=True)
 
 
-def test_q5_fixed_dims_broadcast(spark, sf_dir):
+def test_q5_fixed_dims_broadcast(catalog):
     """region/nation must ride broadcast joins; no cartesian anywhere."""
-    plan = _plan(QUERIES["tpch_q5_local_supplier_volume"](spark, sf_dir))
+    plan = _plan(catalog["tpch_q5_local_supplier_volume"])
     assert plan.count("BroadcastHashJoin") >= 2
     assert "CartesianProduct" not in plan
     assert "PushedFilters: [IsNotNull(r_name), EqualTo(r_name,ASIA)" in plan
 
 
-def test_q5_revenue_positive_per_nation(spark, sf_dir):
-    rows = QUERIES["tpch_q5_local_supplier_volume"](spark, sf_dir).collect()
+def test_q5_revenue_positive_per_nation(catalog):
+    rows = catalog["tpch_q5_local_supplier_volume"].collect()
     assert rows, "ASIA-region year slice should be non-empty"
     assert all(r.revenue > 0 for r in rows)
     assert len({r.n_name for r in rows}) == len(rows)
@@ -106,8 +100,8 @@ def test_q5_revenue_positive_per_nation(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def test_approx_quantiles_within_bound(spark, sf_dir):
-    rows = QUERIES["approx_quantile_report"](spark, sf_dir).collect()
+def test_approx_quantiles_within_bound(catalog):
+    rows = catalog["approx_quantile_report"].collect()
     assert {r.q for r in rows} == {0.5, 0.9, 0.99}
     assert all(r.within_bound for r in rows)
 
@@ -142,10 +136,10 @@ def test_gopher_flags_rules_on_synthetic(spark):
     assert not flags[4].ok_mean_word_len and not flags[4].keep
 
 
-def test_gopher_flags_map_only_plan(spark, sf_dir):
+def test_gopher_flags_map_only_plan(catalog):
     """The quality filter must stay a pure map stage: no key shuffle
     (the only allowed exchange is the small-scan fan-out round-robin),
     no Python evaluation."""
-    plan = _plan(QUERIES["gopher_quality_flags"](spark, sf_dir))
+    plan = _plan(catalog["gopher_quality_flags"])
     assert "Exchange hashpartitioning" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan

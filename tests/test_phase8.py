@@ -1,4 +1,11 @@
-"""Behavioral-analytics catalog rows (`queries/behavioral.py`): funnels, cohorts, sessions, attribution, drift, graph statistics and the sketches over events, each against a Python reference or a hand fixture."""
+"""Phase-8 behavioral-analytics semantics tests: funnel ordering,
+cohort offsets, transition shares, basket pairing, RFM quintiles.
+
+The oracle gate proves value parity with DuckDB on the driver tables;
+these tests pin the SEMANTIC edge cases oracles share by construction
+(a funnel that ignores ordering would still match an
+ordering-ignoring oracle) against hand-built fixtures.
+"""
 
 from __future__ import annotations
 
@@ -6,204 +13,8 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
-from udacity_capstone_data_engineering_spark.queries import _REGISTRY
-from udacity_capstone_data_engineering_spark.queries.behavioral import (
-    _count_triangles_degree_oriented,
-)
-from udacity_capstone_data_engineering_spark.sources.catalog import load_table
-
 from tests.conftest import physical_plan as _plan
-
-
-# ---------------------------------------------------------------------------
-# PSI drift
-# ---------------------------------------------------------------------------
-
-
-def test_psi_nonnegative_and_split_counts(catalog, spark, sf_dir):
-    """PSI is a symmetrized KL: >= 0 always; per-key period counts sum
-    to the table count."""
-    rows = catalog["psi_event_drift"].collect()
-    assert rows, "no event types"
-    assert all(r["psi"] >= 0 for r in rows)
-    total = sum(r["n_a"] + r["n_b"] for r in rows)
-    assert total == load_table(spark, sf_dir, "events").count()
-
-
-def test_psi_identical_periods_zero(spark):
-    """Same distribution in both periods -> PSI exactly 0 after
-    rounding (p == q in every bucket, smoothed or not)."""
-    from udacity_capstone_data_engineering_spark.operators.drift import psi_report
-
-    rows = [
-        (f"u{i}", ts, float(v))
-        for i in range(3)
-        for ts, v in [
-            ("2024-01-02 00:00:00", 10.0),
-            ("2024-01-20 00:00:00", 10.0),
-            ("2024-01-03 00:00:00", 90.0),
-            ("2024-01-21 00:00:00", 90.0),
-        ]
-    ]
-    df = spark.createDataFrame(
-        rows, "k string, ts string, value double"
-    ).select("k", F.col("ts").cast("timestamp").alias("ts"), "value")
-    out = psi_report(df, "k", "ts", "value", "2024-01-16 00:00:00", 25.0, 10)
-    assert all(r["psi"] == 0.0 for r in out.collect())
-
-
-def test_psi_single_wide_shuffle(catalog):
-    """The event stream is touched by exactly ONE counting aggregation;
-    every later exchange operates on the keys x periods x buckets grid.
-    Proxy assertion: no exchange in the plan partitions on anything
-    containing the raw value column."""
-    plan = _plan(catalog["psi_event_drift"])
-    for frag in plan.split("Exchange hashpartitioning(")[1:]:
-        keys = frag.split(")")[0]
-        assert "value#" not in keys, keys
-
-
-# ---------------------------------------------------------------------------
-# k-core
-# ---------------------------------------------------------------------------
-
-
-def test_kcore_matches_python_peeling(catalog, spark, sf_dir):
-    """Replay simultaneous-removal peeling in plain Python over the
-    same support->=2 edge list."""
-    from collections import defaultdict
-
-    rows = catalog["copurchase_kcore"].collect()
-    got = {r["part"]: r["core_deg"] for r in rows}
-
-    li = load_table(spark, sf_dir, "lineitem")
-    items = {(r["l_orderkey"], r["l_partkey"]) for r in
-             li.select("l_orderkey", "l_partkey").distinct().collect()}
-    per_order = defaultdict(list)
-    for ok, pk in items:
-        per_order[ok].append(pk)
-    pair_count = defaultdict(int)
-    for parts in per_order.values():
-        parts = sorted(parts)
-        for i, a in enumerate(parts):
-            for b in parts[i + 1:]:
-                pair_count[(a, b)] += 1
-    adj = defaultdict(set)
-    for (a, b), c in pair_count.items():
-        if c >= 2:
-            adj[a].add(b)
-            adj[b].add(a)
-    for _ in range(10):
-        low = [v for v, nb in adj.items() if len(nb) < 3]
-        for v in low:
-            for u in list(adj[v]):
-                adj[u].discard(v)
-            del adj[v]
-        for v in [v for v, nb in adj.items() if not nb]:
-            del adj[v]
-    want = {v: len(nb) for v, nb in adj.items()}
-    assert got == want
-
-
-def test_kcore_extra_round_is_idempotent(spark, sf_dir):
-    """One more peel past the registered depth changes nothing — the
-    registered output IS the 3-core at this sf."""
-    from udacity_capstone_data_engineering_spark.operators.kcore import (
-        kcore_fixed,
-    )
-    from udacity_capstone_data_engineering_spark.queries.behavioral import (
-        _KCORE_K,
-        _KCORE_ROUNDS,
-    )
-
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey"
-    ).distinct()
-    a, b = li.alias("a"), li.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(F.col("a.l_partkey").alias("pa"), F.col("b.l_partkey").alias("pb"))
-        .agg(F.count(F.lit(1)).alias("c"))
-        .filter(F.col("c") >= 2)
-    )
-    sym = pairs.select(F.col("pa").alias("src"), F.col("pb").alias("dst")).union(
-        pairs.select(F.col("pb").alias("src"), F.col("pa").alias("dst"))
-    )
-    at = sorted(map(tuple, kcore_fixed(sym, _KCORE_K, _KCORE_ROUNDS).collect()))
-    plus = sorted(
-        map(tuple, kcore_fixed(sym, _KCORE_K, _KCORE_ROUNDS + 1).collect())
-    )
-    assert at == plus
-
-
-def test_kcore_plan_edge_list_semi_joins(spark, sf_dir):
-    """One peel round must filter edges with TWO LEFT-SEMI joins and
-    no cartesian. (The registered query's final plan hides the rounds
-    behind per-round localCheckpoints, so the round is inspected
-    directly.)"""
-    from udacity_capstone_data_engineering_spark.operators.kcore import (
-        _peel_once,
-    )
-
-    li = load_table(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("src"), F.col("l_partkey").alias("dst")
-    )
-    plan = _plan(_peel_once(li, 3))
-    assert "CartesianProduct" not in plan
-    assert plan.count("LeftSemi") >= 2
-
-
-# ---------------------------------------------------------------------------
-# item similarity + c-TF-IDF
-# ---------------------------------------------------------------------------
-
-
-def test_item_similarity_matches_python(catalog, spark, sf_dir):
-    """Replay Jaccard-top-5 in plain Python over the same baskets."""
-    from collections import defaultdict
-
-    got = defaultdict(list)
-    for r in catalog["item_similarity_jaccard"].collect():
-        got[r["part"]].append((r["other"], r["jaccard"]))
-
-    li = load_table(spark, sf_dir, "lineitem")
-    items = {(r["l_orderkey"], r["l_partkey"]) for r in
-             li.select("l_orderkey", "l_partkey").distinct().collect()}
-    baskets = defaultdict(set)
-    for ok, pk in items:
-        baskets[pk].add(ok)
-    co = defaultdict(int)
-    per_order = defaultdict(list)
-    for ok, pk in items:
-        per_order[ok].append(pk)
-    for parts in per_order.values():
-        parts = sorted(parts)
-        for i, a in enumerate(parts):
-            for b in parts[i + 1:]:
-                co[(a, b)] += 1
-    neigh = defaultdict(list)
-    for (a, b), c in co.items():
-        den = len(baskets[a]) + len(baskets[b]) - c
-        num = c * 10**9
-        half = den * 1000
-        t = 2 * num + half
-        q = (t - (((t % (2 * half)) + 2 * half) % (2 * half))) // (2 * half)
-        j = q / 1e6
-        neigh[a].append((b, j))
-        neigh[b].append((a, j))
-    for part, pairs in got.items():
-        want = sorted(neigh[part], key=lambda x: (-x[1], x[0]))[:5]
-        assert sorted(pairs, key=lambda x: (-x[1], x[0])) == want, part
-
-
-def test_item_similarity_plan_group_limit(catalog):
-    plan = _plan(catalog["item_similarity_jaccard"])
-    assert "WindowGroupLimit" in plan
-    assert "CartesianProduct" not in plan
+from udacity_capstone_data_engineering_spark.queries import _REGISTRY
 
 
 def _q(name):
@@ -617,6 +428,16 @@ class TestSessionPaths:
             assert total_paths == total_sessions
 
 
+class TestDedupHistogram:
+    def test_histogram_accounts_for_every_doc(self, catalog, spark, sf_dir):
+        rows = catalog["dedup_cluster_histogram"].collect()
+        n_docs = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
+        assert sum(r["n_docs"] for r in rows) == n_docs
+        for r in rows:
+            assert r["n_docs"] == r["cluster_size"] * r["n_clusters"]
+            assert r["removable_docs"] == r["n_docs"] - r["n_clusters"]
+
+
 class TestConversionLag:
     def test_percentiles_match_python_reference(self, catalog, spark, sf_dir):
         rows = {r["pctl"]: r["lag_seconds"] for r in
@@ -774,130 +595,3 @@ class TestRFM:
         by_recency = sorted(rows, key=lambda r: (r["recency_days"], r["custkey"]))
         assert by_recency[0]["r_score"] == 5
         assert by_recency[-1]["r_score"] == 1
-
-
-def _star_fixture(spark):
-    """A skewed star whose hub id sits MID-RANGE: id orientation then
-    gives the hub both in- and out-edges, so wedge enumeration at the
-    hub goes quadratic (indeg·outdeg ≈ (d/2)²); degree orientation
-    points every hub edge INWARD and kills those wedges. Two closing
-    edges make exactly two triangles."""
-    hub = 20
-    edges = [(i, hub) for i in range(20)] + [(hub, j) for j in range(21, 42)]
-    edges += [(1, 21), (2, 22)]  # close triangles (1,20,21), (2,20,22)
-    df = spark.createDataFrame(edges, "pa long, pb long")
-    deg = (
-        df.select(F.col("pa").alias("node"))
-        .unionAll(df.select(F.col("pb").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("degree"))
-    )
-    return df, deg
-
-
-def _id_oriented(edges):
-    """The pre-round-4 orientation: canonical pa < pb as-is."""
-    return edges.select(
-        F.col("pa").alias("src"), F.col("pb").alias("dst")
-    )
-
-
-def _degree_oriented(edges, deg):
-    da = deg.select(F.col("node").alias("pa"), F.col("degree").alias("__da"))
-    db = deg.select(F.col("node").alias("pb"), F.col("degree").alias("__db"))
-    e = edges.join(da, "pa").join(db, "pb")
-    lower = (F.col("__da") < F.col("__db")) | (
-        (F.col("__da") == F.col("__db")) & (F.col("pa") < F.col("pb"))
-    )
-    return e.select(
-        F.when(lower, F.col("pa")).otherwise(F.col("pb")).alias("src"),
-        F.when(lower, F.col("pb")).otherwise(F.col("pa")).alias("dst"),
-    )
-
-
-def _wedges(directed):
-    e1, e2 = directed.alias("e1"), directed.alias("e2")
-    return e1.join(e2, F.col("e1.dst") == F.col("e2.src")).count()
-
-
-def _triangles(directed):
-    e1, e2, e3 = directed.alias("e1"), directed.alias("e2"), directed.alias("e3")
-    return (
-        e1.join(e2, F.col("e1.dst") == F.col("e2.src"))
-        .join(
-            e3,
-            (F.col("e3.src") == F.col("e1.src"))
-            & (F.col("e3.dst") == F.col("e2.dst")),
-        )
-        .count()
-    )
-
-
-def test_degree_orientation_drops_skewed_wedges_same_count(spark):
-    edges, deg = _star_fixture(spark)
-    by_id = _id_oriented(edges)
-    by_deg = _degree_oriented(edges, deg)
-    # same triangles either way (any total vertex order -> DAG with
-    # exactly one directed copy per triangle) ...
-    assert _triangles(by_id) == 2
-    assert _triangles(by_deg) == 2
-    assert (
-        _count_triangles_degree_oriented(edges, deg).collect()[0]["value"] == 2
-    )
-    # ... but the hub's quadratic wedge set exists only under the id
-    # orientation (indeg·outdeg = 20·21 at the hub + the leaf wedges)
-    w_id, w_deg = _wedges(by_id), _wedges(by_deg)
-    assert w_id >= 20 * 21
-    assert w_deg < 20
-    assert w_deg < w_id
-
-
-def test_approx_distinct_users_error_bound(catalog):
-    """|approx − exact| / exact ≤ 3·rsd per event_type.  The query
-    computes both columns side by side (rsd pinned 0.02 in the query),
-    so the bound is checked on its own output — 3 standard errors is
-    the standard HLL++ confidence band."""
-    rows = catalog["approx_distinct_users"].collect()
-    assert rows, "no event types profiled"
-    for r in rows:
-        exact = r.exact_users
-        assert exact > 0, r.event_type
-        rel_err = abs(r.approx_users - exact) / exact
-        assert rel_err <= 3 * 0.02, (
-            f"{r.event_type}: approx {r.approx_users} vs exact {exact} "
-            f"(rel err {rel_err:.4f} > 3*rsd)"
-        )
-
-
-def test_mad_outliers_fixture(spark):
-    """Hand fixture: one wild outlier among tame values — the fence
-    must flag exactly it, and the mean-dragging pathology must not
-    move the median/MAD."""
-    from udacity_capstone_data_engineering_spark.queries.behavioral import (
-        event_value_outliers_mad,
-    )
-
-    # monkeypatch load_table via a temp parquet dir shaped like events
-    import tempfile
-
-    vals = [10.0, 11.0, 12.0, 13.0, 14.0, 15.0, 16.0, 1000.0]
-    df = spark.createDataFrame(
-        [(i, "click", v, "2024-01-01 00:00:00") for i, v in enumerate(vals)],
-        "event_id long, event_type string, value double, ts_s string",
-    ).select(
-        "event_id",
-        "event_type",
-        "value",
-        F.col("ts_s").cast("timestamp").alias("ts"),
-    )
-    d = tempfile.mkdtemp(prefix="mad_fixture_")
-    df.write.mode("overwrite").parquet(f"{d}/events.parquet")
-    out = {
-        r["event_type"]: r
-        for r in event_value_outliers_mad(spark, d).collect()
-    }
-    row = out["click"]
-    assert row["n_events"] == 8
-    assert row["median"] == 13.0  # lower median of 8 values
-    assert row["mad"] == 2.0  # |10..1000 - 13| sorted: 0,1,1,2,2,3,3,987
-    assert row["n_outliers"] == 1  # only the 1000.0

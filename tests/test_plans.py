@@ -510,109 +510,3 @@ def test_lsh_kernel_regime_plan_shape(spark, sf_dir):
         f"expected <=1 shuffle in kernel-regime final plan, saw "
         f"{n_shuffles}:\n{final}"
     )
-
-
-def test_inverted_index_group_limit_pushdown_both_levels(catalog):
-    """The min-K tournament must get WindowGroupLimit at BOTH window
-    levels (partial+final at the outer one), and no window may run
-    unpartitioned."""
-    plan = _plan(catalog["inverted_index_postings"])
-    assert plan.count("WindowGroupLimit") >= 3  # inner + outer partial/final
-    assert "SinglePartition" not in plan
-
-
-def test_countmin_fanout_after_distinct_reduction(catalog):
-    """The depth-fold Generate (posexplode) must sit ABOVE the per-key
-    aggregate — occurrences are reduced to distinct keys before the
-    x4 fan-out — and the grid reduction is a paired partial/final
-    HashAggregate."""
-    plan = _plan(catalog["token_countmin_sketch"])
-    # the depth-fold fan-out is the posexplode Generate (the plain
-    # "Generate explode" lower down is the tokenizer, not the fan-out)
-    gen = plan.index("Generate posexplode")
-    assert "partial_sum" in plan
-    # the per-key exact count shuffles on (salt-grouping expr, key) and
-    # must sit BELOW the fan-out: later in the top-down plan string
-    key_agg = plan.index("Exchange hashpartitioning(_groupingexpression")
-    assert gen < key_agg, "fan-out must consume the reduced per-key relation"
-
-
-def test_gram_matrix_single_wide_exchange(catalog):
-    """Map-only outer products: exactly ONE hashpartitioning exchange
-    (the d^2-cell aggregation); no join anywhere."""
-    plan = _plan(catalog["embedding_gram_matrix"])
-    assert plan.count("Exchange hashpartitioning") == 1
-    assert "Join" not in plan
-
-
-def test_repetition_no_raw_strings_in_shuffle_keys(catalog):
-    """Branch shuffles key on (doc_id, 60-bit hash): every
-    hashpartitioning that carries a branch key uses the bigint hash
-    columns (lh/gh), never the raw line/gram strings."""
-    plan = _plan(catalog["doc_repetition_flags"])
-    for frag in plan.split("Exchange hashpartitioning(")[1:]:
-        keys = frag.split(")")[0]
-        assert "__line" not in keys and "__g#" not in keys, keys
-
-
-def test_bm25_topk_is_take_ordered(catalog):
-    plan = _plan(catalog["bm25_topk_docs"])
-    assert "TakeOrderedAndProject(limit=50" in plan
-    assert "CartesianProduct" not in plan
-
-
-def test_runtime_bloom_filter_guards_beyond_broadcast_decontam(spark, tmp_path):
-    """The 100 TB decontam regime (r7): at test scale the bench-gram
-    side of `decontam_ngram_overlap` broadcasts, so the corpus stream
-    is filtered map-side for free. Once the benchmark gram set outgrows
-    the broadcast threshold the join becomes a shuffle join — and the
-    engine's answer there is Catalyst's RUNTIME BLOOM FILTER injection
-    (`spark.sql.optimizer.runtime.bloomFilter.enabled`, on by default),
-    which builds a bloom filter from the creation side and injects a
-    `might_contain` prefilter into the corpus scan, exactly the
-    hand-rolled bloom-prefilter pattern but optimizer-owned. This test
-    pins that the knob fires on the decontam join shape (big gram
-    stream ⋈ selectively-filtered small side) and that the prefiltered
-    plan returns identical results. The size thresholds are lowered to
-    reproduce the >10 GB-scan regime at fixture scale."""
-    big_p = str(tmp_path / "grams_big")
-    small_p = str(tmp_path / "grams_small")
-    spark.range(0, 200_000).selectExpr(
-        "id AS doc_id", "xxhash64(cast(id % 5000 AS string)) AS h"
-    ).write.parquet(big_p)
-    spark.range(0, 50_000).selectExpr(
-        "xxhash64(cast(id AS string)) AS h", "id % 100 AS bench_part"
-    ).write.parquet(small_p)
-
-    def run_join():
-        corpus = spark.read.parquet(big_p)
-        bench = (
-            spark.read.parquet(small_p)
-            .filter("bench_part = 3")
-            .select("h")
-        )
-        return corpus.join(bench, "h")
-
-    baseline = run_join().count()
-    overrides = {
-        "spark.sql.autoBroadcastJoinThreshold": "-1",
-        "spark.sql.optimizer.runtime.bloomFilter"
-        ".applicationSideScanSizeThreshold": "0",
-        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": (
-            "100MB"
-        ),
-    }
-    saved = {k: spark.conf.get(k) for k in overrides}
-    try:
-        for k, v in overrides.items():
-            spark.conf.set(k, v)
-        j = run_join()
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "might_contain" in plan, (
-            "runtime bloom filter was not injected on the shuffle-join "
-            "decontam shape"
-        )
-        assert j.count() == baseline
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)

@@ -7,19 +7,6 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pytest
-from pyspark.sql import functions as F
-
-from udacity_capstone_data_engineering_spark.operators import pq as pqmod
-from udacity_capstone_data_engineering_spark.operators.pq import (
-    fit_pq_codebooks,
-    ivfpq_topk,
-    pq_topk,
-    probe_fraction_for_recall,
-)
-from udacity_capstone_data_engineering_spark.operators.similarity import (
-    brute_force_topk,
-)
 
 SCHEMA = "vec_id long, embedding array<float>"
 DIM = 16
@@ -120,272 +107,3 @@ def test_pq_degenerate_inputs(spark, tmp_path):
         assert got == grid[name], name
         assert len(got) == 5 * len(clean), name
         assert not {2002, 2004} & {i for r in got for i in r[:2]}, name
-
-
-def _toy_inverted_file(seed=7, dim=8, m=2, ksub=4, ncells=5, n=200):
-    rng = np.random.default_rng(seed)
-    books = rng.normal(size=(m, ksub, dim // m))
-    centers = rng.normal(size=(ncells, dim))
-    ids = np.arange(n, dtype=np.int64)
-    cell_ids = [np.sort(ids[ids % ncells == c]) for c in range(ncells)]
-    cell_codes = [
-        rng.integers(0, ksub, size=(len(ci), m)).astype(np.uint8)
-        for ci in cell_ids
-    ]
-    queries = rng.normal(size=(20, dim))
-    return queries, centers, books, cell_ids, cell_codes
-
-
-def test_cell_major_compaction_lossless():
-    """compact_elems=1 (compaction after every chunk) must return the
-    EXACT same per-query candidate id sequences as an unbounded
-    accumulation — the compaction key is the final merge key, so
-    dropping beaten partials mid-scan is lossless (ADVICE r10)."""
-    from udacity_capstone_data_engineering_spark.operators.pq import (
-        _adc_payload,
-        _cell_major_scan,
-    )
-
-    q, centers, books, cell_ids, cell_codes = _toy_inverted_file()
-    base = _cell_major_scan(
-        q, centers, _adc_payload(books), cell_ids, cell_codes, nprobe=3,
-        rerank=7, compact_elems=10**12,
-    )
-    tiny = _cell_major_scan(
-        q, centers, _adc_payload(books), cell_ids, cell_codes, nprobe=3,
-        rerank=7, compact_elems=1,
-    )
-    assert len(base) == len(tiny) == len(q)
-    for b, t in zip(base, tiny):
-        assert np.array_equal(b, t)
-
-
-def test_cell_major_compaction_bounds_accumulation():
-    """The compacted floor is nq·rerank: with compact_elems just above
-    it, no intermediate partial list may exceed floor + one chunk's
-    emission. Asserted by monkeypatching the compactor to record
-    input sizes."""
-    from udacity_capstone_data_engineering_spark.operators import pq
-
-    q, centers, books, cell_ids, cell_codes = _toy_inverted_file()
-    rerank = 7
-    floor = len(q) * rerank
-    seen = []
-    real = pq._compact_candidate_partials
-
-    def spy(qpos, cids, cscores, nq, rr):
-        seen.append(len(qpos))
-        return real(qpos, cids, cscores, nq, rr)
-
-    pq._compact_candidate_partials, orig = spy, real
-    try:
-        pq._cell_major_scan(
-            q, centers, pq._adc_payload(books), cell_ids, cell_codes,
-            nprobe=3, rerank=rerank, compact_elems=floor,
-        )
-    finally:
-        pq._compact_candidate_partials = orig
-    assert seen, "compaction never ran"
-    # worst pre-compaction size: the floor plus one cell-chunk emission
-    # (nq queries × rerank each)
-    assert max(seen) <= floor + floor
-
-
-def test_compact_candidate_partials_matches_bruteforce():
-    from udacity_capstone_data_engineering_spark.operators.pq import (
-        _compact_candidate_partials,
-    )
-
-    rng = np.random.default_rng(3)
-    nq, rerank = 6, 4
-    qpos = rng.integers(0, nq, size=300).astype(np.int64)
-    cids = rng.permutation(300).astype(np.int64)
-    scores = np.round(rng.normal(size=300), 1)  # force score ties
-    cq, ci, cs = _compact_candidate_partials(qpos, cids, scores, nq, rerank)
-    for qi in range(nq):
-        mask = qpos == qi
-        rows = sorted(
-            zip(-scores[mask], cids[mask])
-        )[:rerank]
-        got = ci[cq == qi]
-        assert np.array_equal(got, np.array([r[1] for r in rows]))
-        assert np.array_equal(
-            cs[cq == qi], np.array([-r[0] for r in rows])
-        )
-
-
-def test_pack_cells_to_shards_caps_and_splits():
-    """r11: packed shards must respect the byte cap (hot cells split
-    first), cover every (cell, sub) piece exactly once, and be
-    deterministic."""
-    from udacity_capstone_data_engineering_spark.operators.pq import (
-        _pack_cells_to_shards,
-    )
-
-    counts = {0: 100, 1: 3, 2: 50, 3: 900, 4: 1}
-    row_bytes, cap = 16, 1024  # 64 rows per cap
-    rows, n_shards, nsub = _pack_cells_to_shards(counts, row_bytes, cap)
-    assert rows == _pack_cells_to_shards(counts, row_bytes, cap)[0]
-    # hot cells split into ceil(bytes/cap) pieces
-    assert nsub[3] == -(-900 * 16 // 1024) and nsub[1] == 1
-    assert {(c, j) for c, j, _s in rows} == {
-        (c, j) for c in counts for j in range(nsub[c])
-    }
-    # per-shard packed bytes stay <= cap (per-piece estimate)
-    loads: dict[int, int] = {}
-    for c, j, s in rows:
-        per_piece = -(-counts[c] // nsub[c]) * row_bytes
-        loads[s] = loads.get(s, 0) + per_piece
-    assert all(v <= cap for v in loads.values())
-    assert n_shards == len(loads)
-
-
-def _rows(df):
-    return sorted(
-        (r.query_id, r.neighbor_id, round(r.cosine, 9), r.rnk)
-        for r in df.collect()
-    )
-
-
-def test_pq_sharded_path_matches_broadcast(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    want = _rows(pq_topk(emb, "vec_id", "embedding", dim=64, k=5))
-    # 500 vectors x 16 B = 8 kB index; a 1 kB cap hash-splits the one
-    # cell into byte-capped pieces, one per shard
-    got = _rows(
-        pq_topk(
-            emb, "vec_id", "embedding", dim=64, k=5, max_broadcast_bytes=1024
-        )
-    )
-    assert got == want
-
-
-def test_ivfpq_sharded_path_matches_broadcast(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    kw = dict(dim=64, k=5, n_centroids=16, nprobe=12)
-    want = _rows(ivfpq_topk(emb, "vec_id", "embedding", **kw))
-    got = _rows(
-        ivfpq_topk(
-            emb, "vec_id", "embedding", max_broadcast_bytes=1024, **kw
-        )
-    )
-    assert got == want
-
-
-def test_ivfpq_subsharded_hot_cells_match_broadcast(spark, sf_dir):
-    """ADVICE r4: a cap smaller than single cells forces the hot-cell
-    hash-SPLIT (nsub > 1 for every populated cell at cap=64 B — cells
-    at 500 vectors / 16 cells hold ~31 rows ≈ 500 B of codes); results
-    must still equal the broadcast kernel bit-for-bit."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    kw = dict(dim=64, k=5, n_centroids=16, nprobe=12)
-    want = _rows(ivfpq_topk(emb, "vec_id", "embedding", **kw))
-    got = _rows(
-        ivfpq_topk(emb, "vec_id", "embedding", max_broadcast_bytes=64, **kw)
-    )
-    assert got == want
-
-
-def test_adc_chunked_tournament_matches_one_shot(monkeypatch):
-    rng = np.random.default_rng(7)
-    n, m, ksub, nq, take = 1000, 8, 16, 37, 50
-    ids = np.sort(rng.choice(10_000, size=n, replace=False)).astype(np.int64)
-    codes = rng.integers(0, ksub, size=(n, m)).astype(np.uint8)
-    luts = [rng.normal(size=(nq, ksub)) for _ in range(m)]
-    # force duplicate scores so the id tie rule is actually exercised
-    for lut in luts:
-        lut[:, ksub // 2 :] = lut[:, : ksub // 2]
-
-    def one_shot():
-        scores = np.zeros((nq, n))
-        for s in range(m):
-            scores += luts[s][:, codes[:, s]]
-        top = np.argsort(-scores, axis=1, kind="stable")[:, :take]
-        return ids[top], np.take_along_axis(scores, top, axis=1)
-
-    want_i, want_s = one_shot()
-    # flat PQ is one-cell IVF-PQ: a single zero centroid probed by
-    # every query (nprobe=1) must yield the one-shot ids too
-    x = rng.normal(size=(nq, m * 2))
-    books = rng.normal(size=(m, ksub, 2))
-    books[:, ksub // 2 :] = books[:, : ksub // 2]
-    cell_luts = pqmod._query_luts(x, books)
-    scores = np.zeros((nq, n))
-    for s in range(m):
-        scores += cell_luts[s][:, codes[:, s]]
-    want_cell = ids[np.argsort(-scores, axis=1, kind="stable")[:, :take]]
-    for chunk_elems in (10_000_000, 9_000, 1_000):
-        monkeypatch.setattr(pqmod, "ADC_CHUNK_ELEMS", chunk_elems)
-        got_i, got_s = pqmod._adc_top_block(luts, ids, codes, take)
-        assert np.array_equal(got_i, want_i), chunk_elems
-        assert np.array_equal(got_s, want_s), chunk_elems
-        got_cell = pqmod._cell_major_scan(
-            x, np.zeros((1, m * 2)), pqmod._adc_payload(books), [ids],
-            [codes], 1, take,
-        )
-        assert np.array_equal(np.vstack(got_cell), want_cell), chunk_elems
-
-
-def test_fit_pq_codebooks_empty_corpus(spark):
-    empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
-    books = fit_pq_codebooks(empty, "embedding", dim=64, m=8, ksub=256)
-    assert books.shape == (8, 1, 8) and not books.any()
-    assert pq_topk(empty, "vec_id", "embedding", dim=64, k=5).count() == 0
-
-
-def test_probe_fraction_for_recall_curve():
-    assert probe_fraction_for_recall(None) == 0.25
-    assert probe_fraction_for_recall(0.5) == 0.25
-    assert probe_fraction_for_recall(0.9) == 0.75
-    assert probe_fraction_for_recall(0.99) == 0.875
-    # monotone: a tighter target never probes fewer cells
-    fracs = [probe_fraction_for_recall(t) for t in (0.5, 0.7, 0.85, 0.9, 0.99)]
-    assert fracs == sorted(fracs)
-
-
-def test_auto_knob_ivf_and_ivfpq_recall(spark, sf_dir):
-    from udacity_capstone_data_engineering_spark.operators.ivf import ivf_topk
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    e = {
-        (r.query_id, r.neighbor_id)
-        for r in brute_force_topk(emb, "vec_id", "embedding", k=5).collect()
-    }
-    for name, approx in (
-        ("ivf_auto", ivf_topk(emb, "vec_id", "embedding", k=5)),
-        ("ivfpq_auto", ivfpq_topk(emb, "vec_id", "embedding", dim=64, k=5)),
-    ):
-        a = {(r.query_id, r.neighbor_id) for r in approx.collect()}
-        recall = len(e & a) / len(e)
-        assert recall >= 0.9, f"{name} recall {recall} below the 0.9 target"
-
-
-# ---------------------------------------------------------------------------
-# Round 8: pq_topk queries= workload hook (parity with LSH/IVF/IVF-PQ)
-# ---------------------------------------------------------------------------
-
-
-@pytest.mark.parametrize("cap", [None, 1000])
-def test_pq_topk_query_workload_equals_full_run_subset(spark, sf_dir, cap):
-    # The per-query ADC pipeline is independent of other queries and
-    # the fit is seeded, so a workload run must reproduce exactly the
-    # full self-run's rows for those queries — in BOTH the broadcast
-    # regime (cap=None) and the sharded cogroup grid (cap=1000 forces
-    # sharding).
-    from udacity_capstone_data_engineering_spark.operators.pq import pq_topk
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    sub = emb.filter(F.col("vec_id") % 5 == 0)
-    kw = {} if cap is None else {"max_broadcast_bytes": cap}
-    full = {
-        (r.query_id, r.neighbor_id, round(r.cosine, 9), r.rnk)
-        for r in pq_topk(emb, "vec_id", "embedding", dim=64, k=5, **kw).collect()
-        if r.query_id % 5 == 0
-    }
-    got = {
-        (r.query_id, r.neighbor_id, round(r.cosine, 9), r.rnk)
-        for r in pq_topk(
-            emb, "vec_id", "embedding", dim=64, k=5, queries=sub, **kw
-        ).collect()
-    }
-    assert full == got and len(got) > 0

@@ -8,8 +8,6 @@ from udacity_capstone_data_engineering_spark.operators.repetition import (
     repetition_flags,
 )
 
-from tests.conftest import physical_plan as _plan
-
 
 def _run(spark, rows):
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
@@ -75,42 +73,3 @@ def test_threshold_boundary_integer_exact(spark):
     got = _run(spark, [(8, "\n".join(lines))])[8]
     assert got["dup_line_frac"] == 0.3
     assert got["ok_dup_lines"] is True
-
-
-# ---------------------------------------------------------------------------
-# gopher_quality_flags
-# ---------------------------------------------------------------------------
-
-
-def test_gopher_flags_rules_on_synthetic(spark):
-    from udacity_capstone_data_engineering_spark.functions.text import (
-        gopher_quality_flags,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            # 60 normal words incl. stopwords -> keep
-            (1, "the quick brown fox jumps over the lazy dog and " * 6),
-            (2, "short doc"),  # word count fails
-            (3, "### " * 60),  # symbol ratio + alpha fail
-            (4, ("aaaaaaaaaaaaaaaaaaaaaa " * 60)),  # mean word len fails
-        ],
-        "doc_id long, text string",
-    )
-    flags = {
-        r.doc_id: r
-        for r in gopher_quality_flags(docs, "text", "doc_id").collect()
-    }
-    assert flags[1].keep
-    assert not flags[2].ok_word_count and not flags[2].keep
-    assert not flags[3].ok_symbol_ratio and not flags[3].ok_alpha_words
-    assert not flags[4].ok_mean_word_len and not flags[4].keep
-
-
-def test_gopher_flags_map_only_plan(catalog):
-    """The quality filter must stay a pure map stage: no key shuffle
-    (the only allowed exchange is the small-scan fan-out round-robin),
-    no Python evaluation."""
-    plan = _plan(catalog["gopher_quality_flags"])
-    assert "Exchange hashpartitioning" not in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan

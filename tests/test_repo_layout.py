@@ -1,6 +1,6 @@
 """Source-layout guards: the catalog is one registry plus independent
-domain modules, no module is named after a round, and no program file
-pins the checkout location. No Spark session is needed."""
+domain modules, and no program file pins the checkout location. No
+Spark session is needed."""
 
 from __future__ import annotations
 
@@ -62,18 +62,6 @@ def test_no_round_named_catalog_modules():
     assert not (ROOT / PKG / "queries.py").exists()
 
 
-def test_no_round_named_test_modules():
-    """Tests live in the module of the engine module or catalog domain
-    they exercise, never in one named after the change that added them."""
-    tests = pathlib.Path(__file__).resolve().parent
-    left = sorted(
-        p.name
-        for pattern in ("test_round*.py", "test_phase*.py")
-        for p in tests.glob(pattern)
-    )
-    assert not left, left
-
-
 def test_no_program_file_pins_the_checkout_path():
     """A hard-coded checkout path makes a script run from a copy import
     another checkout's package; derive it from ``__file__`` instead."""
@@ -87,61 +75,3 @@ def test_no_program_file_pins_the_checkout_path():
         if str(ROOT) in text or absolute_insert.search(text):
             bad.append(str(rel))
     assert not bad, sorted(bad)
-
-
-class TestNoDriverCollect:
-    def test_no_collect_in_engine_source(self):
-        """VERDICT r2 #5 closed: no `.collect()` anywhere in the engine
-        package — the only driver-side materializations are the two
-        declared Arrow `toPandas()` boundaries (ANN scoring matrix,
-        IVF centroid fit), both byte-capped, plus the r5e exact-integer
-        k-means' TWO declared bounded collects (k-row init + k x d
-        update sums per round — the MLlib KMeans layout; an iterative
-        fixpoint cannot stay lazy), plus r8's standing-semantic-index
-        centroid load (``load_semantic_index``: k x d ints — the same
-        broadcast-sized object the Lloyd loop itself ships; the
-        representatives side stays a lazy DataFrame). Any other
-        collect is a regression."""
-        import ast
-        import pathlib
-
-        pkg = (
-            pathlib.Path(__file__).resolve().parent.parent
-            / "udacity_capstone_data_engineering_spark"
-        )
-        # file -> {function name -> allowed count}: the allowance is
-        # anchored to the FUNCTION holding the declared bounded
-        # collect (ADVICE r8 — a per-file count would let the
-        # load_semantic_index centroid collect be silently traded for
-        # an unbounded collect elsewhere in the same file).
-        allowed = {
-            "operators/kmeans.py": {"kmeans_int": 2},
-            "operators/semdedup.py": {"load_semantic_index": 1},
-        }
-        hits: dict[str, dict[str, int]] = {}
-        for p in pkg.rglob("*.py"):
-            text = p.read_text()
-            collect_lines = [
-                i + 1
-                for i, line in enumerate(text.splitlines())
-                if ".collect()" in line.split("#")[0]
-            ]
-            if not collect_lines:
-                continue
-            spans = [
-                (node.name, node.lineno, node.end_lineno)
-                for node in ast.walk(ast.parse(text))
-                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
-            ]
-            rel = str(p.relative_to(pkg))
-            per_fn: dict[str, int] = {}
-            for ln in collect_lines:
-                # innermost enclosing function (smallest span)
-                encl = min(
-                    (s for s in spans if s[1] <= ln <= s[2]),
-                    key=lambda s: s[2] - s[1],
-                    default=("<module>", 0, 0),
-                )
-                per_fn[encl[0]] = per_fn.get(encl[0], 0) + 1
-            hits[rel] = per_fn
-        assert hits == allowed, f"driver-side collect crept back in: {hits}"

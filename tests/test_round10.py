@@ -247,6 +247,10 @@ class TestAnnIndexAppend:
 
         with warnings.catch_warnings():
             warnings.simplefilter("error")
+            # pyspark leaves a collect's loopback socket to garbage
+            # collection (util._load_from_socket); its ResourceWarning
+            # is not the guard's
+            warnings.simplefilter("ignore", ResourceWarning)
             ann_topk_against_index(
                 emb, "vec_id", "embedding", path, k=5, queries=batch,
                 staleness="error",
@@ -453,13 +457,13 @@ class TestCatalogRowsRound10:
     @pytest.mark.parametrize(
         "name", ["ann_index_append", "ann_auto_dispatch"]
     )
-    def test_row_matches_oracle(self, spark, sf_dir, name):
+    def test_row_matches_oracle(self, catalog, sf_dir, name):
         import duckdb
 
-        from udacity_capstone_data_engineering_spark import queries as catalog
+        from udacity_capstone_data_engineering_spark.queries import oracle_sql
 
-        qs, oracles = catalog.queries(), catalog.oracle_sql()
-        got = qs[name](spark, sf_dir)
+        oracles = oracle_sql()
+        got = catalog[name]
         pdf = got.toPandas().sort_values(sorted(got.columns)).reset_index(
             drop=True
         )[sorted(got.columns)]

@@ -30,17 +30,18 @@ def test_cell_major_compaction_lossless():
     accumulation — the compaction key is the final merge key, so
     dropping beaten partials mid-scan is lossless (ADVICE r10)."""
     from udacity_capstone_data_engineering_spark.operators.pq import (
-        _cell_major_candidates,
+        _adc_payload,
+        _cell_major_scan,
     )
 
     q, centers, books, cell_ids, cell_codes = _toy_inverted_file()
-    base = _cell_major_candidates(
-        q, centers, books, cell_ids, cell_codes, nprobe=3, rerank=7,
-        compact_elems=10**12,
+    base = _cell_major_scan(
+        q, centers, _adc_payload(books), cell_ids, cell_codes, nprobe=3,
+        rerank=7, compact_elems=10**12,
     )
-    tiny = _cell_major_candidates(
-        q, centers, books, cell_ids, cell_codes, nprobe=3, rerank=7,
-        compact_elems=1,
+    tiny = _cell_major_scan(
+        q, centers, _adc_payload(books), cell_ids, cell_codes, nprobe=3,
+        rerank=7, compact_elems=1,
     )
     assert len(base) == len(tiny) == len(q)
     for b, t in zip(base, tiny):
@@ -66,9 +67,9 @@ def test_cell_major_compaction_bounds_accumulation():
 
     pq._compact_candidate_partials, orig = spy, real
     try:
-        pq._cell_major_candidates(
-            q, centers, books, cell_ids, cell_codes, nprobe=3,
-            rerank=rerank, compact_elems=floor,
+        pq._cell_major_scan(
+            q, centers, pq._adc_payload(books), cell_ids, cell_codes,
+            nprobe=3, rerank=rerank, compact_elems=floor,
         )
     finally:
         pq._compact_candidate_partials = orig

@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from udacity_capstone_data_engineering_spark.operators.jaccard import (
     jaccard_similarity_join,
-    prefix_length,
 )
 
 
@@ -103,13 +102,6 @@ class TestJaccardJoin:
         df = _docs(spark, [(0, "a b c")])
         with pytest.raises(ValueError):
             jaccard_similarity_join(df, "text", "doc_id", threshold=0.0)
-
-    def test_prefix_length_formula(self):
-        # |S|=10, t=0.8 -> keep 10 - 8 + 1 = 3 prefix elements.
-        assert prefix_length(10, 0.8) == 3
-        assert prefix_length(1, 1.0) == 1
-        # t -> 0 keeps everything.
-        assert prefix_length(10, 0.05) == 10
 
 
 class TestWinnowing:

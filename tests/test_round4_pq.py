@@ -106,8 +106,9 @@ def test_adc_chunked_tournament_matches_one_shot(monkeypatch):
         got_i, got_s = pqmod._adc_top_block(luts, ids, codes, take)
         assert np.array_equal(got_i, want_i), chunk_elems
         assert np.array_equal(got_s, want_s), chunk_elems
-        got_cell = pqmod._cell_major_candidates(
-            x, np.zeros((1, m * 2)), books, [ids], [codes], 1, take
+        got_cell = pqmod._cell_major_scan(
+            x, np.zeros((1, m * 2)), pqmod._adc_payload(books), [ids],
+            [codes], 1, take,
         )
         assert np.array_equal(np.vstack(got_cell), want_cell), chunk_elems
 

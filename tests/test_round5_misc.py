@@ -6,17 +6,14 @@ from __future__ import annotations
 import pytest
 
 from tests.test_ivf import IVF_PATHS, ivf_path, three_paths
-from udacity_capstone_data_engineering_spark import queries as catalog
-
-QUERIES = catalog.queries()
 
 
-def test_approx_distinct_users_error_bound(spark, sf_dir):
+def test_approx_distinct_users_error_bound(catalog):
     """|approx − exact| / exact ≤ 3·rsd per event_type.  The query
     computes both columns side by side (rsd pinned 0.02 in the query),
     so the bound is checked on its own output — 3 standard errors is
     the standard HLL++ confidence band."""
-    rows = QUERIES["approx_distinct_users"](spark, sf_dir).collect()
+    rows = catalog["approx_distinct_users"].collect()
     assert rows, "no event types profiled"
     for r in rows:
         exact = r.exact_users
@@ -28,16 +25,16 @@ def test_approx_distinct_users_error_bound(spark, sf_dir):
         )
 
 
-def test_profile_orders_approx_registered_matches_impl(spark, sf_dir):
+def test_profile_orders_approx_registered_matches_impl(catalog, spark, sf_dir):
     """The catalog row must BE the approx impl (same rows), so the
-    tolerance + no-Expand evidence in test_round4_misc.py covers the
+    tolerance + no-Expand evidence in this module covers the
     public query surface too."""
     from udacity_capstone_data_engineering_spark.queries.relational import (
         profile_orders_impl,
     )
 
     got = sorted(
-        tuple(r) for r in QUERIES["profile_orders_approx"](spark, sf_dir).collect()
+        tuple(r) for r in catalog["profile_orders_approx"].collect()
     )
     want = sorted(
         tuple(r)

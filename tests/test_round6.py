@@ -8,6 +8,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import physical_plan as _plan
 from udacity_capstone_data_engineering_spark.operators.kmeans import (
     _quantize,
     kmeans_int,
@@ -418,7 +419,7 @@ def test_decode_image_stats_quarantine(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_quality_pipeline_plan_shape(spark, sf_dir):
+def test_quality_pipeline_plan_shape(catalog):
     """The post-boundary plan of the manifest: (a) the kept stage
     prunes the materialized gate output at the PARTITION level on
     keep (no data filter — whole false shards are never opened);
@@ -428,17 +429,15 @@ def test_quality_pipeline_plan_shape(spark, sf_dir):
     are a superset of the hash-partitioning keys)."""
     import re
 
-    from udacity_capstone_data_engineering_spark.queries import queries
-
-    df = queries()["quality_pipeline_manifest"](spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    df = catalog["quality_pipeline_manifest"]
+    plan = _plan(df)
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert m and "keep" in m.group(1), plan[:1500]
     assert re.search(r"DataFilters: \[\]", plan), "keep leaked to a data filter"
     assert plan.count("Exchange") == 2, plan
 
 
-def test_quality_pipeline_manifest_consistent_with_gate(spark, sf_dir):
+def test_quality_pipeline_manifest_consistent_with_gate(catalog, spark, sf_dir):
     """Cross-check the composition against its ingredient queries:
     total docs in the manifest == distinct fingerprints among kept
     docs, and every pack's token total is within budget + one doc's
@@ -446,10 +445,9 @@ def test_quality_pipeline_manifest_consistent_with_gate(spark, sf_dir):
     from udacity_capstone_data_engineering_spark.functions.hashing import (
         portable_hash64,
     )
-    from udacity_capstone_data_engineering_spark.queries import queries
 
-    man = queries()["quality_pipeline_manifest"](spark, sf_dir).collect()
-    gate = queries()["full_quality_gate"](spark, sf_dir)
+    man = catalog["quality_pipeline_manifest"].collect()
+    gate = catalog["full_quality_gate"]
     kept_ids = {r["doc_id"] for r in gate.collect() if r["keep"]}
     docs = load_table(spark, sf_dir, "documents")
     n_fp = (
@@ -478,13 +476,12 @@ def test_quality_pipeline_manifest_consistent_with_gate(spark, sf_dir):
     assert {r["split"] for r in man} <= {"train", "valid", "test"}
 
 
-def test_semantic_dedup_autok_pair_join_cluster_keyed(spark, sf_dir):
+def test_semantic_dedup_autok_pair_join_cluster_keyed(catalog):
     """The auto-k row keeps the SemDeDup scale property: the pair
     stage is an equi-join on the cluster id, never a cartesian."""
-    from udacity_capstone_data_engineering_spark.queries import queries
 
-    df = queries()["semantic_dedup_autok"](spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    df = catalog["semantic_dedup_autok"]
+    plan = _plan(df)
     assert "CartesianProduct" not in plan
 
 
@@ -574,13 +571,12 @@ def test_mad_outliers_fixture(spark):
     assert row["n_outliers"] == 1  # only the 1000.0
 
 
-def test_skew_profile_topk_plan(spark, sf_dir):
+def test_skew_profile_topk_plan(catalog):
     """The profiler must be one aggregation + TakeOrderedAndProject —
     never a global sort of the key-frequency relation."""
-    from udacity_capstone_data_engineering_spark.queries import queries
 
-    df = queries()["join_key_skew_profile"](spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    df = catalog["join_key_skew_profile"]
+    plan = _plan(df)
     assert "TakeOrderedAndProject" in plan
     rows = df.collect()
     assert len(rows) <= 20

@@ -3,8 +3,6 @@ multimodal plumbing + similarity recall."""
 
 from __future__ import annotations
 
-import os
-
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -24,10 +22,7 @@ from udacity_capstone_data_engineering_spark.operators.similarity import (
     brute_force_topk,
     lsh_topk,
 )
-from udacity_capstone_data_engineering_spark.plans.pipeline import (
-    Pipeline,
-    Stage,
-)
+from udacity_capstone_data_engineering_spark.plans.pipeline import Pipeline, Stage
 from udacity_capstone_data_engineering_spark.sources.readers import (
     read_csv,
     table_from_rows,
@@ -218,129 +213,3 @@ def test_observe_metrics_piggyback_on_job(spark, sf_dir):
     assert got["n_null_dates"] == 0
     assert got["max_price"] == orders.agg(F.max("o_totalprice")).first()[0]
     assert out <= expected_rows
-
-
-class TestFanOutRowGroupAware:
-    """ADVICE r9: a single LARGE file with many row groups distributes
-    rows across splits fine — it must NOT pay the round-robin shuffle
-    when it already has >= target partitions."""
-
-    def test_multi_row_group_single_file_not_repartitioned(
-        self, spark, tmp_path
-    ):
-        from udacity_capstone_data_engineering_spark.sources.catalog import (
-            fan_out_small_scan,
-        )
-
-        path = str(tmp_path / "many_rg")
-        (
-            spark.range(200_000)
-            .selectExpr("id", "repeat('x', 64) AS pad")
-            .coalesce(1)
-            .write.option("parquet.block.size", 64 * 1024)
-            .mode("overwrite")
-            .parquet(path)
-        )
-        import pyarrow.parquet as pq
-
-        part = [
-            f for f in os.listdir(path) if f.endswith(".parquet")
-        ]
-        assert len(part) == 1
-        n_rg = pq.ParquetFile(os.path.join(path, part[0])).metadata.num_row_groups
-        assert n_rg > 1, "fixture must have many row groups"
-
-        low = 2
-        prior = spark.conf.get("spark.sql.files.maxPartitionBytes")
-        try:
-            spark.conf.set("spark.sql.files.maxPartitionBytes", 256 * 1024)
-            back = spark.read.parquet(path)
-            n_parts = back.rdd.getNumPartitions()
-            assert n_parts > low, "fixture must out-split the target"
-            sizes = back.rdd.glom().map(len).collect()
-            assert sum(1 for s in sizes if s) > 1, (
-                "multi-row-group file must distribute rows across splits"
-            )
-            fo = fan_out_small_scan(back, min_partitions=low)
-            assert fo.rdd.getNumPartitions() == n_parts, (
-                "well-distributed single-file scan must not be shuffled"
-            )
-        finally:
-            spark.conf.set("spark.sql.files.maxPartitionBytes", prior)
-
-    def test_row_groups_in_helper(self, spark, tmp_path):
-        from udacity_capstone_data_engineering_spark.sources.catalog import (
-            _row_groups_in,
-        )
-
-        path = str(tmp_path / "one_rg")
-        spark.range(1000).coalesce(1).write.mode("overwrite").parquet(path)
-        part = [
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if f.endswith(".parquet")
-        ][0]
-        assert _row_groups_in(part) == 1
-        assert _row_groups_in("file://" + part) == 1
-        assert _row_groups_in("s3a://bucket/key.parquet") is None
-        assert _row_groups_in("/nonexistent/nope.parquet") is None
-
-
-# ---------------------------------------------------------------------------
-# Round 8: the single-row-group scan-skew mechanism, pinned
-# ---------------------------------------------------------------------------
-
-
-def test_fan_out_rebalances_single_row_group_file(spark, tmp_path):
-    # A one-file parquet with ONE row group splits into ~size/4MB
-    # openCost bins, but only the bin containing the row-group offset
-    # carries rows: N-1 empty tasks + 1 task with everything — the
-    # round-7 "one task of 13" wedge shape, which serialized any
-    # CPU-heavy stage fed directly by such a scan (the pq encode,
-    # fixed r8). This pins BOTH halves: the pathology exists on the
-    # raw scan, and fan_out_small_scan repairs it to a balanced
-    # defaultParallelism-wide distribution.
-    from udacity_capstone_data_engineering_spark.sources.catalog import (
-        fan_out_small_scan,
-    )
-
-    path = str(tmp_path / "one_rg")
-    spark.range(200_000).selectExpr(
-        "id", "repeat('x', 64) AS pad"
-    ).coalesce(1).write.mode("overwrite").parquet(path)
-    back = spark.read.parquet(path)
-    raw = back.rdd.glom().map(len).collect()
-    if len(raw) > 1:
-        # multiple splits of one row group -> exactly one non-empty
-        assert sum(1 for n in raw if n) == 1, raw
-    fo = fan_out_small_scan(back).rdd.glom().map(len).collect()
-    assert len(fo) >= spark.sparkContext.defaultParallelism
-    assert sum(fo) == 200_000
-    assert max(fo) - min(fo) <= 1, "round-robin must balance exactly"
-    # ADVICE r8: on a host whose core count <= the openCost split count
-    # the old partition-count gate no-opt'ed (splits >= target) and the
-    # one-task skew survived. Pin the environment instead of relying on
-    # nproc > splits: FORCE a split count above the target (tiny
-    # maxPartitionBytes — runtime-settable read conf) and a target
-    # below it; the single-file rule must still rebalance.
-    low = 2
-    prior = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    try:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", 64 * 1024)
-        split_back = spark.read.parquet(path)
-        raw_forced = split_back.rdd.glom().map(len).collect()
-        assert len(raw_forced) > low, "fixture must out-split the target"
-        assert sum(1 for n in raw_forced if n) == 1, raw_forced
-        fo_low = (
-            fan_out_small_scan(split_back, min_partitions=low)
-            .rdd.glom()
-            .map(len)
-            .collect()
-        )
-    finally:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", prior)
-    assert len(fo_low) == low
-    assert sum(fo_low) == 200_000
-    assert max(fo_low) - min(fo_low) <= 1, (
-        "single-file scans must rebalance even when splits >= target"
-    )

@@ -2,11 +2,7 @@
 
 from __future__ import annotations
 
-import glob
 import os
-
-import pytest
-from pyspark.sql import functions as F
 
 from udacity_capstone_data_engineering_spark.sources import (
     load_table,
@@ -303,130 +299,3 @@ class TestPythonDataSource:
             ).first()[0]
 
         assert digest(2) == digest(16)
-
-
-# ---------------------------------------------------------------------------
-# JSONL roundtrip
-# ---------------------------------------------------------------------------
-
-
-def test_jsonl_roundtrip_identity(catalog, spark, sf_dir):
-    got = sorted(
-        tuple(r) for r in catalog["jsonl_roundtrip_docs"].collect()
-    )
-    want = sorted(
-        tuple(r)
-        for r in load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text", "lang", "source", "n_chars")
-        .collect()
-    )
-    assert got == want
-
-
-# ---------------------------------------------------------------------------
-# ORC roundtrip
-# ---------------------------------------------------------------------------
-
-
-def test_orc_roundtrip_identity(catalog, spark, sf_dir):
-    got = sorted(
-        tuple(r) for r in catalog["orc_roundtrip_orders"].collect()
-    )
-    want = sorted(
-        tuple(r) for r in load_table(spark, sf_dir, "orders").collect()
-    )
-    assert got == want
-
-
-class TestCompaction:
-    def test_compact_small_files_reduces_file_count(self, spark, tmp_path):
-        from udacity_capstone_data_engineering_spark.sources.sinks import (
-            compact_small_files,
-        )
-
-        path = str(tmp_path / "frag")
-        df = spark.range(10_000).selectExpr("id", "id * 2 AS v")
-        df.repartition(64).write.parquet(path)  # 64 tiny files
-        import glob
-
-        before = len(glob.glob(path + "/*.parquet"))
-        assert before >= 32
-        _, n_after = compact_small_files(spark, path, target_file_bytes=1 << 30)
-        after = len(glob.glob(path + "/*.parquet"))
-        assert after <= 2
-        back = spark.read.parquet(path)
-        assert back.count() == 10_000
-        assert back.agg({"v": "sum"}).first()[0] == df.agg({"v": "sum"}).first()[0]
-
-
-class TestSortedWrite:
-    def test_write_parquet_sorted_no_global_sort(self, spark, sf_dir, tmp_path):
-        """Rows sort within files (row-group stats clustering) with no
-        range exchange in the plan, and read-back preserves the data."""
-        from pyspark.sql import functions as F
-
-        from udacity_capstone_data_engineering_spark.sources.catalog import load_table
-        from udacity_capstone_data_engineering_spark.sources.sinks import (
-            write_parquet_sorted,
-        )
-
-        orders = load_table(spark, sf_dir, "orders")
-        sorted_df = orders.sortWithinPartitions("o_orderdate")
-        plan = sorted_df._jdf.queryExecution().executedPlan().toString()
-        assert "rangepartitioning" not in plan.lower()  # no global sort
-        assert "Sort [" in plan
-        path = write_parquet_sorted(
-            orders, str(tmp_path), "orders_sorted", ["o_orderdate"]
-        )
-        back = spark.read.parquet(path)
-        assert back.count() == orders.count()
-        # per-file monotonicity: within each parquet file the sort
-        # column never decreases
-        import pyspark.sql.window as W
-
-        w = (
-            W.Window.partitionBy(F.input_file_name())
-            .orderBy(F.monotonically_increasing_id())
-        )
-        checked = back.select(
-            F.col("o_orderdate").alias("d"),
-            F.lag("o_orderdate").over(w).alias("prev"),
-        )
-        violations = checked.filter(
-            F.col("prev").isNotNull() & (F.col("d") < F.col("prev"))
-        ).count()
-        assert violations == 0
-
-
-class TestCompactionSwapSafety:
-    def test_no_sibling_dirs_left_behind(self, spark, tmp_path):
-        from udacity_capstone_data_engineering_spark.sources.sinks import (
-            compact_small_files,
-        )
-
-        path = str(tmp_path / "t")
-        spark.range(1000).selectExpr("id", "id*3 AS v").repartition(16).write.parquet(
-            path
-        )
-        compact_small_files(spark, path, target_file_bytes=1 << 30)
-        siblings = [p for p in glob.glob(path + "__*") if os.path.isdir(p)]
-        assert siblings == [], "backup/tmp dirs must be cleaned after a good swap"
-        assert spark.read.parquet(path).count() == 1000
-
-    def test_failed_tmp_write_leaves_original_intact(self, spark, tmp_path):
-        """If the compaction rewrite itself fails (e.g. unreadable
-        input), the original directory is untouched — the swap only
-        begins after the tmp write succeeds."""
-        from udacity_capstone_data_engineering_spark.sources.sinks import (
-            compact_small_files,
-        )
-
-        path = str(tmp_path / "t2")
-        spark.range(100).write.parquet(path)
-        # Poison the directory with a non-parquet file: the read fails
-        # mid-rewrite, before any rename touches the original.
-        with open(os.path.join(path, "part-junk.parquet"), "wb") as f:
-            f.write(b"not parquet")
-        with pytest.raises(Exception):
-            compact_small_files(spark, path, target_file_bytes=1 << 30)
-        assert os.path.isdir(path), "original must survive a failed rewrite"

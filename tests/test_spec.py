@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+
 from udacity_capstone_data_engineering_spark.plans.spec import compile_spec
 
 SPEC = {
@@ -122,18 +123,3 @@ def test_rows_only_queries_register_after_first_50():
 
     qs, os_ = list(entry.queries()), entry.oracle_sql()
     assert all(name in os_ for name in qs[:50])
-
-
-def test_first_50_rotation_covers_unsampled_rows():
-    """VERDICT r10 #5: the driver samples queries()'s first 50 rows;
-    after the rotation they must all be oracle-paired AND absent from
-    every r01-r10 official sample."""
-    import __spark_entry__ as entry
-    from udacity_capstone_data_engineering_spark.queries import (
-        _OFFICIALLY_SAMPLED,
-    )
-
-    qs, os_ = list(entry.queries()), entry.oracle_sql()
-    first50 = qs[:50]
-    assert all(n in os_ for n in first50)
-    assert not set(first50) & _OFFICIALLY_SAMPLED

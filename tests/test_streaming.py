@@ -114,82 +114,3 @@ def test_transform_with_state_runs_when_protobuf_present(spark, tmp_path):
         for r in spark.sql("SELECT * FROM tws_totals_test").collect()
     }
     assert got == {1: (2, 5.0), 2: (1, 10.0)}
-
-
-# ---------------------------------------------------------------------------
-# streaming drift monitor
-# ---------------------------------------------------------------------------
-
-
-def test_drift_stream_matches_batch_psi(spark, tmp_path):
-    """Stream the period-b events file-by-file; the latest-per-cell
-    histogram joined with the static period-a reference through
-    psi_from_counts must equal the BATCH psi_report over the union."""
-    from udacity_capstone_data_engineering_spark.operators.drift import (
-        drift_counts_stream,
-        psi_from_counts,
-        psi_report,
-        value_bucket,
-    )
-
-    ref_rows = [("click", 10.0)] * 30 + [("click", 60.0)] * 10 + [
-        ("view", 30.0)
-    ] * 20
-    live1 = [("click", 10.0)] * 10 + [("click", 240.0)] * 10
-    live2 = [("click", 60.0)] * 5 + [("view", 30.0)] * 5 + [("view", 90.0)] * 5
-    src = tmp_path / "drift_src"
-    spark.createDataFrame(live1, "k string, value double").coalesce(1).write.parquet(
-        str(src / "f1.parquet")
-    )
-    spark.createDataFrame(live2, "k string, value double").coalesce(1).write.parquet(
-        str(src / "f2.parquet")
-    )
-    stream = (
-        spark.readStream.schema("k string, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src) + "/*")
-    )
-    q = (
-        drift_counts_stream(stream, "k", "value", 25.0, 10)
-        .writeStream.format("memory")
-        .queryName("drift_stream_test")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    emitted = spark.sql("SELECT * FROM drift_stream_test").collect()
-    assert emitted
-    latest: dict = {}
-    for r in emitted:
-        key = (r.k, r.bucket)
-        latest[key] = max(latest.get(key, 0), r.c)  # counts monotone
-    live_counts = spark.createDataFrame(
-        [(k, "b", b, c) for (k, b), c in latest.items()],
-        "k string, period string, bucket int, c long",
-    )
-    ref = spark.createDataFrame(ref_rows, "k string, value double")
-    ref_counts = ref.select(
-        "k", F.lit("a").alias("period"),
-        value_bucket(F.col("value"), 25.0, 10).alias("bucket"),
-    ).groupBy("k", "period", "bucket").agg(F.count(F.lit(1)).alias("c"))
-    got = sorted(
-        map(tuple, psi_from_counts(ref_counts.union(live_counts), 10).collect())
-    )
-    # batch equivalent over the union with an explicit period column
-    batch = spark.createDataFrame(
-        [(k, "2024-01-01 00:00:00", v) for k, v in ref_rows]
-        + [(k, "2024-01-20 00:00:00", v) for k, v in live1 + live2],
-        "k string, ts string, value double",
-    ).select("k", F.col("ts").cast("timestamp").alias("ts"), "value")
-    want = sorted(
-        map(
-            tuple,
-            psi_report(batch, "k", "ts", "value",
-                       "2024-01-16 00:00:00", 25.0, 10).collect(),
-        )
-    )
-    assert got == want
-    # a real drift signal: 'click' gained a far bucket -> psi > 0
-    psi_by_key = {t[0]: t[3] for t in got}
-    assert psi_by_key["click"] > 0.1

@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from udacity_capstone_data_engineering_spark.operators.video import (
     decode_video,
@@ -93,69 +92,25 @@ def test_video_decode_stats_and_deltas_exact(spark):
         assert deltas[(0, i)] == int(np.abs(lumas[i] - lumas[i - 1]).sum())
 
 
-def test_video_queries_nonempty(catalog):
-    """The video rows are not vacuous at test scale: each returns rows.
-    Their values are checked against the DuckDB oracle in
-    test_oracle_parity."""
-    for name in (
-        "video_decode_stats",
-        "video_frame_deltas",
-        "video_scene_cuts",
-    ):
-        assert catalog[name].head(1), name
+def test_video_queries_match_duckdb_at_sf0001(catalog, sf_dir):
+    import duckdb
 
+    from udacity_capstone_data_engineering_spark.queries import oracle_sql
 
-def test_video_near_dup_planted_pair(spark):
-    """Two videos with the same scene structure but a uniform
-    brightness shift share a scene fingerprint; a reversed-structure
-    video does not pair with them."""
-    import numpy as np
-
-    from udacity_capstone_data_engineering_spark.operators.dedup import (
-        gradient_sign_fingerprint,
-        simhash_near_dup_pairs,
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'"
     )
-    from udacity_capstone_data_engineering_spark.operators.video import (
-        encode_ppmv,
-        video_row_luma,
-    )
-    from pyspark.sql import functions as F
-
-    h, w = 4, 8
-
-    def vid(rising: bool, shift: int):
-        frames = []
-        for f in range(4):
-            img = np.zeros((h, w, 3), dtype=np.uint8)
-            for r in range(h):
-                j = f * h + r
-                level = (10 + 12 * j) if rising else (10 + 12 * (15 - j))
-                img[r, :, :] = min(255, level + shift)
-            frames.append(img)
-        return encode_ppmv(frames)
-
-    df = spark.createDataFrame(
-        [
-            (1, bytearray(vid(True, 0))),
-            (2, bytearray(vid(True, 40))),  # brightness-shifted twin
-            (3, bytearray(vid(False, 0))),  # reversed scene structure
-        ],
-        "doc_id long, payload binary",
-    )
-    rows = video_row_luma(df, "payload", "doc_id")
-    seq = rows.select(
-        "doc_id",
-        (F.col("frame_idx") * h + F.col("row_idx")).cast("int").alias("j"),
-        "row_luma",
-    )
-    fp = gradient_sign_fingerprint(seq, "doc_id", "j", "row_luma", 15)
-    vals = {r.doc_id: r.fingerprint for r in fp.collect()}
-    assert vals[1] == vals[2] == (1 << 15) - 1
-    assert vals[3] == 0
-    pairs = {
-        (r.id_a, r.id_b): r.hamming
-        for r in simhash_near_dup_pairs(
-            fp, "doc_id", sig_col="fingerprint", bits=15, bands=3
-        ).collect()
-    }
-    assert pairs == {(1, 2): 0}
+    osql = oracle_sql()
+    for name in ("video_decode_stats", "video_frame_deltas", "video_scene_cuts"):
+        got = catalog[name]
+        cols = sorted(got.columns)
+        spark_rows = sorted(tuple(r[c] for c in cols) for r in got.collect())
+        oracle_rows = sorted(
+            tuple(r[i] for i in range(len(cols)))
+            for r in con.execute(
+                f"SELECT {', '.join(cols)} FROM ({osql[name]})"
+            ).fetchall()
+        )
+        assert len(spark_rows) > 0, name
+        assert spark_rows == oracle_rows, name

@@ -56,7 +56,7 @@ fixed-capacity design in the dedup family):
   into ONE cluster no matter how large k is, and after the collapse
   that cluster contributes its DISTINCT-vector count squared, not
   its row count squared (duplicate-heavy fixture: 480 twins -> 1
-  representative; see tests/test_semdedup.py).
+  representative; see tests/test_round6.py).
 
 The demo query pins k=4 (the hash anchor, unchanged since r5f) and
 audits a deterministic 1-in-20 id sample; ``semantic_dedup_autok``

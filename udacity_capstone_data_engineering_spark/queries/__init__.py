@@ -115,7 +115,7 @@ _OFFICIALLY_SAMPLED = frozenset(
 # The order queries() returns. The driver samples the first 50 entries
 # (first block): oracle-paired rows never yet officially sampled
 # (VERDICT r10 #5, pinned against _OFFICIALLY_SAMPLED in
-# tests/test_spec.py). The second block holds the other
+# tests/test_round11.py). The second block holds the other
 # oracle-paired rows, the third the rows-only-by-design entries, which
 # must sit past the first-50 window (VERDICT r6 #5, tests/test_spec.py).
 # bench.py orders its own run list, so bench records stay comparable

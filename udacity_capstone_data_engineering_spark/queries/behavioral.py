@@ -47,7 +47,7 @@ def approx_distinct_users(spark, sf_dir):
     """HyperLogLog++ distinct-user sketch per event type, with the exact
     count alongside. Approximate ⇒ no hash oracle; the error bound is
     unit-tested per group at |approx−exact|/exact ≤ 3·rsd
-    (``tests/test_behavioral.py::test_approx_distinct_users_error_bound``).
+    (``tests/test_round5_misc.py::test_approx_distinct_users_error_bound``).
     At 100 TB the sketch is mergeable across partitions (one pass, no
     distinct shuffle of raw user ids)."""
     ev = load_table(spark, sf_dir, "events")

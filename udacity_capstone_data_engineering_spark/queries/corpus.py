@@ -240,7 +240,7 @@ def minhash_rows(spark, sf_dir):
     # (measured 18.6 s vs 0.5 s at sf0.1). The outer generator prunes
     # nothing; NULL signatures surface as one null-seed row dropped by
     # a filter on the GENERATED column, which cannot push below the
-    # generate. Rows are identical (pinned in test_corpus).
+    # generate. Rows are identical (pinned in test_round11_opt).
     return sigs.select(
         "doc_id", F.posexplode_outer("signature").alias("seed", "minhash")
     ).filter(F.col("seed").isNotNull())
@@ -1121,7 +1121,7 @@ def near_dup_collapsed(spark, sf_dir):
     task's generator). Collapsed, the near-dup tier sees one rep per
     template; the copies_a/copies_b counts let cluster reassembly
     recover full membership without enumerating intra-template pairs
-    (tests/test_corpus.py measures the candidate count dropping
+    (tests/test_round3_fixes.py measures the candidate count dropping
     from >=C(100,2) to <500 on a 20%-template corpus)."""
     from udacity_capstone_data_engineering_spark.operators.dedup import (
         near_dup_pairs_collapsed,
@@ -2121,7 +2121,7 @@ def incremental_ingest_dedup_bucketed(spark, sf_dir):
     partitioning, so the petabyte side of the join never shuffles and
     only the (small) incoming batch moves. Same verdict columns and
     the same oracle as the in-plan variant, so the materialize
-    boundary is proven lossless; `tests/test_corpus.py` pins the plan
+    boundary is proven lossless; `tests/test_round6.py` pins the plan
     property (index scan `Bucketed: true`, no Exchange above it,
     strictly fewer exchanges than the unbucketed control). The merge
     hint pins SMJ so small-sf data doesn't degrade the demonstration
@@ -2250,7 +2250,7 @@ def quality_pipeline_manifest(spark, sf_dir):
     recomputes the whole chain — so the materialize boundary, the
     partition pruning, and every stage's arithmetic are value-hash
     gated as ONE composition. Post-boundary plan cost is pinned in
-    tests/test_corpus.py: TWO exchanges — the dedup groupBy on
+    tests/test_round6.py: TWO exchanges — the dedup groupBy on
     fingerprint and the pack window on (split, bucket); the manifest
     aggregation is exchange-free because hash-partitioning on
     (split, bucket) already clusters its (split, bucket, pack_id)
@@ -2286,7 +2286,7 @@ def quality_pipeline_manifest(spark, sf_dir):
     @pipe.stage("kept", inputs=["gate"])
     def kept(gate_df):
         # Reads the materialized shards; keep=true prunes at the
-        # partition level (asserted in tests/test_corpus.py). Partition
+        # partition level (asserted in tests/test_round6.py). Partition
         # values come back as strings (Spark's partition-column
         # inference has no boolean tier), hence the cast.
         return gate_df.filter(F.col("keep").cast("boolean")).select(

@@ -1364,7 +1364,7 @@ def zorder_layout_keys(spark, sf_dir):
     interleave two quantized dimensions so sorting by the code before a
     partitioned write gives every output file a compact 2-D rectangle —
     2-D range predicates then prune files from parquet footer stats
-    alone (measured in tests/test_layout.py::TestZOrder:
+    alone (measured in tests/test_round2_operators.py::TestZOrder:
     z-sorted layout overlaps strictly fewer files than a 1-D sort for
     the same box query). Pure JVM bit arithmetic."""
     from udacity_capstone_data_engineering_spark.functions.zorder import morton_code
@@ -2296,7 +2296,7 @@ def profile_orders_approx(spark, sf_dir):
     per-distinct-column Expand multiplier.  Approximate by
     construction, so no SQL oracle row; gated instead by the ±2%
     tolerance test against the exact profiler
-    (``tests/test_relational.py``), mirroring how the HLL sketch
+    (``tests/test_round4_misc.py``), mirroring how the HLL sketch
     query is twinned with ``exact_distinct_users``."""
     return profile_orders_impl(spark, sf_dir, distinct_mode="approx")
 

@@ -405,7 +405,7 @@ def embedding_int8_quantize(spark, sf_dir):
     Rounding is floor(x+0.5) SPELLED OUT on both engine and oracle —
     Spark rounds half-up, DuckDB half-even, so a bare round() would
     hash-mismatch on exact .5 boundaries. Recall preserved ≥0.9 vs
-    fp32 (test_ann)."""
+    fp32 (test_phase7)."""
     emb = load_table(spark, sf_dir, "embeddings")
     v = F.col("embedding").cast("array<double>")
     amax = F.array_max(F.transform(v, lambda x: F.abs(x)))
