@@ -71,7 +71,8 @@ def test_ivf_degenerate_inputs(spark, monkeypatch):
     appear.  An empty and a one-row corpus return no rows on any path,
     nor does one row beside a NULL-element one; a corpus with no finite
     row pairs its rows with NULL cosine.  A NULL vector first in a
-    one-partition scan and a ragged vector neither query nor appear."""
+    one-partition scan and a ragged vector neither query nor appear,
+    also when ragged vectors come first in the fit sample."""
     rng = np.random.default_rng(13)
     rows = [
         (i, [float(x) for x in rng.normal(size=DIM)]) for i in range(1000)
@@ -136,6 +137,32 @@ def test_ivf_degenerate_inputs(spark, monkeypatch):
     for path, got in runs.items():
         assert len(got) == 5 * len(clean), path
         assert not {2002, 2004} & {i for r in got for i in r[:2]}, path
+    # ragged vectors first in a fraction sample: the fit takes the
+    # corpus dim from the first row of the scan, not of the sample
+    ragged = [(3000 + i, [1.0, 2.0, 3.0]) for i in range(100)]
+    emb = spark.createDataFrame(
+        rows[:1] + ragged + clean, SCHEMA
+    ).coalesce(1)
+    got = ivf_topk(emb, "vec_id", "embedding", k=5, fit_sample=30).collect()
+    assert len(got) == 5 * (1 + len(clean))
+    assert all(i < 3000 for r in got for i in r[:2])
+
+
+def test_ivf_rejects_queries_of_another_dim(spark):
+    """A whole workload of another dim raises instead of reading as
+    ragged vectors and returning no rows."""
+    import pytest
+
+    from udacity_capstone_data_engineering_spark.operators.ivf import ivf_topk
+
+    rng = np.random.default_rng(5)
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in rng.normal(size=DIM)]) for i in range(50)],
+        SCHEMA,
+    )
+    short = spark.createDataFrame([(1, [1.0, 2.0, 3.0])], SCHEMA)
+    with pytest.raises(ValueError, match="dim 3"):
+        ivf_topk(emb, "vec_id", "embedding", k=5, queries=short)
 
 
 def test_ivf_scan_past_rerank_cap(spark, monkeypatch):

@@ -107,3 +107,51 @@ def test_pq_degenerate_inputs(spark, tmp_path):
         assert got == grid[name], name
         assert len(got) == 5 * len(clean), name
         assert not {2002, 2004} & {i for r in got for i in r[:2]}, name
+
+
+def test_adc_serves_reject_workloads_of_another_dim(spark, tmp_path):
+    """A corpus or query workload whose dim is not the index's raises
+    instead of reading as ragged vectors and returning no rows."""
+    import pytest
+
+    from udacity_capstone_data_engineering_spark.operators.ann_index import (
+        ann_topk_against_index,
+        build_ann_index,
+    )
+    from udacity_capstone_data_engineering_spark.operators.pq import (
+        ivfpq_topk,
+        pq_topk,
+    )
+
+    rng = np.random.default_rng(5)
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in rng.normal(size=DIM)]) for i in range(50)],
+        SCHEMA,
+    )
+    short = spark.createDataFrame([(1, [1.0, 2.0, 3.0])], SCHEMA)
+    path = str(tmp_path / "idx")
+    build_ann_index(emb, "vec_id", "embedding", DIM, path)
+    calls = {
+        "pq corpus": lambda: pq_topk(short, "vec_id", "embedding", dim=DIM),
+        "pq queries": lambda: pq_topk(
+            emb, "vec_id", "embedding", dim=DIM, queries=short
+        ),
+        "ivfpq corpus": lambda: ivfpq_topk(
+            short, "vec_id", "embedding", dim=DIM
+        ),
+        "ivfpq queries": lambda: ivfpq_topk(
+            emb, "vec_id", "embedding", dim=DIM, queries=short
+        ),
+        "build": lambda: build_ann_index(
+            short, "vec_id", "embedding", DIM, str(tmp_path / "short")
+        ),
+        "standing corpus": lambda: ann_topk_against_index(
+            short, "vec_id", "embedding", path
+        ),
+        "standing queries": lambda: ann_topk_against_index(
+            emb, "vec_id", "embedding", path, queries=short
+        ),
+    }
+    for name, call in calls.items():
+        with pytest.raises(ValueError, match="dim 3"):
+            call()

@@ -212,6 +212,7 @@ def _uv_repr(rows):
 
 def test_unit_vectors_kernel_bit_equal(spark, sf_dir):
     from udacity_capstone_data_engineering_spark.operators.similarity import (
+        _probe_dim,
         _unit_vectors,
     )
     from udacity_capstone_data_engineering_spark.sources.catalog import (
@@ -219,15 +220,17 @@ def test_unit_vectors_kernel_bit_equal(spark, sf_dir):
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
+    dim = _probe_dim(emb, "embedding")
     old = _uv_repr(_jvm_unit_vectors(emb, "vec_id", "embedding").collect())
-    new = _uv_repr(_unit_vectors(emb, "vec_id", "embedding").collect())
+    new = _uv_repr(_unit_vectors(emb, "vec_id", "embedding", dim).collect())
     assert old == new and len(old) > 0
 
 
 def test_unit_vectors_kernel_degenerate_semantics(spark):
     """NULL vector / NULL element / zero norm → NULL uv; NaN and ±inf
     elements propagate exactly as the JVM expression (Spark compares
-    NaN greater than any number, so a NaN norm PASSES the > 0 gate)."""
+    NaN greater than any number, so a NaN norm PASSES the > 0 gate).
+    A ragged vector (length other than the corpus dim) → NULL uv."""
     from udacity_capstone_data_engineering_spark.operators.similarity import (
         _unit_vectors,
     )
@@ -241,11 +244,12 @@ def test_unit_vectors_kernel_degenerate_semantics(spark):
         (6, [float("nan"), 1.0]),
         (7, [float("inf"), 1.0]),
         (8, [None, 2.0]),
-        (9, [1.0, 2.0, 3.0]),  # ragged vs row 1/4 — per-length groups
+        (9, [1.0, 2.0, 3.0]),
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     old = _uv_repr(_jvm_unit_vectors(df, "vec_id", "embedding").collect())
-    new = _uv_repr(_unit_vectors(df, "vec_id", "embedding").collect())
+    new = _uv_repr(_unit_vectors(df, "vec_id", "embedding", 2).collect())
+    old.update({4: repr(None), 9: repr(None)})  # ragged beside dim 2
     assert old == new
 
 
@@ -264,16 +268,16 @@ def test_unit_vectors_kernel_sliced_batch():
         [pa.array(range(6), pa.int64()), pa.array(vecs, pa.list_(pa.float64()))],
         ["vec_id", "__v"],
     )
-    (whole,) = _normalize_batches([full])
+    (whole,) = _normalize_batches([full], 3)
     for offset, length in ((2, 3), (5, 1), (6, 0)):
-        (got,) = _normalize_batches([full.slice(offset, length)])
+        (got,) = _normalize_batches([full.slice(offset, length)], 3)
         assert got.column(0).to_pylist() == list(range(offset, offset + length))
         assert got.column(1).to_pylist() == (
             whole.column(1).slice(offset, length).to_pylist()
         )
 
 
-def test_minhash_rows_outer_explode_identical(spark, sf_dir):
+def test_minhash_rows_outer_explode_identical(catalog, spark, sf_dir):
     """minhash_rows' posexplode_outer + generated-column filter emits
     exactly the rows the plain posexplode did — and its physical plan
     no longer re-evaluates the signature fold inside a pushed filter
@@ -281,7 +285,6 @@ def test_minhash_rows_outer_explode_identical(spark, sf_dir):
     from udacity_capstone_data_engineering_spark.operators.dedup import (
         minhash_signatures,
     )
-    from udacity_capstone_data_engineering_spark import queries as catalog
     from udacity_capstone_data_engineering_spark.sources.catalog import (
         fan_out_small_scan,
         load_table,
@@ -292,7 +295,7 @@ def test_minhash_rows_outer_explode_identical(spark, sf_dir):
     plain = sigs.select(
         "doc_id", F.posexplode("signature").alias("seed", "minhash")
     )
-    got = catalog.queries()["minhash_rows"](spark, sf_dir)
+    got = catalog["minhash_rows"]
     key = lambda r: (r["doc_id"], r["seed"])  # noqa: E731
     assert sorted(map(tuple, got.collect())) == sorted(
         map(tuple, plain.collect())

@@ -85,7 +85,11 @@ def build_ann_index(
         _encode_to_cells,
         fit_pq_codebooks,
     )
+    from udacity_capstone_data_engineering_spark.operators.similarity import (
+        _require_dim,
+    )
 
+    _require_dim(emb, vec_col, dim, "corpus")
     spark = emb.sparkSession
     # one aggregate job yields BOTH the corpus count and the id-sum
     # fingerprint (ADVICE r10: an n-only staleness guard passes
@@ -101,7 +105,7 @@ def build_ann_index(
     if n_centroids is None:
         n_centroids = max(16, int(math.sqrt(max(n, 256))))
     centers = _fit_centroids(
-        fit_src, vec_col, n_centroids, seed, fit_sample, n=fit_n
+        fit_src, vec_col, dim, n_centroids, seed, fit_sample, n=fit_n
     )
     books = fit_pq_codebooks(
         fit_src, vec_col, dim, m=m, ksub=ksub, seed=seed, sample=fit_sample,
@@ -190,19 +194,13 @@ def append_ann_index(
         _adc_payload,
         _encode_to_cells,
     )
+    from udacity_capstone_data_engineering_spark.operators.similarity import (
+        _require_dim,
+    )
 
     spark = batch.sparkSession
     centers, books, codes_df, meta = load_ann_index(spark, path)
-    head = (
-        batch.select(F.size(F.col(vec_col)).alias("d"))
-        .filter(F.col("d").isNotNull())
-        .head()
-    )
-    if head is not None and int(head["d"]) != meta["dim"]:
-        raise ValueError(
-            f"append batch vectors have dim {int(head['d'])} but the index "
-            f"at {path} was built at dim {meta['dim']}"
-        )
+    _require_dim(batch, vec_col, meta["dim"], f"append batch for {path}")
     if validate_ids:
         dupes = (
             codes_df.join(
@@ -357,8 +355,12 @@ def ann_topk_against_index(
         probe_fraction_for_recall,
         rerank_budget,
     )
+    from udacity_capstone_data_engineering_spark.operators.similarity import (
+        _require_dim,
+    )
 
     centers, books, codes, meta = load_ann_index(emb.sparkSession, path)
+    _require_dim(emb, vec_col, meta["dim"], f"corpus served by {path}")
     n, n_centroids = meta["n"], meta["n_centroids"]
     if staleness != "ignore":
         cstats = emb.agg(

@@ -32,14 +32,15 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _fit_sample(emb: DataFrame, vec_col: str, sample: int, seed: int, n):
+def _fit_sample(
+    emb: DataFrame, vec_col: str, dim: int, sample: int, seed: int, n
+):
     """The bounded, seeded fit sample of the IVF and PQ fits: ~``sample``
-    non-NULL vectors as an L2-normalized (rows × dim) float64 ndarray
-    ((0, 0) when empty; zero rows stay zero), ``dim`` the length of the
-    first one.  Rows whose norm is not finite (NaN/±inf or NULL
-    elements, or ragged: any other length) are dropped: one NaN
-    centroid or codebook row wins every later argmax, and every row of
-    the corpus lands on it."""
+    non-NULL vectors as an L2-normalized (rows × ``dim``) float64
+    ndarray ((0, 0) when empty; zero rows stay zero).  Rows whose norm
+    is not finite (NaN/±inf or NULL elements, or ragged: a length other
+    than ``dim``) are dropped: one NaN centroid or codebook row wins
+    every later argmax, and every row of the corpus lands on it."""
     import numpy as np
 
     from udacity_capstone_data_engineering_spark.operators.similarity import (
@@ -62,7 +63,7 @@ def _fit_sample(emb: DataFrame, vec_col: str, sample: int, seed: int, n):
     )
     if not len(col):
         return np.zeros((0, 0), dtype=np.float64)
-    x = _vector_rows(col, len(col[0]))
+    x = _vector_rows(col, dim)
     norms = np.linalg.norm(x, axis=1, keepdims=True)
     finite = np.isfinite(norms[:, 0])
     x, norms = x[finite], norms[finite]
@@ -73,6 +74,7 @@ def _fit_sample(emb: DataFrame, vec_col: str, sample: int, seed: int, n):
 def _fit_centroids(
     emb: DataFrame,
     vec_col: str,
+    dim: int,
     k: int,
     seed: int,
     sample: int,
@@ -83,7 +85,7 @@ def _fit_centroids(
     (:func:`_fit_sample`); returns (k, dim) float64 ndarray."""
     import numpy as np
 
-    x = _fit_sample(emb, vec_col, sample, seed, n)
+    x = _fit_sample(emb, vec_col, dim, sample, seed, n)
     rng = np.random.default_rng(seed)
     k = min(k, len(x))
     if not k:
@@ -205,6 +207,8 @@ def ivf_topk(
     )
     from udacity_capstone_data_engineering_spark.operators.similarity import (
         _exact_rerank_pairs,
+        _probe_dim,
+        _require_dim,
         _score_pairs,
         _unit_vectors,
         jl_project,
@@ -243,17 +247,20 @@ def ivf_topk(
         n_centroids = max(16, int(math.sqrt(max(n, 256))))
     if nprobe is None:
         nprobe = max(4, math.ceil(n_centroids * probe_fraction_for_recall(target_recall)))
-    centers = _fit_centroids(emb, vec_col, n_centroids, seed, fit_sample, n=n)
+    # the corpus dim: a vector of any other length is ragged
+    dim = _probe_dim(emb, vec_col)
+    centers = _fit_centroids(
+        emb, vec_col, dim, n_centroids, seed, fit_sample, n=n
+    )
 
     # the scan kernel needs enough candidate volume to amortize its
     # fixed costs (inverted-file collect, python workers)
     n_q = n if queries is None else queries.count()
     est_pairs = n_q * n * (min(nprobe, n_centroids) / max(n_centroids, 1))
     if est_pairs > _PAIR_JOIN_MAX_PAIRS:
-        # the fit's centroids carry the dimension (no probe job); the
-        # k+8 cut absorbs last-ulp kernel disagreement AND the self
+        # the k+8 cut absorbs last-ulp kernel disagreement AND the self
         # row — the final ordering is _score_pairs' either way
-        payload = _exact_payload(centers.shape[1])
+        payload = _exact_payload(dim)
         return _cell_serve(
             emb, id_col, vec_col,
             _encode_to_cells(emb, id_col, vec_col, centers, payload, n),
@@ -261,7 +268,8 @@ def ivf_topk(
             queries,
         )
 
-    dim = centers.shape[1]
+    if queries is not None:
+        _require_dim(queries, vec_col, dim, "query")
     unit = _unit_vectors(emb, id_col, vec_col, dim)
     v = unit.filter(F.col("uv").isNotNull())
     qv = v if queries is None else _unit_vectors(

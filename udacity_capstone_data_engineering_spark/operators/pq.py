@@ -120,7 +120,7 @@ def fit_pq_codebooks(
         raise ValueError(f"dim {dim} not divisible by m {m}")
     if ksub > 256:
         raise ValueError("ksub > 256 does not fit one-byte codes")
-    x = _fit_sample(emb, vec_col, sample, seed, n)
+    x = _fit_sample(emb, vec_col, dim, sample, seed, n)
     dsub = dim // m
     rng = np.random.default_rng(seed)
     k = min(ksub, max(len(x), 1))
@@ -848,6 +848,7 @@ def _cell_serve(
     serving workload (ids ⊆ corpus); ``None`` is the self-top-k."""
     from udacity_capstone_data_engineering_spark.operators.similarity import (
         BROADCAST_SCORE_MAX_BYTES,
+        _require_dim,
         _score_pairs,
         _unit_vectors,
     )
@@ -863,6 +864,8 @@ def _cell_serve(
     col = payload.column
     dim = centers.shape[1]
     unit = _unit_vectors(emb, id_col, vec_col, dim)
+    if queries is not None:
+        _require_dim(queries, vec_col, dim, "query")
     qv = unit if queries is None else _unit_vectors(
         queries, id_col, vec_col, dim
     )
@@ -963,7 +966,11 @@ def ivfpq_topk(
     from udacity_capstone_data_engineering_spark.operators.ivf import (
         _fit_centroids,
     )
+    from udacity_capstone_data_engineering_spark.operators.similarity import (
+        _require_dim,
+    )
 
+    _require_dim(emb, vec_col, dim, "corpus")
     n = emb.count()
     if n_centroids is None:
         n_centroids = max(16, int(math.sqrt(max(n, 256))))
@@ -977,7 +984,9 @@ def ivfpq_topk(
         # neighbor or recall decays like every under-coupled knob).
         rerank = rerank_budget(n, k, target_recall)
 
-    centers = _fit_centroids(emb, vec_col, n_centroids, seed, fit_sample, n=n)
+    centers = _fit_centroids(
+        emb, vec_col, dim, n_centroids, seed, fit_sample, n=n
+    )
     books = fit_pq_codebooks(
         emb, vec_col, dim, m=m, ksub=ksub, seed=seed, sample=fit_sample, n=n
     )
@@ -1126,6 +1135,11 @@ def pq_topk(
     neighbors inside any affordable cut."""
     import numpy as np
 
+    from udacity_capstone_data_engineering_spark.operators.similarity import (
+        _require_dim,
+    )
+
+    _require_dim(emb, vec_col, dim, "corpus")
     n = emb.count()
     if rerank is None:
         # Budget from the measured √n contour (VERDICT r8 #5; the

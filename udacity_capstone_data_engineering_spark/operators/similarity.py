@@ -79,6 +79,17 @@ def _probe_dim(emb: DataFrame, vec_col: str) -> int:
     return int(head["d"]) if head is not None else 0
 
 
+def _require_dim(df: DataFrame, vec_col: str, dim: int, what: str) -> None:
+    """Raise unless ``df`` has no vector or its dim (:func:`_probe_dim`)
+    is the index's ``dim``: a whole workload of another dim would read
+    as ragged, one NULL uv per row, and drop out without a word."""
+    got = _probe_dim(df, vec_col)
+    if got and dim and got != dim:
+        raise ValueError(
+            f"{what} vectors have dim {got} but the index has dim {dim}"
+        )
+
+
 def _pairwise_cosine(
     emb: DataFrame,
     id_col: str,
@@ -636,11 +647,11 @@ def _lsh_key_fn(dim: int, planes: int, tables: int, probes: int):
 BROADCAST_SCORE_MAX_BYTES = 256 * 1024 * 1024
 
 
-def _normalize_batches(batches, dim=None):
+def _normalize_batches(batches, dim: int):
     """The :func:`_unit_vectors` kernel: ``(id, vector)`` record batches
-    in, ``(__id, uv)`` record batches out, one per input batch.  Given
-    ``dim``, a vector of any other length is ragged and its uv is NULL,
-    as a NULL-element vector's is."""
+    in, ``(__id, uv)`` record batches out, one per input batch.  A
+    vector whose length is not ``dim`` is ragged and its uv is NULL, as
+    a NULL-element vector's is."""
     import numpy as np
     import pyarrow as pa
 
@@ -661,8 +672,7 @@ def _normalize_batches(batches, dim=None):
             vecs.null_count == 0
             and values.null_count == 0
             and n_rows > 0
-            and lens.min() == lens.max() != 0
-            and dim in (None, lens[0])
+            and lens.min() == lens.max() == dim != 0
         ):
             # Fixed-dim, no-null batch (the real corpus shape):
             # one zero-copy reshape, no per-cell accessor churn.
@@ -671,7 +681,7 @@ def _normalize_batches(batches, dim=None):
                 (p, row)
                 for p, row in enumerate(
                     np.asarray(flat_in, dtype=np.float64).reshape(
-                        n_rows, int(lens[0])
+                        n_rows, dim
                     )
                 )
             ]
@@ -684,25 +694,22 @@ def _normalize_batches(batches, dim=None):
                 if (
                     cell.values.null_count
                     or a.shape[0] == 0
-                    or dim not in (None, a.shape[0])
+                    or a.shape[0] != dim
                 ):
                     # NULL element → NULL fold → NULL uv; empty →
                     # norm 0 → NULL uv, as the expression path; ragged
                     # → NULL uv
                     continue
                 live.append((p, np.asarray(a, dtype=np.float64)))
-        by_len: dict[int, list] = {}
-        for p, a in live:
-            by_len.setdefault(a.shape[0], []).append((p, a))
-        for d, rows in by_len.items():
-            x = np.vstack([a for _, a in rows])
+        if live:
+            x = np.vstack([a for _, a in live])
             n = np.sqrt(_sumsq(x))
             # when(__n > 0): Spark compares NaN greater than any
             # number, so NaN norms PASS and propagate NaN elements.
             ok = (n > 0) | np.isnan(n)
             u = x / np.where(ok, n, 1.0)[:, None]
             for r in np.nonzero(ok)[0]:
-                out_vals[rows[int(r)][0]] = u[int(r)]
+                out_vals[live[int(r)][0]] = u[int(r)]
         # Explicit ListArray build: values buffer keeps true NaNs
         # (pandas' from_pandas path would null them out).
         offsets = np.zeros(n_rows + 1, dtype=np.int32)
@@ -723,7 +730,7 @@ def _normalize_batches(batches, dim=None):
         yield pa.RecordBatch.from_arrays([ids, uv], ["__id", "uv"])
 
 
-def _unit_vectors(emb, id_col: str, vec_col: str, dim: int | None = None):
+def _unit_vectors(emb, id_col: str, vec_col: str, dim: int):
     """(id, uv) with uv the L2-normalized double vector; zero-norm →
     NULL uv (ANSI /0 raises), which yields NULL cosine ranked last —
     degenerate vectors never crash the job.
@@ -750,8 +757,8 @@ def _unit_vectors(emb, id_col: str, vec_col: str, dim: int | None = None):
     every number) so NaN/±inf elements propagate NaN into uv — the
     output is built with explicit pyarrow buffers because the pandas
     return path would silently rewrite those NaN elements to nulls.
-    Given the corpus ``dim``, a ragged vector (any other length) is a
-    NULL uv too."""
+    A ragged vector (length other than the corpus ``dim``) is a NULL uv
+    too."""
     id_type = emb.schema[id_col].dataType.simpleString()
     return (
         emb.select(
@@ -1087,16 +1094,18 @@ def _score_pairs(
 
     spark = emb.sparkSession
 
+    # dim probed from one row (limit-1 scan) unless the caller's raw
+    # matrix carries it
+    dim = raw[1].shape[1] if raw is not None else _probe_dim(emb, vec_col)
     if unit is not None:
         unit = unit.select(F.col(id_col), F.col("uv"))
     else:
-        unit = _unit_vectors(emb, id_col, vec_col)
+        unit = _unit_vectors(emb, id_col, vec_col, dim)
 
     if raw is None:
         if n is None:
             n = emb.count()
-        # Cap in measured bytes: dim probed from one row (limit-1 scan).
-        dim = _probe_dim(emb, vec_col)
+        # Cap in measured bytes.
         if n * dim * 8 <= BROADCAST_SCORE_MAX_BYTES:
             raw = _collect_raw_matrix(emb, id_col, vec_col, dim)
 
